@@ -84,6 +84,9 @@ object Bench {
     // records can show. Artifact-only fields (never on stdout).
     val passTimes = scala.collection.mutable.Map.empty[String, Seq[Double]]
     val chunkOf = scala.collection.mutable.Map.empty[String, Int]
+    // queries that threw in any timed pass: listed on their own, never
+    // timed — a query failing early would otherwise read as fast
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     chunks.zipWithIndex.foreach { case (chunk, chunkIdx) =>
       val spark = newSession(cpus, sfDir)
       // Warm-up pass (untimed): JIT + codegen + parquet-footer caches make
@@ -99,7 +102,7 @@ object Bench {
       // before each pass so every timed run re-executes the full lineage.
       val passes = (1 to runs).map { _ =>
         spark.catalog.clearCache()
-        chunk.map { case (name, fn) =>
+        chunk.flatMap { case (name, fn) =>
           val t0 = System.nanoTime()
           val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage.take(200)}"); false }
@@ -108,12 +111,16 @@ object Bench {
           // are dead once its action finishes
           CacheTracker.releaseAll()
           if (verbose) System.err.println(f"[bench] $name%-28s $dt%8.2f s${if (ok) "" else " (FAILED)"}")
-          name -> dt
+          if (ok) Some(name -> dt) else None
         }.toMap
       }
       chunk.foreach { case (name, _) =>
-        results(name) = passes.map(_(name)).min
-        passTimes(name) = passes.map(_(name))
+        val ts = passes.flatMap(_.get(name))
+        if (ts.size < passes.size) failed += name
+        else {
+          results(name) = ts.min
+          passTimes(name) = ts
+        }
         chunkOf(name) = chunkIdx
       }
       // stop() removes the context's local shuffle/block dirs — the
@@ -124,6 +131,7 @@ object Bench {
     }
     // Values rounded to 0.1 ms: bench noise dwarfs that, and the shorter
     // line survives tail-style output capture with every query present.
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     def json(r: Map[String, Double]): String = {
       val qs = r.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
@@ -145,7 +153,7 @@ object Bench {
       // cpus (round 12, additive): ties each artifact/line to its core
       // count — round 11's 8-core scaling run was only identifiable by
       // external forensics.
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,""" +
         s""""drift_basket":$basket,"drift_basket_n":${basketRows.size},""" +
         s""""eval_stride":${analytics.DedupQueries.EvalStride},""" +
         s""""cpus":$cpus,"sf":"$sfDir"}"""
@@ -185,7 +193,7 @@ object Bench {
     val basket = if (basketRows.size == DriftBasket.size)
       f"${basketRows.map(results).sum}%.4f" else "null"
     println(s"""{"metric":"bench_summary","total_sec":$total,""" +
-      s""""n_queries":${results.size},"drift_basket":$basket,""" +
+      s""""n_queries":${results.size},"failed":$failedJson,"drift_basket":$basket,""" +
       s""""eval_stride":${analytics.DedupQueries.EvalStride},"cpus":$cpus,""" +
       s""""sf":"$sfDir","artifact":"$out"}""")
   }

@@ -37,8 +37,7 @@ object DedupQueries {
     */
   private[graft] def registryLabels(s: SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    val path = graft.operators.DupGraph.registryPath(s, d)
-    graft.operators.DupGraph.ensureBuilt(s, d, path)
+    val path = registryGraph(s, d)
     if (!graft.operators.DupGraph.labelsExist(s, path))
       // adopt mid-life: bootstrap folds the whole existing edge log in
       graft.operators.DupGraph.refreshLabels(s, path,
@@ -56,12 +55,16 @@ object DedupQueries {
     * consumer's oracle stays the from-scratch pipeline, so the driver hash
     * gate pins stored edges ≡ recompute on each run.
     */
-  private def registryEdges(s: SparkSession, d: String): DataFrame = {
-    val path = graft.operators.DupGraph.registryPath(s, d)
-    graft.operators.DupGraph.ensureBuilt(s, d, path)
-    graft.operators.DupGraph.edges(s, path)
+  private def registryEdges(s: SparkSession, d: String): DataFrame =
+    graft.operators.DupGraph.edges(s, registryGraph(s, d))
       .select(col("doc_a"), col("doc_b"), col("j"))
-  }
+
+  /** The registry corpus's [[graft.operators.DupGraph]] root, edges built
+    * on first use ([[graft.operators.StoreRoot]]).
+    */
+  private[graft] def registryGraph(s: SparkSession, d: String): String =
+    graft.operators.StoreRoot.ensure(s, d, graft.operators.DupGraph.Kind)(
+      graft.operators.DupGraph.build(s, d, _))
 
   /** Persisted per-doc signature rows (doc_id, hs, sig, n_tok) of the
     * registry corpus — a [[graft.operators.MinHashIndex]] co-located under
@@ -75,12 +78,8 @@ object DedupQueries {
     * parquet reads. Consumers' oracles stay from-scratch, so the hash gate
     * pins stored signatures ≡ recompute every run.
     */
-  private[graft] def registrySignatures(s: SparkSession, d: String): DataFrame = {
-    val sigPath = s"${graft.operators.DupGraph.registryPath(s, d)}/sig"
-    graft.operators.MinHashIndex.ensureBuilt(
-      docs(s, d).select("doc_id", "text"), sigPath)
-    graft.operators.MinHashIndex.signatures(s, sigPath)
-  }
+  private[graft] def registrySignatures(s: SparkSession, d: String): DataFrame =
+    signatureStore(s, d, "sig", docs(s, d).select("doc_id", "text"))
 
   /** Signature rows of a DERIVED pseudo-doc slice (round 12, VERDICT item
     * 5): the excerpt legs of dedup_containment_pairs /
@@ -95,10 +94,19 @@ object DedupQueries {
     * text, so the driver hash gate pins store ≡ recompute each run.
     */
   private[graft] def excerptSignatures(
-      s: SparkSession, d: String, tag: String, mk: => DataFrame): DataFrame = {
-    val sigPath = s"${graft.operators.DupGraph.registryPath(s, d)}/sig_$tag"
-    graft.operators.MinHashIndex.ensureBuilt(mk, sigPath)
-    graft.operators.MinHashIndex.signatures(s, sigPath)
+      s: SparkSession, d: String, tag: String, mk: => DataFrame): DataFrame =
+    signatureStore(s, d, s"sig_$tag", mk)
+
+  /** The [[graft.operators.MinHashIndex]] of `mk` at `sub` under the
+    * registry dup-graph root, built on first use — its own store, so
+    * neither the edge build nor another signature store replaces it.
+    */
+  private def signatureStore(
+      s: SparkSession, d: String, sub: String, mk: => DataFrame): DataFrame = {
+    import graft.operators.{DupGraph, MinHashIndex, StoreRoot}
+    val path = StoreRoot.ensureAt(s, s"${StoreRoot.key(s, d, DupGraph.Kind)}/$sub")(
+      MinHashIndex.build(mk, _))
+    MinHashIndex.signatures(s, path)
   }
 
   private def emb(s: SparkSession, d: String) = Tables.t(s, d, "embeddings")
@@ -281,6 +289,14 @@ object DedupQueries {
     * the occupancy sub-split below covers the gap in between.
     */
   val SemKCells = 16
+
+  /** The [[SemKCells]]-cell Lloyd IVF store over the corpus embeddings,
+    * built on first use — shared by dedup_semantic_kmeans,
+    * dedup_proto_prune and hyb_rrf_indexed.
+    */
+  private[graft] def semkIndex(s: SparkSession, d: String): String =
+    graft.operators.StoreRoot.ensure(s, d, graft.operators.IvfIndex.Kind, s"semk$SemKCells")(
+      graft.operators.IvfIndex.build(emb(s, d), _, nCells = SemKCells, iters = 2))
 
   /** Sub-plane resolver for dedup_semantic_kmeans: same occupancy lever as
     * [[resolveSemSub]], but per-cell occupancy divides by the TRAINED cell
@@ -1183,9 +1199,9 @@ object DedupQueries {
     "dedup_incremental" -> QuerySpec(
       (s, d) => {
         graft.functions.VectorExpressions.register(s)
-        val idx = graft.operators.MinHashIndex.registryPath(s, d, "mod10")
-        graft.operators.MinHashIndex.ensureBuilt(
-          docs(s, d).filter(col("doc_id") % 10 =!= 0), idx)
+        val idx = graft.operators.StoreRoot.ensure(
+            s, d, graft.operators.MinHashIndex.Kind, "mod10")(
+          graft.operators.MinHashIndex.build(docs(s, d).filter(col("doc_id") % 10 =!= 0), _))
         graft.operators.MinHashIndex
           .newPairs(docs(s, d).filter(col("doc_id") % 10 === 0), idx)
           .select(col("doc_a"), col("doc_b"),
@@ -2098,10 +2114,7 @@ object DedupQueries {
       (s, d) => {
         graft.functions.VectorExpressions.register(s)
         val sub = resolveSemKSub(s, d)
-        val idx = graft.operators.IvfIndex.registryPath(s, d, s"semk$SemKCells")
-        graft.operators.IvfIndex.ensure(s, idx) {
-          graft.operators.IvfIndex.build(emb(s, d), idx, nCells = SemKCells, iters = 2)
-        }
+        val idx = semkIndex(s, d)
         val cent = broadcast(s.read.parquet(s"$idx/centroids")
           .withColumn("cnrm", expr("long_dot(ce, ce)")))
         val assigned = s.read.parquet(s"$idx/vectors")
@@ -2185,10 +2198,7 @@ object DedupQueries {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         graft.functions.VectorExpressions.register(s)
-        val idx = graft.operators.IvfIndex.registryPath(s, d, s"semk$SemKCells")
-        graft.operators.IvfIndex.ensure(s, idx) {
-          graft.operators.IvfIndex.build(emb(s, d), idx, nCells = SemKCells, iters = 2)
-        }
+        val idx = semkIndex(s, d)
         val cent = broadcast(s.read.parquet(s"$idx/centroids")
           .withColumn("cnrm", expr("long_dot(ce, ce)")))
         val asg = s.read.parquet(s"$idx/vectors")

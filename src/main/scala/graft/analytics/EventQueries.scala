@@ -635,8 +635,8 @@ object EventQueries {
     "evt_kmv_overlap_indexed" -> QuerySpec(
       (s, d) => {
         val k = 64
-        val path = graft.operators.KmvStore.registryPath(s, d)
-        graft.operators.KmvStore.ensureBuilt(s, d, path)
+        val path = graft.operators.StoreRoot.ensure(s, d, graft.operators.KmvStore.Kind)(
+          graft.operators.KmvStore.build(s, d, _))
         kmvPairStats(graft.operators.KmvStore.typeSketches(s, path), k)
           .select(col("type_a"), col("type_b"),
             when(col("n_m") < k, col("n_m"))

@@ -175,7 +175,7 @@ object GraphQueries {
     * unreadable.
     */
   private def underLocalThreshold(s: SparkSession, d: String, e: DataFrame): Boolean = {
-    val path = graft.operators.DupGraph.registryPath(s, d)
+    val path = graft.operators.StoreRoot.key(s, d, graft.operators.DupGraph.Kind)
     val n = graft.operators.DupGraph.edgeRowsHint(s, path).getOrElse(e.count())
     n * 2 <= graft.operators.ConnectedComponents.LocalSolveEdgesDefault
   }
@@ -374,11 +374,9 @@ object GraphQueries {
     * use per corpus), so each graph query's input is a 2-column parquet
     * scan instead of the full LSH pipeline.
     */
-  private def edges(s: SparkSession, d: String): DataFrame = {
-    val path = graft.operators.DupGraph.registryPath(s, d)
-    graft.operators.DupGraph.ensureBuilt(s, d, path)
-    graft.operators.DupGraph.edges(s, path).select(col("doc_a"), col("doc_b"))
-  }
+  private def edges(s: SparkSession, d: String): DataFrame =
+    graft.operators.DupGraph.edges(s, DedupQueries.registryGraph(s, d))
+      .select(col("doc_a"), col("doc_b"))
 
   /** Oracle prefix: `v(doc_a, doc_b, j)` -> undirected edge list `e`. */
   private val OracleEdges =

@@ -94,11 +94,9 @@ object MultimodalQueries {
     * from scratch ([[PhashPairsCte]]), so the driver's hash compare pins
     * store ≡ recompute — the `txt_bm25_indexed` pattern.
     */
-  private def store(s: SparkSession, d: String): String = {
-    val path = graft.operators.MediaGraph.registryPath(s, d)
-    graft.operators.MediaGraph.ensureBuilt(s, d, path)
-    path
-  }
+  private def store(s: SparkSession, d: String): String =
+    graft.operators.StoreRoot.ensure(s, d, graft.operators.MediaGraph.Kind)(
+      graft.operators.MediaGraph.build(s, d, _))
 
   /** Oracle CTE chain ending in verified pairs `vp(doc_a, doc_b, hamming)` —
     * the DuckDB twin of [[phashTable]] + [[phashPairsFromHashes]].

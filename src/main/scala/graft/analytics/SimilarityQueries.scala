@@ -384,8 +384,8 @@ object SimilarityQueries {
   private def ivfpqRanked(s: SparkSession, d: String, nq: Int)
       : org.apache.spark.sql.DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val idx = graft.operators.PqIndex.registryPath(s, d, "ivfpq-label")
-    graft.operators.PqIndex.ensure(s, idx) {
+    val idx = graft.operators.StoreRoot.ensure(
+        s, d, graft.operators.PqIndex.Kind, "ivfpq-label") { stage =>
       val n = Tables.spread(emb(s, d), "vec_id")
         .select(col("vec_id"), col("label"), expr(quantizeS("embedding")).as("qe"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -399,16 +399,16 @@ object SimilarityQueries {
         .groupBy(col("c_id"))
         .agg(transform(array_sort(collect_list(struct(col("j"), col("cj")))),
           x => x.getField("cj")).as("ce"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$idx/coarse")
+        .coalesce(1).write.mode("overwrite").parquet(s"$stage/coarse")
       // coarse assignment at build time: nearest label-centroid argmin
       // (ties on c_id), the sim_ivf_topk shape
-      val centStored = s.read.parquet(s"$idx/coarse")
+      val centStored = s.read.parquet(s"$stage/coarse")
       val assigned = n.crossJoin(broadcast(centStored))
         .withColumn("dist", expr("long_l2(qe, ce)"))
         .groupBy(col("vec_id"))
         .agg(min(struct(col("dist"), col("c_id"))).as("m"))
         .select(col("vec_id"), col("m.c_id").as("cell"))
-      graft.operators.PqIndex.build(emb(s, d), idx, Some(assigned))
+      graft.operators.PqIndex.build(emb(s, d), stage, Some(assigned))
       n.unpersist(blocking = false)
     }
     val cent = s.read.parquet(s"$idx/coarse")
@@ -491,12 +491,12 @@ object SimilarityQueries {
   private def ivfpqResidualRanked(s: SparkSession, d: String, nq: Int)
       : org.apache.spark.sql.DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val idx = graft.operators.PqIndex.registryPath(s, d, "ivfpq-residual")
-    graft.operators.PqIndex.ensure(s, idx) {
+    val idx = graft.operators.StoreRoot.ensure(
+        s, d, graft.operators.PqIndex.Kind, "ivfpq-residual") { stage =>
       val q = graft.operators.IvfIndex.quantized(emb(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.operators.IvfIndex.trainCentroids(q, idx, nCells = 16, iters = 2)
-      val cent = s.read.parquet(s"$idx/centroids")
+      graft.operators.IvfIndex.trainCentroids(q, stage, nCells = 16, iters = 2)
+      val cent = s.read.parquet(s"$stage/centroids")
       val assigned = q.crossJoin(broadcast(cent))
         .withColumn("dist", expr("long_l2(qe, ce)"))
         .groupBy(col("vec_id"))
@@ -506,7 +506,7 @@ object SimilarityQueries {
         .select(col("vec_id"), col("cell"),
           expr("zip_with(qe, ce, (a, b) -> a - b)").as("qe"))
       graft.operators.PqIndex.buildFromQuantized(
-        residuals.select(col("vec_id"), col("qe")), idx,
+        residuals.select(col("vec_id"), col("qe")), stage,
         Some(residuals.select(col("vec_id"), col("cell"))))
       q.unpersist(blocking = false)
     }
@@ -622,19 +622,19 @@ object SimilarityQueries {
     */
   private def ivfsqRanked(s: SparkSession, d: String, nq: Int): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val idx = graft.operators.SqIndex.registryPath(s, d, "ivfsq")
-    graft.operators.SqIndex.ensure(s, idx) {
+    val idx = graft.operators.StoreRoot.ensure(
+        s, d, graft.operators.SqIndex.Kind, "ivfsq") { stage =>
       val q = graft.operators.IvfIndex.quantized(emb(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.operators.IvfIndex.trainCentroids(q, idx, nCells = 16, iters = 2)
-      val cent = s.read.parquet(s"$idx/centroids")
+      graft.operators.IvfIndex.trainCentroids(q, stage, nCells = 16, iters = 2)
+      val cent = s.read.parquet(s"$stage/centroids")
       val assigned = q.crossJoin(broadcast(cent))
         .withColumn("dist", expr("long_l2(qe, ce)"))
         .groupBy(col("vec_id"))
         .agg(first(col("qe")).as("qe"), min(struct(col("dist"), col("cell"))).as("m"))
         .select(col("vec_id"), col("qe"), col("m.cell").as("cell"))
       graft.operators.SqIndex.buildFromQuantized(
-        assigned.select(col("vec_id"), col("qe")), idx,
+        assigned.select(col("vec_id"), col("qe")), stage,
         assigned.select(col("vec_id"), col("cell")))
       q.unpersist(blocking = false)
     }
@@ -1129,16 +1129,11 @@ object SimilarityQueries {
         graft.functions.VectorExpressions.register(s)
         val qids = emb(s, d).filter(col("vec_id") < 4)
           .select(col("vec_id").as("qid"))
-        val idx = graft.operators.TextIndex.registryPath(s, d)
-        graft.operators.TextIndex.ensureBuilt(Tables.t(s, d, "documents"), idx)
+        val idx = TextQueries.registryTextIndex(s, d)
         val text = graft.operators.TextIndex.search(s, idx, qids, 50)
           .select(col("qid"), col("doc_id"), col("rank"))
         // vector leg: the persistent Lloyd IVF store, 2-cell probe
-        val ividx = graft.operators.IvfIndex.registryPath(s, d, "semk16")
-        graft.operators.IvfIndex.ensure(s, ividx) {
-          graft.operators.IvfIndex.build(emb(s, d), ividx,
-            nCells = graft.analytics.DedupQueries.SemKCells, iters = 2)
-        }
+        val ividx = DedupQueries.semkIndex(s, d)
         val vec = graft.operators.IvfIndex.probe(s, ividx,
             emb(s, d).filter(col("vec_id") < 4), k = 50, nProbe = 2)
           .select(col("q_id").as("qid"), col("vec_id").as("doc_id"),
@@ -1631,12 +1626,12 @@ object SimilarityQueries {
     "sim_ivf_incremental" -> QuerySpec(
       (s, d) => {
         graft.functions.VectorExpressions.register(s)
-        val idx = graft.operators.IvfIndex.registryPath(s, d, "mod10")
-        graft.operators.IvfIndex.ensure(s, idx) {
+        val idx = graft.operators.StoreRoot.ensure(
+            s, d, graft.operators.IvfIndex.Kind, "mod10") { stage =>
           graft.operators.IvfIndex.build(
-            emb(s, d).filter(col("vec_id") % 10 =!= 0), idx, nCells = 16, iters = 2)
+            emb(s, d).filter(col("vec_id") % 10 =!= 0), stage, nCells = 16, iters = 2)
           graft.operators.IvfIndex.append(
-            emb(s, d).filter(col("vec_id") % 10 === 0), idx)
+            emb(s, d).filter(col("vec_id") % 10 === 0), stage)
         }
         graft.operators.IvfIndex
           .probe(s, idx, emb(s, d).filter(col("vec_id") < 5), k = 5, nProbe = 2)
@@ -1690,10 +1685,8 @@ object SimilarityQueries {
         // Store artifacts are bit-identical to the in-query pipeline
         // (shared pqTrainCodebooks/pqAssign), so the oracle is unchanged.
         graft.functions.VectorExpressions.register(s)
-        val idx = graft.operators.PqIndex.registryPath(s, d, "flat")
-        graft.operators.PqIndex.ensure(s, idx) {
-          graft.operators.PqIndex.build(emb(s, d), idx)
-        }
+        val idx = graft.operators.StoreRoot.ensure(s, d, graft.operators.PqIndex.Kind, "flat")(
+          graft.operators.PqIndex.build(emb(s, d), _))
         val queries = Tables.spread(emb(s, d), "vec_id")
           .filter(col("vec_id") < 5)
           .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
@@ -1724,10 +1717,8 @@ object SimilarityQueries {
     "sim_pq_recall" -> QuerySpec(
       (s, d) => {
         graft.functions.VectorExpressions.register(s)
-        val idx = graft.operators.PqIndex.registryPath(s, d, "flat")
-        graft.operators.PqIndex.ensure(s, idx) {
-          graft.operators.PqIndex.build(emb(s, d), idx)
-        }
+        val idx = graft.operators.StoreRoot.ensure(s, d, graft.operators.PqIndex.Kind, "flat")(
+          graft.operators.PqIndex.build(emb(s, d), _))
         val q20 = Tables.spread(emb(s, d), "vec_id")
           .filter(col("vec_id") < 20)
           .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
@@ -2046,9 +2037,7 @@ object SimilarityQueries {
         // BM25 leg served from the persistent inverted index (built once
         // per corpus, shared with txt_bm25_indexed) — the retrieval-service
         // shape; the oracle recomputes from scratch, pinning store parity
-        val idx = graft.operators.TextIndex.registryPath(s, d)
-        graft.operators.TextIndex.ensureBuilt(
-          Tables.t(s, d, "documents"), idx)
+        val idx = TextQueries.registryTextIndex(s, d)
         val text = graft.operators.TextIndex.search(s, idx, qids, 50)
           .select(col("qid"), col("doc_id"), col("rank"))
         val n = Tables.spread(emb(s, d), "vec_id")
@@ -2291,10 +2280,8 @@ object SimilarityQueries {
         // query is the deployment-shape code-scan probe, not training.
         // Store arithmetic is bit-identical to the in-query pipeline, so
         // the oracle is unchanged.
-        val idx = graft.operators.SqIndex.registryPath(s, d)
-        graft.operators.SqIndex.ensure(s, idx) {
-          graft.operators.SqIndex.build(emb(s, d), idx)
-        }
+        val idx = graft.operators.StoreRoot.ensure(s, d, graft.operators.SqIndex.Kind)(
+          graft.operators.SqIndex.build(emb(s, d), _))
         val queries = Tables.spread(emb(s, d), "vec_id")
           .filter(col("vec_id") < 5)
           .select(col("vec_id").as("q_id"), expr(quantizeS("embedding")).as("qq"))

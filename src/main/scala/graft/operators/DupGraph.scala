@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,12 +15,8 @@ import org.apache.spark.sql.functions._
   * themselves are cheap next to it). At 100 TB the asymmetry is extreme:
   * edges are a few hundred bytes per near-dup pair while the pipeline
   * re-reads and re-hashes the whole corpus, so a build-once edge store is
-  * the only shape that scales. Mirrors the [[MinHashIndex]] lifecycle:
-  * [[build]] overwrites, [[ensureBuilt]] builds only when absent (the
-  * `_SUCCESS` marker gates completeness, so a killed build re-runs), and
-  * [[registryPath]] keys the store to the corpus fingerprint + format
-  * version so a regenerated corpus or changed signature scheme can never
-  * serve stale edges.
+  * the only shape that scales. Keying and build-once readiness are
+  * [[StoreRoot]]'s.
   *
   * Stored schema: (doc_a BIGINT, doc_b BIGINT, j DOUBLE) with
   * doc_a < doc_b and exact Jaccard j >= 0.5 — `j` rides along so consumers
@@ -35,6 +30,9 @@ object DupGraph {
     * silently answer graph queries for a different graph.
     */
   val FormatVersion = 1
+
+  /** Registry store key ([[StoreRoot.key]]). */
+  val Kind = StoreKind("dupgraph", "documents", FormatVersion)
 
   private def edgeDir(indexPath: String) = s"$indexPath/edges"
 
@@ -50,67 +48,22 @@ object DupGraph {
     graft.CacheTracker.releaseAll()
   }
 
-  /** Whether a completed edge store exists. Flat [[build]] output is
-    * complete iff the root `_SUCCESS` marker exists; a batch-driven store
-    * ([[appendBatch]]) commits per-partition with no root marker, so it
-    * counts as existing when any `batch_id=` partition holds data — a
-    * partially written batch is safe because its replay overwrites exactly
-    * that partition.
-    */
-  def exists(spark: SparkSession, indexPath: String): Boolean = {
-    val dir = new Path(edgeDir(indexPath))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(dir, "_SUCCESS"))) true
-    else if (fs.exists(dir) && fs.listStatus(dir).exists { st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-        fs.listStatus(st.getPath).exists(f => f.getPath.getName.endsWith(".parquet"))
-    }) true
-    // a batch-driven graph whose batches found no pairs yet has a
-    // batch-partitioned SIGNATURE store but no edge partitions (an empty
-    // DataFrame under dynamic overwrite writes nothing) — that graph
-    // exists, with zero edges. The sig check is batch-layout-specific, so
-    // a killed [[buildFrom]] (flat sig written, edges not) still reads as
-    // absent and rebuilds.
-    else {
-      val sig = new Path(s"$indexPath/sig/signatures")
-      fs.exists(sig) && fs.listStatus(sig).exists { st =>
-        st.isDirectory && st.getPath.getName.startsWith("batch_id=")
-      }
-    }
-  }
-
-  /** [[build]] unless a completed store is already present. */
-  def ensureBuilt(spark: SparkSession, dir: String, indexPath: String): Unit =
-    if (!exists(spark, indexPath)) build(spark, dir, indexPath)
-
   /** Stored edge row count from parquet FOOTERS — no Spark job (round 12,
     * the `embeddingRowsHint` move): the graph queries' local-vs-distributed
     * tier switch needs only a row count, and running `e.count()` per query
     * added a full job/stage launch to every graph row's critical path.
-    * Sums data-file record counts under the edge dir (flat and `batch_id=`
-    * layouts); deletes rewrite files, so footers stay exact. None when the
+    * Sums the record counts of the edge dir's [[StoreRoot.dataFiles]];
+    * deletes rewrite files, so footers stay exact. None when the
     * listing/footers are unreadable — callers fall back to counting.
     */
   def edgeRowsHint(spark: SparkSession, indexPath: String): Option[Long] =
     scala.util.Try {
       val conf = spark.sparkContext.hadoopConfiguration
-      val dir = new Path(edgeDir(indexPath))
-      val fs = dir.getFileSystem(conf)
-      if (!fs.exists(dir)) 0L
-      else {
-        val files = fs.listStatus(dir).flatMap { st =>
-          if (st.isFile && st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-          else if (st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-            fs.listStatus(st.getPath).map(_.getPath)
-              .filter(_.getName.endsWith(".parquet")).toSeq
-          else Seq.empty
-        }
-        files.map { f =>
-          val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-          try rd.getRecordCount finally rd.close()
-        }.sum
-      }
+      StoreRoot.dataFiles(spark, edgeDir(indexPath)).map { f =>
+        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+        try rd.getRecordCount finally rd.close()
+      }.sum
     }.toOption
 
   /** The stored verified edges (doc_a < doc_b, j >= 0.5) — a bare columnar
@@ -119,18 +72,11 @@ object DupGraph {
     * at all (dynamic overwrite writes nothing for an empty batch) — that
     * reads as the empty edge set, not an error.
     */
-  def edges(spark: SparkSession, indexPath: String): DataFrame = {
-    val dir = new Path(edgeDir(indexPath))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def edges(spark: SparkSession, indexPath: String): DataFrame =
     // an empty-batch dynamic overwrite can leave the root dir with a
     // commit marker but zero data files — only a store with actual
-    // parquet (flat or under batch_id= partitions) is readable
-    val hasData = fs.exists(dir) && fs.listStatus(dir).exists { st =>
-      (st.isFile && st.getPath.getName.endsWith(".parquet")) ||
-        (st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-          fs.listStatus(st.getPath).exists(_.getPath.getName.endsWith(".parquet")))
-    }
-    if (hasData) spark.read.parquet(edgeDir(indexPath))
+    // parquet is readable
+    if (StoreRoot.hasData(spark, edgeDir(indexPath))) spark.read.parquet(edgeDir(indexPath))
     // the empty fallback mirrors the PARTITIONED layout (batch_id
     // included): consumers selecting batch_id must see the same schema
     // whether the store is empty or populated
@@ -141,7 +87,6 @@ object DupGraph {
         org.apache.spark.sql.types.StructField("doc_b", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("j", org.apache.spark.sql.types.DoubleType),
         org.apache.spark.sql.types.StructField("batch_id", org.apache.spark.sql.types.LongType))))
-  }
 
   /** [[build]] plus a co-located [[MinHashIndex]] signature store, enabling
     * incremental maintenance: a graph that took a full-corpus LSH pipeline
@@ -212,7 +157,7 @@ object DupGraph {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val nid = newSig.select("doc_id").distinct()
     val all =
-      if (MinHashIndex.exists(spark, sigPath))
+      if (StoreRoot.hasData(spark, sigPath))
         MinHashIndex.signatures(spark, sigPath).select("doc_id", "hs", "sig")
           .join(broadcast(nid), Seq("doc_id"), "left_anti")
           .unionByName(newSig)
@@ -285,7 +230,7 @@ object DupGraph {
 
   /** Whether a label store exists (any bucket partition with data). */
   def labelsExist(spark: SparkSession, indexPath: String): Boolean =
-    LabelStore.exists(spark, labelDir(indexPath))
+    StoreRoot.hasData(spark, labelDir(indexPath))
 
   /** Current component labels (doc_id, lbl) — one row per doc that appears
     * in the graph; lbl = min doc_id of its component (the
@@ -303,21 +248,4 @@ object DupGraph {
       newEdges: DataFrame): Unit =
     LabelStore.refresh(spark, labelDir(indexPath), newEdges,
       edges(spark, indexPath).select(col("doc_a"), col("doc_b")))
-
-  /** Deterministic per-corpus store location for registry queries: keyed by
-    * the documents table's (length, mtime) fingerprint + [[FormatVersion]],
-    * so a regenerated corpus or a changed edge scheme gets a fresh build
-    * instead of silently serving stale edges. Lives under the JVM temp
-    * dir — a cache, not a deliverable.
-    */
-  def registryPath(spark: SparkSession, dir: String): String = {
-    val p = new Path(s"$dir/documents.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sum = fs.getContentSummary(p)
-    val mtime = fs.getFileStatus(p).getModificationTime
-    val fp = s"$dir|v$FormatVersion|${sum.getLength}|$mtime"
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    s"${System.getProperty("java.io.tmpdir")}/graft-dupgraph/$h"
-  }
 }

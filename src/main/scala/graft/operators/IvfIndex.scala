@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,8 +25,20 @@ import org.apache.spark.sql.functions._
   * rows and cell memberships, what `IvfIndexSpec` asserts); the parquet
   * file layout and row order under `partitionBy` still vary with task
   * parallelism, as for any distributed write.
+  *
+  * Keying and build-once readiness are [[StoreRoot]]'s.
   */
 object IvfIndex {
+
+  /** Bump when the store layout or assignment scheme changes (centroid
+    * training, quantization, the `cell`/`batch_id` partitioning) — a ready
+    * store of an older layout must never serve a consumer expecting the
+    * new one.
+    */
+  val FormatVersion = 1
+
+  /** Registry store key ([[StoreRoot.key]]). */
+  val Kind = StoreKind("ivf-index", "embeddings", FormatVersion)
 
   private[graft] def quantized(emb: DataFrame): DataFrame = {
     graft.functions.VectorExpressions.register(emb.sparkSession)
@@ -97,12 +108,6 @@ object IvfIndex {
         .select(col("cell"), coalesce(col("ce"), col("prev")).as("ce"))
     }
     cent.coalesce(1).write.mode("overwrite").parquet(s"$indexPath/centroids")
-  }
-
-  /** Whether the coarse layer exists (the streaming bootstrap probe). */
-  def centroidsExist(spark: SparkSession, indexPath: String): Boolean = {
-    val p = new Path(s"$indexPath/centroids/_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Fold a new vector batch into an existing index WITHOUT retraining:
@@ -177,45 +182,6 @@ object IvfIndex {
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
     val total = counts.agg(sum(col("n"))).first().getLong(0).toDouble
     counts.withColumn("share", col("n") / lit(total)).orderBy(col("cell"))
-  }
-
-  /** Whether `indexPath` holds a COMPLETE index (build + any appends all
-    * finished) — the explicit ready marker written by [[ensure]], not just
-    * parquet `_SUCCESS` (a crash between build and a required append would
-    * otherwise look complete).
-    */
-  def ready(spark: SparkSession, indexPath: String): Boolean = {
-    val p = new Path(indexPath, "_GRAFT_READY")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Run `buildF` (any build/append sequence) unless a ready index already
-    * exists; a partial previous attempt is wiped first so appends never
-    * stack on a half-written store.
-    */
-  def ensure(spark: SparkSession, indexPath: String)(buildF: => Unit): Unit =
-    if (!ready(spark, indexPath)) {
-      val root = new Path(indexPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
-      buildF
-      fs.create(new Path(root, "_GRAFT_READY"), true).close()
-    }
-
-  /** Deterministic per-corpus index location for registry queries: keyed by
-    * the embeddings table's (length, mtime) fingerprint, so a regenerated
-    * corpus gets a fresh index instead of probing stale vectors. Lives
-    * under the JVM temp dir — a cache, not a deliverable.
-    */
-  def registryPath(spark: SparkSession, dir: String, tag: String): String = {
-    val p = new Path(s"$dir/embeddings.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sum = fs.getContentSummary(p)
-    val mtime = fs.getFileStatus(p).getModificationTime
-    val fp = s"$dir|${sum.getLength}|$mtime|$tag"
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    s"${System.getProperty("java.io.tmpdir")}/graft-ivf-index/$h"
   }
 
   /** Probe the index: each query ranks cells against the (broadcast-sized)

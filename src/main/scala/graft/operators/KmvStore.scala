@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,11 +29,16 @@ import org.apache.spark.sql.functions._
   * affected (type, day) slices must be re-sketched from the surviving
   * corpus ([[rebuildDays]]) — bounded by the user's active days, never the
   * store.
+  *
+  * Keying and build-once readiness are [[StoreRoot]]'s.
   */
 object KmvStore {
 
   /** Bump when sketch semantics change (entity encoding, hash, k). */
   val FormatVersion = 1
+
+  /** Registry store key ([[StoreRoot.key]]). */
+  val Kind = StoreKind("kmvstore", "events", FormatVersion)
 
   /** Sketch width (matches evt_kmv_overlap's k). */
   val K = 64
@@ -68,23 +72,6 @@ object KmvStore {
   def build(spark: SparkSession, dir: String, indexPath: String): Unit =
     sketchRows(graft.Tables.t(spark, dir, "events"))
       .write.mode(SaveMode.Overwrite).parquet(rowDir(indexPath))
-
-  /** Whether a completed store exists (root `_SUCCESS` or any batch_id
-    * partition with data — same contract as [[MediaGraph.exists]]).
-    */
-  def exists(spark: SparkSession, indexPath: String): Boolean = {
-    val dir = new Path(rowDir(indexPath))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(new Path(dir, "_SUCCESS")) ||
-      (fs.exists(dir) && fs.listStatus(dir).exists { st =>
-        st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-          fs.listStatus(st.getPath).exists(_.getPath.getName.endsWith(".parquet"))
-      })
-  }
-
-  /** [[build]] unless a completed store is already present. */
-  def ensureBuilt(spark: SparkSession, dir: String, indexPath: String): Unit =
-    if (!exists(spark, indexPath)) build(spark, dir, indexPath)
 
   /** Raw stored sketch rows (event_type, day, h). */
   def rows(spark: SparkSession, indexPath: String): DataFrame =
@@ -148,14 +135,12 @@ object KmvStore {
   def rebuildDays(survivingEvents: DataFrame, indexPath: String,
       days: DataFrame, batchId: Long): Unit = {
     val spark = survivingEvents.sparkSession
-    val part = new Path(s"${rowDir(indexPath)}/batch_id=$batchId")
-    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = s"${rowDir(indexPath)}/batch_id=$batchId"
     // a re-run after a crash legitimately finds its own partition; only a
     // partition holding rows for OTHER days marks a reused foreign batch id
-    if (fs.exists(part) &&
-        fs.listStatus(part).exists(_.getPath.getName.endsWith(".parquet"))) {
+    if (StoreRoot.hasData(spark, part)) {
       val dayList = days.select(col(days.columns.head).as("day")).distinct()
-      val foreign = spark.read.parquet(part.toString)
+      val foreign = spark.read.parquet(part)
         .join(broadcast(dayList), Seq("day"), "left_anti")
       require(foreign.isEmpty,
         s"rebuildDays batchId=$batchId already holds other days' slices — " +
@@ -169,20 +154,5 @@ object KmvStore {
       indexPath, batchId)
     StoreDelete.scoped(spark, rowDir(indexPath), Seq("day"), days,
       Seq("batch_id"), col("batch_id") =!= lit(batchId))
-  }
-
-  /** Deterministic per-corpus store location for registry queries — keyed
-    * by the events table fingerprint + [[FormatVersion]]; a cache under the
-    * JVM temp dir, not a deliverable.
-    */
-  def registryPath(spark: SparkSession, dir: String): String = {
-    val p = new Path(s"$dir/events.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sum = fs.getContentSummary(p)
-    val mtime = fs.getFileStatus(p).getModificationTime
-    val fp = s"$dir|v$FormatVersion|${sum.getLength}|$mtime"
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    s"${System.getProperty("java.io.tmpdir")}/graft-kmvstore/$h"
   }
 }

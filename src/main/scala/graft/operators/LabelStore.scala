@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,22 +37,12 @@ object LabelStore {
     */
   val Buckets = 64
 
-  /** Whether a label store exists (any bucket partition with data). */
-  def exists(spark: SparkSession, root: String): Boolean = {
-    val dir = new Path(root)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(dir) && fs.listStatus(dir).exists { st =>
-      st.isDirectory && st.getPath.getName.startsWith("bkt=") &&
-        fs.listStatus(st.getPath).exists(_.getPath.getName.endsWith(".parquet"))
-    }
-  }
-
   /** Current component labels (doc_id, lbl) — one row per doc that appears
     * in the graph; lbl = min doc_id of its component (the
     * [[ConnectedComponents.components]] contract, maintained incrementally).
     */
   def labels(spark: SparkSession, root: String): DataFrame =
-    if (exists(spark, root))
+    if (StoreRoot.hasData(spark, root))
       spark.read.parquet(root).select(col("doc_id"), col("lbl"))
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -73,7 +62,7 @@ object LabelStore {
   def refresh(spark: SparkSession, root: String, newEdges: DataFrame,
       allEdges: => DataFrame): Unit = {
     val ne = newEdges.select(col("doc_a"), col("doc_b")).distinct()
-    if (!exists(spark, root)) {
+    if (!StoreRoot.hasData(spark, root)) {
       val seed = ne.unionByName(
         allEdges.select(col("doc_a"), col("doc_b"))).distinct()
       val lbls = ConnectedComponents.components(seed, "doc_a", "doc_b")
@@ -124,7 +113,7 @@ object LabelStore {
     */
   def snapshotTouched(spark: SparkSession, root: String,
       ids: DataFrame): Option[DataFrame] =
-    if (!exists(spark, root)) None
+    if (!StoreRoot.hasData(spark, root)) None
     else {
       val stored = spark.read.parquet(root).select(col("doc_id"), col("lbl"))
       val del = broadcast(
@@ -156,7 +145,7 @@ object LabelStore {
         .unionByName(surv.join(comp.select(col("doc_id")), Seq("doc_id"), "left_anti"))
       StoreDelete(spark, root, Seq("doc_id"), dropIds, Seq("bkt"))
       // rows to REWRITE: recomputed labels of the surviving members
-      if (exists(spark, root))
+      if (StoreRoot.hasData(spark, root))
         upsertBuckets(spark, root, spark.read.parquet(root), comp)
       else if (!comp.isEmpty) writeBuckets(spark, root, comp)
       surv.unpersist(blocking = false)

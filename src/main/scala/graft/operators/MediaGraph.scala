@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,14 +28,11 @@ import org.apache.spark.sql.functions._
   *     store at read time — capping at build would freeze df at the build
   *     batch's statistics and break append consistency.
   *
-  * Lifecycle mirrors [[DupGraph]]: [[build]] overwrites (root `_SUCCESS`
-  * gates completeness, a killed build re-runs), [[ensureBuilt]] builds only
-  * when absent, [[appendBatch]] folds a new asset batch in idempotently
-  * (batch_id dynamic partition overwrite — a replayed batch rewrites
-  * exactly its own partition), [[delete]] propagates takedowns to all three
-  * tables, and [[registryPath]] keys the store to the corpus fingerprint +
-  * format version so a regenerated corpus or changed hash scheme never
-  * serves stale fingerprints.
+  * [[build]] overwrites, [[appendBatch]] folds a new asset batch in
+  * idempotently (batch_id dynamic partition overwrite — a replayed batch
+  * rewrites exactly its own partition), and [[delete]] propagates
+  * takedowns to all three tables. Keying and build-once readiness are
+  * [[StoreRoot]]'s.
   */
 object MediaGraph {
 
@@ -46,8 +42,10 @@ object MediaGraph {
     */
   val FormatVersion = 1
 
+  /** Registry store key ([[StoreRoot.key]]). */
+  val Kind = StoreKind("mediagraph", "documents", FormatVersion)
+
   private def sub(indexPath: String, t: String) = s"$indexPath/$t"
-  private val TableNames = Seq("phash", "audio", "frames")
 
   // ---- fingerprint derivations (shared by build and appendBatch) ----------
   // These ARE the stand-in decodes the registry queries historically ran
@@ -113,36 +111,6 @@ object MediaGraph {
     framesFrom(docs).write.mode(SaveMode.Overwrite).parquet(sub(indexPath, "frames"))
   }
 
-  /** Whether a completed store exists. Flat [[build]] output is complete
-    * iff ALL THREE tables carry their root `_SUCCESS` marker (a killed
-    * build re-runs). A batch-driven store ([[appendBatch]]) counts as
-    * existing when ANY table holds `batch_id=` partition data — an empty
-    * modality (e.g. a batch whose docs are all too short for the audio
-    * fingerprint) writes no files under dynamic overwrite, and a partially
-    * written batch is safe because its replay overwrites exactly its own
-    * partitions.
-    */
-  def exists(spark: SparkSession, indexPath: String): Boolean = {
-    def fsOf(dir: Path) = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasSuccess(t: String) = {
-      val dir = new Path(sub(indexPath, t))
-      fsOf(dir).exists(new Path(dir, "_SUCCESS"))
-    }
-    def hasBatchData(t: String) = {
-      val dir = new Path(sub(indexPath, t))
-      val fs = fsOf(dir)
-      fs.exists(dir) && fs.listStatus(dir).exists { st =>
-        st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-          fs.listStatus(st.getPath).exists(_.getPath.getName.endsWith(".parquet"))
-      }
-    }
-    TableNames.forall(hasSuccess) || TableNames.exists(hasBatchData)
-  }
-
-  /** [[build]] unless a completed store is already present. */
-  def ensureBuilt(spark: SparkSession, dir: String, indexPath: String): Unit =
-    if (!exists(spark, indexPath)) build(spark, dir, indexPath)
-
   /** Read one table, tolerating an EMPTY one: a modality none of the
     * corpus qualifies for (every doc too short for the audio fingerprint,
     * say) has no data files at all — an empty-batch dynamic overwrite
@@ -151,15 +119,9 @@ object MediaGraph {
     * schema-inference error (the [[DupGraph.edges]] convention).
     */
   private def read(spark: SparkSession, indexPath: String, t: String,
-      cols: Seq[String]): DataFrame = {
-    val dir = new Path(sub(indexPath, t))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(dir) && fs.listStatus(dir).exists { st =>
-      (st.isFile && st.getPath.getName.endsWith(".parquet")) ||
-        (st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-          fs.listStatus(st.getPath).exists(_.getPath.getName.endsWith(".parquet")))
-    }
-    if (hasData) spark.read.parquet(sub(indexPath, t)).select(cols.map(col): _*)
+      cols: Seq[String]): DataFrame =
+    if (StoreRoot.hasData(spark, sub(indexPath, t)))
+      spark.read.parquet(sub(indexPath, t)).select(cols.map(col): _*)
     else {
       import org.apache.spark.sql.types._
       val fields = cols.map {
@@ -170,7 +132,6 @@ object MediaGraph {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(fields))
     }
-  }
 
   /** Stored image hashes (doc_id, h). */
   def phash(spark: SparkSession, indexPath: String): DataFrame =
@@ -266,7 +227,7 @@ object MediaGraph {
 
   /** Whether the label tier exists. */
   def labelsExist(spark: SparkSession, indexPath: String): Boolean =
-    LabelStore.exists(spark, labelRoot(indexPath))
+    StoreRoot.hasData(spark, labelRoot(indexPath))
 
   /** Current component labels (doc_id, lbl) over the phash pair graph. */
   def labels(spark: SparkSession, indexPath: String): DataFrame =
@@ -323,21 +284,5 @@ object MediaGraph {
     StoreDelete(spark, sub(indexPath, "frames"), "doc_id", base, Seq("batch_id"))
     LabelStore.applyDelete(spark, labelRoot(indexPath), withTwins,
       touchedSurvivors, phashPairs(spark, indexPath))
-  }
-
-  /** Deterministic per-corpus store location for registry queries — keyed
-    * by the documents table's (length, mtime) fingerprint +
-    * [[FormatVersion]] (the [[DupGraph.registryPath]] scheme), under the
-    * JVM temp dir: a cache, not a deliverable.
-    */
-  def registryPath(spark: SparkSession, dir: String): String = {
-    val p = new Path(s"$dir/documents.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sum = fs.getContentSummary(p)
-    val mtime = fs.getFileStatus(p).getModificationTime
-    val fp = s"$dir|v$FormatVersion|${sum.getLength}|$mtime"
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    s"${System.getProperty("java.io.tmpdir")}/graft-mediagraph/$h"
   }
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,6 +26,9 @@ import org.apache.spark.sql.functions._
   * all-pairs) with the same `BandBucketCap` star guard as the batch
   * pipeline, so a new doc landing in a 50+-way boilerplate bucket pairs
   * with the bucket's representative instead of exploding.
+  *
+  * Keying and build-once readiness are [[StoreRoot]]'s; a batch-driven
+  * index ([[appendBatch]]) is ready once it holds data.
   */
 object MinHashIndex {
 
@@ -35,6 +37,9 @@ object MinHashIndex {
     * otherwise silently join against incompatible new-batch signatures.
     */
   val FormatVersion = 1
+
+  /** Registry store key ([[StoreRoot.key]]). */
+  val Kind = StoreKind("minhash-index", "documents", FormatVersion)
 
   private def sigDir(indexPath: String) = s"$indexPath/signatures"
 
@@ -83,29 +88,6 @@ object MinHashIndex {
   def delete(spark: SparkSession, indexPath: String, ids: DataFrame): Unit =
     StoreDelete(spark, sigDir(indexPath), "doc_id", ids, Seq("batch_id"))
 
-  /** Whether a usable index exists at `indexPath`. Flat [[build]] output is
-    * complete iff the root `_SUCCESS` marker exists (a killed build leaves
-    * no marker and is rebuilt). [[appendBatch]]'s dynamic partition
-    * overwrite commits per-partition and writes NO root marker, so the
-    * partitioned form counts as existing when any `batch_id=` partition
-    * holds data files — a partially written batch is safe to treat as
-    * present because its replay overwrites exactly that partition, and
-    * same-doc_id stale rows can never pair with themselves in [[newPairs]].
-    */
-  def exists(spark: SparkSession, indexPath: String): Boolean = {
-    val dir = new Path(sigDir(indexPath))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(dir, "_SUCCESS"))) true
-    else fs.exists(dir) && fs.listStatus(dir).exists { st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-        fs.listStatus(st.getPath).exists(f => f.getPath.getName.endsWith(".parquet"))
-    }
-  }
-
-  /** [[build]] unless a completed index is already present. */
-  def ensureBuilt(docs: DataFrame, indexPath: String): Unit =
-    if (!exists(docs.sparkSession, indexPath)) build(docs, indexPath)
-
   /** Verified near-dup pairs (doc_a < doc_b, exact Jaccard `j` >= 0.5)
     * between the new batch and the indexed corpus, and within the new batch
     * itself. Pairs of two already-indexed docs are excluded — they were
@@ -140,22 +122,5 @@ object MinHashIndex {
     graft.analytics.DedupQueries
       .minhashPairsTouchingFromSig(all, newSig.select("doc_id"))
       .select(col("doc_a"), col("doc_b"), col("j"))
-  }
-
-  /** Deterministic per-corpus index location for registry queries: keyed by
-    * the documents table's (length, mtime) fingerprint + [[FormatVersion]],
-    * so a regenerated corpus or a changed signature scheme gets a fresh
-    * index instead of silently joining stale signatures. Lives under the
-    * JVM temp dir — a cache, not a deliverable.
-    */
-  def registryPath(spark: SparkSession, dir: String, tag: String): String = {
-    val p = new Path(s"$dir/documents.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sum = fs.getContentSummary(p)
-    val mtime = fs.getFileStatus(p).getModificationTime
-    val fp = s"$dir|v$FormatVersion|${sum.getLength}|$mtime|$tag"
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    s"${System.getProperty("java.io.tmpdir")}/graft-minhash-index/$h"
   }
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,16 +31,19 @@ import org.apache.spark.sql.functions._
   * [[graft.analytics.SimilarityQueries]] (pqSubspaces / pqTrainCodebooks /
   * pqAssign), so stored artifacts are bit-identical to the in-query
   * pipeline's and the DuckDB oracles verify store-reading queries
-  * unchanged.
+  * unchanged. Keying and build-once readiness are [[StoreRoot]]'s.
   */
 object PqIndex {
 
   /** Bump when the store layout or encoding scheme changes (subspace
     * count, codebook training, or the caller-managed coarse layer) — a
-    * READY store of an older layout must never satisfy [[ensure]] for a
+    * READY store of an older layout must never satisfy [[StoreRoot.ensure]] for a
     * consumer expecting the new one.
     */
   val FormatVersion = 2
+
+  /** Registry store key ([[StoreRoot.key]]). */
+  val Kind = StoreKind("pq-index", "embeddings", FormatVersion)
 
   private def cbDir(p: String) = s"$p/codebooks"
   private def codeDir(p: String) = s"$p/codes"
@@ -150,37 +152,5 @@ object PqIndex {
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("pd")).as("adot"))
-  }
-
-  /** Complete-index marker handling — same contract as [[IvfIndex]]. */
-  def ready(spark: SparkSession, indexPath: String): Boolean = {
-    val p = new Path(indexPath, "_GRAFT_READY")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Run `buildF` (any build/append sequence) unless a ready index exists;
-    * a partial previous attempt is wiped first.
-    */
-  def ensure(spark: SparkSession, indexPath: String)(buildF: => Unit): Unit =
-    if (!ready(spark, indexPath)) {
-      val root = new Path(indexPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
-      buildF
-      fs.create(new Path(root, "_GRAFT_READY"), true).close()
-    }
-
-  /** Deterministic per-corpus index location for registry queries (same
-    * fingerprint scheme as [[IvfIndex.registryPath]]).
-    */
-  def registryPath(spark: SparkSession, dir: String, tag: String): String = {
-    val p = new Path(s"$dir/embeddings.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sum = fs.getContentSummary(p)
-    val mtime = fs.getFileStatus(p).getModificationTime
-    val fp = s"$dir|pq|v$FormatVersion|${sum.getLength}|$mtime|$tag"
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    s"${System.getProperty("java.io.tmpdir")}/graft-pq-index/$h"
   }
 }

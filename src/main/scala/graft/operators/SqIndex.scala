@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,13 +22,16 @@ import org.apache.spark.sql.functions._
   * ONLY corpus-sized read, stats + queries broadcast. Store arithmetic is
   * bit-identical to the in-query pipeline, so the registry query's DuckDB
   * oracle is unchanged by reading the store (`SqIndexSpec` pins it, plus
-  * append ≡ encode-over-union under frozen stats, takedown, and the
-  * crash-safe ensure).
+  * append ≡ encode-over-union under frozen stats, and takedown). Keying
+  * and build-once readiness are [[StoreRoot]]'s.
   */
 object SqIndex {
 
   /** Bump when the quantization or reconstruction scheme changes. */
   val FormatVersion = 1
+
+  /** Registry store key ([[StoreRoot.key]]). */
+  val Kind = StoreKind("sq-index", "embeddings", FormatVersion)
 
   private def statsDir(p: String) = s"$p/stats"
   private def codeDir(p: String) = s"$p/codes"
@@ -117,12 +119,6 @@ object SqIndex {
     st.coalesce(1).write.mode(SaveMode.Overwrite).parquet(statsDir(indexPath))
   }
 
-  /** Whether the frozen stats exist (the batch-driven bootstrap check). */
-  def statsExist(spark: SparkSession, indexPath: String): Boolean = {
-    val p = new Path(statsDir(indexPath), "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** The frozen per-lane stats row (mnl, mxl). */
   def stats(spark: SparkSession, indexPath: String): DataFrame =
     spark.read.parquet(statsDir(indexPath))
@@ -152,43 +148,4 @@ object SqIndex {
     */
   def delete(spark: SparkSession, indexPath: String, ids: DataFrame): Unit =
     StoreDelete(spark, codeDir(indexPath), "vec_id", ids, Seq("batch_id"))
-
-  /** Complete-index marker handling — same contract as [[PqIndex]]. */
-  def ready(spark: SparkSession, indexPath: String): Boolean = {
-    val p = new Path(indexPath, "_GRAFT_READY")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Run `buildF` (any build/append sequence) unless a ready index exists;
-    * a partial previous attempt is wiped first.
-    */
-  def ensure(spark: SparkSession, indexPath: String)(buildF: => Unit): Unit =
-    if (!ready(spark, indexPath)) {
-      val root = new Path(indexPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
-      buildF
-      fs.create(new Path(root, "_GRAFT_READY"), true).close()
-    }
-
-  /** Deterministic per-corpus index location for registry queries (same
-    * fingerprint scheme as [[PqIndex.registryPath]]).
-    */
-  def registryPath(spark: SparkSession, dir: String): String =
-    registryPath(spark, dir, "sq")
-
-  /** [[registryPath]] with a layout tag (e.g. "ivfsq" for the
-    * cell-partitioned composition) so differently-shaped stores over the
-    * same corpus never collide.
-    */
-  def registryPath(spark: SparkSession, dir: String, tag: String): String = {
-    val p = new Path(s"$dir/embeddings.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sum = fs.getContentSummary(p)
-    val mtime = fs.getFileStatus(p).getModificationTime
-    val fp = s"$dir|$tag|v$FormatVersion|${sum.getLength}|$mtime"
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    s"${System.getProperty("java.io.tmpdir")}/graft-sq-index/$h"
-  }
 }

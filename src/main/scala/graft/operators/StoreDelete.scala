@@ -61,16 +61,11 @@ object StoreDelete {
     // missing, its `.old` copy aside) — otherwise the absent-store bail
     // below would treat a recoverable store as gone
     if (root.getParent != null) DirSwap.recoverIn(fs, root.getParent)
-    if (!fs.exists(root)) return
-    // a store dir with no data files anywhere (an empty-frame overwrite
-    // leaves only the commit marker; an empty-batch dynamic overwrite may
-    // leave just the bare dir) holds nothing to delete — and reading it
-    // would die on schema inference
-    def hasParquet(p: Path): Boolean = fs.listStatus(p).exists { st =>
-      if (st.isDirectory) hasParquet(st.getPath)
-      else st.getPath.getName.endsWith(".parquet")
-    }
-    if (!hasParquet(root)) return
+    // an absent store, or one with no data files anywhere (an empty-frame
+    // overwrite leaves only the commit marker; an empty-batch dynamic
+    // overwrite may leave just the bare dir), holds nothing to delete —
+    // and reading it would die on schema inference
+    if (!StoreRoot.hasData(spark, dir)) return
     val full = spark.read.parquet(dir)
     val del = broadcast(ids.select(col(ids.columns.head).as("__del_id")).distinct())
     // rows outside `scope` survive unconditionally: drop = (key ∈ ids) ∧ scope

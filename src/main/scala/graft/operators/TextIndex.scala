@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,7 +24,7 @@ import org.apache.spark.sql.functions._
   *
   * Contract: appended batches carry doc_ids disjoint from the stored set
   * (same as [[MinHashIndex.append]]); re-appending a doc would double its
-  * postings.
+  * postings. Keying and build-once readiness are [[StoreRoot]]'s.
   */
 object TextIndex {
 
@@ -34,6 +33,9 @@ object TextIndex {
     * query-side terms.
     */
   val FormatVersion = 1
+
+  /** Registry store key ([[StoreRoot.key]]). */
+  val Kind = StoreKind("text-index", "documents", FormatVersion)
 
   private def postingsDir(indexPath: String) = s"$indexPath/postings"
   private def doclenDir(indexPath: String) = s"$indexPath/doclens"
@@ -49,8 +51,7 @@ object TextIndex {
   private def write(docs: DataFrame, indexPath: String, mode: SaveMode): Unit = {
     // one tokenization pass feeds both artifacts: postings land first,
     // then doc lengths derive from the postings just written (cheap
-    // columnar re-read; doclens' _SUCCESS is the completion marker for
-    // the pair — a build killed between the two writes reports !exists)
+    // columnar re-read)
     graft.analytics.TextQueries.bm25Postings(docs)
       .write.mode(mode).parquet(postingsDir(indexPath))
     docs.sparkSession.read.parquet(postingsDir(indexPath))
@@ -110,30 +111,6 @@ object TextIndex {
   def docLengths(spark: SparkSession, indexPath: String): DataFrame =
     spark.read.parquet(doclenDir(indexPath))
 
-  /** Whether a usable index exists. Flat [[build]] output is complete iff
-    * both artifacts carry their `_SUCCESS` marker (doclens lands last, so a
-    * build killed at any point reports false and is rebuilt).
-    * [[appendBatch]]'s dynamic partition overwrite commits per-partition
-    * and writes no root marker; the partitioned form counts as existing
-    * when any `batch_id=` doclen partition holds data — a partially
-    * written batch is safe to treat as present because its replay
-    * rewrites exactly its own partitions.
-    */
-  def exists(spark: SparkSession, indexPath: String): Boolean = {
-    val dir = new Path(doclenDir(indexPath))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val flat = fs.exists(new Path(dir, "_SUCCESS")) &&
-      fs.exists(new Path(new Path(postingsDir(indexPath)), "_SUCCESS"))
-    flat || (fs.exists(dir) && fs.listStatus(dir).exists { st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-        fs.listStatus(st.getPath).exists(f => f.getPath.getName.endsWith(".parquet"))
-    })
-  }
-
-  /** [[build]] unless a completed index is already present. */
-  def ensureBuilt(docs: DataFrame, indexPath: String): Unit =
-    if (!exists(docs.sparkSession, indexPath)) build(docs, indexPath)
-
   /** BM25 top-k per query doc over the stored corpus. `qids` must be a
     * tiny one-column (`qid`) frame of doc_ids present in the index (the
     * query documents' own postings supply the query terms). Returns
@@ -143,21 +120,4 @@ object TextIndex {
       qids: DataFrame, k: Int): DataFrame =
     graft.analytics.TextQueries.bm25RankedFrom(postings(spark, indexPath), qids, k,
       storedDl = Some(docLengths(spark, indexPath)))
-
-  /** Deterministic per-corpus store location for registry queries: keyed by
-    * the documents table's (length, mtime) fingerprint + [[FormatVersion]],
-    * so a regenerated corpus or a changed term scheme gets a fresh build
-    * instead of silently serving stale postings. Lives under the JVM temp
-    * dir — a cache, not a deliverable.
-    */
-  def registryPath(spark: SparkSession, dir: String): String = {
-    val p = new Path(s"$dir/documents.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sum = fs.getContentSummary(p)
-    val mtime = fs.getFileStatus(p).getModificationTime
-    val fp = s"$dir|v$FormatVersion|${sum.getLength}|$mtime"
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    s"${System.getProperty("java.io.tmpdir")}/graft-text-index/$h"
-  }
 }

@@ -355,14 +355,14 @@ object DocumentStream {
     * doc wins a batch-stored pair, smaller id wins an in-batch pair.
     */
   private def indexSurvivors(b: DataFrame, indexPath: String): DataFrame = {
-    import graft.operators.MinHashIndex
+    import graft.operators.{MinHashIndex, StoreRoot}
     val spark = b.sparkSession
     // first batch bootstraps the index: no stored side yet, so near-dup
     // pairs are the in-batch symmetric pipeline over the batch's own
     // signatures (minhashPairsTouchingFromSig with every doc "new" is
     // exactly that)
     val pairs =
-      if (MinHashIndex.exists(spark, indexPath)) MinHashIndex.newPairs(b, indexPath)
+      if (StoreRoot.hasData(spark, indexPath)) MinHashIndex.newPairs(b, indexPath)
       else {
         graft.functions.VectorExpressions.register(spark)
         val sig = graft.CacheTracker.track(

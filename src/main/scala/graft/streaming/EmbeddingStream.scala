@@ -156,10 +156,10 @@ object EmbeddingStream {
     */
   def ingestBatch(batch: DataFrame, batchId: Long, indexPath: String,
       nCells: Int = 16): IngestReport = {
-    import graft.operators.IvfIndex
+    import graft.operators.{IvfIndex, StoreRoot}
     val spark = batch.sparkSession
     val emb = batch.select(col("vecId").as("vec_id"), col("embedding"))
-    if (!IvfIndex.centroidsExist(spark, indexPath))
+    if (!StoreRoot.hasData(spark, s"$indexPath/centroids"))
       IvfIndex.trainCentroids(IvfIndex.quantized(emb), indexPath, nCells)
     IvfIndex.appendBatch(emb, indexPath, batchId)
     val stats = IvfIndex.cellStats(spark, indexPath)
@@ -192,14 +192,14 @@ object EmbeddingStream {
     * replay/visibility testing.
     */
   def sqIngestBatch(batch: DataFrame, batchId: Long, indexPath: String): Unit = {
-    import graft.operators.SqIndex
+    import graft.operators.{SqIndex, StoreRoot}
     val spark = batch.sparkSession
     val emb = batch.select(col("vecId").as("vec_id"), col("embedding"))
     // An EMPTY first micro-batch must not bootstrap: frozen empty-lane
     // stats would degenerate every later encode. The first NON-empty
     // batch trains; empty batches before it are no-ops. The isEmpty
     // probe only runs pre-bootstrap, so steady state pays nothing.
-    if (!SqIndex.statsExist(spark, indexPath)) {
+    if (!StoreRoot.hasData(spark, s"$indexPath/stats")) {
       if (emb.isEmpty) return
       SqIndex.trainStats(emb, indexPath)
     }

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.operators.DupGraph
+import graft.operators.{DupGraph, StoreRoot}
 import graft.streaming.DocumentStream
 import graft.streaming.DocumentStream.DocEvent
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -43,7 +43,7 @@ class DupGraphIngestSpec extends AnyFunSuite {
     val b2 = df(6L -> tC, 7L -> (tC + " violet"))
 
     DupGraph.appendBatch(b0, dir, 0L)
-    assert(DupGraph.exists(spark, dir))
+    assert(StoreRoot.hasData(spark, dir))
     // graph queries are fresh after the FIRST batch already
     assert(edgeSet(dir).map(e => (e._1, e._2)) == Set((1L, 2L)))
 
@@ -96,7 +96,7 @@ class DupGraphIngestSpec extends AnyFunSuite {
         DocEvent(2, tB, Timestamp.valueOf("2024-07-23 10:00:10")))
       q.processAllAvailable()
       // no near-dups yet; the store exists but holds no edges
-      assert(DupGraph.exists(spark, dir))
+      assert(StoreRoot.hasData(spark, dir))
       assert(edgeSet(dir).isEmpty)
       ms.addData(
         DocEvent(10, tA + " iota", Timestamp.valueOf("2024-07-23 11:00:00")),

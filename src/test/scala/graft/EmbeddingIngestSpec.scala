@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, StoreRoot}
 import graft.streaming.EmbeddingStream
 import graft.streaming.EmbeddingStream.{IngestReport, VecEvent}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -35,7 +35,7 @@ class EmbeddingIngestSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("emb_ingest").toString
     val b0 = events(emb.filter(col("vec_id") < 60), "2024-07-23 10:00:00")
     val r0 = EmbeddingStream.ingestBatch(b0, batchId = 0, indexPath = idx, nCells = 4)
-    assert(IvfIndex.centroidsExist(spark, idx))
+    assert(StoreRoot.hasData(spark, s"$idx/centroids"))
     assert(r0 == IngestReport(0, 60, r0.occupiedCells, r0.maxCellShare))
     assert(r0.occupiedCells <= 4 && r0.maxCellShare <= 1.0)
     val centAfterB0 = spark.read.parquet(s"$idx/centroids")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.analytics.DedupQueries
-import graft.operators.DupGraph
+import graft.operators.{DupGraph, StoreRoot}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,7 +25,7 @@ class GraphQueriesSpec extends AnyFunSuite {
     val path = java.nio.file.Files
       .createTempDirectory("graft-dupgraph-spec").toString
     DupGraph.build(spark, d, path)
-    assert(DupGraph.exists(spark, path))
+    assert(StoreRoot.hasData(spark, path))
 
     val stored = DupGraph.edges(spark, path)
       .select(col("doc_a"), col("doc_b"),
@@ -40,14 +40,14 @@ class GraphQueriesSpec extends AnyFunSuite {
     assert(stored === fresh)
   }
 
-  test("ensureBuilt is a no-op on a completed store") {
+  test("ensure is a no-op on a completed store") {
     val d = "/root/testdata/sf0.001"
     val path = java.nio.file.Files
       .createTempDirectory("graft-dupgraph-spec2").toString
-    DupGraph.build(spark, d, path)
+    StoreRoot.ensureAt(spark, path)(DupGraph.build(spark, d, _))
     val edgeFile = new java.io.File(s"$path/edges")
     val before = edgeFile.listFiles().map(f => f.getName -> f.lastModified).toMap
-    DupGraph.ensureBuilt(spark, d, path)
+    StoreRoot.ensureAt(spark, path)(DupGraph.build(spark, d, _))
     val after = edgeFile.listFiles().map(f => f.getName -> f.lastModified).toMap
     assert(after === before, "a completed store must not be rebuilt")
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, StoreRoot}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -127,19 +127,19 @@ class IvfIndexSpec extends AnyFunSuite {
   test("ensure builds once, wipes partial attempts, and is idempotent") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_ensure").toString + "/idx"
     val old = emb.filter(col("vec_id") % 10 =!= 0)
-    assert(!IvfIndex.ready(spark, dir))
+    assert(!StoreRoot.ready(spark, dir))
     // a partial attempt (build without the marker) must be wiped and redone
     IvfIndex.build(old.filter(col("vec_id") < 50), dir, nCells = 4, iters = 1)
     var runs = 0
-    IvfIndex.ensure(spark, dir) {
+    StoreRoot.ensureAt(spark, dir) { stage =>
       runs += 1
-      IvfIndex.build(old, dir, nCells = 8, iters = 2)
-      IvfIndex.append(emb.filter(col("vec_id") % 10 === 0), dir)
+      IvfIndex.build(old, stage, nCells = 8, iters = 2)
+      IvfIndex.append(emb.filter(col("vec_id") % 10 === 0), stage)
     }
-    assert(runs == 1 && IvfIndex.ready(spark, dir))
+    assert(runs == 1 && StoreRoot.ready(spark, dir))
     assert(spark.read.parquet(s"$dir/vectors").count() == emb.count())
     // second ensure is a no-op
-    IvfIndex.ensure(spark, dir) { runs += 1 }
+    StoreRoot.ensureAt(spark, dir) { _ => runs += 1 }
     assert(runs == 1)
   }
 

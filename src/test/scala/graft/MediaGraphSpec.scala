@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.MediaGraph
+import graft.operators.{MediaGraph, StoreRoot}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,7 +24,7 @@ class MediaGraphSpec extends AnyFunSuite {
 
   test("stored fingerprints equal a from-scratch derivation per modality") {
     val path = tmp("mediagraph_build")
-    MediaGraph.build(spark, sf, path)
+    StoreRoot.ensureAt(spark, path)(MediaGraph.build(spark, sf, _))
     val docs = docsAt(sf)
     assert(MediaGraph.phash(spark, path)
       .exceptAll(MediaGraph.phashFrom(docs)).isEmpty)
@@ -36,10 +36,8 @@ class MediaGraphSpec extends AnyFunSuite {
       .exceptAll(MediaGraph.framesFrom(docs)).isEmpty)
     assert(MediaGraph.framesFrom(docs)
       .exceptAll(MediaGraph.frames(spark, path)).isEmpty)
-    // ensureBuilt on a completed store is a no-op (mtime unchanged)
-    val before = MediaGraph.phash(spark, path).count()
-    MediaGraph.ensureBuilt(spark, sf, path)
-    assert(MediaGraph.phash(spark, path).count() == before)
+    // ensure on a completed store is a no-op (the build never runs)
+    StoreRoot.ensureAt(spark, path)(_ => fail("a completed store must not be rebuilt"))
   }
 
   test("registry mm rows plan store scans, not per-query fingerprint derivation") {
@@ -62,7 +60,7 @@ class MediaGraphSpec extends AnyFunSuite {
     val b0 = docs.filter(col("doc_id") % 2 === 0)
     val b1 = docs.filter(col("doc_id") % 2 === 1)
     MediaGraph.appendBatch(b0, batched, 0L)
-    assert(MediaGraph.exists(spark, batched))
+    assert(StoreRoot.hasData(spark, batched))
     MediaGraph.appendBatch(b1, batched, 1L)
     // replay of batch 1 rewrites exactly its own partition — no dupes
     MediaGraph.appendBatch(b1, batched, 1L)
@@ -95,8 +93,7 @@ class MediaGraphSpec extends AnyFunSuite {
 
   test("label tier: bootstrap == from-scratch; indexed row plans a label scan") {
     val sfDir = sf
-    val path = MediaGraph.registryPath(spark, sfDir)
-    MediaGraph.ensureBuilt(spark, sfDir, path)
+    val path = StoreRoot.ensure(spark, sfDir, MediaGraph.Kind)(MediaGraph.build(spark, sfDir, _))
     MediaGraph.ensureLabels(spark, path)
     assert(labelMap(path) == fromScratch(path))
     // the read-side contract: the indexed row's plan is a label-bucket

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.operators.{KmvStore, MediaGraph}
+import graft.operators.{KmvStore, MediaGraph, StoreRoot}
 import graft.streaming.DocumentStream
 import graft.streaming.DocumentStream.DocEvent
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -37,7 +37,7 @@ class MediaStreamSpec extends AnyFunSuite {
     try {
       ms.addData(evs(h0)); q.processAllAvailable()
       // queries are fresh after the first batch already
-      assert(MediaGraph.exists(spark, dir))
+      assert(StoreRoot.hasData(spark, dir))
       ms.addData(evs(h1)); q.processAllAvailable()
     } finally q.stop()
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.MinHashIndex
+import graft.operators.{MinHashIndex, StoreRoot}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -69,7 +69,7 @@ class MinHashIndexSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
 
     MinHashIndex.build(batch0, dir)
-    assert(MinHashIndex.exists(spark, dir))
+    assert(StoreRoot.hasData(spark, dir))
     // batch1 arrives: no dups yet
     val p1 = MinHashIndex.newPairs(batch1, dir).collect()
     assert(p1.isEmpty, s"got ${p1.toSeq}")
@@ -84,18 +84,18 @@ class MinHashIndexSpec extends AnyFunSuite {
     assert(MinHashIndex.signatures(spark, dir).count() == 4)
   }
 
-  test("ensureBuilt is idempotent and registryPath is corpus-stable") {
-    val p1 = MinHashIndex.registryPath(spark, sf, "mod10")
-    val p2 = MinHashIndex.registryPath(spark, sf, "mod10")
+  test("ensure is idempotent and the store key is corpus-stable") {
+    val p1 = StoreRoot.key(spark, sf, MinHashIndex.Kind, "mod10")
+    val p2 = StoreRoot.key(spark, sf, MinHashIndex.Kind, "mod10")
     assert(p1 == p2)
-    assert(p1 != MinHashIndex.registryPath(spark, sf, "other-tag"))
+    assert(p1 != StoreRoot.key(spark, sf, MinHashIndex.Kind, "other-tag"))
 
     val dir = java.nio.file.Files.createTempDirectory("mh_index_idem").toString
     val existing = docs.filter(col("doc_id") % 10 =!= 0)
-    MinHashIndex.ensureBuilt(existing, dir)
+    StoreRoot.ensureAt(spark, dir)(MinHashIndex.build(existing, _))
     val firstWrite = new java.io.File(s"$dir/signatures/_SUCCESS").lastModified()
-    MinHashIndex.ensureBuilt(existing, dir)
+    StoreRoot.ensureAt(spark, dir)(MinHashIndex.build(existing, _))
     assert(new java.io.File(s"$dir/signatures/_SUCCESS").lastModified() == firstWrite,
-      "second ensureBuilt must not rebuild")
+      "second ensure must not rebuild")
   }
 }

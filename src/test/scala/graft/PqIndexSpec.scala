@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.PqIndex
+import graft.operators.{PqIndex, StoreRoot}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -103,13 +103,13 @@ class PqIndexSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("pq_ensure").toString + "/idx"
     // simulate a crashed build: codes written, no ready marker
     PqIndex.build(emb.filter(col("vec_id") < 50), dir)
-    assert(!PqIndex.ready(spark, dir))
-    PqIndex.ensure(spark, dir) { PqIndex.build(emb.filter(col("vec_id") < 100), dir) }
-    assert(PqIndex.ready(spark, dir))
+    assert(!StoreRoot.ready(spark, dir))
+    StoreRoot.ensureAt(spark, dir)(PqIndex.build(emb.filter(col("vec_id") < 100), _))
+    assert(StoreRoot.ready(spark, dir))
     val n1 = PqIndex.codes(spark, dir).select("vec_id").distinct().count()
     assert(n1 == 100L, "partial build must be wiped and rebuilt")
     // no-op when ready: the store keeps its content
-    PqIndex.ensure(spark, dir) { fail("buildF must not run on a ready index") }
+    StoreRoot.ensureAt(spark, dir)(_ => fail("buildF must not run on a ready index"))
     assert(PqIndex.codes(spark, dir).select("vec_id").distinct().count() == 100L)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.SqIndex
+import graft.operators.{SqIndex, StoreRoot}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -123,11 +123,11 @@ class SqIndexSpec extends AnyFunSuite {
     // an empty micro-batch arriving first (idle source at stream start) is
     // a no-op: no stats frozen, no store created
     EmbeddingStream.sqIngestBatch(batchDf(Nil), 0L, dir)
-    assert(!SqIndex.statsExist(spark, dir))
+    assert(!StoreRoot.hasData(spark, s"$dir/stats"))
     // the first NON-empty batch bootstraps; codes must be non-degenerate
     // (a frozen-empty-stats store would encode everything to code 0)
     EmbeddingStream.sqIngestBatch(batchDf(Seq(0L, 1L, 2L, 3L)), 1L, dir)
-    assert(SqIndex.statsExist(spark, dir))
+    assert(StoreRoot.hasData(spark, s"$dir/stats"))
     val distinctCodes = SqIndex.codes(spark, dir)
       .select(expr("aggregate(code, 0L, (a, x) -> a + x)").as("s"))
       .collect().map(_.getLong(0)).toSet
@@ -145,14 +145,14 @@ class SqIndexSpec extends AnyFunSuite {
   test("ensure: a killed build (no ready marker) is wiped and re-run") {
     val dir = java.nio.file.Files.createTempDirectory("sq_idx_crash").toString
     // simulate a partial build: stats written, no codes, no marker
-    SqIndex.ensure(spark, dir) { SqIndex.build(emb.filter(col("vec_id") < 10), dir) }
-    assert(SqIndex.ready(spark, dir))
+    StoreRoot.ensureAt(spark, dir)(SqIndex.build(emb.filter(col("vec_id") < 10), _))
+    assert(StoreRoot.ready(spark, dir))
     // marker removal forces a full rebuild on next ensure
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "_GRAFT_READY"), false)
-    SqIndex.ensure(spark, dir) { SqIndex.build(emb, dir) }
-    assert(SqIndex.ready(spark, dir))
+    fs.delete(new org.apache.hadoop.fs.Path(dir, StoreRoot.Marker), false)
+    StoreRoot.ensureAt(spark, dir)(SqIndex.build(emb, _))
+    assert(StoreRoot.ready(spark, dir))
     assert(SqIndex.codes(spark, dir).count() == emb.count())
     graft.CacheTracker.releaseAll()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.TextIndex
+import graft.operators.{StoreRoot, TextIndex}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -52,13 +52,13 @@ class TextIndexSpec extends AnyFunSuite {
     assert(inc.exists(_._2 % 3 == 0), s"no appended doc ranked in $inc")
   }
 
-  test("ensureBuilt is idempotent and the search plan reads the posting store") {
+  test("ensure is idempotent and the search plan reads the posting store") {
     val dir = java.nio.file.Files.createTempDirectory("text_index_plan").toString
-    TextIndex.ensureBuilt(docs, dir)
+    StoreRoot.ensureAt(spark, dir)(TextIndex.build(docs, _))
     val marker = new java.io.File(s"$dir/postings/_SUCCESS")
     val mtime = marker.lastModified()
-    TextIndex.ensureBuilt(docs, dir) // must not rebuild
-    assert(marker.lastModified() == mtime, "ensureBuilt rebuilt a completed index")
+    StoreRoot.ensureAt(spark, dir)(TextIndex.build(docs, _)) // must not rebuild
+    assert(marker.lastModified() == mtime, "ensure rebuilt a completed index")
 
     val plan = TextIndex.search(spark, dir, qids, 5)
       .queryExecution.executedPlan.toString
@@ -81,7 +81,7 @@ class TextIndexSpec extends AnyFunSuite {
     // at-least-once replay of batch 1: must rewrite its own partition,
     // never double-count its terms
     TextIndex.appendBatch(b1, dirB, 1L)
-    assert(TextIndex.exists(spark, dirB), "partitioned index must count as existing")
+    assert(StoreRoot.hasData(spark, dirB), "partitioned index must count as existing")
     TextIndex.build(docs, dirF)
     val batched = rows(TextIndex.search(spark, dirB, qids, 5))
     val flat = rows(TextIndex.search(spark, dirF, qids, 5))
