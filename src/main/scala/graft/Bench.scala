@@ -14,51 +14,10 @@ object Bench {
     "rel_percentiles", "rel_window_running_qty",
     "evt_sessionize", "evt_daily_active_users")
 
-  /** One SparkSession per benchmark chunk. Recreated (not getOrCreate'd)
-    * so each chunk starts with empty shuffle dirs, an empty broadcast
-    * manager and a fresh MapOutputTracker — round-7 measurements showed
-    * heavy-shuffle queries reading 1.5-2.3x slower late in a 139-query
-    * single-session sweep than under the solo protocol, purely from
-    * accumulated session residue (the code was identical). JVM-level
-    * warmth (JIT, the static codegen cache) survives the restart, so the
-    * warmup pass stays meaningful.
-    */
-  private def newSession(cpus: String, sfDir: String): SparkSession = {
-    // Shuffle partitions derive from input bytes (graft.Sizing — the
-    // bytes-per-partition rule a production job runs), floored at the core
-    // count; SPARK_GRAFT_SHUFFLE_PARTITIONS stays as an explicit override
-    // for probes. A 100× deployment on the default no longer re-hits the
-    // 128× spill cliffs the fixed core-count default caused.
-    val shufflePartitions = Sizing.shufflePartitions(sfDir, cpus.toInt).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // AQE's size-based coalescing folds every small shuffle to ONE
-      // partition, serializing CPU-bound stages (signature hashing, pair
-      // joins). These workloads are compute-heavy per byte — keep the
-      // explicit partition count.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // typed Aggregators (minhash_union, top7_by_score) run through
-      // ObjectHashAggregate, whose default 128-key fallback degrades the
-      // partial phase to sort-based almost immediately; the buffers here
-      // are tiny fixed-width rows, so a large hash map is the right trade
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // corpus-size-derived constants (EVAL stride) resolve from this
-    System.setProperty("graft.sf.dir", sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_ONLY: optional regex to bench a subset (builder-side tool)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      only.forall(_.findFirstIn(n).isDefined)
-    }.toSeq.sortBy(_._1)
+    val cpus = Harness.cpus()
+    val selected = Harness.selected("bench")
     // Chunks never cross a query-family boundary (the name prefix before
     // the first '_') and are capped at SPARK_GRAFT_CHUNK queries, so a
     // large family still gets session recycling mid-family. Each chunk is
@@ -88,7 +47,14 @@ object Bench {
     // timed — a query failing early would otherwise read as fast
     val failed = scala.collection.mutable.SortedSet.empty[String]
     chunks.zipWithIndex.foreach { case (chunk, chunkIdx) =>
-      val spark = newSession(cpus, sfDir)
+      // One session per chunk, recreated (not getOrCreate'd) so each chunk
+      // starts with empty shuffle dirs, an empty broadcast manager and a
+      // fresh MapOutputTracker — round-7 measurements showed heavy-shuffle
+      // queries reading 1.5-2.3x slower late in a 139-query single-session
+      // sweep than under the solo protocol, purely from accumulated session
+      // residue. JVM-level warmth (JIT, the static codegen cache) survives
+      // the restart, so the warmup pass stays meaningful.
+      val spark = Harness.session(sfDir, cpus)
       // Warm-up pass (untimed): JIT + codegen + parquet-footer caches make
       // the first execution of JSON-parse/join-heavy queries swing up to
       // 12x vs warm runs on identical code; timings below are warm.
@@ -125,40 +91,36 @@ object Bench {
       }
       // stop() removes the context's local shuffle/block dirs — the
       // residue that inflated late-sweep rows never reaches the next chunk
-      spark.stop()
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
+      Harness.stop(spark)
     }
     // Values rounded to 0.1 ms: bench noise dwarfs that, and the shorter
     // line survives tail-style output capture with every query present.
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def json(r: Map[String, Double]): String = {
-      val qs = r.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
-        .mkString("{", ",", "}")
-      val total = f"${if (r.nonEmpty) r.values.sum else 0.0}%.4f"
-      // drift_basket: summed wall of a FIXED set of long-stable rows whose
-      // code hasn't changed since round 8 — cross-round artifact comparisons
-      // divide per-query times by the basket ratio to normalize out
-      // machine-day drift (round 9's uniform 1.31× on untouched rows had to
-      // be attributed by hand). Keep this list frozen; if a member's code
-      // ever changes, REPLACE it and note the swap in SURVEY.md.
-      val basketRows = DriftBasket.filter(r.contains)
-      val basket =
-        if (basketRows.size == DriftBasket.size)
-          f"${basketRows.map(r).sum}%.4f"
-        else "null" // partial run — a partial basket would mislead
-      // eval_stride: the resolved EVAL sampling stride of this run — the
-      // artifact must show whether the O(n²) baselines ran sampled.
-      // cpus (round 12, additive): ties each artifact/line to its core
-      // count — round 11's 8-core scaling run was only identifiable by
-      // external forensics.
+    val q = Harness.jsonString _
+    val failedJson = failed.map(q).mkString("[", ",", "]")
+    val total = f"${results.values.sum}%.4f"
+    // drift_basket: summed wall of a FIXED set of long-stable rows whose
+    // code hasn't changed since round 8 — cross-round artifact comparisons
+    // divide per-query times by the basket ratio to normalize out
+    // machine-day drift (round 9's uniform 1.31× on untouched rows had to
+    // be attributed by hand). Keep this list frozen; if a member's code
+    // ever changes, REPLACE it and note the swap in SURVEY.md.
+    val basketRows = DriftBasket.filter(results.contains)
+    val basket =
+      if (basketRows.size == DriftBasket.size) f"${basketRows.map(results).sum}%.4f"
+      else "null" // partial run — a partial basket would mislead
+    val qs = results.toSeq.sortBy(_._1)
+      .map { case (k, v) => q(k) + ":" + f"$v%.4f" }
+      .mkString("{", ",", "}")
+    // eval_stride: the resolved EVAL sampling stride of this run — the
+    // artifact must show whether the O(n²) baselines ran sampled.
+    // cpus (round 12, additive): ties each artifact/line to its core
+    // count — round 11's 8-core scaling run was only identifiable by
+    // external forensics.
+    val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,""" +
         s""""drift_basket":$basket,"drift_basket_n":${basketRows.size},""" +
         s""""eval_stride":${analytics.DedupQueries.EvalStride},""" +
-        s""""cpus":$cpus,"sf":"$sfDir"}"""
-    }
-    val line = json(results.toMap)
+        s""""cpus":$cpus,"sf":${q(sfDir)}}"""
     println(line)
     // Complete artifact on disk as well — the stdout line is subject to
     // whatever capture window the harness uses, the file never is. The
@@ -173,10 +135,10 @@ object Bench {
     // signature) and each query's chunk index. Strictly additive: parsing
     // the artifact as the stdout line's schema still works.
     val passesJson = passTimes.toSeq.sortBy(_._1).map { case (k, v) =>
-      "\"" + k + "\":" + v.map(x => f"$x%.4f").mkString("[", ",", "]")
+      q(k) + ":" + v.map(x => f"$x%.4f").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val chunksJson = chunkOf.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      .map { case (k, v) => q(k) + ":" + v }.mkString("{", ",", "}")
     val artifact = line.dropRight(1) +
       s""","passes":$passesJson,"chunks":$chunksJson}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), artifact + "\n")
@@ -188,13 +150,9 @@ object Bench {
     // the complete artifact. No "queries" key and a distinct metric name,
     // so a parser looking for the full line can never mistake it for a
     // (nearly empty) result.
-    val total = f"${if (results.nonEmpty) results.values.sum else 0.0}%.4f"
-    val basketRows = DriftBasket.filter(results.contains)
-    val basket = if (basketRows.size == DriftBasket.size)
-      f"${basketRows.map(results).sum}%.4f" else "null"
     println(s"""{"metric":"bench_summary","total_sec":$total,""" +
       s""""n_queries":${results.size},"failed":$failedJson,"drift_basket":$basket,""" +
       s""""eval_stride":${analytics.DedupQueries.EvalStride},"cpus":$cpus,""" +
-      s""""sf":"$sfDir","artifact":"$out"}""")
+      s""""sf":${q(sfDir)},"artifact":${q(out)}}""")
   }
 }

@@ -2,12 +2,12 @@ package graft
 
 /** Builder-side tool: dump `.explain("formatted")` for registry queries.
   *
-  * Usage: runMain graft.Explain <sfDir> <outDir> [nameRegex]
+  * Usage: SPARK_GRAFT_ONLY=<nameRegex> runMain graft.Explain <sfDir> <outDir>
   *
   * One file per query (`<outDir>/<name>.txt`) holding the formatted physical
   * plan exactly as the optimization deliverables require (plan shape:
   * Exchange count, join strategy, PushedFilters/ReadSchema, codegen spans).
-  * Sessions are created with the same sizing the bench uses so the plans
+  * It runs on the bench's own session ([[Harness.session]]), so the plans
   * match what the bench executes. Capture is explain of the built frame,
   * but NOT side-effect-free: store-backed queries run their ensure step on
   * first touch, and frame CONSTRUCTION itself executes real work in
@@ -23,23 +23,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val only = args.lift(2).map(_.r)
-    System.setProperty("graft.sf.dir", sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        Sizing.shufflePartitions(sfDir, cpus).toString)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      only.forall(_.findFirstIn(n).isDefined)
-    }.toSeq.sortBy(_._1)
-    selected.foreach { case (name, fn) =>
+    Harness.selected("explain").foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.explainString(
@@ -51,6 +37,6 @@ object Explain {
         System.err.println(s"[explain] $name FAILED: ${e.getMessage}")
       } finally CacheTracker.releaseAll()
     }
-    spark.stop()
+    Harness.stop(spark)
   }
 }

@@ -14,10 +14,10 @@ import graft.functions._
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * or in code: `SparkSession.builder().withExtensions(new GraftExtensions)`.
-  * Unlike [[graft.functions.VectorExpressions.register]] (per-session
-  * imperative form the query registry uses), extension-injected functions
-  * survive `newSession()` and need no library call before first use.
+  * or in code: `withExtensions(new GraftExtensions)` on a session builder.
+  * Unlike [[graft.functions.VectorExpressions.register]] (the per-session
+  * install the query registry runs), extension-injected functions survive
+  * `newSession()` and need no library call before first use.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -25,11 +25,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((
         new FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name),
-        (es: Seq[Expression]) => {
-          require(es.length == arity,
-            s"$name expects $arity argument(s), got ${es.length}")
-          builder(es)
-        }))
+        GraftExtensions.builder(name, arity, builder)))
     }
     // portable HOF dot products run through the native codegen'd loop
     ext.injectOptimizerRule(_ => graft.plans.RewriteLongDot)
@@ -87,6 +83,13 @@ object GraftExtensions {
           s"$fn argument ${i + 1} must be a non-null string literal, got $e")
         e.eval().toString
     }
+  }
+
+  /** `build` behind an arity check naming the function. */
+  private[graft] def builder(name: String, arity: Int, build: Seq[Expression] => Expression)
+      : Seq[Expression] => Expression = es => {
+    require(es.length == arity, s"$name expects $arity argument(s), got ${es.length}")
+    build(es)
   }
 
   /** (name, arity, builder) for every native expression the engine ships. */

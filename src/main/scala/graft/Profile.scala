@@ -1,35 +1,33 @@
 package graft
 
-/** Builder-side tool: run one registry query under the bench protocol and
-  * print per-stage wall/task times from a SparkListener — the stage-level
-  * attribution the optimization guide's empirical loop needs when the UI
-  * is unavailable (headless sandbox).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Builder-side tool: run the selected registry queries under the bench
+  * protocol and print per-stage wall/task times from a SparkListener — the
+  * stage-level attribution the optimization guide's empirical loop needs
+  * when the UI is unavailable (headless runs).
   *
-  * Usage: runMain graft.Profile <sfDir> <queryName> [repeats]
+  * Usage: SPARK_GRAFT_ONLY=<nameRegex> runMain graft.Profile <sfDir> [repeats]
   *
-  * Output per stage (after one untimed warmup run): stageId, attempt,
-  * task count, sum of task runtimes, executor run time, GC time, shuffle
-  * read/write bytes, and the stage name (callsite). Stages from the warmup
-  * are excluded; repeats aggregate.
+  * Output per selected query and stage (after one untimed warmup run):
+  * stageId, attempt, task count, sum of task runtimes, executor run time,
+  * GC time, shuffle read/write bytes, and the stage name (callsite).
+  * Stages from the warmup are excluded; repeats aggregate.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val name = args(1)
-    val repeats = args.lift(2).map(_.toInt).getOrElse(1)
-    System.setProperty("graft.sf.dir", sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        Sizing.shufflePartitions(sfDir, cpus).toString)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fn = SparkEntry.queries(name)
+    val repeats = args.lift(1).map(_.toInt).getOrElse(1)
+    val spark = Harness.session(sfDir)
+    Harness.selected("profile").foreach { case (name, fn) =>
+      try profile(spark, sfDir, name, fn, repeats) catch { case e: Throwable =>
+        System.err.println(s"[profile] $name failed: ${e.getMessage}") }
+    }
+    Harness.stop(spark)
+  }
 
+  private def profile(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame, repeats: Int): Unit = {
     // warmup (untimed, listener not yet attached)
     try fn(spark, sfDir).count() catch { case e: Throwable =>
       System.err.println(s"[profile] warmup failed: ${e.getMessage}") }
@@ -81,6 +79,5 @@ object Profile {
     }
     val sumWall = stages.map(_.wallMs).sum
     println(f"[profile] stage wall sum ${sumWall}%d ms (gaps to total = driver/planning time)")
-    spark.stop()
   }
 }

@@ -10,16 +10,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  /** All registered query specs (name -> spark fn + optional oracle). */
+  /** All registered query specs (name -> spark fn + optional oracle). Each
+    * fn installs the native functions and sketch aggregators on the session
+    * it is handed before building its frame, so the query builders
+    * themselves never register anything.
+    */
   def registry: Map[String, QuerySpec] =
-    analytics.RelationalQueries.all ++
+    (analytics.RelationalQueries.all ++
       analytics.EventQueries.all ++
       analytics.TextQueries.all ++
       analytics.DedupQueries.all ++
       analytics.SimilarityQueries.all ++
       analytics.MultimodalQueries.all ++
       analytics.GraphQueries.all ++
-      analytics.TimelineQueries.all
+      analytics.TimelineQueries.all).map { case (name, q) =>
+      name -> q.copy(fn = (spark, dir) => {
+        graft.functions.VectorExpressions.register(spark)
+        graft.functions.SketchAggregators.register(spark)
+        q.fn(spark, dir)
+      })
+    }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

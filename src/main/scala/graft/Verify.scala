@@ -1,45 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // publish the corpus dir BEFORE any registry access: corpus-size-
-    // derived constants (the EVAL sampling stride) resolve from it, and
-    // both engines must render the same resolved value
-    System.setProperty("graft.sf.dir", sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // derived from input bytes (graft.Sizing), env var as probe override
-      .config("spark.sql.shuffle.partitions",
-        Sizing.shufflePartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // match Bench: typed-Aggregator queries keep hash aggregation instead
-      // of the 128-key sort-based fallback
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(sfDir)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY: optional regex to dump a subset (builder-side tool;
-    // the driver sets no filter and gets every query). Log loudly when
-    // active so a filtered run can never pass silently as a full one.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      only.forall(_.findFirstIn(n).isDefined)
-    }
-    only.foreach { p =>
-      System.err.println(s"[verify] PARTIAL RUN: SPARK_GRAFT_ONLY=${p.regex} " +
-        s"selects ${selected.size}/${SparkEntry.queries.size} queries " +
-        s"(${SparkEntry.queries.size - selected.size} skipped)")
-    }
     // deterministic dump order: if the harness ever cuts a run short, what
     // was and wasn't dumped is reproducible rather than HashMap-ordered
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    Harness.selected("verify").foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -50,21 +20,10 @@ object Verify {
       // dozens of dead caches at once
       CacheTracker.releaseAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val q = Harness.jsonString _
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Harness.stop(spark)
   }
 }

@@ -400,7 +400,6 @@ object DedupQueries {
     * projections are the dominant cost at bench scale.
     */
   private[analytics] def withShingles(df: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     Tables.spread(df, "doc_id")
       .withColumn("t", expr(tokensS("text")))
       .withColumn("th", expr(tokenHashesS("t")))
@@ -448,7 +447,7 @@ object DedupQueries {
     * both verify joins, and — via `n_tok` — the corpus stats of
     * dedup_filtered_corpus without a second tokenization pass.
     */
-  private[graft] def shingleProjection(s: SparkSession, d: String): DataFrame =
+  private def shingleProjection(s: SparkSession, d: String): DataFrame =
     graft.CacheTracker.track(withShingles(docs(s, d).select("doc_id", "text"))
       .select(col("doc_id"), col("hs"), size(col("t")).as("n_tok"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -683,7 +682,6 @@ object DedupQueries {
     * Shared by dedup_embedding_lsh_multi and dedup_embedding_lsh_recall.
     */
   private def twoTableProjection(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     val p = SimilarityQueries.resolvePlanes(s, d)
     graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
       .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
@@ -1198,7 +1196,6 @@ object DedupQueries {
     // stored ∪ new spans the whole corpus.
     "dedup_incremental" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val idx = graft.operators.StoreRoot.ensure(
             s, d, graft.operators.MinHashIndex.Kind, "mod10")(
           graft.operators.MinHashIndex.build(docs(s, d).filter(col("doc_id") % 10 =!= 0), _))
@@ -1360,7 +1357,6 @@ object DedupQueries {
     // drops ~64× at any corpus size, and the join stays an equi-join.
     "dedup_simhash" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val sig = Tables.spread(docs(s, d), "doc_id")
           .withColumn("t", expr(tokensS("text")))
           .withColumn("th", expr(tokenHashesS("t")))
@@ -1536,7 +1532,6 @@ object DedupQueries {
     "dedup_span" -> QuerySpec(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.VectorExpressions.register(s)
         // positions are 1-based to match the oracle's generate_series.
         // Round 12: ONE eager tokenize — the old shape tokenized twice
         // (hot-set count + the cached posting list) and raced its cache;
@@ -1629,7 +1624,6 @@ object DedupQueries {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        graft.functions.VectorExpressions.register(s)
         // round 12: eager — base feeds the hot-set pass, the bucket
         // grouping AND the final per-source rollup (3 independent
         // consumers over the tokenize lineage, the provably-heavy case);
@@ -1823,7 +1817,6 @@ object DedupQueries {
     // ----- embedding-cosine near-dup (exact all-pairs baseline) -------------
     "dedup_embedding_cosine" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         // repartition: the streamed side of the pair join must be spread
         // across tasks — one small parquet split would serialize the O(n^2)
         // dot products onto a single core
@@ -1859,7 +1852,6 @@ object DedupQueries {
     // LSH-dedup contract.
     "dedup_embedding_lsh" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val p = SimilarityQueries.resolvePlanes(s, d)
         val q = Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
@@ -2011,7 +2003,6 @@ object DedupQueries {
     // SemDeDup paper's own cluster-size-cap analog.
     "dedup_semantic" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val sub = resolveSemSub(s, d)
         val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), col("label"), expr(quantizeS("embedding")).as("qe"))
@@ -2112,7 +2103,6 @@ object DedupQueries {
     // so this row hash-checks the training and the dedup decision together.
     "dedup_semantic_kmeans" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val sub = resolveSemKSub(s, d)
         val idx = semkIndex(s, d)
         val cent = broadcast(s.read.parquet(s"$idx/centroids")
@@ -2197,7 +2187,6 @@ object DedupQueries {
     "dedup_proto_prune" -> QuerySpec(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.VectorExpressions.register(s)
         val idx = semkIndex(s, d)
         val cent = broadcast(s.read.parquet(s"$idx/centroids")
           .withColumn("cnrm", expr("long_dot(ce, ce)")))

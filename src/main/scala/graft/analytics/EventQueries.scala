@@ -527,7 +527,6 @@ object EventQueries {
     // unions ~2600.
     "evt_kmv_overlap" -> QuerySpec(
       (s, d) => {
-        graft.functions.SketchAggregators.register(s)
         val k = 64
         val ents = graft.CacheTracker.track(ev(s, d)
           .select(col("event_type"),

@@ -54,14 +54,11 @@ object SimilarityQueries {
     * of the previous round's cache, whose persist is only then released;
     * every [[KCenterCutEvery]] rounds the frame localCheckpoints to cut
     * lineage. `q` must be a (vec_id, qe) projection with vec_id 0 present
-    * (the deterministic seed); `onRound` observes (round, wallMillis) for
-    * probes.
+    * (the deterministic seed).
     */
-  def kcenterTrajectory(s: SparkSession, q: DataFrame, k: Int,
-      onRound: (Int, Long) => Unit = (_, _) => ()): Seq[(Int, Long, Long)] = {
+  def kcenterTrajectory(s: SparkSession, q: DataFrame, k: Int): Seq[(Int, Long, Long)] = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val seed = q.filter(col("vec_id") === 0L).select(col("qe").as("ce"))
     var dm = q.crossJoin(broadcast(seed))
       .select(col("vec_id"), col("qe"), expr("long_l2(qe, ce)").as("dmin"))
@@ -70,7 +67,6 @@ object SimilarityQueries {
     val picks = Vector.newBuilder[(Int, Long, Long)]
     picks += ((1, 0L, 0L))
     for (r <- 2 to k) {
-      val t0 = System.nanoTime()
       val far = dm.orderBy(col("dmin").desc, col("vec_id")).limit(1).collect()(0)
       // the argmax materialized dm from the previous round's cache — that
       // parent cache is now released
@@ -90,7 +86,6 @@ object SimilarityQueries {
           dm = next.persist(MEMORY_AND_DISK)
         }
       }
-      onRound(r, (System.nanoTime() - t0) / 1000000L)
     }
     dm.unpersist()
     if (pending != null) pending.unpersist()
@@ -383,7 +378,6 @@ object SimilarityQueries {
     */
   private def ivfpqRanked(s: SparkSession, d: String, nq: Int)
       : org.apache.spark.sql.DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     val idx = graft.operators.StoreRoot.ensure(
         s, d, graft.operators.PqIndex.Kind, "ivfpq-label") { stage =>
       val n = Tables.spread(emb(s, d), "vec_id")
@@ -490,7 +484,6 @@ object SimilarityQueries {
     */
   private def ivfpqResidualRanked(s: SparkSession, d: String, nq: Int)
       : org.apache.spark.sql.DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     val idx = graft.operators.StoreRoot.ensure(
         s, d, graft.operators.PqIndex.Kind, "ivfpq-residual") { stage =>
       val q = graft.operators.IvfIndex.quantized(emb(s, d))
@@ -621,7 +614,6 @@ object SimilarityQueries {
     * cell-miss rate, tunable via nProbe.
     */
   private def ivfsqRanked(s: SparkSession, d: String, nq: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     val idx = graft.operators.StoreRoot.ensure(
         s, d, graft.operators.SqIndex.Kind, "ivfsq") { stage =>
       val q = graft.operators.IvfIndex.quantized(emb(s, d))
@@ -797,7 +789,6 @@ object SimilarityQueries {
     // ----- brute-force exact cosine top-k (baseline) ------------------------
     "sim_cosine_topk" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val n = Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
           .withColumn("nrm", expr("long_dot(qe, qe)"))
@@ -836,7 +827,6 @@ object SimilarityQueries {
     // one IEEE division, vec_id tie-breaks — cross-engine exact.
     "sim_hard_negatives" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val n = Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), col("label"), expr(quantizeS("embedding")).as("qe"))
           .withColumn("nrm", expr("long_dot(qe, qe)"))
@@ -883,7 +873,6 @@ object SimilarityQueries {
     // corpus-stream shape; rerank + recall run on <= depth·|Q| rows.
     "sim_rp_recall" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val base = Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
           .withColumn("nrm", expr("long_dot(qe, qe)"))
@@ -967,7 +956,6 @@ object SimilarityQueries {
     // the estimates hash-match DuckDB bit-for-bit.
     "sim_hamming_recall" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
           .withColumn("nrm", expr("long_dot(qe, qe)"))
@@ -1049,7 +1037,6 @@ object SimilarityQueries {
     // Integer dots/norms, one IEEE division per pair — cross-engine exact.
     "sim_matryoshka_recall" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
           .withColumn("nrm", expr("long_dot(qe, qe)"))
@@ -1126,7 +1113,6 @@ object SimilarityQueries {
     // store ≡ recompute bit-for-bit (the sim_ivf_incremental contract).
     "hyb_rrf_indexed" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val qids = emb(s, d).filter(col("vec_id") < 4)
           .select(col("vec_id").as("qid"))
         val idx = TextQueries.registryTextIndex(s, d)
@@ -1188,7 +1174,6 @@ object SimilarityQueries {
     // ----- hyperplane-LSH bucketed ANN: bucket equi-join + exact rerank -----
     "sim_lsh_ann" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val p = resolvePlanes(s, d)
         val n = Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
@@ -1232,7 +1217,6 @@ object SimilarityQueries {
     // (Planes+1)x one bucket's occupancy: linear, not another table.
     "sim_lsh_multiprobe" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val p = resolvePlanes(s, d)
         val n = Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
@@ -1280,7 +1264,6 @@ object SimilarityQueries {
     // branches reference it and its lineage is the full corpus scan.
     "sim_lsh_recall" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val p = resolvePlanes(s, d)
         val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
@@ -1358,8 +1341,6 @@ object SimilarityQueries {
     // by vec_id, vote ties by smallest label.
     "sim_knn_classify" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
-        graft.functions.SketchAggregators.register(s)
         val p = resolvePlanes(s, d)
         val bk = Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), col("label"), expr(quantizeS("embedding")).as("qe"))
@@ -1407,7 +1388,6 @@ object SimilarityQueries {
     // ----- IVF: per-label centroids, nearest-cell assignment, 2-cell probe --
     "sim_ivf_topk" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         // persist: three consumers (centroid build, cell assignment, query
         // probes) each re-run the parquet scan + 64-lane quantization
         // otherwise — the dominant cost of the whole query
@@ -1507,7 +1487,6 @@ object SimilarityQueries {
     // probed cells while scan cost stays ~nProbe/nCells of the corpus.
     "sim_ivf_recall" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), col("label"), expr(quantizeS("embedding")).as("qe"))
           .withColumn("nrm", expr("long_dot(qe, qe)"))
@@ -1625,7 +1604,6 @@ object SimilarityQueries {
     // one-off build landing in the warmup pass.
     "sim_ivf_incremental" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val idx = graft.operators.StoreRoot.ensure(
             s, d, graft.operators.IvfIndex.Kind, "mod10") { stage =>
           graft.operators.IvfIndex.build(
@@ -1684,7 +1662,6 @@ object SimilarityQueries {
         // query is the deployment-shape ADC probe, not codebook training.
         // Store artifacts are bit-identical to the in-query pipeline
         // (shared pqTrainCodebooks/pqAssign), so the oracle is unchanged.
-        graft.functions.VectorExpressions.register(s)
         val idx = graft.operators.StoreRoot.ensure(s, d, graft.operators.PqIndex.Kind, "flat")(
           graft.operators.PqIndex.build(emb(s, d), _))
         val queries = Tables.spread(emb(s, d), "vec_id")
@@ -1716,7 +1693,6 @@ object SimilarityQueries {
     // the shortlist depth buys rerank recall with 50 full-vector reads.
     "sim_pq_recall" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val idx = graft.operators.StoreRoot.ensure(s, d, graft.operators.PqIndex.Kind, "flat")(
           graft.operators.PqIndex.build(emb(s, d), _))
         val q20 = Tables.spread(emb(s, d), "vec_id")
@@ -1977,7 +1953,6 @@ object SimilarityQueries {
     // IEEE division — engine-order independent.
     "sim_cluster_stats" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         val n = Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), col("label"), expr(quantizeS("embedding")).as("qe"))
           .withColumn("nrm", expr("long_dot(qe, qe)"))
@@ -2030,7 +2005,6 @@ object SimilarityQueries {
     // per leg before fusing to top-10, the usual deep-pools-then-fuse.
     "hyb_rrf_search" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         import org.apache.spark.sql.expressions.Window
         val qids = emb(s, d).filter(col("vec_id") < 4)
           .select(col("vec_id").as("qid"))
@@ -2107,7 +2081,6 @@ object SimilarityQueries {
       (s, d) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         import s.implicits._
-        graft.functions.VectorExpressions.register(s)
         val q = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
           .persist(MEMORY_AND_DISK))
@@ -2209,7 +2182,6 @@ object SimilarityQueries {
       (s, d) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         import s.implicits._
-        graft.functions.VectorExpressions.register(s)
         val q = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
           .persist(MEMORY_AND_DISK))
@@ -2323,7 +2295,6 @@ object SimilarityQueries {
     "sim_sq8_recall" -> QuerySpec(
       (s, d) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        graft.functions.VectorExpressions.register(s)
         val q = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
           .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
           .persist(MEMORY_AND_DISK))

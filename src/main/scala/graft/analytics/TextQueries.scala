@@ -503,7 +503,6 @@ object TextQueries {
     // so at 100 TB the cost is one map-side-combined shuffle of hashes.
     "txt_repetition" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         // persist the token-hash projection: the consuming select references
         // `th` four times (size, max_elem_count, twice under the trigram
         // arithmetic), and project collapsing re-inlines the tokenize->hash
@@ -825,7 +824,6 @@ object TextQueries {
     // with both in tokens) is what makes that hold.
     "txt_priority_sample" -> QuerySpec(
       (s, d) => {
-        graft.functions.SketchAggregators.register(s)
         // ONE corpus pass tokenizes: the per-stratum totals AND the bounded
         // top-(k+1) come out of the same groupBy (three 64×-probed scans
         // collapsed to one — tokenization is the whole per-row cost here)
@@ -1061,8 +1059,6 @@ object TextQueries {
     // #sources-row table.
     "txt_source_minhash_sim" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
-        graft.functions.SketchAggregators.register(s)
         val sigs = docs(s, d)
           .withColumn("t", expr(tokensS("text")))
           .withColumn("sig", expr(s"minhash16(${tokenHashesS("t")})"))
@@ -2317,7 +2313,6 @@ object TextQueries {
     "txt_heavy_hitters" -> QuerySpec(
       (s, d) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        graft.functions.SketchAggregators.register(s)
         val tok = graft.CacheTracker.eager(
           docs(s, d).select(explode(expr(tokensS("text"))).as("w"))
             .filter(length(col("w")) > 0)
@@ -2447,7 +2442,6 @@ object TextQueries {
     // an explode + two per-token aggregations to learn one scalar per doc.
     "txt_gopher_rules" -> QuerySpec(
       (s, d) => {
-        graft.functions.VectorExpressions.register(s)
         docs(s, d)
           .withColumn("t", expr(tokensS("text")))
           .filter(expr("size(t) > 0"))

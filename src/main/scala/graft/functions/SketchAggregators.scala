@@ -186,24 +186,24 @@ object SketchAggregators {
 
   /** Register the sketch UDAFs on a session (`minhash_union(sig_array)`,
     * `top7_by_score(score, id, tag)`, `top11_by_long(score, id)`,
-    * `mg63(item)`).
+    * `top64_by_long(score, id)`, `mg63(item)`), skipping names the session
+    * already resolves, so repeated calls change nothing.
     */
   def register(spark: SparkSession): Unit = {
-    implicit val inEnc: Encoder[Seq[Long]] = ExpressionEncoder()
-    spark.udf.register("minhash_union",
-      org.apache.spark.sql.functions.udaf(MinHashUnion))
-    implicit val topkEnc: Encoder[(Double, Long, Int)] = ExpressionEncoder()
-    spark.udf.register("top7_by_score",
-      org.apache.spark.sql.functions.udaf(new TopKByScore(7)))
-    implicit val topkLongEnc: Encoder[(Long, Long)] = ExpressionEncoder()
-    spark.udf.register("top11_by_long",
-      org.apache.spark.sql.functions.udaf(new TopKByLongScore(11)))
+    val reg = spark.sessionState.functionRegistry
+    def add(name: String, f: => org.apache.spark.sql.expressions.UserDefinedFunction): Unit =
+      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        spark.udf.register(name, f)
+    implicit lazy val inEnc: Encoder[Seq[Long]] = ExpressionEncoder()
+    add("minhash_union", org.apache.spark.sql.functions.udaf(MinHashUnion))
+    implicit lazy val topkEnc: Encoder[(Double, Long, Int)] = ExpressionEncoder()
+    add("top7_by_score", org.apache.spark.sql.functions.udaf(new TopKByScore(7)))
+    implicit lazy val topkLongEnc: Encoder[(Long, Long)] = ExpressionEncoder()
+    add("top11_by_long", org.apache.spark.sql.functions.udaf(new TopKByLongScore(11)))
     // KMV sketch width (evt_kmv_overlap): top-64 by negated hash = the 64
     // smallest hash values, map-side-combined in bounded 64-entry buffers
-    spark.udf.register("top64_by_long",
-      org.apache.spark.sql.functions.udaf(new TopKByLongScore(64)))
-    implicit val strEnc: Encoder[String] = ExpressionEncoder()
-    spark.udf.register("mg63",
-      org.apache.spark.sql.functions.udaf(new MisraGries(63)))
+    add("top64_by_long", org.apache.spark.sql.functions.udaf(new TopKByLongScore(64)))
+    implicit lazy val strEnc: Encoder[String] = ExpressionEncoder()
+    add("mg63", org.apache.spark.sql.functions.udaf(new MisraGries(63)))
   }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -449,25 +450,18 @@ case class AudioFp56(child: Expression)
 }
 
 object VectorExpressions {
-  /** Idempotent per-session registration; queries call this so the
-    * expressions resolve in any SparkSession handed to them.
+  /** Install every native function of [[graft.GraftExtensions.functions]]
+    * on the session, skipping names it already resolves (a previous
+    * install, or a session built with the extension), so repeated calls
+    * change nothing. `SparkEntry.registry` calls it once per query; the
+    * streaming, curation and store entry points call it themselves.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("long_dot", es => LongArrayDot(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("long_l2", es => LongArrayL2(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("simhash32", es => LongArraySimHash(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("shingle3_hash", es => Shingle3Hash(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("minhash16", es => MinHash16(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("max_elem_count",
-      es => LongArrayMaxCount(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("hyperplane_key",
-      es => HyperplaneKey(es(0), es(1)), "built-in")
-    // fixed-6 convenience alias (the historical name; same expression)
-    reg.createOrReplaceTempFunction("hyperplane_key6",
-      es => HyperplaneKey(es(0),
-        org.apache.spark.sql.catalyst.expressions.Literal(6)), "built-in")
-    reg.createOrReplaceTempFunction("zorder2", es => ZOrder2(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("audio_fp56", es => AudioFp56(es(0)), "built-in")
+    graft.GraftExtensions.functions.foreach { case (name, arity, build) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name,
+          graft.GraftExtensions.builder(name, arity, build), "built-in")
+    }
   }
 }

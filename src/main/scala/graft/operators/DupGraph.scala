@@ -40,6 +40,7 @@ object DupGraph {
     * the stored edge list.
     */
   def build(spark: SparkSession, dir: String, indexPath: String): Unit = {
+    graft.functions.VectorExpressions.register(spark)
     graft.analytics.DedupQueries.minhashPairs(spark, dir)
       .select(col("doc_a"), col("doc_b"), col("j"))
       .write.mode(SaveMode.Overwrite).parquet(edgeDir(indexPath))
@@ -95,7 +96,6 @@ object DupGraph {
     */
   def buildFrom(docs: DataFrame, indexPath: String): Unit = {
     val spark = docs.sparkSession
-    graft.functions.VectorExpressions.register(spark)
     MinHashIndex.build(docs, s"$indexPath/sig")
     graft.analytics.DedupQueries.minhashPairsFromSig(
         MinHashIndex.signatures(spark, s"$indexPath/sig")
@@ -124,8 +124,6 @@ object DupGraph {
     * needs (earlier dedup decisions must not silently un-happen).
     */
   def append(newDocs: DataFrame, indexPath: String): Unit = {
-    val spark = newDocs.sparkSession
-    graft.functions.VectorExpressions.register(spark)
     MinHashIndex.newPairs(newDocs, s"$indexPath/sig")
       .select(col("doc_a"), col("doc_b"), col("j"))
       .write.mode(SaveMode.Append).parquet(edgeDir(indexPath))
@@ -149,10 +147,9 @@ object DupGraph {
     */
   def appendBatch(newDocs: DataFrame, indexPath: String, batchId: Long): Unit = {
     val spark = newDocs.sparkSession
-    graft.functions.VectorExpressions.register(spark)
     val sigPath = s"$indexPath/sig"
     val newSig = graft.CacheTracker.track(
-      graft.analytics.DedupQueries.signatureRows(newDocs)
+      MinHashIndex.signatureRows(newDocs)
         .select("doc_id", "hs", "sig")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val nid = newSig.select("doc_id").distinct()

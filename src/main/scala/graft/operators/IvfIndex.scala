@@ -193,7 +193,6 @@ object IvfIndex {
     */
   def probe(spark: SparkSession, indexPath: String, queries: DataFrame,
       k: Int = 5, nProbe: Int = 2): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val cent = spark.read.parquet(s"$indexPath/centroids")
     val q = quantized(queries)
       .select(col("vec_id").as("q_id"), col("qe").as("qa"), col("nrm").as("na"))

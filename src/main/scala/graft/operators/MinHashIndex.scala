@@ -60,8 +60,7 @@ object MinHashIndex {
     * would give partition discovery conflicting directory depths).
     */
   def appendBatch(docs: DataFrame, indexPath: String, batchId: Long): Unit = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
-    graft.analytics.DedupQueries.signatureRows(docs)
+    signatureRows(docs)
       .withColumn("batch_id", lit(batchId))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
@@ -69,10 +68,17 @@ object MinHashIndex {
       .parquet(sigDir(indexPath))
   }
 
-  private def write(docs: DataFrame, indexPath: String, mode: SaveMode): Unit = {
+  private def write(docs: DataFrame, indexPath: String, mode: SaveMode): Unit =
+    signatureRows(docs).write.mode(mode).parquet(sigDir(indexPath))
+
+  /** `docs`' signature rows (doc_id, hs, sig, n_tok) in the index's storage
+    * schema, with the native functions installed on their session — the
+    * one path by which the stores and streams outside the query registry
+    * compute signatures.
+    */
+  private[graft] def signatureRows(docs: DataFrame): DataFrame = {
     graft.functions.VectorExpressions.register(docs.sparkSession)
     graft.analytics.DedupQueries.signatureRows(docs)
-      .write.mode(mode).parquet(sigDir(indexPath))
   }
 
   /** The stored signature rows (doc_id, hs, sig, n_tok). */
@@ -97,12 +103,11 @@ object MinHashIndex {
     */
   def newPairs(newDocs: DataFrame, indexPath: String): DataFrame = {
     val spark = newDocs.sparkSession
-    graft.functions.VectorExpressions.register(spark)
     // persisted: the new batch's signature rows feed the union AND the
     // new-doc flag joins below, and their lineage is the whole signature
     // CPU for the batch
     val newSig = graft.CacheTracker.track(
-      graft.analytics.DedupQueries.signatureRows(newDocs)
+      signatureRows(newDocs)
         .select("doc_id", "hs", "sig")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val stored = signatures(spark, indexPath).select("doc_id", "hs", "sig")

@@ -364,9 +364,8 @@ object DocumentStream {
     val pairs =
       if (StoreRoot.hasData(spark, indexPath)) MinHashIndex.newPairs(b, indexPath)
       else {
-        graft.functions.VectorExpressions.register(spark)
         val sig = graft.CacheTracker.track(
-          graft.analytics.DedupQueries.signatureRows(b)
+          MinHashIndex.signatureRows(b)
             .select("doc_id", "hs", "sig")
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         graft.analytics.DedupQueries

@@ -22,7 +22,6 @@ class DedupHotBucketSpec extends AnyFunSuite {
     * (DedupQueries.withShingles minus the token count).
     */
   private def shingles(docs: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     docs
       .withColumn("t", expr(tokensS("text")))
       .withColumn("th", expr(tokenHashesS("t")))

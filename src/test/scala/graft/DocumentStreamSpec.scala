@@ -139,7 +139,6 @@ class DocumentStreamSpec extends AnyFunSuite {
     import graft.functions.TextFunctions._
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"
-    graft.functions.VectorExpressions.register(spark)
     // stream the whole corpus in two micro-batches (cross-batch state is the
     // point); threshold 0 emits EVERY banded candidate so the batch side's
     // exact-Jaccard >= 0.5 rule can be applied identically afterwards

@@ -53,7 +53,6 @@ class DupGraphIngestSpec extends AnyFunSuite {
     // from-scratch reference: the symmetric pipeline over everything
     // ingested (no bucket here is anywhere near the cap)
     val all = b0.unionByName(b1).unionByName(b2)
-    graft.functions.VectorExpressions.register(spark)
     val sig = graft.CacheTracker.track(
       graft.analytics.DedupQueries.signatureRows(all)
         .select("doc_id", "hs", "sig")

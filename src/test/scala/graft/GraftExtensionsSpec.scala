@@ -29,14 +29,13 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .head().getLong(0) === 32L)
       assert(s.sql("SELECT long_l2(array(1L,2L), array(4L,6L)) v")
         .head().getLong(0) === 25L)
-      // parity with the imperative per-session registration on the same input
+      // parity with the imperative install (SparkSpec's) on the same input
       val exprs = Seq(
         "simhash32(array(1L,2L,3L,255L))",
         "shingle3_hash(array(1L,2L,3L,4L,5L))",
         "minhash16(array(10L,20L,30L))",
         "hyperplane_key6(array(1L,-2L,3L,-4L,5L,-6L))",
         "hyperplane_key(array(1L,-2L,3L,-4L,5L,-6L), 10)")
-      graft.functions.VectorExpressions.register(base)
       exprs.foreach { e =>
         assert(s.sql(s"SELECT $e v").head() === base.sql(s"SELECT $e v").head(),
           s"extension vs imperative mismatch for $e")

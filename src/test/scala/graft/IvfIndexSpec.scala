@@ -39,7 +39,6 @@ class IvfIndexSpec extends AnyFunSuite {
       s"expected cell partition pruning in:\n$plan")
 
     // unpruned reference: identical ranking math over the FULL store
-    graft.functions.VectorExpressions.register(spark)
     val cent = spark.read.parquet(s"$dir/centroids")
     val all = spark.read.parquet(s"$dir/vectors")
     val q = Tables.spread(queries, "vec_id")

@@ -102,7 +102,6 @@ class LakeLayoutSpec extends AnyFunSuite {
     // 16x16 grid, 4 files of 64 rows each
     val grid = (for (x <- 0 until 16; y <- 0 until 16) yield (x.toLong, y.toLong))
       .toDF("x", "y")
-    graft.functions.VectorExpressions.register(spark)
     // cluster-only writes range-shuffle globally, so the tiles are clean
     // regardless of the input partitioning; 4 tasks ≈ 64-row files
     LakeLayout.write(grid.withColumn("z", expr("zorder2(x, y)")), s"$dir/z",

@@ -104,7 +104,6 @@ class MultimodalAudioSpec extends AnyFunSuite {
 
   test("native audio_fp56 equals the declarative HOF chain on the fixture corpus") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     // real corpus rows (all lengths, all languages) + adversarial shapes:
     // short strings (empty windows), non-ascii code points, repeated chars
     val corpus = Tables.t(spark, "/root/testdata/sf0.001", "documents")

@@ -30,7 +30,6 @@ class PqIndexSpec extends AnyFunSuite {
     assert(cbAfter == cbBefore)
     // stored codes == encoding the UNION with the old corpus's codebooks:
     // appended vectors are code-identical to having arrived at build time
-    graft.functions.VectorExpressions.register(spark)
     def codeMap(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "m", "code").collect()
         .map(r => (r.getLong(0), r.getInt(1)) -> r.getInt(2)).toMap
@@ -48,7 +47,6 @@ class PqIndexSpec extends AnyFunSuite {
   test("adcScores matches an in-memory ADC reference") {
     val dir = java.nio.file.Files.createTempDirectory("pq_adc").toString
     PqIndex.build(emb, dir)
-    graft.functions.VectorExpressions.register(spark)
     val q = Tables.spread(emb, "vec_id").filter(col("vec_id") < 3)
       .select(col("vec_id"),
         expr(graft.functions.TextFunctions.quantizeS("embedding")).as("qe"))
@@ -82,7 +80,6 @@ class PqIndexSpec extends AnyFunSuite {
     val cellDirs = new java.io.File(s"$dir/codes").listFiles()
       .filter(_.getName.startsWith("cell=")).map(_.getName).sorted
     assert(cellDirs.length == 4, s"got ${cellDirs.toSeq}")
-    graft.functions.VectorExpressions.register(spark)
     val q = Tables.spread(emb, "vec_id").filter(col("vec_id") < 2)
       .select(col("vec_id"),
         expr(graft.functions.TextFunctions.quantizeS("embedding")).as("qe"))

@@ -37,7 +37,6 @@ class StreamCurationSpec extends AnyFunSuite {
   /** Eval-set shingle table: distinct trigram hashes of one benchmark doc. */
   private def benchShingles(text: String) = {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     Seq(text).toDF("text")
       .select(explode(expr(
         s"array_distinct(shingle3_hash(${tokenHashesS(tokensS("text"))}))")).as("h"))

@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class VectorExpressionsSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = SparkSpec.spark
-    graft.functions.VectorExpressions.register(s)
-    s
-  }
+  private lazy val spark = SparkSpec.spark
   private val sf = "/root/testdata/sf0.001"
 
   private def docsTh = Tables.t(spark, sf, "documents")
@@ -102,6 +98,41 @@ class VectorExpressionsSpec extends AnyFunSuite {
       .filter(expr("(k10 & 63) != k6"))
       .count()
     assert(refine == 0)
+  }
+
+  test("register is idempotent: a second install keeps every registered entry") {
+    val reg = spark.sessionState.functionRegistry
+    // the (info, builder) entry: a re-registration writes a fresh info even
+    // when the builder lambda is a JVM-cached non-capturing instance
+    def entries() = GraftExtensions.functions.map { case (name, _, _) =>
+      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
+      name -> reg.lookupFunction(id).zip(reg.lookupFunctionBuilder(id))
+    }
+    val before = entries()
+    assert(before.forall(_._2.isDefined), before.filter(_._2.isEmpty).map(_._1))
+    graft.functions.VectorExpressions.register(spark)
+    graft.functions.VectorExpressions.register(spark)
+    before.zip(entries()).foreach { case ((name, Some((i0, b0))), (_, after)) =>
+      val (i1, b1) = after.get
+      assert((i1 eq i0) && (b1 eq b0), s"$name was re-registered")
+    }
+  }
+
+  test("registry rows and curateBatch install the functions on a bare session") {
+    import graft.streaming.DocumentStream
+    val fresh = spark.newSession()
+    assert(!fresh.sessionState.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("minhash16")))
+    val fn = SparkEntry.registry("dedup_ngram_jaccard").fn
+    assert(fn(fresh, sf).count() == fn(spark, sf).count())
+
+    val tmp = java.nio.file.Files.createTempDirectory("install").toString
+    val bare = spark.newSession()
+    val docs = Tables.t(bare, sf, "documents").select(col("doc_id").as("docId"),
+      col("text"), to_timestamp(lit("2024-07-23 10:00:00")).as("eventTime"))
+    val r = DocumentStream.curateBatch(docs, 0L, s"$tmp/index", s"$tmp/lake")
+    assert(r.input == 500L && r.landed > 0L)
+    graft.CacheTracker.releaseAll()
   }
 
   test("planesFor holds bucket occupancy constant as the corpus grows") {
