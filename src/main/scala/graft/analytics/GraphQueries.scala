@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.QuerySpec
+import graft.operators.LocalTier
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -90,65 +91,16 @@ object GraphQueries {
     lbl
   }
 
-  /** Single-task tier for the fixed-round algorithms (LPA / PageRank /
-    * k-core peeling), guarded by the edge-count threshold
-    * [[graft.operators.ConnectedComponents.LocalSolveEdgesDefault]] shares —
-    * the measured crossover where one distributed round's fixed shuffle +
-    * plan cost exceeds solving the whole graph in a single executor task.
-    * A verified near-dup graph is ~0.1% of its corpus (255 edges at sf0.1,
-    * ~150k at 64×), so the common case pays milliseconds of task compute
-    * instead of `rounds × 3` shuffle stages; graphs past the threshold take
-    * the unchanged distributed rounds. Results are bit-equal by
-    * construction: every algorithm here is integer arithmetic over
-    * order-independent aggregates (sums, min-by), and `GraphQueriesSpec`
-    * pins local ≡ distributed on a generated graph. The solve runs INSIDE
-    * one task (coalesce(1).mapPartitions), never on the driver — the
-    * [[graft.operators.ConnectedComponents]] localSolve pattern.
-    */
-  private def localRows(
-      arcs: DataFrame, fieldNames: Seq[String])(
-      algo: (Array[Long], Array[Long]) => Iterator[org.apache.spark.sql.Row]): DataFrame = {
-    val spark = arcs.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(fieldNames.map(n =>
-      org.apache.spark.sql.types.StructField(n,
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val rdd = graft.CacheTracker.trackRdd(
-      arcs.rdd.coalesce(1).mapPartitions { it =>
-        // primitive (src, dst) arrays, grown by doubling — 16 B/arc exact.
-        // HEAP BOUND at the shared 16M-edge threshold (32M symmetrized
-        // arcs): 512 MB here + the CSR below (ids 8 B/node, neighbor ints
-        // 4 B/arc, offsets 4 B/node) ≈ 0.8 GB worst case in ONE task —
-        // the same primitive-array budget as the union-find solver whose
-        // threshold these tiers share (round 12; the boxed
-        // HashMap[Long, ArrayBuffer] form this replaces was several times
-        // that — the r11 ADVICE item). GraphHeapSpec pins the per-arc
-        // byte budget to this comment.
-        var cap = 1 << 16
-        var srcs = new Array[Long](cap)
-        var dsts = new Array[Long](cap)
-        var n = 0
-        it.foreach { r =>
-          if (n == cap) {
-            cap *= 2
-            srcs = java.util.Arrays.copyOf(srcs, cap)
-            dsts = java.util.Arrays.copyOf(dsts, cap)
-          }
-          srcs(n) = r.getLong(0); dsts(n) = r.getLong(1); n += 1
-        }
-        algo(java.util.Arrays.copyOf(srcs, n), java.util.Arrays.copyOf(dsts, n))
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    rdd.count() // materialize inside the tracked scope
-    spark.createDataFrame(rdd, schema)
-  }
-
-  /** CSR adjacency over primitive arrays: sorted distinct node ids (so
-    * node INDEX order ≡ node ID order — tie-breaks on index replay
-    * tie-breaks on id), per-node offsets, neighbor indices. No boxing
-    * anywhere: ~16 B per input arc + ~12 B per node.
+  /** CSR adjacency over primitive arrays: sorted distinct node ids
+    * ([[LocalTier.sortedIds]], so node INDEX order ≡ node ID order —
+    * tie-breaks on index replay tie-breaks on id), per-node offsets,
+    * neighbor indices. No boxing anywhere: 4 B per arc (neighbor
+    * index) + 20 B per node (id, degree, offset, cursor) + the id sort's
+    * 8 B per arc of scratch.
     */
   private[graft] def buildCsr(src: Array[Long], dst: Array[Long])
       : (Array[Long], Array[Int], Array[Int]) = {
-    val ids = src.distinct.sorted
+    val ids = LocalTier.sortedIds(src)
     def idx(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
     val deg = new Array[Int](ids.length)
     var i = 0
@@ -165,19 +117,18 @@ object GraphQueries {
     (ids, off, nbr)
   }
 
-  /** Whether the registry dup graph is under the local-solve threshold
-    * (symmetrized arc count ≈ 2×edges — compared against the same knob the
-    * components solver uses, so one env override steers every local tier).
-    * Round 12 (VERDICT item 7): the count comes from the edge store's
-    * parquet FOOTERS ([[graft.operators.DupGraph.edgeRowsHint]]) — the old
-    * `e.count()` ran a full job on every graph query's critical path just
-    * to pick a tier. Falls back to counting only when footers are
-    * unreadable.
+  /** Whether LPA / PageRank / k-core run on [[LocalTier]]: 2 × the edge
+    * store's footer row count ([[graft.operators.DupGraph.edgeRowsHint]];
+    * counted only when footers are unreadable) against
+    * [[graft.operators.ConnectedComponents.LocalSolveEdgesDefault]]. The
+    * tiers are bit-equal integer arithmetic (`GraphQueriesSpec` pins it).
     */
-  private def underLocalThreshold(s: SparkSession, d: String, e: DataFrame): Boolean = {
+  private def underLocalThreshold(s: SparkSession, d: String, e: DataFrame,
+      name: String): Boolean = {
     val path = graft.operators.StoreRoot.key(s, d, graft.operators.DupGraph.Kind)
     val n = graft.operators.DupGraph.edgeRowsHint(s, path).getOrElse(e.count())
-    n * 2 <= graft.operators.ConnectedComponents.LocalSolveEdgesDefault
+    LocalTier.fits(name, n * 2,
+      graft.operators.ConnectedComponents.LocalSolveEdgesDefault)
   }
 
   /** [[lpaRounds]] in one task: symmetric arcs in, (node, community,
@@ -477,8 +428,8 @@ object GraphQueries {
     "graph_pagerank" -> QuerySpec(
       (s, d) => {
         val e = edges(s, d)
-        if (underLocalThreshold(s, d, e))
-          localRows(arcs(e), Seq("node", "rank_e12"))(
+        if (underLocalThreshold(s, d, e, "graph_pagerank"))
+          LocalTier.pairs(arcs(e), Seq("node", "rank_e12"))(
             pagerankLocal(_, _, PrIters)).orderBy(col("node"))
         else pagerankDistributed(e)
       },
@@ -516,11 +467,8 @@ object GraphQueries {
     "graph_label_prop" -> QuerySpec(
       (s, d) => {
         val e = edges(s, d)
-        if (underLocalThreshold(s, d, e))
-          // single-task tier (see localRows): rounds + community sizes in
-          // one task, no per-round shuffles — bit-equal to the distributed
-          // form (GraphQueriesSpec pins it)
-          localRows(arcs(e), Seq("node", "community", "community_size"))(
+        if (underLocalThreshold(s, d, e, "graph_label_prop"))
+          LocalTier.pairs(arcs(e), Seq("node", "community", "community_size"))(
             lpaLocal(_, _, LpaIters)).orderBy(col("node"))
         else {
           val sym = arcs(e)
@@ -580,8 +528,8 @@ object GraphQueries {
       (s, d) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val e = edges(s, d)
-        if (underLocalThreshold(s, d, e))
-          localRows(arcs(e), Seq("node", "core_degree"))(
+        if (underLocalThreshold(s, d, e, "graph_kcore"))
+          LocalTier.pairs(arcs(e), Seq("node", "core_degree"))(
             kcoreLocal(_, _, KcoreK, KcoreIters)).orderBy(col("node"))
         else {
           val sym = graft.CacheTracker.track(arcs(e)

@@ -2,7 +2,9 @@ package graft.analytics
 
 import graft.{QuerySpec, Tables}
 import graft.functions.TextFunctions._
+import graft.operators.LocalTier
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Text analysis for training-data pipelines over the `documents` table:
   * token counting, quality scoring, language ID (stopword-voting n-gram
@@ -110,34 +112,17 @@ object TextQueries {
           .withColumn("syms",
             expr("transform(sequence(1, length(wd)), i -> substring(wd, i, 1))"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        // two tiers on the vocabulary size (round 12, the quality_distill
-        // move): under [[BpeLocalWords]] all merge rounds run inside one
-        // executor task — one job instead of rounds × 2 sequential driver
-        // actions — and the count doubles as the eager cache build. Above
-        // it, the unchanged distributed rounds.
-        if (w0.count() <= BpeLocalWords) {
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("rank",
-              org.apache.spark.sql.types.IntegerType, nullable = false),
-            org.apache.spark.sql.types.StructField("a",
-              org.apache.spark.sql.types.StringType, nullable = true),
-            org.apache.spark.sql.types.StructField("b",
-              org.apache.spark.sql.types.StringType, nullable = true),
-            org.apache.spark.sql.types.StructField("merged",
-              org.apache.spark.sql.types.StringType, nullable = true),
-            org.apache.spark.sql.types.StructField("cnt",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("corpus_symbols_after",
-              org.apache.spark.sql.types.LongType, nullable = false)))
-          val rdd = graft.CacheTracker.trackRdd(
-            w0.select(col("wd"), col("n")).rdd.coalesce(1).mapPartitions { it =>
-              val words = it.map(r => (r.getString(0), r.getLong(1))).toArray
-              bpeLocalLoop(words, 3)._1.iterator.map { case (r, a, b, cnt, after) =>
-                org.apache.spark.sql.Row(r, a, b, a + b, cnt, after)
-              }
-            }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          rdd.count()
-          s.createDataFrame(rdd, schema).orderBy(col("rank"))
+        // under [[BpeLocalWords]] every merge round runs on [[LocalTier]]
+        // (the count doubles as the eager cache build)
+        if (LocalTier.fits("txt_bpe_train", w0.count(), BpeLocalWords)) {
+          val schema = StructType.fromDDL("rank INT NOT NULL, a STRING, b STRING, " +
+            "merged STRING, cnt BIGINT NOT NULL, corpus_symbols_after BIGINT NOT NULL")
+          LocalTier.rows(w0.select(col("wd"), col("n")), schema) { it =>
+            val words = it.map(r => (r.getString(0), r.getLong(1))).toArray
+            bpeLocalLoop(words, 3)._1.iterator.map { case (r, a, b, cnt, after) =>
+              org.apache.spark.sql.Row(r, a, b, a + b, cnt, after)
+            }
+          }.orderBy(col("rank"))
         } else {
           val (_, rounds) = bpeMergeRounds(w0, 3)
           rounds.map { case (r, a, b, cnt, after) => (r, a, b, a + b, cnt, after) }
@@ -190,27 +175,18 @@ object TextQueries {
             .withColumn("syms",
               expr("transform(sequence(1, length(wd)), i -> substring(wd, i, 1))"))
             .persist(MEMORY_AND_DISK))
-        // same two-tier switch as txt_bpe_train: the local task re-learns
-        // the merge chain and emits each word's final PIECE COUNT — a
-        // vocabulary-sized frame — for the join back to the per-source
-        // word counts; distributed rounds above the bound.
+        // txt_bpe_train's tiers; the local task emits each word's final
+        // PIECE COUNT for the join back to the per-source word counts
         val ap =
-          if (w0.count() <= BpeLocalWords) {
-            val schema = org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("wd",
-                org.apache.spark.sql.types.StringType, nullable = true),
-              org.apache.spark.sql.types.StructField("np",
-                org.apache.spark.sql.types.LongType, nullable = false)))
-            val rdd = graft.CacheTracker.trackRdd(
-              w0.select(col("wd"), col("n")).rdd.coalesce(1).mapPartitions { it =>
-                val words = it.map(r => (r.getString(0), r.getLong(1))).toArray
-                val nps = bpeLocalLoop(words, 3)._2
-                words.iterator.zip(nps.iterator).map { case ((wd, _), np) =>
-                  org.apache.spark.sql.Row(wd, np)
-                }
-              }.persist(MEMORY_AND_DISK))
-            rdd.count()
-            s.createDataFrame(rdd, schema)
+          if (LocalTier.fits("txt_bpe_apply", w0.count(), BpeLocalWords)) {
+            val schema = StructType.fromDDL("wd STRING, np BIGINT NOT NULL")
+            LocalTier.rows(w0.select(col("wd"), col("n")), schema) { it =>
+              val words = it.map(r => (r.getString(0), r.getLong(1))).toArray
+              val nps = bpeLocalLoop(words, 3)._2
+              words.iterator.zip(nps.iterator).map { case ((wd, _), np) =>
+                org.apache.spark.sql.Row(wd, np)
+              }
+            }
           } else {
             val (merged, _) = bpeMergeRounds(w0, 3)
             merged.select(col("wd"), size(col("syms")).cast("long").as("np"))
@@ -396,41 +372,17 @@ object TextQueries {
           .select(("qm" +: "y" +: (0 until NF).map(i => s"x$i")).map(col): _*)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         val tr = feat.filter(expr("abs(qm - 430000) > 20000"))
-        // Pocket-perceptron training: 16 synchronous rounds over the
-        // confident slice. Two tiers on the training-row count (the
-        // graph-family local-solve move): under [[DistillLocalRows]] the
-        // WHOLE loop runs inside one executor task over primitive arrays —
-        // one job instead of 16 sequential collect() round-trips, each of
-        // which pays a full job/stage launch against the cached features —
-        // and above it the unchanged per-round distributed aggregates
-        // (map-side-combined, the 100 TB shape). Both tiers are exact
-        // integer arithmetic over order-independent sums, so the learned
-        // weights are bit-equal (TextQueriesSpec pins it).
+        // Pocket-perceptron training, 16 synchronous rounds over the
+        // confident slice: under [[DistillLocalRows]] the whole loop runs
+        // on [[LocalTier]] (one job, not 16 collects), bit-equal to the
+        // per-round aggregates above it (TextQueriesSpec pins it).
         val pocket: Array[Long] =
-          if (tr.count() <= DistillLocalRows)
-            tr.select(("y" +: (0 until NF).map(i => s"x$i")).map(col): _*)
-              .rdd.coalesce(1).mapPartitions { it =>
-                val rows = it.map(r => Array.tabulate(NF + 1)(r.getLong)).toArray
-                Iterator.single(distillTrainLocal(rows, NF, iters = 16))
-              }.collect()(0)
-          else {
-            var w = Array.fill(NF)(0L)
-            var p = Array.fill(NF)(0L)
-            var pocketWrong = Long.MaxValue
-            for (_ <- 0 until 16) {
-              val score = (0 until NF).map(i => s"${w(i)} * x$i").mkString(" + ")
-              val pred = s"if(($score) > 0, cast(1 as bigint), cast(0 as bigint))"
-              val aggCols = count(lit(1)).as("n") +:
-                sum(expr(s"abs(y - $pred)")).as("wrong") +:
-                (0 until NF).map(i => sum(expr(s"(y - $pred) * x$i")).as(s"u$i"))
-              val r = tr.select(aggCols: _*).collect()(0)
-              val n = r.getLong(0)
-              val wrong = r.getLong(1)
-              if (wrong < pocketWrong) { p = w.clone(); pocketWrong = wrong }
-              w = Array.tabulate(NF)(i => w(i) + Math.floorDiv(r.getLong(i + 2), n))
+          if (LocalTier.fits("txt_quality_distill", tr.count(), DistillLocalRows))
+            LocalTier.value(tr.select(("y" +: (0 until NF).map(i => s"x$i")).map(col): _*)) { it =>
+              val rows = it.map(r => Array.tabulate(NF + 1)(r.getLong)).toArray
+              distillTrainLocal(rows, NF, iters = 16)
             }
-            p
-          }
+          else distillTrainDistributed(tr, NF, iters = 16)
         val pscore = (0 until NF).map(i => s"${pocket(i)} * x$i").mkString(" + ")
         val out = feat
           .withColumn("confident", expr("abs(qm - 430000) > 20000"))
@@ -2537,29 +2489,38 @@ object TextQueries {
     * side); only the Zipf tail shuffle-joins. */
   val HotVocab = 4096
 
-  /** txt_quality_distill's local-training threshold: under this many
-    * confident training rows the 16-round pocket-perceptron loop runs in
-    * ONE executor task (each row is 7 longs, so 4M rows ≈ 250 MB of
-    * primitive arrays — comfortably inside a task, the
-    * ConnectedComponents-localSolve sizing rule); past it the per-round
-    * distributed aggregates take over unchanged.
+  /** txt_quality_distill's [[LocalTier]] bound in confident training
+    * rows. Heap at the bound: each row is a 7-long array (56 B + a 16 B
+    * header + an 8 B reference ≈ 80 B), so 4M rows ≈ 320 MB in the one
+    * task; past it the per-round distributed aggregates take over.
     */
   val DistillLocalRows = 4000000L
 
-  /** The 16-round pocket-perceptron over materialized (y, x0..x{nf-1})
-    * rows — bit-equal to the distributed rounds: per-round `wrong` and
-    * update sums are order-independent integer sums, the pocket keeps the
-    * pre-update weights of the best round, updates are floorDiv(u, n).
+  /** txt_quality_distill's distributed training tier: each round is one
+    * map-side-combined aggregate over `tr`'s (y, x0..x{nf-1}) columns.
+    */
+  private[graft] def distillTrainDistributed(
+      tr: org.apache.spark.sql.DataFrame, nf: Int, iters: Int): Array[Long] =
+    pocketTrain(nf, iters) { w =>
+      val score = (0 until nf).map(i => s"${w(i)} * x$i").mkString(" + ")
+      val pred = s"if(($score) > 0, cast(1 as bigint), cast(0 as bigint))"
+      val aggCols = count(lit(1)).as("n") +:
+        sum(expr(s"abs(y - $pred)")).as("wrong") +:
+        (0 until nf).map(i => sum(expr(s"(y - $pred) * x$i")).as(s"u$i"))
+      val r = tr.select(aggCols: _*).collect()(0)
+      (r.getLong(0), r.getLong(1), Array.tabulate(nf)(i => r.getLong(i + 2)))
+    }
+
+  /** txt_quality_distill's local training tier over materialized
+    * (y, x0..x{nf-1}) rows — bit-equal to [[distillTrainDistributed]],
+    * since the per-round `wrong` and update sums are order-independent
+    * integer sums.
     */
   private[graft] def distillTrainLocal(
-      rows: Array[Array[Long]], nf: Int, iters: Int): Array[Long] = {
-    var w = Array.fill(nf)(0L)
-    var pocket = Array.fill(nf)(0L)
-    var pocketWrong = Long.MaxValue
-    val n = rows.length.toLong
-    for (_ <- 0 until iters) {
+      rows: Array[Array[Long]], nf: Int, iters: Int): Array[Long] =
+    pocketTrain(nf, iters) { w =>
       var wrong = 0L
-      val u = Array.fill(nf)(0L)
+      val u = new Array[Long](nf)
       rows.foreach { r =>
         var score = 0L
         var i = 0
@@ -2569,7 +2530,22 @@ object TextQueries {
         i = 0
         while (i < nf) { u(i) += diff * r(i + 1); i += 1 }
       }
-      if (wrong < pocketWrong) { pocket = w.clone(); pocketWrong = wrong }
+      (rows.length.toLong, wrong, u)
+    }
+
+  /** The pocket perceptron both distill tiers run: `iters` synchronous
+    * rounds, each `round(w)` returning (n, wrong, update sums); the pocket
+    * keeps the pre-update weights of the best round, updates are
+    * floorDiv(u, n).
+    */
+  private def pocketTrain(nf: Int, iters: Int)(
+      round: Array[Long] => (Long, Long, Array[Long])): Array[Long] = {
+    var w = Array.fill(nf)(0L)
+    var pocket = w
+    var pocketWrong = Long.MaxValue
+    for (_ <- 0 until iters) {
+      val (n, wrong, u) = round(w)
+      if (wrong < pocketWrong) { pocket = w; pocketWrong = wrong }
       w = Array.tabulate(nf)(i => w(i) + Math.floorDiv(u(i), n))
     }
     pocket
@@ -2715,25 +2691,10 @@ object TextQueries {
        |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
        |    ORDER BY score_micro DESC, doc_id) AS rank FROM agg)""".stripMargin
 
-  /** The BPE training loop shared by txt_bpe_train (reports the rounds) and
-    * txt_bpe_apply (uses the final merged vocabulary): `rounds` greedy
-    * merges over a (wd, n, syms) vocabulary table. Returns the final table
-    * and per-round (rank, a, b, pairCount, corpusSymbolsAfter). The driver
-    * holds only each round's argmax row — the vocabulary itself never
-    * leaves the cluster (the BPE scale contract SURVEY §2 documents).
-    */
-  /** Local-tier bound for the BPE merge loop (round 12, VERDICT item 4 —
-    * the txt_quality_distill / graph local-solve move): vocabularies under
-    * this many distinct words run every merge round inside ONE executor
-    * task instead of `rounds × 2` sequential driver actions (argmax
-    * collect + corpus-symbol count per round, each paying a full job/stage
-    * launch). Heap bound, stated: a word averages ~8 chars → ~9 single-char
-    * Strings (~48 B each with object headers) + the symbol array + the
-    * (wd, n) row ≈ 600 B/word → ~0.6 GB at the bound, safe in any
-    * reasonable executor; larger vocabularies take the unchanged
-    * distributed rounds. Both tiers are exact integer/argmax arithmetic
-    * over order-independent sums, so the learned merges are bit-equal
-    * (`BpeLocalSpec` pins it on random vocabularies).
+  /** The BPE merge loop's [[LocalTier]] bound in distinct words. Heap at
+    * the bound: ~8 chars/word → ~9 single-char Strings (~48 B each with
+    * headers) + the symbol array + the (wd, n) row ≈ 600 B/word → ~0.6 GB.
+    * The tiers' merges are bit-equal (`BpeLocalSpec` pins it).
     */
   val BpeLocalWords = 1000000L
 
@@ -2818,6 +2779,13 @@ object TextQueries {
     (stats, syms.map(_.length.toLong))
   }
 
+  /** The BPE training loop shared by txt_bpe_train (reports the rounds) and
+    * txt_bpe_apply (uses the final merged vocabulary): `rounds` greedy
+    * merges over a (wd, n, syms) vocabulary table. Returns the final table
+    * and per-round (rank, a, b, pairCount, corpusSymbolsAfter). The driver
+    * holds only each round's argmax row — the vocabulary itself never
+    * leaves the cluster (the BPE scale contract SURVEY §2 documents).
+    */
   private[graft] def bpeMergeRounds(
       w0: org.apache.spark.sql.DataFrame, rounds: Int)
       : (org.apache.spark.sql.DataFrame, Seq[(Int, String, String, Long, Long)]) = {

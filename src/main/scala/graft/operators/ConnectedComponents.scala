@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components by min-label propagation — the operator that turns
@@ -11,46 +12,32 @@ import org.apache.spark.storage.StorageLevel
   * training-data dedup pipeline.
   *
   * Two-tier by edge count: graphs under `localSolveEdges` are solved by
-  * union-find inside a single executor task (a verified near-dup graph is
-  * ~0.1% of its corpus, so this is the common case and skips all per-round
-  * shuffle overhead); larger graphs run alternating large-star/small-star
-  * rounds (Kiveris et al., SoCC'14) — the skew-robust formulation: a giant
-  * boilerplate component (the worst case real near-dup graphs produce)
-  * shuffles on CHILD vertex ids each round, never funnelling its whole
-  * membership through the representative's partition the way min-label
-  * propagation does. See [[iterateWithRounds]].
+  * union-find on [[LocalTier]] (a verified near-dup graph is ~0.1% of its
+  * corpus, so this is the common case); larger graphs run alternating
+  * large-star/small-star rounds (Kiveris et al., SoCC'14) — the
+  * skew-robust formulation: a giant boilerplate component (the worst case
+  * real near-dup graphs produce) shuffles on CHILD vertex ids each round,
+  * never funnelling its whole membership through the representative's
+  * partition the way min-label propagation does. See [[iterateWithRounds]].
   */
 object ConnectedComponents {
 
-  /** Default local-solve threshold; `SPARK_GRAFT_CC_LOCAL_EDGES` overrides
-    * (0 forces the distributed star tier — the scale-probe knob, since at
-    * bench scale every near-dup graph otherwise resolves in the local tier).
-    *
-    * 16M: measured on a 4.66M-edge near-dup graph (32x corpus), the local
-    * union-find task solves in 9.0 s where one star round + hand-off takes
-    * 15.1 s and full star convergence (2 rounds) 20.3 s — each distributed
-    * round carries ~5 s of fixed shuffle + plan cost regardless of size, so
-    * the crossover sits where union-find's single task stops fitting task
-    * memory, not where rounds get cheap. 16M edges is ~1-1.5 GB of
-    * union-find state — safe in any reasonable executor; beyond it the
-    * star tier (result-equal, spec- and probe-verified) takes over.
+  /** Local-solve threshold on the symmetrized edge count, the
+    * [[LocalTier]] bound the graph rows share. Measured on a 4.66M-edge
+    * near-dup graph (32x corpus): the local task solves in 9.0 s, one star
+    * round + hand-off in 15.1 s, full star convergence in 20.3 s — each
+    * distributed round carries ~5 s of fixed cost, so the crossover is
+    * where the single task stops fitting task memory.
     */
-  val LocalSolveEdgesDefault: Long = sys.env.get("SPARK_GRAFT_CC_LOCAL_EDGES") match {
-    case None => 16000000L
-    case Some(raw) =>
-      // fail naming the knob: a raw .toLong here would surface as an
-      // ExceptionInInitializerError that never mentions the env var
-      val v = scala.util.Try(raw.trim.toLong).getOrElse(
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_CC_LOCAL_EDGES must be a non-negative integer, got: '$raw'"))
-      if (v < 0) throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CC_LOCAL_EDGES must be >= 0, got: $v")
-      v
-  }
+  val LocalSolveEdgesDefault: Long = 16000000L
 
-  /** @return one row per vertex: (id, lbl) with lbl = min id of its component. */
+  /** @return one row per vertex: (id, lbl) with lbl = min id of its component.
+    * @throws IllegalArgumentException unless both id columns are BIGINT
+    */
   def components(edges: DataFrame, src: String, dst: String, maxIter: Int = 20,
                  localSolveEdges: Long = LocalSolveEdgesDefault): DataFrame = {
+    for (c <- Seq(src, dst); t = edges.schema(c).dataType)
+      require(t == LongType, s"components: id column '$c' must be BIGINT, got ${t.sql}")
     // no distinct: duplicate edges change neither union-find nor a
     // neighbor-min, and deduping them costs a full shuffle of the edge
     // list. Symmetrize via explode, NOT union of two selects: a union
@@ -63,62 +50,38 @@ object ConnectedComponents {
         struct(col(dst).as("a"), col(src).as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = und.count()
     val out =
-      if (nEdges <= localSolveEdges) localSolve(und)
-      else iterate(und, maxIter, localSolveEdges)
-    if (sys.env.contains("SPARK_GRAFT_VERBOSE"))
-      System.err.println(s"[cc] edges=$nEdges tier=" +
-        (if (nEdges <= localSolveEdges) "local" else "star"))
+      if (LocalTier.fits("components", und.count(), localSolveEdges)) localSolve(und)
+      else iterateWithRounds(und, maxIter, localSolveEdges)._1
     und.unpersist(blocking = false)
     out
   }
 
-  /** Single-task union-find for graphs under the local threshold.
-    *
-    * A verified near-dup pair graph is orders of magnitude smaller than the
-    * corpus it came from (LSH banding + Jaccard verify keep ~0.1% of rows as
-    * edges), so the common case even for a very large corpus is a graph that
-    * fits comfortably in one executor task. Each distributed round of the
-    * iterative path costs several shuffles plus plan compilation — ~1 s of
-    * fixed overhead regardless of data size — while union-find over a few
-    * million edges in a single `mapPartitions` task is milliseconds, stays
-    * off the driver, and needs no iteration at all. Graphs above the
-    * threshold take the O(log diameter) distributed path.
+  /** Single-task union-find on [[LocalTier]]: int parents over its sorted
+    * id index, the smaller index (= the smaller id) always the root, so
+    * each label is its component's min id.
     */
-  private def localSolve(und: DataFrame): DataFrame = {
-    val spark = und.sparkSession
-    val idType = und.schema("a").dataType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType, nullable = false),
-      org.apache.spark.sql.types.StructField("lbl", idType, nullable = false)))
-    // tracked: the result RDD must outlive this call (the caller's action
-    // reads it), so release happens at the harness seam, not here
-    val labeled = graft.CacheTracker.trackRdd(und.rdd.coalesce(1).mapPartitions { it =>
-      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-      def find(x: Any): Any = {
+  private def localSolve(und: DataFrame): DataFrame =
+    LocalTier.pairs(und, Seq("id", "lbl")) { (src, dst) =>
+      val ids = LocalTier.sortedIds(src, dst)
+      def idx(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+      val parent = Array.range(0, ids.length)
+      def find(x: Int): Int = {
         var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
+        while (parent(r) != r) r = parent(r)
         var c = x // path compression
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      def lt(x: Any, y: Any): Boolean =
-        x.asInstanceOf[Comparable[Any]].compareTo(y) < 0
-      it.foreach { row =>
-        val (a, b) = (row.get(0), row.get(1))
-        parent.getOrElseUpdate(a, a)
-        parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+      var i = 0
+      while (i < src.length) {
+        val ra = find(idx(src(i)))
+        val rb = find(idx(dst(i)))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+        i += 1
       }
-      // snapshot the key set: find()'s path compression updates the map
-      val ks = parent.keys.toArray
-      ks.iterator.map(k => Row(k, find(k)))
-    }.persist(StorageLevel.MEMORY_AND_DISK))
-    labeled.count() // materialize before the caller unpersists the edge cache
-    spark.createDataFrame(labeled, schema)
-  }
+      ids.indices.iterator.map(v => Row(ids(v), ids(find(v))))
+    }
 
   /** Distributed tier: alternating large-star / small-star rounds (the
     * MapReduce CC algorithm of Kiveris et al., "Connected Components in
@@ -152,13 +115,10 @@ object ConnectedComponents {
     *     count falls under `localCut` the remaining rounds are finished by
     *     the single-task union-find tier instead of 2-3 more distributed
     *     rounds of joins plus convergence checks.
-    */
-  private def iterate(und: DataFrame, maxIter: Int, localCut: Long): DataFrame =
-    iterateWithRounds(und, maxIter, localCut)._1
-
-  /** [[iterate]] plus the number of distributed rounds run — exposed for
-    * the spec's convergence-rate assertions (`localCut = 0` keeps the loop
-    * purely distributed to full star convergence).
+    *
+    * Returns the labels and the number of distributed rounds run (the
+    * spec's convergence-rate assertions use it; `localCut = 0` keeps the
+    * loop purely distributed to full star convergence).
     */
   private[graft] def iterateWithRounds(und: DataFrame, maxIter: Int,
       localCut: Long = 0L): (DataFrame, Int) = {

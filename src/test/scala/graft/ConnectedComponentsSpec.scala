@@ -33,10 +33,12 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       val edges = Seq(
         (1L, 2L), (2L, 3L), (3L, 1L), // cycle {1,2,3}
         (10L, 11L),                   // pair {10,11}
-        (20L, 21L), (21L, 22L))       // path {20,21,22}
+        (20L, 21L), (21L, 22L),       // path {20,21,22}
+        (-7L, -3L), (-3L, 4L))        // negative ids, as phash/common-neighbor ids are
       val got = comps(edges, threshold)
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
-        10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
+        10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L,
+        -7L -> -7L, -3L -> -7L, 4L -> -7L))
     }
   }
 
@@ -44,6 +46,14 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(ConnectedComponents.components(df, "src", "dst").count() == 0)
+  }
+
+  test("a non-BIGINT id column is rejected naming its type") {
+    import spark.implicits._
+    val df = Seq(("a", "b")).toDF("src", "dst")
+    val e = intercept[IllegalArgumentException](
+      ConnectedComponents.components(df, "src", "dst"))
+    assert(e.getMessage.contains("STRING"), e.getMessage)
   }
 
   private def iterateRounds(edges: Seq[(Long, Long)]): (Map[Long, Long], Int) = {

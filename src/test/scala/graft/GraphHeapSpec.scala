@@ -2,27 +2,47 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the single-task graph tiers' heap budget to the threshold they
-  * share with the union-find solver (round 12, VERDICT item 10 + the r11
-  * ADVICE item): the local representation is primitive arrays — 16 B/arc
-  * input (two longs) + 4 B/arc CSR neighbor + ~12 B/node (sorted id long +
-  * offset int) — so the worst case at the shared 16M-edge default
-  * (32M symmetrized arcs, every node distinct) must stay under the stated
-  * ~1 GB single-task bound. If anyone raises the threshold or fattens the
-  * per-arc representation, this fails before an executor OOMs.
+/** Pins every single-task local tier's worst-case heap, at the bound the
+  * code applies, to the 1 GiB budget [[graft.operators.LocalTier]] states.
+  * Each case sums every array its tier holds (scratch included, as if all
+  * of it were live at once), so it is an upper bound; the pair loader's
+  * doubling scratch lives only before any of those arrays exist. If anyone
+  * raises a bound or fattens a per-row representation, this fails before
+  * an executor OOMs.
   */
 class GraphHeapSpec extends AnyFunSuite {
 
+  private val budget = 1L << 30
+
+  private def within(tier: String, bytes: Long): Unit =
+    assert(bytes <= budget,
+      f"$tier worst-case heap ${bytes / 1e9}%.2f GB exceeds the 1 GiB " +
+        "LocalTier budget — lower its bound or slim the representation")
+
   test("local-tier heap at the shared threshold stays under the stated bound") {
-    val arcs = 2L * operators.ConnectedComponents.LocalSolveEdgesDefault
-    val bytesPerArc = 16L + 4L // src+dst longs + CSR neighbor int
-    val bytesPerNode = 8L + 4L // sorted id long + offset int
-    val worstNodes = arcs      // every arc endpoint distinct — upper bound
-    val worstBytes = arcs * bytesPerArc + worstNodes * bytesPerNode
-    assert(worstBytes <= (1.1 * (1L << 30)).toLong,
-      f"local graph tier worst-case heap ${worstBytes / 1e9}%.2f GB exceeds " +
-        "the ~1 GB budget documented in GraphQueries.localRows — lower the " +
-        "threshold or slim the representation")
+    // the graph rows admit 2 × edges <= LocalSolveEdgesDefault arcs
+    val arcs = operators.ConnectedComponents.LocalSolveEdgesDefault
+    val bytesPerArc = 16L + 8L + 4L // (src, dst) longs + id-sort scratch + CSR neighbor
+    val bytesPerNode = 8L + 12L + 16L // id + degree/offset/cursor ints + solver state
+    val worstNodes = arcs // every arc endpoint distinct — upper bound
+    within("graph CSR", arcs * bytesPerArc + worstNodes * bytesPerNode)
+  }
+
+  test("components union-find heap at its threshold stays under the budget") {
+    // union-find admits this many rows, symmetrized or (after a star-round
+    // hand-off) not, and indexes BOTH endpoint columns
+    val arcs = operators.ConnectedComponents.LocalSolveEdgesDefault
+    val bytesPerArc = 16L + 16L // (src, dst) longs + two-column id-sort scratch
+    val bytesPerNode = 8L + 4L // id + int parent
+    val worstNodes = 2 * arcs // every endpoint distinct
+    within("union-find", arcs * bytesPerArc + worstNodes * bytesPerNode)
+  }
+
+  test("BPE and distill heaps at their bounds stay under the budget") {
+    // TextQueries.BpeLocalWords' stated ~600 B per word
+    within("BPE", analytics.TextQueries.BpeLocalWords * 600L)
+    // a 7-long row array: 56 B + 16 B header + 8 B reference
+    within("distill", analytics.TextQueries.DistillLocalRows * (7L * 8L + 16L + 8L))
   }
 
   test("buildCsr round-trips adjacency with sorted-id indexing") {

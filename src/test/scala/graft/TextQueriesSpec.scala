@@ -61,24 +61,10 @@ class TextQueriesSpec extends AnyFunSuite {
     })
     val local = graft.analytics.TextQueries.distillTrainLocal(rows, NF, iters = 16)
 
-    // the distributed form, verbatim from the query's >threshold branch
+    // the query's distributed tier
     val tr = rows.toSeq.map(r => (r(0), r(1), r(2), r(3), r(4), r(5), r(6)))
       .toDF("y", "x0", "x1", "x2", "x3", "x4", "x5")
-    var w = Array.fill(NF)(0L)
-    var pocket = Array.fill(NF)(0L)
-    var pocketWrong = Long.MaxValue
-    for (_ <- 0 until 16) {
-      val score = (0 until NF).map(i => s"${w(i)} * x$i").mkString(" + ")
-      val pred = s"if(($score) > 0, cast(1 as bigint), cast(0 as bigint))"
-      val aggCols = count(lit(1)).as("n") +:
-        sum(expr(s"abs(y - $pred)")).as("wrong") +:
-        (0 until NF).map(i => sum(expr(s"(y - $pred) * x$i")).as(s"u$i"))
-      val r = tr.select(aggCols: _*).collect()(0)
-      val n = r.getLong(0)
-      val wrong = r.getLong(1)
-      if (wrong < pocketWrong) { pocket = w.clone(); pocketWrong = wrong }
-      w = Array.tabulate(NF)(i => w(i) + Math.floorDiv(r.getLong(i + 2), n))
-    }
+    val pocket = graft.analytics.TextQueries.distillTrainDistributed(tr, NF, iters = 16)
     assert(local.toSeq == pocket.toSeq,
       s"tiers diverged: local=${local.toSeq} distributed=${pocket.toSeq}")
   }
