@@ -22,6 +22,14 @@ import org.apache.spark.sql.SparkSession
   * reference fans a batch out over its executor,
   * `TableMetadataUploaderService.java:82-98`). One slow table no longer
   * serializes its whole batch.
+  *
+  * Inside a table, [[TimelineMirror.mirrorTable]] keeps the reference's
+  * per-batch contract: a timeline batch's copies run concurrently on one
+  * shared, bounded I/O pool; the batch's checkpoint upsert waits for all of
+  * them (the barrier between batches); and the LSM trailer (manifest_N,
+  * then _version_) is copied after the snapshot's parquets, one file after
+  * the other (T5). Copy tasks never wait on other work, so the table
+  * threads here cannot deadlock that pool.
   */
 object LakeViewSync {
 

@@ -1,10 +1,11 @@
 package graft.operators
 
+import java.io.FileNotFoundException
 import java.sql.Timestamp
 
 import graft.model.Checkpoint
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Per-(tableId, timelineType) checkpoint store (SURVEY §2.8 T2/T3, §2.1
@@ -18,6 +19,12 @@ import org.apache.spark.sql.SparkSession
   * job each), and parallel tables in a batch (G7/G8) write disjoint paths,
   * matching the reference's per-table checkpoint POSTs
   * (`TimelineCommitInstantsUploader.java:623-688`).
+  *
+  * Round trips: [[loadTable]] is one listing plus one read per timeline
+  * type (a missing table dir lists as "no checkpoint", without a probe);
+  * [[upsert]] is `create` + `delete` + `rename`. The mirror upserts once
+  * per batch, after all of the batch's copies have finished: the
+  * checkpoint is the barrier between a table's batches.
   *
   * JSON codec matches the reference's Jackson shape
   * (`TimelineCommitInstantsUploader.java:99-101`, JavaTimeModule ISO-8601
@@ -56,8 +63,8 @@ object CheckpointStore {
       tableId: String): Map[String, Checkpoint] = {
     val dir = new Path(s"${storeDir.stripSuffix("/")}/$tableId")
     val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir)
+    val files = try fs.listStatus(dir) catch { case _: FileNotFoundException => Array.empty[FileStatus] }
+    files
       .filter(f => f.isFile && f.getPath.getName.endsWith(".json"))
       .map(f => f.getPath.getName.stripSuffix(".json") -> read(fs, f.getPath))
       .toMap
@@ -71,7 +78,9 @@ object CheckpointStore {
 
   /** Upsert one checkpoint: write to a staging file, then rename over the
     * target — a crash mid-write never leaves a truncated checkpoint (a stale
-    * one only re-mirrors one batch, which is idempotent by filename).
+    * one only re-mirrors one batch, which is idempotent by filename). Three
+    * calls: `create` makes the table dir, and `delete` of an absent target
+    * is a no-op that returns false.
     */
   def upsert(
       spark: SparkSession,
@@ -82,12 +91,11 @@ object CheckpointStore {
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = new Path(s"${storeDir.stripSuffix("/")}/$tableId")
     val fs = dir.getFileSystem(conf)
-    fs.mkdirs(dir)
     val target = new Path(dir, s"$timelineType.json")
     val staging = new Path(dir, s".$timelineType.json.staging")
     val out = fs.create(staging, true)
     try out.write(toJson(checkpoint).getBytes(Utf8)) finally out.close()
-    if (fs.exists(target)) fs.delete(target, false)
+    fs.delete(target, false)
     fs.rename(staging, target)
   }
 

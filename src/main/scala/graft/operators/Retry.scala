@@ -1,10 +1,13 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 /** Jittered exponential-backoff retry (SURVEY §2.8 T6). Reference policy
   * (`api/AsyncHttpClientWithRetry.java:41-129`): `attempts` tries, delay
   * `base * 2^n` with +/-50% jitter, capped at `maxDelayMs`. Jitter is
   * deterministic from the attempt number (no wall-clock/random dependency)
-  * so retries are reproducible in tests.
+  * so retries are reproducible in tests. Only `NonFatal` failures are
+  * retried: an interrupt or a `VirtualMachineError` propagates at once.
   */
 object Retry {
 
@@ -20,7 +23,7 @@ object Retry {
     while (n < attempts) {
       try return op()
       catch {
-        case e: Throwable if shouldRetry(e) =>
+        case NonFatal(e) if shouldRetry(e) =>
           last = e
           n += 1
           if (n < attempts) {

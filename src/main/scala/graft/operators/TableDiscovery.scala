@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.InstantFunctions
 import graft.model.HudiTable
 import graft.sources.{FsListing, SerializableConfiguration}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Recursive Hudi-table discovery (SURVEY §2.2 D1-D5). Reference semantics
@@ -23,7 +24,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * see [[FsListing.listDirs]]); only the classification survivors return to
   * the driver. At 100k tables / millions of dirs the frontier per level
   * stays collect-able (dir uris + a boolean), and listing IO — the actual
-  * cost — is fully parallel.
+  * cost — is fully parallel. Each level's job is named
+  * `discover level <n> (<dirs> dirs)` (level 0 = the base paths).
   */
 object TableDiscovery {
 
@@ -49,6 +51,15 @@ object TableDiscovery {
   private def excluded(uri: String, patterns: Seq[String]): Boolean =
     patterns.exists(p => uri.matches(p))
 
+  /** Run `body` with the Spark call site set to `label`, which names the
+    * jobs and stages it launches, then restore the previous call site.
+    */
+  private def withCallSite[T](sc: SparkContext, label: String)(body: => T): T = {
+    val prev = sc.getLocalProperty("callSite.short")
+    sc.setCallSite(label)
+    try body finally sc.setLocalProperty("callSite.short", prev)
+  }
+
   /** Discover all Hudi tables under the given base paths. */
   def discover(
       spark: SparkSession,
@@ -68,12 +79,13 @@ object TableDiscovery {
       .filterNot(bp => excluded(bp.cleanUri, excludes))
       .map(bp => Dir(bp.lakeName, bp.databaseName, bp.cleanUri, bp.uri))
 
+    var level = 0
     while (frontier.nonEmpty) {
       val byUri = frontier.map(d => d.uri -> d).toMap
       // distribute the level's listings; classify on executors, collect survivors
-      val listed: Array[(String, Boolean, Seq[String])] =
+      val listing =
         spark.createDataset(frontier.map(_.uri))
-          .repartition(math.max(1, math.min(frontier.size, 64)))
+          .repartition(math.max(1, math.min(frontier.size, FsListing.MaxInFlight)))
           .mapPartitions { uris =>
             val c = conf.value
             uris.map { uri =>
@@ -85,7 +97,8 @@ object TableDiscovery {
               (uri, isTable, subdirs)
             }
           }
-          .collect()
+      val listed: Array[(String, Boolean, Seq[String])] =
+        withCallSite(spark.sparkContext, s"discover level $level (${frontier.size} dirs)")(listing.collect())
 
       val next = Seq.newBuilder[Dir]
       listed.foreach { case (uri, isTable, subdirs) =>
@@ -98,6 +111,7 @@ object TableDiscovery {
         }
       }
       frontier = next.result()
+      level += 1
     }
 
     val pinnedIdByOrigin = basePaths

@@ -1,34 +1,45 @@
 package graft.operators
 
 import java.sql.Timestamp
+import java.util.concurrent.{CompletableFuture, ExecutionException, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 import graft.model._
 import graft.sources.{FsListing, HoodiePropertiesReader, LsmManifestReader}
 import graft.functions.InstantFunctions
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** The mirror sink (SURVEY §7 step 7): copies selected timeline files into a
   * local metadata lake with the reference's ordering and checkpoint
   * guarantees (`TimelineCommitInstantsUploader.java`):
   *
-  *   - batches are strictly sequential per table; the checkpoint row is
-  *     upserted after each batch commits (T2) — a crash between mirror and
-  *     checkpoint re-copies one batch, which is idempotent by filename;
+  *   - batches are strictly sequential per table; a batch's copies run
+  *     concurrently and ALL of them finish before its checkpoint row is
+  *     upserted (T2), so the checkpoint is the barrier between batches
+  *     (the reference's `allOf` over a batch's PUTs, :690-734). A crash
+  *     between mirror and checkpoint re-copies one batch, which is
+  *     idempotent by filename; a failed copy fails the table with its
+  *     first failure (batch order) once the batch's other copies are done;
   *   - archived V1 files are ordered by numeric archive index (O3) and
   *     mirrored before the active timeline (phase machine T3);
   *   - V2/LSM archived files are the manifest anti-join (J1) in
-  *     parquets -> manifest_N -> _version_ publish order (T5), so a reader
-  *     of the mirror never sees a manifest referencing unmirrored files;
+  *     parquets -> manifest_N -> _version_ publish order (T5): the
+  *     snapshot's parquets are copied concurrently, then the trailer one
+  *     file after the other, so a reader of the mirror never sees a
+  *     manifest referencing unmirrored files;
   *   - the active timeline goes through [[ActiveTimelineBatcher]] with the
   *     configured blocking strategy, checkpoint marker = last file of each
   *     batch (O4 equivalent: batches are commit-atomic, so the last file of
   *     a batch is always a group boundary).
   *
-  * Copy IO runs where the listing rows live; at metadata scale (KB files)
-  * the driver loop per table is the right altitude — tables fan out across
-  * the driver's table batches exactly like the reference (G7, 20 per batch).
+  * Storage round trips per step: a copy is `open` + `create` (the store
+  * makes parents on create; object stores have implicit prefixes), and a
+  * checkpoint is [[CheckpointStore.upsert]]'s `create` + `delete` +
+  * `rename`. The driver loop per table is the right altitude at metadata
+  * scale (KB files): tables fan out across the driver's table batches
+  * exactly like the reference (G7, 20 per batch), and each table's batch
+  * fans its copies out on one shared, bounded I/O pool.
   */
 object TimelineMirror {
 
@@ -61,19 +72,55 @@ object TimelineMirror {
     if (lead.nonEmpty && lead.forall(_.isDigit)) Some(BigInt(lead)) else None
   }
 
+  /** One file: `open` + `create` (overwrite) + a byte copy, retried as a
+    * whole. `create` makes the parent, so there is no per-file `mkdirs`.
+    */
   private def copyFile(conf: Configuration, srcDir: String, name: String,
       dstDir: String): Unit = Retry.storageIO {
     val src = new Path(s"${srcDir.stripSuffix("/")}/$name")
     val dst = new Path(s"${dstDir.stripSuffix("/")}/$name")
-    val sfs = src.getFileSystem(conf)
-    val dfs = dst.getFileSystem(conf)
-    dfs.mkdirs(dst.getParent)
-    FileUtil.copy(sfs, src, dfs, dst, false, true, conf)
+    val in = src.getFileSystem(conf).open(src)
+    try {
+      val out = dst.getFileSystem(conf).create(dst, true)
+      try in.transferTo(out) finally out.close()
+    } finally in.close()
+  }
+
+  /** Shared daemon pool for copies, at most [[FsListing.MaxInFlight]]
+    * threads; idle ones time out. A copy task only does storage I/O and
+    * never submits or waits on other work, so the table threads that
+    * block on it cannot deadlock the pool.
+    */
+  private lazy val copyPool: ThreadPoolExecutor = {
+    val pool = new ThreadPoolExecutor(FsListing.MaxInFlight, FsListing.MaxInFlight,
+      30L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, "mirror-copy")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
+  /** Copy one batch's files concurrently and wait for every one of them.
+    * A failure is rethrown (the first in batch order, unwrapped, so it is
+    * classified as a sequential copy's would be) only after the rest have
+    * finished: the caller's checkpoint never runs past an unfinished batch.
+    */
+  private def copyBatch(conf: Configuration, srcDir: String, names: Seq[String],
+      dstDir: String): Unit = {
+    val copies = names.map(n =>
+      CompletableFuture.runAsync(() => copyFile(conf, srcDir, n, dstDir), copyPool))
+    val failures = copies.flatMap { c =>
+      try { c.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+    }
+    failures.headOption.foreach(e => throw e)
   }
 
   /** Mirror one table's archived (V1) + active timelines, checkpointing
-    * after every batch. Returns per-table results; the caller iterates its
-    * table batch (sequential per table, parallel across tables).
+    * after every batch. Batches run one after another, each batch's copies
+    * concurrently. Returns per-table results; the caller runs the tables of
+    * its table batch in parallel.
     */
   def mirrorTable(
       spark: SparkSession,
@@ -111,10 +158,13 @@ object TimelineMirror {
           else Nil
         val toCopy = LsmManifestReader.newFiles(current,
           ManifestSnapshot(cp.lastArchivedManifestVersion, prevNames))
-        // T5 publish order: parquets -> manifest_N -> _version_ last, so a
-        // mirror reader never sees a manifest referencing unmirrored files
-        val ordered = toCopy ++ Seq(s"manifest_${current.version}", "_version_")
-        ordered.foreach { f => copyFile(conf, archDir, f, s"$tableDst/archived"); nFiles += 1 }
+        // T5 publish order: every parquet (concurrently) -> manifest_N ->
+        // _version_ last, so a mirror reader never sees a manifest
+        // referencing unmirrored files
+        val trailer = Seq(s"manifest_${current.version}", "_version_")
+        copyBatch(conf, archDir, toCopy, s"$tableDst/archived")
+        trailer.foreach(f => copyFile(conf, archDir, f, s"$tableDst/archived"))
+        nFiles += toCopy.size + trailer.size
         nBatches += 1
         cp = cp.copy(lastArchivedManifestVersion = current.version)
       }
@@ -143,7 +193,8 @@ object TimelineMirror {
         .sortBy(_._2)
         .map(_._1)
       files.grouped(2).foreach { batch =>
-        batch.foreach { f => copyFile(conf, archDir, f.filename, s"$tableDst/archived"); nFiles += 1 }
+        copyBatch(conf, archDir, batch.map(_.filename), s"$tableDst/archived")
+        nFiles += batch.size
         nBatches += 1
         cp = cp.copy(batchId = cp.batchId + 1,
           lastUploadedFile = batch.last.filename,
@@ -183,7 +234,8 @@ object TimelineMirror {
     val result = ActiveTimelineBatcher.createBatches(listed, maxBatchSize,
       cp.copy(firstIncompleteCommitFile = null), strategy)
     result.batches.foreach { batch =>
-      batch.foreach { f => copyFile(conf, activeDir, f.filename, s"$tableDst/active"); nFiles += 1 }
+      copyBatch(conf, activeDir, batch.map(_.filename), s"$tableDst/active")
+      nFiles += batch.size
       nBatches += 1
       cp = cp.copy(batchId = cp.batchId + 1,
         lastUploadedFile = checkpointMarker(batch),

@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.io.FileNotFoundException
 import java.sql.Timestamp
 
 import graft.model.FileEntry
@@ -29,10 +30,19 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   */
 object FsListing {
 
+  /** Most storage calls one fan-out keeps in flight: the tasks of
+    * [[listDirs]] and of a discovery level, and the mirror's concurrent
+    * copies.
+    */
+  val MaxInFlight = 64
+
   /** List one directory on the driver. Page drains ride the T6 retry policy
     * so a one-off store fault re-lists the directory instead of failing the
     * table (reference wraps every storage call,
-    * `AsyncHttpClientWithRetry.java:41-129`).
+    * `AsyncHttpClientWithRetry.java:41-129`). A missing directory lists
+    * empty without an existence probe: the store's `FileNotFoundException`
+    * is caught across the whole iteration, because `listStatusIterator`
+    * may raise it lazily, on `hasNext`.
     */
   def listDir(
       conf: Configuration,
@@ -41,8 +51,7 @@ object FsListing {
       startAfter: String = ""): Seq[FileEntry] = graft.operators.Retry.storageIO {
     val path = new Path(dirUri)
     val fs = path.getFileSystem(conf)
-    if (!fs.exists(path)) Nil
-    else {
+    try {
       val it = fs.listStatusIterator(path)
       val out = Seq.newBuilder[FileEntry]
       while (it.hasNext) {
@@ -54,17 +63,19 @@ object FsListing {
         }
       }
       out.result()
-    }
+    } catch { case _: FileNotFoundException => Nil }
   }
 
   /** Distributed listing of many directories: one task per partition of the
     * directory list; emits (dirUri, entry) pairs. Executors talk straight to
-    * the store — no listing bytes flow through the driver.
+    * the store — no listing bytes flow through the driver. The Dataset is
+    * lazy: its jobs run at the caller's action and carry the call site the
+    * caller sets there (`SparkContext.setCallSite`), not one set here.
     */
   def listDirs(spark: SparkSession, dirUris: Seq[String]): Dataset[(String, FileEntry)] = {
     import spark.implicits._
     val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val parallelism = math.max(1, math.min(dirUris.size, 64))
+    val parallelism = math.max(1, math.min(dirUris.size, MaxInFlight))
     spark.createDataset(dirUris)
       .repartition(parallelism)
       .mapPartitions { dirs =>

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import graft.model.HudiProperties
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -34,7 +36,7 @@ object HoodiePropertiesReader {
             .map(_.trim.toInt).getOrElse(DefaultLayoutVersion))
       } finally in.close()
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         HudiProperties(null, null, DefaultTableVersion, DefaultLayoutVersion,
           failureReason = e.getClass.getSimpleName)
     }

@@ -18,18 +18,20 @@ import org.apache.spark.sql.SparkSession
   */
 object LsmManifestReader {
 
-  /** Read the `_version_` marker; None when absent. */
+  /** Read the `_version_` marker; None when absent. One `open`, no
+    * existence probe: a `FileNotFoundException` (from the open, or from the
+    * first read on stores that open lazily) means absent.
+    */
   def latestVersion(conf: Configuration, historyUri: String): Option[Int] =
     graft.operators.Retry.storageIO {
       val path = new Path(s"${historyUri.stripSuffix("/")}/_version_")
       val fs = path.getFileSystem(conf)
-      if (!fs.exists(path)) None
-      else {
+      try {
         val in = fs.open(path)
         try Some(new String(in.readAllBytes(),
           java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
         finally in.close()
-      }
+      } catch { case _: java.io.FileNotFoundException => None }
     }
 
   /** Read manifest_N's file-name list (S6). Manifests are a few KB of JSON in

@@ -24,7 +24,10 @@ import org.apache.hadoop.util.Progressable
   *     prefixes), and empty directories exist only via `mkdirs` markers.
   *
   * Backing state is JVM-global per bucket (authority) — local-mode
-  * executors share it, which is what the specs run.
+  * executors share it, which is what the specs run. So is the store's
+  * instrumentation: per-bucket call counts by kind (every public call is
+  * one round trip), the order in which written objects became visible,
+  * and an injectable fault that fails the calls on selected uris.
   */
 class MockObjectStoreFs extends FileSystem {
 
@@ -53,37 +56,54 @@ class MockObjectStoreFs extends FileSystem {
 
   private def qualify(k: String): Path = new Path(s"$fsUri$k")
 
+  /** Every public call goes through here: fault check, then count. */
+  private def call[T](kind: String, p: Path)(body: => T): T = {
+    val uri = s"$fsUri${key(p)}"
+    MockObjectStoreFs.count(fsUri.getAuthority, kind)
+    if (MockObjectStoreFs.failWhen(uri))
+      throw new org.apache.hadoop.security.AccessControlException(s"injected fault: $uri")
+    body
+  }
+
   private def status(k: String, e: MockObjectStoreFs.Entry): FileStatus =
     new FileStatus(if (e.isDir) 0L else e.data.length.toLong, e.isDir, 1,
       64L * 1024 * 1024, e.mtime, qualify(k))
 
-  override def getFileStatus(f: Path): FileStatus = {
+  override def getFileStatus(f: Path): FileStatus = call("status", f) {
     val k = key(f)
-    if (k == "/") return new FileStatus(0, true, 1, 0, 0, qualify("/"))
-    store.get(k) match {
+    if (k == "/") new FileStatus(0, true, 1, 0, 0, qualify("/"))
+    else store.get(k) match {
       case null => throw new FileNotFoundException(s"$f")
       case e => status(k, e)
     }
   }
 
-  override def listStatus(f: Path): Array[FileStatus] = {
+  override def listStatus(f: Path): Array[FileStatus] = call("list", f) {
     val k = key(f)
     val st = if (k == "/") None else Option(store.get(k))
     if (k != "/" && st.isEmpty) throw new FileNotFoundException(s"$f")
-    if (st.exists(!_.isDir)) return Array(status(k, st.get))
-    val prefix = if (k == "/") "/" else k + "/"
-    val out = Array.newBuilder[FileStatus]
-    val it = store.subMap(prefix, prefix + Character.MAX_VALUE).entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (!e.getKey.substring(prefix.length).contains('/')) { // direct child
-        out += status(e.getKey, e.getValue)
+    if (st.exists(!_.isDir)) Array(status(k, st.get))
+    else {
+      val prefix = if (k == "/") "/" else k + "/"
+      val out = Array.newBuilder[FileStatus]
+      val it = store.subMap(prefix, prefix + Character.MAX_VALUE).entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        if (!e.getKey.substring(prefix.length).contains('/')) { // direct child
+          out += status(e.getKey, e.getValue)
+        }
       }
+      out.result() // lexicographic: the backing map is key-sorted
     }
-    out.result() // lexicographic: the backing map is key-sorted
   }
 
-  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = call("mkdirs", f) {
+    putDirs(f)
+    true
+  }
+
+  /** Implicit parent prefixes of a write: part of that write, no call. */
+  private def putDirs(f: Path): Unit = {
     var k = key(f)
     while (k != "/") {
       store.putIfAbsent(k, MockObjectStoreFs.Entry(isDir = true, Array.emptyByteArray,
@@ -92,12 +112,11 @@ class MockObjectStoreFs extends FileSystem {
         throw new IOException(s"not a directory: $k")
       k = key(new Path(k).getParent)
     }
-    true
   }
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = {
+      progress: Progressable): FSDataOutputStream = call("create", f) {
     val k = key(f)
     val existing = store.get(k)
     if (existing != null && existing.isDir) throw new IOException(s"is a directory: $k")
@@ -106,9 +125,10 @@ class MockObjectStoreFs extends FileSystem {
     new FSDataOutputStream(new java.io.FilterOutputStream(buf) {
       override def write(b: Array[Byte], off: Int, len: Int): Unit = buf.write(b, off, len)
       override def close(): Unit = { // PUT: visible atomically at close
-        mkdirs(f.getParent, null)
+        putDirs(f.getParent)
         store.put(k, MockObjectStoreFs.Entry(isDir = false, buf.toByteArray,
           System.currentTimeMillis()))
+        MockObjectStoreFs.written(fsUri.getAuthority, k)
       }
     }, statistics)
   }
@@ -116,45 +136,49 @@ class MockObjectStoreFs extends FileSystem {
   override def append(f: Path, bufferSize: Int, progress: Progressable): FSDataOutputStream =
     throw new UnsupportedOperationException("objects are immutable")
 
-  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = call("open", f) {
     val k = key(f)
     val e = store.get(k)
     if (e == null || e.isDir) throw new FileNotFoundException(s"$f")
     new FSDataInputStream(new MockObjectStoreFs.BytesSeekable(e.data))
   }
 
-  override def rename(src: Path, dst: Path): Boolean = {
+  override def rename(src: Path, dst: Path): Boolean = call("rename", src) {
     val sk = key(src)
     val dk = key(dst)
-    if (store.get(sk) == null) return false
-    // destination that is an existing dir receives the source INTO it
-    val target = store.get(dk) match {
-      case e if e != null && e.isDir => dk + "/" + new Path(sk).getName
-      case _ => dk
-    }
-    val moved = new java.util.TreeMap[String, MockObjectStoreFs.Entry]()
-    val it = store.subMap(sk, sk + Character.MAX_VALUE).entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey == sk || e.getKey.startsWith(sk + "/")) {
-        moved.put(target + e.getKey.substring(sk.length), e.getValue)
+    if (store.get(sk) == null) false
+    else {
+      // destination that is an existing dir receives the source INTO it
+      val target = store.get(dk) match {
+        case e if e != null && e.isDir => dk + "/" + new Path(sk).getName
+        case _ => dk
       }
+      val moved = new java.util.TreeMap[String, MockObjectStoreFs.Entry]()
+      val it = store.subMap(sk, sk + Character.MAX_VALUE).entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        if (e.getKey == sk || e.getKey.startsWith(sk + "/")) {
+          moved.put(target + e.getKey.substring(sk.length), e.getValue)
+        }
+      }
+      store.keySet().removeIf(k => k == sk || k.startsWith(sk + "/"))
+      store.putAll(moved)
+      putDirs(new Path(target).getParent)
+      true
     }
-    store.keySet().removeIf(k => k == sk || k.startsWith(sk + "/"))
-    store.putAll(moved)
-    mkdirs(new Path(target).getParent, null)
-    true
   }
 
-  override def delete(f: Path, recursive: Boolean): Boolean = {
+  override def delete(f: Path, recursive: Boolean): Boolean = call("delete", f) {
     val k = key(f)
     if (k == "/") throw new IOException("cannot delete root")
     val e = store.get(k)
-    if (e == null) return false
-    val hasChildren = !store.subMap(k + "/", k + "/" + Character.MAX_VALUE).isEmpty
-    if (e.isDir && hasChildren && !recursive) throw new IOException(s"not empty: $k")
-    store.keySet().removeIf(x => x == k || x.startsWith(k + "/"))
-    true
+    if (e == null) false
+    else {
+      val hasChildren = !store.subMap(k + "/", k + "/" + Character.MAX_VALUE).isEmpty
+      if (e.isDir && hasChildren && !recursive) throw new IOException(s"not empty: $k")
+      store.keySet().removeIf(x => x == k || x.startsWith(k + "/"))
+      true
+    }
   }
 }
 
@@ -167,8 +191,47 @@ object MockObjectStoreFs {
   def bucket(name: String): java.util.concurrent.ConcurrentSkipListMap[String, Entry] =
     buckets.computeIfAbsent(name, _ => new java.util.concurrent.ConcurrentSkipListMap[String, Entry]())
 
-  /** Drop a bucket's contents (spec isolation). */
-  def clear(name: String): Unit = bucket(name).clear()
+  /** Drop a bucket's contents, call counts and write order (spec isolation). */
+  def clear(name: String): Unit = {
+    bucket(name).clear()
+    callCounts.remove(name)
+    writeOrder.remove(name)
+  }
+
+  private val callCounts = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]]()
+  private val writeOrder = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.ConcurrentLinkedQueue[String]]()
+
+  private def count(bucketName: String, kind: String): Unit =
+    callCounts.computeIfAbsent(bucketName, _ => new java.util.concurrent.ConcurrentHashMap())
+      .computeIfAbsent(kind, _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
+
+  private def written(bucketName: String, k: String): Unit =
+    writeOrder.computeIfAbsent(bucketName, _ => new java.util.concurrent.ConcurrentLinkedQueue())
+      .add(k)
+
+  /** Calls made on a bucket since its last `clear`, by kind: list, status,
+    * open, create, rename, delete, mkdirs (absent kinds are not listed).
+    */
+  def calls(bucketName: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    Option(callCounts.get(bucketName)).map(_.asScala.map { case (k, v) => k -> v.get }.toMap)
+      .getOrElse(Map.empty)
+  }
+
+  /** Keys of the objects written to a bucket, in the order they became
+    * visible (stream close).
+    */
+  def writes(bucketName: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Option(writeOrder.get(bucketName)).map(_.asScala.toSeq).getOrElse(Nil)
+  }
+
+  /** Calls whose `mocks3://bucket/key` uri this selects throw
+    * `AccessControlException`, which the program treats as terminal.
+    */
+  @volatile var failWhen: String => Boolean = _ => false
 
   private class BytesSeekable(bytes: Array[Byte])
       extends java.io.ByteArrayInputStream(bytes) with Seekable with PositionedReadable {

@@ -28,4 +28,16 @@ class RetrySpec extends AnyFunSuite {
     }
     assert(calls == 3 && e.getMessage == "fail-3")
   }
+
+  test("an interrupt propagates on the first attempt, without a backoff sleep") {
+    var calls = 0
+    val delays = scala.collection.mutable.Buffer[Long]()
+    intercept[InterruptedException] {
+      Retry.withRetry(attempts = 3, sleep = delays.append(_)) { () =>
+        calls += 1
+        throw new InterruptedException("interrupted")
+      }
+    }
+    assert(calls == 1 && delays.isEmpty)
+  }
 }
