@@ -24,12 +24,13 @@ import org.apache.spark.sql.SparkSession
   * serializes its whole batch.
   *
   * Inside a table, [[TimelineMirror.mirrorTable]] keeps the reference's
-  * per-batch contract: a timeline batch's copies run concurrently on one
-  * shared, bounded I/O pool; the batch's checkpoint upsert waits for all of
-  * them (the barrier between batches); and the LSM trailer (manifest_N,
-  * then _version_) is copied after the snapshot's parquets, one file after
-  * the other (T5). Copy tasks never wait on other work, so the table
-  * threads here cannot deadlock that pool.
+  * per-batch contract: a timeline batch's copies run concurrently on the
+  * shared [[graft.sources.IoPool]]; the batch's checkpoint upsert waits for
+  * all of them (the barrier between batches); and the LSM trailer
+  * (manifest_N, then _version_) is copied after the snapshot's parquets,
+  * one file after the other (T5). Discovery lists its BFS levels on the
+  * same pool, so a sync tick launches no Spark job. Pool tasks never wait
+  * on other work, so the table threads here cannot deadlock that pool.
   */
 object LakeViewSync {
 
@@ -78,8 +79,8 @@ object LakeViewSync {
   /** ONCE mode (reference JobRunMode.ONCE). */
   def runOnce(spark: SparkSession, config: SyncConfig): SyncReport = {
     val tables: Seq[HudiTable] =
-      TableDiscovery.discover(spark, config.basePaths, config.excludePatterns)
-        .collect().toSeq.sortBy(_.absoluteTableUri)
+      TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, config.basePaths,
+        config.excludePatterns).sortBy(_.absoluteTableUri)
     syncTables(spark, config, tables)
   }
 
@@ -220,8 +221,8 @@ object LakeViewSync {
       */
     def discoverTick(): Unit =
       try {
-        val tables = TableDiscovery.discover(spark, config.basePaths, config.excludePatterns)
-          .collect().toSeq.sortBy(_.absoluteTableUri)
+        val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration,
+          config.basePaths, config.excludePatterns).sortBy(_.absoluteTableUri)
         propsCache.clear()
         lock.synchronized { tablesToProcess = tables }
         metrics.tablesDiscoveredGauge.set(tables.size)

@@ -1,10 +1,9 @@
 package graft.operators
 
 import java.sql.Timestamp
-import java.util.concurrent.{CompletableFuture, ExecutionException, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 import graft.model._
-import graft.sources.{FsListing, HoodiePropertiesReader, LsmManifestReader}
+import graft.sources.{FsListing, HoodiePropertiesReader, IoPool, LsmManifestReader}
 import graft.functions.InstantFunctions
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -86,36 +85,13 @@ object TimelineMirror {
     } finally in.close()
   }
 
-  /** Shared daemon pool for copies, at most [[FsListing.MaxInFlight]]
-    * threads; idle ones time out. A copy task only does storage I/O and
-    * never submits or waits on other work, so the table threads that
-    * block on it cannot deadlock the pool.
-    */
-  private lazy val copyPool: ThreadPoolExecutor = {
-    val pool = new ThreadPoolExecutor(FsListing.MaxInFlight, FsListing.MaxInFlight,
-      30L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
-        val t = new Thread(r, "mirror-copy")
-        t.setDaemon(true)
-        t
-      })
-    pool.allowCoreThreadTimeOut(true)
-    pool
-  }
-
-  /** Copy one batch's files concurrently and wait for every one of them.
-    * A failure is rethrown (the first in batch order, unwrapped, so it is
-    * classified as a sequential copy's would be) only after the rest have
-    * finished: the caller's checkpoint never runs past an unfinished batch.
+  /** Copy one batch's files concurrently on the shared [[IoPool]] and wait
+    * for every one of them: the caller's checkpoint never runs past an
+    * unfinished batch, and a failure surfaces as [[IoPool.all]] rethrows it.
     */
   private def copyBatch(conf: Configuration, srcDir: String, names: Seq[String],
-      dstDir: String): Unit = {
-    val copies = names.map(n =>
-      CompletableFuture.runAsync(() => copyFile(conf, srcDir, n, dstDir), copyPool))
-    val failures = copies.flatMap { c =>
-      try { c.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
-    }
-    failures.headOption.foreach(e => throw e)
-  }
+      dstDir: String): Unit =
+    IoPool.all(names)(n => copyFile(conf, srcDir, n, dstDir))
 
   /** Mirror one table's archived (V1) + active timelines, checkpointing
     * after every batch. Batches run one after another, each batch's copies

@@ -23,16 +23,16 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *   - filenames are returned relative to the listed directory
   *     (prefix-stripped, like the reference's File model).
   *
-  * At scale the fan-out happens in [[listDirs]]: directories are distributed
-  * across executors and each task drains its directory's pages through the
-  * store's own iterator — the driver never holds more than the collected
-  * survivors of one BFS level.
+  * Two fan-outs sit on top of [[listDir]]: on the driver, discovery runs a
+  * BFS level's listings together on the shared [[IoPool]]; across
+  * executors, [[listDirs]] lists many directories as a Dataset, each task
+  * draining its directories' pages through the store's own iterator.
   */
 object FsListing {
 
-  /** Most storage calls one fan-out keeps in flight: the tasks of
-    * [[listDirs]] and of a discovery level, and the mirror's concurrent
-    * copies.
+  /** Most storage calls one fan-out keeps in flight: the threads of the
+    * driver's [[IoPool]], shared by discovery's level listings and the
+    * mirror's concurrent copies, and the tasks of one [[listDirs]] job.
     */
   val MaxInFlight = 64
 

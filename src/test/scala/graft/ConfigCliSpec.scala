@@ -231,8 +231,9 @@ class ConfigCliSpec extends AnyFunSuite {
       .foreach(f => write(s"$jroot/db/tbl/.hoodie/$f"))
     val uri = s"file:///${Paths.get(jroot).toAbsolutePath.toString.stripPrefix("/")}/db/tbl"
     val t = graft.operators.TableDiscovery
-      .discover(spark, Seq(graft.operators.TableDiscovery.BasePath("l", "d", uri)))
-      .collect().head
+      .discover(spark.sparkContext.hadoopConfiguration,
+        Seq(graft.operators.TableDiscovery.BasePath("l", "d", uri)))
+      .head
     val cfg = LakeViewSync.SyncConfig(basePaths = Nil,
       mirrorRoot = s"$jroot-mirror", checkpointDir = s"$jroot-cp")
 

@@ -65,7 +65,7 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
 
   test("discovery finds nested tables, prunes exclusions, derives UUIDv3 ids") {
     mkLake()
-    val tables = TableDiscovery.discover(spark, Seq(base), Seq(".*/scratch")).collect()
+    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base), Seq(".*/scratch"))
     val names = tables.map(_.absoluteTableUri.split("/").last).sorted.toSeq
     assert(names == Seq("trips", "users"))
     tables.foreach { t =>
@@ -79,20 +79,29 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
     mkLake()
     // path IS the table root: one table discovered, id pinned
     val pinned = base.copy(uri = base.uri + "/trips#my-fixed-id")
-    val tables = TableDiscovery.discover(spark, Seq(pinned)).collect()
+    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(pinned))
     assert(tables.length == 1 && tables.head.tableId == "my-fixed-id")
     assert(tables.head.absoluteTableUri.endsWith("/trips"))
 
     // pinned path holding SEVERAL tables contributes nothing
     // (TableDiscoveryService exactly-one rule)
     val ambiguous = base.copy(uri = base.uri + "#other-id")
-    assert(TableDiscovery.discover(spark, Seq(ambiguous)).collect().isEmpty)
+    assert(TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(ambiguous)).isEmpty)
 
     // pinned path with a single table in a subdirectory pins that table
     val viaParent = base.copy(uri = base.uri + "/nested#deep-id")
-    val deep = TableDiscovery.discover(spark, Seq(viaParent)).collect()
+    val deep = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(viaParent))
     assert(deep.length == 1 && deep.head.tableId == "deep-id")
     assert(deep.head.absoluteTableUri.endsWith("/users"))
+  }
+
+  test("one pinned path under two databases pins its table once per config, in config order") {
+    mkLake()
+    val uri = base.uri + "/trips#my-fixed-id"
+    val configs = Seq(base.copy(databaseName = "dbZ", uri = uri), base.copy(databaseName = "dbA", uri = uri))
+    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, configs)
+    assert(tables.map(t => t.databaseName -> t.tableId) == Seq("dbZ" -> "my-fixed-id", "dbA" -> "my-fixed-id"))
+    assert(tables.forall(_.absoluteTableUri.endsWith("/trips")))
   }
 
   test("manifest reader: whitespace version, unknown JSON fields, empty files, missing manifest") {
@@ -119,7 +128,7 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
 
   test("invalid base path contributes an empty set, not a failure") {
     val bad = TableDiscovery.BasePath("lake1", "db1", "file:///this-is-some-invalid-path")
-    assert(TableDiscovery.discover(spark, Seq(bad)).collect().isEmpty)
+    assert(TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(bad)).isEmpty)
   }
 
   test("properties read with defaults and failure sentinel") {
@@ -140,7 +149,7 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
     mkLake()
     val mirrorRoot = s"$root-mirror"
     val cpDir = s"$root-cp"
-    val tables = TableDiscovery.discover(spark, Seq(base), Seq(".*/scratch")).collect()
+    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base), Seq(".*/scratch"))
     val trips = tables.find(_.absoluteTableUri.endsWith("trips")).get
     val props = HoodiePropertiesReader.read(spark.sparkContext.hadoopConfiguration,
       s"${trips.absoluteTableUri}/.hoodie/hoodie.properties")
@@ -181,7 +190,7 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
       "300.commit.requested", "300.commit.inflight", "300.commit")
       .foreach(f => write(s"$hoodie/$f"))
 
-    val tables = TableDiscovery.discover(spark, Seq(base), Seq(".*/scratch")).collect()
+    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base), Seq(".*/scratch"))
     val trips = tables.find(_.absoluteTableUri.endsWith("trips")).get
     val props = HoodiePropertiesReader.read(spark.sparkContext.hadoopConfiguration,
       s"${trips.absoluteTableUri}/.hoodie/hoodie.properties")
@@ -218,7 +227,7 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
     mkLake()
     val mirrorRoot = s"$root-mirror2"
     val cpDir = s"$root-cp2"
-    val tables = TableDiscovery.discover(spark, Seq(base), Seq(".*/scratch")).collect()
+    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base), Seq(".*/scratch"))
     val users = tables.find(_.absoluteTableUri.endsWith("users")).get
     val props = HoodiePropertiesReader.read(spark.sparkContext.hadoopConfiguration,
       s"${users.absoluteTableUri}/.hoodie/hoodie.properties")
@@ -238,7 +247,7 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
     val mirrorRoot = s"$root-mirror-f3"
     val cpDir = s"$root-cp-f3"
     rmTree(mirrorRoot); rmTree(cpDir)
-    val tables = TableDiscovery.discover(spark, Seq(base), Seq(".*/scratch")).collect()
+    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base), Seq(".*/scratch"))
     val trips = tables.find(_.absoluteTableUri.endsWith("trips")).get
     val props = HoodiePropertiesReader.read(spark.sparkContext.hadoopConfiguration,
       s"${trips.absoluteTableUri}/.hoodie/hoodie.properties")
@@ -263,7 +272,7 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
     val mirrorRoot = s"$root-mirror2i"
     val cpDir = s"$root-cp2i"
     rmTree(mirrorRoot); rmTree(cpDir)
-    val tables = TableDiscovery.discover(spark, Seq(base), Seq(".*/scratch")).collect()
+    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base), Seq(".*/scratch"))
     val users = tables.find(_.absoluteTableUri.endsWith("users")).get
     val props = HoodiePropertiesReader.read(spark.sparkContext.hadoopConfiguration,
       s"${users.absoluteTableUri}/.hoodie/hoodie.properties")

@@ -191,7 +191,7 @@ class LakeViewSyncSpec extends AnyFunSuite {
       r.foreach { rep =>
         assert(rep.allSucceeded, rep.failures.toString)
         mirrored += rep.filesMirrored
-        TableDiscovery.discover(spark, Seq(base), Nil).collect().foreach { t =>
+        TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base), Nil).foreach { t =>
           graft.operators.CheckpointStore
             .loadTable(conf, cfg.checkpointDir, t.tableId)
             .get(graft.model.TimelineType.Active)
@@ -328,7 +328,7 @@ class LakeViewSyncSpec extends AnyFunSuite {
       mirrorRoot = s"$froot-mirror",
       checkpointDir = s"$froot-cp")
     // discover first, then break `broken` before the sync reads properties
-    val tables = graft.operators.TableDiscovery.discover(spark, cfg.basePaths).collect().toSeq
+    val tables = graft.operators.TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, cfg.basePaths)
     rmTree(s"$froot/db/broken/.hoodie")
     val r = LakeViewSync.syncTables(spark, cfg, tables)
     assert(r.tablesSynced == 1 && !r.allSucceeded)

@@ -26,8 +26,9 @@ import org.apache.hadoop.util.Progressable
   * Backing state is JVM-global per bucket (authority) — local-mode
   * executors share it, which is what the specs run. So is the store's
   * instrumentation: per-bucket call counts by kind (every public call is
-  * one round trip), the order in which written objects became visible,
-  * and an injectable fault that fails the calls on selected uris.
+  * one round trip), the most calls ever in flight at once, the order in
+  * which written objects became visible, an injectable per-call delay, and
+  * an injectable fault that fails the calls on selected uris.
   */
 class MockObjectStoreFs extends FileSystem {
 
@@ -56,13 +57,20 @@ class MockObjectStoreFs extends FileSystem {
 
   private def qualify(k: String): Path = new Path(s"$fsUri$k")
 
-  /** Every public call goes through here: fault check, then count. */
+  /** Every public call goes through here: count, then (while the call is
+    * in flight) the injected delay, the fault check and the call itself.
+    */
   private def call[T](kind: String, p: Path)(body: => T): T = {
     val uri = s"$fsUri${key(p)}"
-    MockObjectStoreFs.count(fsUri.getAuthority, kind)
-    if (MockObjectStoreFs.failWhen(uri))
-      throw new org.apache.hadoop.security.AccessControlException(s"injected fault: $uri")
-    body
+    val bucketName = fsUri.getAuthority
+    MockObjectStoreFs.count(bucketName, kind)
+    MockObjectStoreFs.enter(bucketName)
+    try {
+      if (MockObjectStoreFs.callDelayMs > 0) Thread.sleep(MockObjectStoreFs.callDelayMs)
+      if (MockObjectStoreFs.failWhen(uri))
+        throw new org.apache.hadoop.security.AccessControlException(s"injected fault: $uri")
+      body
+    } finally MockObjectStoreFs.exit(bucketName)
   }
 
   private def status(k: String, e: MockObjectStoreFs.Entry): FileStatus =
@@ -191,10 +199,13 @@ object MockObjectStoreFs {
   def bucket(name: String): java.util.concurrent.ConcurrentSkipListMap[String, Entry] =
     buckets.computeIfAbsent(name, _ => new java.util.concurrent.ConcurrentSkipListMap[String, Entry]())
 
-  /** Drop a bucket's contents, call counts and write order (spec isolation). */
+  /** Drop a bucket's contents, call counts, peak and write order (spec
+    * isolation).
+    */
   def clear(name: String): Unit = {
     bucket(name).clear()
     callCounts.remove(name)
+    inFlight.remove(name)
     writeOrder.remove(name)
   }
 
@@ -206,6 +217,23 @@ object MockObjectStoreFs {
   private def count(bucketName: String, kind: String): Unit =
     callCounts.computeIfAbsent(bucketName, _ => new java.util.concurrent.ConcurrentHashMap())
       .computeIfAbsent(kind, _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
+
+  /** Per bucket: calls in flight now, and the most ever in flight at once. */
+  private val inFlight = new java.util.concurrent.ConcurrentHashMap[String,
+    (java.util.concurrent.atomic.AtomicInteger, java.util.concurrent.atomic.AtomicInteger)]()
+
+  private def flight(bucketName: String) = inFlight.computeIfAbsent(bucketName, _ =>
+    (new java.util.concurrent.atomic.AtomicInteger, new java.util.concurrent.atomic.AtomicInteger))
+
+  private def enter(bucketName: String): Unit = {
+    val (now, peak) = flight(bucketName)
+    peak.accumulateAndGet(now.incrementAndGet(), (a, b) => math.max(a, b))
+  }
+
+  private def exit(bucketName: String): Unit = flight(bucketName)._1.decrementAndGet()
+
+  /** The most calls ever in flight at once on a bucket since its last `clear`. */
+  def peakInFlight(bucketName: String): Int = flight(bucketName)._2.get
 
   private def written(bucketName: String, k: String): Unit =
     writeOrder.computeIfAbsent(bucketName, _ => new java.util.concurrent.ConcurrentLinkedQueue())
@@ -220,6 +248,12 @@ object MockObjectStoreFs {
       .getOrElse(Map.empty)
   }
 
+  /** Calls made on a bucket since the `calls` snapshot `before`, by kind
+    * (kinds with no call left out).
+    */
+  def callsSince(bucketName: String, before: Map[String, Long]): Map[String, Long] =
+    calls(bucketName).map { case (k, v) => k -> (v - before.getOrElse(k, 0L)) }.filter(_._2 > 0)
+
   /** Keys of the objects written to a bucket, in the order they became
     * visible (stream close).
     */
@@ -232,6 +266,11 @@ object MockObjectStoreFs {
     * `AccessControlException`, which the program treats as terminal.
     */
   @volatile var failWhen: String => Boolean = _ => false
+
+  /** Every call sleeps this long while in flight, so calls a caller issues
+    * together overlap measurably ([[peakInFlight]]).
+    */
+  @volatile var callDelayMs: Long = 0L
 
   private class BytesSeekable(bytes: Array[Byte])
       extends java.io.ByteArrayInputStream(bytes) with Seekable with PositionedReadable {

@@ -53,7 +53,7 @@ class ObjectStoreE2ESpec extends AnyFunSuite {
 
   test("discovery, properties, mirror, and resume run end-to-end on the object store") {
     mkLake()
-    val tables = TableDiscovery.discover(spark, Seq(base)).collect()
+    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base))
     assert(tables.length == 1)
     val trips = tables.head
     assert(trips.absoluteTableUri == s"$bucket/lake/db1/trips")
