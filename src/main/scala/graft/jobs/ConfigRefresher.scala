@@ -9,7 +9,6 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 
 /** Config hot-reload (S12, reference `config/ConfigRefresher.java:39-76`):
   * an override YAML living in object storage is polled on a fixed cadence,
@@ -31,14 +30,12 @@ final class ConfigRefresher(
   /** The latest successfully merged config. */
   def current: ConfigLoader.Loaded = loaded
 
-  /** Fetch the override and re-merge; throws on failure (callers decide:
-    * `start()` logs and keeps the previous config).
+  /** Fetch the override (one retried whole-object read) and re-merge;
+    * throws on failure (callers decide: `start()` logs and keeps the
+    * previous config).
     */
   def refresh(): Unit = {
-    val p = new Path(overridePath)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    val bytes = try in.readAllBytes() finally in.close()
+    val bytes = graft.sources.FsListing.readObject(conf, overridePath)
     val base = mapper.readTree(baseYaml)
     val merged = deepMerge(base, mapper.readTree(new String(bytes, UTF_8)))
     loaded = ConfigLoader.loadNode(merged, mapper)

@@ -31,6 +31,11 @@ import org.apache.spark.sql.SparkSession
   * one file after the other (T5). Discovery lists its BFS levels on the
   * same pool, so a sync tick launches no Spark job. Pool tasks never wait
   * on other work, so the table threads here cannot deadlock that pool.
+  *
+  * Layering: only the jobs layer (this object, [[SyncCli]],
+  * [[MetastoreSync]]) holds a `SparkSession`. Every extractor operator and
+  * source gets the session's Hadoop `Configuration` (so `spark.hadoop.*`
+  * settings reach storage); the session itself serves only the catalog hook.
   */
 object LakeViewSync {
 
@@ -122,7 +127,7 @@ object LakeViewSync {
                   p
                 }
                 if (props.failureReason == null) {
-                  val r = TimelineMirror.mirrorTable(spark, table, props,
+                  val r = TimelineMirror.mirrorTable(conf, table, props,
                     config.mirrorRoot, config.checkpointDir,
                     config.maxBatchSize, config.strategy)
                   // chained catalog sync runs inside the table's isolation:

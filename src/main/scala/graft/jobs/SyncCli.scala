@@ -48,10 +48,11 @@ object SyncCli {
     * whose unit of work is "call a function with a JSON string" invoke the
     * sync as `SyncCli.runJson(spark, "[\"-c\", \"<yaml>\"]")`. Returns
     * "SUCCESS" or throws — a failed sync must fail the enclosing job, like
-    * the wrapper's propagated exception. Driver-side by design: unlike the
-    * reference (whose engine is Spark-free and so can run inside an
-    * executor-side UDF), this engine schedules Spark jobs, which must
-    * happen on the driver.
+    * the wrapper's propagated exception. Driver-side by design: the sync
+    * itself launches no Spark job (the extractor below the jobs layer takes
+    * only a Hadoop `Configuration`), but the optional catalog hook writes
+    * parquet and runs DDL through the session, which must happen on the
+    * driver.
     */
   def runJson(spark: SparkSession, argJson: String): String = {
     val argv = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -59,54 +60,52 @@ object SyncCli {
     if (argv == null) throw new IllegalArgumentException("argJson must be a JSON array")
     val cli = parseArgs(argv).fold(e => throw new IllegalArgumentException(e), identity)
     if (cli.helpRequested) return usage
-    val loaded = (cli.configFilePath, cli.configYaml) match {
-      case (Some(p), _) => ConfigLoader.loadFile(p)
-      case (_, Some(y)) => ConfigLoader.loadString(y)
-      case _ => throw new IllegalArgumentException("One of -p or -c is required.")
-    }
-    val report = loaded.jobRunMode match {
-      case "ONCE_WITH_RETRY" => LakeViewSync.runOnceWithRetry(spark, loaded.sync)
-      case "ONCE" => LakeViewSync.runOnce(spark, loaded.sync)
-      case other => // a silently-downgraded CONTINUOUS would betray the caller
-        throw new IllegalArgumentException(
-          s"jobRunMode $other is not embeddable; use SyncCli.main or ContinuousSync")
-    }
+    val loaded = loadConfig(cli).fold(e => throw new IllegalArgumentException(e), identity)
+    val report = runBatch(spark, loaded)
     if (!report.allSucceeded)
       throw new IllegalStateException(
         s"sync failed for ${report.failures.size} table(s): ${report.failures}")
     "SUCCESS"
   }
 
+  /** The config `-p` (file) or `-c` (YAML string) names; Left when neither. */
+  private def loadConfig(cli: CliArgs): Either[String, ConfigLoader.Loaded] =
+    (cli.configFilePath, cli.configYaml) match {
+      case (Some(p), _) => Right(ConfigLoader.loadFile(p))
+      case (_, Some(y)) => Right(ConfigLoader.loadString(y))
+      case _ => Left("One of -p or -c is required.")
+    }
+
+  /** One ONCE or ONCE_WITH_RETRY sync. Any other mode is refused, not
+    * silently downgraded: CONTINUOUS runs only through [[main]] or
+    * `ContinuousSync`.
+    */
+  private def runBatch(spark: SparkSession, loaded: ConfigLoader.Loaded): LakeViewSync.SyncReport =
+    loaded.jobRunMode match {
+      case "ONCE_WITH_RETRY" => LakeViewSync.runOnceWithRetry(spark, loaded.sync)
+      case "ONCE" => LakeViewSync.runOnce(spark, loaded.sync)
+      case other => throw new IllegalArgumentException(s"jobRunMode $other: expected ONCE or " +
+        "ONCE_WITH_RETRY (CONTINUOUS runs through SyncCli.main or ContinuousSync)")
+    }
+
   def main(args: Array[String]): Unit = {
-    parseArgs(args) match {
-      case Left(err) =>
-        System.err.println(err); System.err.println(usage); sys.exit(2)
-      case Right(cli) if cli.helpRequested =>
-        println(usage)
-      case Right(cli) =>
-        val loaded = (cli.configFilePath, cli.configYaml) match {
-          case (Some(p), _) => ConfigLoader.loadFile(p)
-          case (_, Some(y)) => ConfigLoader.loadString(y)
-          case _ =>
-            System.err.println("One of -p or -c is required."); System.err.println(usage)
-            sys.exit(2); return
-        }
-        val spark = SparkSession.builder()
-          .appName("graft-lakeview-sync")
-          .config("spark.sql.shuffle.partitions", 32)
-          .getOrCreate()
-        // sinkConfig.metricsPort: Prometheus exposition for the whole run
-        // (reference Main.start brings its HTTPServer up before the job)
-        val metricsServer = loaded.metricsPort.map(SyncMetrics.global.serve)
-        loaded.jobRunMode match {
-          case "CONTINUOUS" =>
+    val parsed = parseArgs(args)
+    parsed match {
+      case Right(cli) if cli.helpRequested => println(usage)
+      case _ => parsed.flatMap(loadConfig) match {
+        case Left(err) =>
+          System.err.println(err); System.err.println(usage); sys.exit(2)
+        case Right(loaded) =>
+          val spark = SparkSession.builder().appName("graft-lakeview-sync").getOrCreate()
+          // sinkConfig.metricsPort: Prometheus exposition for the whole run
+          // (reference Main.start brings its HTTPServer up before the job)
+          val metricsServer = loaded.metricsPort.map(SyncMetrics.global.serve)
+          if (loaded.jobRunMode == "CONTINUOUS") {
             val cs = new LakeViewSync.ContinuousSync(spark, loaded.sync, loaded.cadence)
             val scheduler = cs.start()
             scheduler.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.DAYS)
-          case mode => // ONCE / ONCE_WITH_RETRY
-            val report =
-              if (mode == "ONCE_WITH_RETRY") LakeViewSync.runOnceWithRetry(spark, loaded.sync)
-              else LakeViewSync.runOnce(spark, loaded.sync)
+          } else {
+            val report = runBatch(spark, loaded)
             println(s"tablesDiscovered=${report.tablesDiscovered} " +
               s"tablesSynced=${report.tablesSynced} filesMirrored=${report.filesMirrored} " +
               s"allSucceeded=${report.allSucceeded}")
@@ -117,7 +116,8 @@ object SyncCli {
               srv.stop(0)
             }
             if (!report.allSucceeded) sys.exit(1)
-        }
+          }
+      }
     }
   }
 }

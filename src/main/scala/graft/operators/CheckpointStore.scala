@@ -1,12 +1,11 @@
 package graft.operators
 
-import java.io.FileNotFoundException
 import java.sql.Timestamp
 
 import graft.model.Checkpoint
+import graft.sources.FsListing
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
 
 /** Per-(tableId, timelineType) checkpoint store (SURVEY §2.8 T2/T3, §2.1
   * S10/S11) — the engine-local replacement for the reference's checkpoint
@@ -20,11 +19,14 @@ import org.apache.spark.sql.SparkSession
   * matching the reference's per-table checkpoint POSTs
   * (`TimelineCommitInstantsUploader.java:623-688`).
   *
-  * Round trips: [[loadTable]] is one listing plus one read per timeline
-  * type (a missing table dir lists as "no checkpoint", without a probe);
-  * [[upsert]] is `create` + `delete` + `rename`. The mirror upserts once
-  * per batch, after all of the batch's copies have finished: the
-  * checkpoint is the barrier between a table's batches.
+  * Round trips: [[loadTable]] is one [[FsListing.listDir]] plus one
+  * [[FsListing.readObject]] per timeline type (a missing table dir lists as
+  * "no checkpoint", without a probe); [[upsert]] is `create` + `delete` +
+  * `rename`. Every step rides the T6 retry, as the reference's checkpoint
+  * POST does (`AsyncHttpClientWithRetry`). The mirror upserts once per
+  * batch, after all of the batch's copies have finished: the checkpoint is
+  * the barrier between a table's batches. Like every extractor operator,
+  * the store takes a Hadoop `Configuration`.
   *
   * JSON codec matches the reference's Jackson shape
   * (`TimelineCommitInstantsUploader.java:99-101`, JavaTimeModule ISO-8601
@@ -34,69 +36,51 @@ object CheckpointStore {
 
   private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
 
-  /** Load all checkpoints (empty map when the store doesn't exist yet).
-    * O(tables) — for inspection and specs; the mirror hot path uses
-    * [[loadTable]].
+  /** Load all checkpoints (empty map when the store doesn't exist yet):
+    * one listing of the root, then [[loadTable]] per table dir. O(tables) —
+    * for inspection and specs; the mirror hot path uses [[loadTable]].
     */
-  def load(spark: SparkSession, storeDir: String): Map[(String, String), Checkpoint] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(storeDir)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) Map.empty
-    else {
-      val out = Map.newBuilder[(String, String), Checkpoint]
-      val tables = fs.listStatus(root).filter(_.isDirectory)
-      tables.foreach { td =>
-        fs.listStatus(td.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".json"))
-          .foreach { f =>
-            val tt = f.getPath.getName.stripSuffix(".json")
-            out += (td.getPath.getName, tt) -> read(fs, f.getPath)
-          }
-      }
-      out.result()
-    }
-  }
+  def load(conf: Configuration, storeDir: String): Map[(String, String), Checkpoint] =
+    FsListing.listDir(conf, storeDir).filter(_.isDirectory).flatMap { td =>
+      loadTable(conf, storeDir, td.filename).map { case (tt, c) => (td.filename, tt) -> c }
+    }.toMap
 
   /** Fetch one table's checkpoints — the S11 per-table lookup. */
   def loadTable(conf: Configuration, storeDir: String,
       tableId: String): Map[String, Checkpoint] = {
-    val dir = new Path(s"${storeDir.stripSuffix("/")}/$tableId")
-    val fs = dir.getFileSystem(conf)
-    val files = try fs.listStatus(dir) catch { case _: FileNotFoundException => Array.empty[FileStatus] }
-    files
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".json"))
-      .map(f => f.getPath.getName.stripSuffix(".json") -> read(fs, f.getPath))
+    val dir = s"${storeDir.stripSuffix("/")}/$tableId"
+    FsListing.listDir(conf, dir)
+      .filter(f => !f.isDirectory && f.filename.endsWith(".json"))
+      .map(f => f.filename.stripSuffix(".json") ->
+        fromJson(new String(FsListing.readObject(conf, s"$dir/${f.filename}"), Utf8)))
       .toMap
-  }
-
-  private def read(fs: org.apache.hadoop.fs.FileSystem, p: Path): Checkpoint = {
-    val in = fs.open(p)
-    val bytes = try in.readAllBytes() finally in.close()
-    fromJson(new String(bytes, Utf8))
   }
 
   /** Upsert one checkpoint: write to a staging file, then rename over the
     * target — a crash mid-write never leaves a truncated checkpoint (a stale
     * one only re-mirrors one batch, which is idempotent by filename). Three
     * calls: `create` makes the table dir, and `delete` of an absent target
-    * is a no-op that returns false.
+    * is a no-op that returns false. The three ride the T6 retry as one unit,
+    * which is idempotent: a retry overwrites the staging file, and its
+    * `delete` of an already-deleted target is that no-op.
     */
   def upsert(
-      spark: SparkSession,
+      conf: Configuration,
       storeDir: String,
       tableId: String,
       timelineType: String,
       checkpoint: Checkpoint): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val dir = new Path(s"${storeDir.stripSuffix("/")}/$tableId")
-    val fs = dir.getFileSystem(conf)
     val target = new Path(dir, s"$timelineType.json")
     val staging = new Path(dir, s".$timelineType.json.staging")
-    val out = fs.create(staging, true)
-    try out.write(toJson(checkpoint).getBytes(Utf8)) finally out.close()
-    fs.delete(target, false)
-    fs.rename(staging, target)
+    val bytes = toJson(checkpoint).getBytes(Utf8)
+    Retry.storageIO {
+      val fs = dir.getFileSystem(conf)
+      val out = fs.create(staging, true)
+      try out.write(bytes) finally out.close()
+      fs.delete(target, false)
+      fs.rename(staging, target)
+    }
   }
 
   // ---- reference-compatible JSON codec ------------------------------------

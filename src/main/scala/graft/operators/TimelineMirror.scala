@@ -7,7 +7,6 @@ import graft.sources.{FsListing, HoodiePropertiesReader, IoPool, LsmManifestRead
 import graft.functions.InstantFunctions
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 
 /** The mirror sink (SURVEY §7 step 7): copies selected timeline files into a
   * local metadata lake with the reference's ordering and checkpoint
@@ -71,6 +70,10 @@ object TimelineMirror {
     if (lead.nonEmpty && lead.forall(_.isDigit)) Some(BigInt(lead)) else None
   }
 
+  private val V1ArchiveIndex = InstantFunctions.V1ArchivedNumericPattern.r.unanchored
+  /** O3/F3: the numeric archive index of a V1 archived file name. */
+  private def archiveIndex(name: String): Long = name match { case V1ArchiveIndex(i) => i.toLong }
+
   /** One file: `open` + `create` (overwrite) + a byte copy, retried as a
     * whole. `create` makes the parent, so there is no per-file `mkdirs`.
     */
@@ -96,17 +99,17 @@ object TimelineMirror {
   /** Mirror one table's archived (V1) + active timelines, checkpointing
     * after every batch. Batches run one after another, each batch's copies
     * concurrently. Returns per-table results; the caller runs the tables of
-    * its table batch in parallel.
+    * its table batch in parallel. Storage is reached through `conf` alone,
+    * and no Spark job runs.
     */
   def mirrorTable(
-      spark: SparkSession,
+      conf: Configuration,
       table: HudiTable,
       props: HudiProperties,
       mirrorRoot: String,
       checkpointDir: String,
       maxBatchSize: Int = 20,
       strategy: UploadStrategy = UploadStrategy.BlockOnIncompleteCommit): MirrorResult = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val layout = props.timelineLayoutVersion
     val tableDst = s"${mirrorRoot.stripSuffix("/")}/${table.tableId}"
 
@@ -123,14 +126,14 @@ object TimelineMirror {
     // append-only by index and processed once per checkpoint lifetime.
     if (layout >= 2) {
       val archDir = HoodiePropertiesReader.timelineDir(table.absoluteTableUri, layout, archived = true)
-      val current = LsmManifestReader.latestSnapshot(spark, archDir)
+      val current = LsmManifestReader.latestSnapshot(conf, archDir)
       val advanced = current.version > cp.lastArchivedManifestVersion
       if (advanced) {
         // incremental: diff against the previously-mirrored manifest when we
         // have one; bootstrap copies the full current manifest
         val prevNames =
           if (cp.lastArchivedManifestVersion > 0)
-            LsmManifestReader.readManifest(spark, archDir, cp.lastArchivedManifestVersion).parquetFileNames
+            LsmManifestReader.readManifest(conf, archDir, cp.lastArchivedManifestVersion).parquetFileNames
           else Nil
         val toCopy = LsmManifestReader.newFiles(current,
           ManifestSnapshot(cp.lastArchivedManifestVersion, prevNames))
@@ -146,7 +149,7 @@ object TimelineMirror {
       }
       if (advanced || !cp.archivedCommitsProcessed) {
         cp = cp.copy(archivedCommitsProcessed = true)
-        CheckpointStore.upsert(spark, checkpointDir, table.tableId, TimelineType.Active, cp)
+        CheckpointStore.upsert(conf, checkpointDir, table.tableId, TimelineType.Active, cp)
       }
     } else if (!cp.archivedCommitsProcessed) {
       val archDir = HoodiePropertiesReader.timelineDir(table.absoluteTableUri, layout, archived = true)
@@ -157,14 +160,14 @@ object TimelineMirror {
       val archCp = cpMap.get(TimelineType.Archived)
       val lastIdx: Long = archCp.flatMap(c => Option(c.lastUploadedFile))
         .filter(_.nonEmpty)
-        .map(_.replaceAll(""".*\.archive\.(\d+)_.*""", "$1").toLong)
+        .map(archiveIndex)
         .getOrElse(-1L)
       archCp.foreach(c => cp = cp.copy(batchId = c.batchId))
       // V1: numeric archive-index order (O3), fixed-size batches (G7 size 2)
       val files = FsListing.listDir(conf, archDir)
         .filter(f => !f.isDirectory &&
           f.filename.matches(InstantFunctions.ArchivedV1Pattern))
-        .map(f => f -> f.filename.replaceAll(""".*\.archive\.(\d+)_.*""", "$1").toLong)
+        .map(f => f -> archiveIndex(f.filename))
         .filter(_._2 > lastIdx)
         .sortBy(_._2)
         .map(_._1)
@@ -175,11 +178,11 @@ object TimelineMirror {
         cp = cp.copy(batchId = cp.batchId + 1,
           lastUploadedFile = batch.last.filename,
           checkpointTimestamp = batch.map(_.lastModifiedAt).max(Ordering.by((t: Timestamp) => t.getTime)))
-        CheckpointStore.upsert(spark, checkpointDir, table.tableId, TimelineType.Archived, cp)
+        CheckpointStore.upsert(conf, checkpointDir, table.tableId, TimelineType.Archived, cp)
       }
       cp = cp.copy(archivedCommitsProcessed = true, lastUploadedFile = "",
         checkpointTimestamp = new Timestamp(0L))
-      CheckpointStore.upsert(spark, checkpointDir, table.tableId, TimelineType.Active, cp)
+      CheckpointStore.upsert(conf, checkpointDir, table.tableId, TimelineType.Active, cp)
     }
 
     // ---- phase 2: active timeline through the commit-atomic batcher ----
@@ -218,7 +221,7 @@ object TimelineMirror {
         checkpointTimestamp = batch.map(_.lastModifiedAt)
           .max(Ordering.by((t: Timestamp) => t.getTime)),
         firstIncompleteCommitFile = result.firstIncompleteCommitFile.orNull)
-      CheckpointStore.upsert(spark, checkpointDir, table.tableId, TimelineType.Active, cp)
+      CheckpointStore.upsert(conf, checkpointDir, table.tableId, TimelineType.Active, cp)
     }
 
     MirrorResult(table.tableId, nBatches, nFiles, cp)

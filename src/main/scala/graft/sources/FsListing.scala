@@ -5,16 +5,16 @@ import java.sql.Timestamp
 
 import graft.model.FileEntry
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** Object-store listing source (SURVEY §2.1 S1-S4) over the Hadoop
-  * FileSystem API — one code path for file://, hdfs://, s3a://, gs://,
-  * abfss:// instead of the reference's three cloud SDK clients
-  * (`storage/S3AsyncStorageClient.java:48-115` et al).
+/** Object-store listing and whole-object read source (SURVEY §2.1 S1-S4)
+  * over the Hadoop FileSystem API — one code path for file://, hdfs://,
+  * s3a://, gs://, abfss:// instead of the reference's three cloud SDK
+  * clients (`storage/S3AsyncStorageClient.java:48-115` et al).
   *
-  * Semantics normalized across stores (the reference's Azure client ignores
-  * `startAfter` server-side, `storage/AzureAsyncStorageClient.java:48-113`;
+  * Listing semantics normalized across stores (the reference's Azure client
+  * ignores `startAfter` server-side, `storage/AzureAsyncStorageClient.java:48-113`;
   * we apply it uniformly as a post-filter, which is the same relational
   * contract: `filename > startAfter`):
   *   - one level per call (delimiter="/" behavior);
@@ -27,6 +27,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * BFS level's listings together on the shared [[IoPool]]; across
   * executors, [[listDirs]] lists many directories as a Dataset, each task
   * draining its directories' pages through the store's own iterator.
+  *
+  * [[readObject]] is the extractor's one whole-object read (properties,
+  * `_version_`, manifests, checkpoints). All but [[listDirs]] take a Hadoop
+  * `Configuration` and run on the driver, like the whole extractor.
   */
 object FsListing {
 
@@ -65,6 +69,18 @@ object FsListing {
       out.result()
     } catch { case _: FileNotFoundException => Nil }
   }
+
+  /** Read one whole object. Only `open` + drain ride the T6 retry; a
+    * `FileNotFoundException` propagates at once (the caller decides what
+    * "absent" means), and callers parse outside the retry, so a malformed
+    * object fails on its one `open`.
+    */
+  def readObject(conf: Configuration, uri: String): Array[Byte] =
+    graft.operators.Retry.storageIO {
+      val path = new Path(uri)
+      val in = path.getFileSystem(conf).open(path)
+      try in.readAllBytes() finally in.close()
+    }
 
   /** Distributed listing of many directories: one task per partition of the
     * directory list; emits (dirUri, entry) pairs. Executors talk straight to

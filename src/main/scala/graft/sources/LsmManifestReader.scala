@@ -2,8 +2,6 @@ package graft.sources
 
 import graft.model.ManifestSnapshot
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 
 /** LSM archived-timeline (V2) manifest reader (SURVEY §2.1 S6/S7).
   * Layout (reference `LSMTimelineManifestReader.java:23-38`):
@@ -14,39 +12,27 @@ import org.apache.spark.sql.SparkSession
   *     *.parquet        <- the archived commit batches the manifest points at
   *
   * A missing `_version_` means "no archived snapshot yet" (empty snapshot,
-  * `LSMTimelineManifestReader.java:58-83`).
+  * `LSMTimelineManifestReader.java:58-83`). Both markers are read with
+  * [[FsListing.readObject]] and parsed outside its retry; the reader takes a
+  * Hadoop `Configuration`, like every extractor source.
   */
 object LsmManifestReader {
 
   /** Read the `_version_` marker; None when absent. One `open`, no
-    * existence probe: a `FileNotFoundException` (from the open, or from the
-    * first read on stores that open lazily) means absent.
+    * existence probe: a `FileNotFoundException` from the read means absent.
     */
   def latestVersion(conf: Configuration, historyUri: String): Option[Int] =
-    graft.operators.Retry.storageIO {
-      val path = new Path(s"${historyUri.stripSuffix("/")}/_version_")
-      val fs = path.getFileSystem(conf)
-      try {
-        val in = fs.open(path)
-        try Some(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => None }
-    }
+    try Some(new String(FsListing.readObject(conf, s"${historyUri.stripSuffix("/")}/_version_"),
+      java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
+    catch { case _: java.io.FileNotFoundException => None }
 
-  /** Read manifest_N's file-name list (S6). Manifests are a few KB of JSON in
-    * the per-table driver loop, so this is a direct Hadoop-FS read + Jackson
-    * parse — spinning a distributed job per table per sync would put 2×tables
-    * Spark jobs on the scheduler for kilobytes of metadata.
+  /** Read manifest_N's file-name list (S6): a few KB of JSON, one
+    * [[FsListing.readObject]] plus a Jackson parse in the per-table driver
+    * loop — a distributed job per table per sync would put 2×tables Spark
+    * jobs on the scheduler for kilobytes of metadata.
     */
-  def readManifest(spark: SparkSession, historyUri: String, version: Int): ManifestSnapshot = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(s"${historyUri.stripSuffix("/")}/manifest_$version")
-    val fs = path.getFileSystem(conf)
-    val bytes = graft.operators.Retry.storageIO {
-      val in = fs.open(path)
-      try in.readAllBytes() finally in.close()
-    }
+  def readManifest(conf: Configuration, historyUri: String, version: Int): ManifestSnapshot = {
+    val bytes = FsListing.readObject(conf, s"${historyUri.stripSuffix("/")}/manifest_$version")
     val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
     import scala.jdk.CollectionConverters._
     val names = root.path("files").elements().asScala
@@ -55,9 +41,9 @@ object LsmManifestReader {
   }
 
   /** Latest snapshot, or an empty version-0 snapshot when none exists. */
-  def latestSnapshot(spark: SparkSession, historyUri: String): ManifestSnapshot =
-    latestVersion(spark.sparkContext.hadoopConfiguration, historyUri) match {
-      case Some(v) => readManifest(spark, historyUri, v)
+  def latestSnapshot(conf: Configuration, historyUri: String): ManifestSnapshot =
+    latestVersion(conf, historyUri) match {
+      case Some(v) => readManifest(conf, historyUri, v)
       case None    => ManifestSnapshot(0, Nil)
     }
 

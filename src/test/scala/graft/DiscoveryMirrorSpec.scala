@@ -15,6 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DiscoveryMirrorSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSpec.spark
+  private def conf = spark.sparkContext.hadoopConfiguration
   private val root = "target/tmp/lake-fixture"
 
   private def write(path: String, content: String = ""): Unit = {
@@ -65,7 +66,7 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
 
   test("discovery finds nested tables, prunes exclusions, derives UUIDv3 ids") {
     mkLake()
-    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base), Seq(".*/scratch"))
+    val tables = TableDiscovery.discover(conf, Seq(base), Seq(".*/scratch"))
     val names = tables.map(_.absoluteTableUri.split("/").last).sorted.toSeq
     assert(names == Seq("trips", "users"))
     tables.foreach { t =>
@@ -79,18 +80,18 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
     mkLake()
     // path IS the table root: one table discovered, id pinned
     val pinned = base.copy(uri = base.uri + "/trips#my-fixed-id")
-    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(pinned))
+    val tables = TableDiscovery.discover(conf, Seq(pinned))
     assert(tables.length == 1 && tables.head.tableId == "my-fixed-id")
     assert(tables.head.absoluteTableUri.endsWith("/trips"))
 
     // pinned path holding SEVERAL tables contributes nothing
     // (TableDiscoveryService exactly-one rule)
     val ambiguous = base.copy(uri = base.uri + "#other-id")
-    assert(TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(ambiguous)).isEmpty)
+    assert(TableDiscovery.discover(conf, Seq(ambiguous)).isEmpty)
 
     // pinned path with a single table in a subdirectory pins that table
     val viaParent = base.copy(uri = base.uri + "/nested#deep-id")
-    val deep = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(viaParent))
+    val deep = TableDiscovery.discover(conf, Seq(viaParent))
     assert(deep.length == 1 && deep.head.tableId == "deep-id")
     assert(deep.head.absoluteTableUri.endsWith("/users"))
   }
@@ -99,7 +100,7 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
     mkLake()
     val uri = base.uri + "/trips#my-fixed-id"
     val configs = Seq(base.copy(databaseName = "dbZ", uri = uri), base.copy(databaseName = "dbA", uri = uri))
-    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, configs)
+    val tables = TableDiscovery.discover(conf, configs)
     assert(tables.map(t => t.databaseName -> t.tableId) == Seq("dbZ" -> "my-fixed-id", "dbA" -> "my-fixed-id"))
     assert(tables.forall(_.absoluteTableUri.endsWith("/trips")))
   }
@@ -114,26 +115,25 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
     write(s"$dir/_version_", " 3 \n")
     write(s"$dir/manifest_3",
       """{"files":[{"fileName":"a.parquet","fileLen":1,"extra":true}],"unknown":{"x":1}}""")
-    val snap = LsmManifestReader.latestSnapshot(spark, s"file://$dir")
+    val snap = LsmManifestReader.latestSnapshot(conf, s"file://$dir")
     assert(snap.version == 3 && snap.parquetFileNames == Seq("a.parquet"))
 
     write(s"$dir/manifest_4", """{"files":[]}""")
-    assert(LsmManifestReader.readManifest(spark, s"file://$dir", 4).parquetFileNames.isEmpty)
+    assert(LsmManifestReader.readManifest(conf, s"file://$dir", 4).parquetFileNames.isEmpty)
 
     val t0 = System.nanoTime()
     intercept[java.io.FileNotFoundException](
-      LsmManifestReader.readManifest(spark, s"file://$dir", 9))
+      LsmManifestReader.readManifest(conf, s"file://$dir", 9))
     assert((System.nanoTime() - t0) / 1e9 < 2.0) // no retry backoff on missing key
   }
 
   test("invalid base path contributes an empty set, not a failure") {
     val bad = TableDiscovery.BasePath("lake1", "db1", "file:///this-is-some-invalid-path")
-    assert(TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(bad)).isEmpty)
+    assert(TableDiscovery.discover(conf, Seq(bad)).isEmpty)
   }
 
   test("properties read with defaults and failure sentinel") {
     mkLake()
-    val conf = spark.sparkContext.hadoopConfiguration
     val ok = HoodiePropertiesReader.read(conf,
       s"${base.cleanUri}/trips/.hoodie/hoodie.properties")
     assert(ok.tableName == "trips" && ok.tableType == "COPY_ON_WRITE")
@@ -149,29 +149,29 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
     mkLake()
     val mirrorRoot = s"$root-mirror"
     val cpDir = s"$root-cp"
-    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base), Seq(".*/scratch"))
+    val tables = TableDiscovery.discover(conf, Seq(base), Seq(".*/scratch"))
     val trips = tables.find(_.absoluteTableUri.endsWith("trips")).get
-    val props = HoodiePropertiesReader.read(spark.sparkContext.hadoopConfiguration,
+    val props = HoodiePropertiesReader.read(conf,
       s"${trips.absoluteTableUri}/.hoodie/hoodie.properties")
 
-    val r1 = TimelineMirror.mirrorTable(spark, trips, props, mirrorRoot, cpDir)
+    val r1 = TimelineMirror.mirrorTable(conf, trips, props, mirrorRoot, cpDir)
     // archived: 3 files in 2 batches; active: properties + 2 complete groups
     // (7 files), blocked at the incomplete 300.commit group
     assert(r1.filesMirrored == 3 + 7)
-    val mirroredActive = FsListing.listDir(spark.sparkContext.hadoopConfiguration,
+    val mirroredActive = FsListing.listDir(conf,
       s"$mirrorRoot/${trips.tableId}/active").map(_.filename).sorted
     assert(!mirroredActive.exists(_.startsWith("300.")))
     assert(mirroredActive.contains("hoodie.properties"))
-    val cp = CheckpointStore.load(spark, cpDir)((trips.tableId, TimelineType.Active))
+    val cp = CheckpointStore.load(conf, cpDir)((trips.tableId, TimelineType.Active))
     assert(cp.archivedCommitsProcessed && cp.lastUploadedFile == "200.deltacommit")
 
     // resume: nothing new below the incomplete group => no new files
-    val r2 = TimelineMirror.mirrorTable(spark, trips, props, mirrorRoot, cpDir)
+    val r2 = TimelineMirror.mirrorTable(conf, trips, props, mirrorRoot, cpDir)
     assert(r2.filesMirrored == 0)
 
     // completing the commit unblocks exactly that group
     write(s"$root/db1/trips/.hoodie/300.commit")
-    val r3 = TimelineMirror.mirrorTable(spark, trips, props, mirrorRoot, cpDir)
+    val r3 = TimelineMirror.mirrorTable(conf, trips, props, mirrorRoot, cpDir)
     assert(r3.filesMirrored == 3)
   }
 
@@ -190,14 +190,14 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
       "300.commit.requested", "300.commit.inflight", "300.commit")
       .foreach(f => write(s"$hoodie/$f"))
 
-    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base), Seq(".*/scratch"))
+    val tables = TableDiscovery.discover(conf, Seq(base), Seq(".*/scratch"))
     val trips = tables.find(_.absoluteTableUri.endsWith("trips")).get
-    val props = HoodiePropertiesReader.read(spark.sparkContext.hadoopConfiguration,
+    val props = HoodiePropertiesReader.read(conf,
       s"${trips.absoluteTableUri}/.hoodie/hoodie.properties")
 
-    val r1 = TimelineMirror.mirrorTable(spark, trips, props, mirrorRoot, cpDir,
+    val r1 = TimelineMirror.mirrorTable(conf, trips, props, mirrorRoot, cpDir,
       strategy = UploadStrategy.ContinueOnIncompleteCommit)
-    val active = FsListing.listDir(spark.sparkContext.hadoopConfiguration,
+    val active = FsListing.listDir(conf,
       s"$mirrorRoot/${trips.tableId}/active").map(_.filename)
     // 100 and 300 groups mirrored; incomplete 200 skipped
     assert(active.count(_.startsWith("100.")) == 3)
@@ -214,9 +214,9 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
       Files.setLastModifiedTime(Paths.get(s"$hoodie/$f"),
         java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
     }
-    val r2 = TimelineMirror.mirrorTable(spark, trips, props, mirrorRoot, cpDir,
+    val r2 = TimelineMirror.mirrorTable(conf, trips, props, mirrorRoot, cpDir,
       strategy = UploadStrategy.ContinueOnIncompleteCommit)
-    val active2 = FsListing.listDir(spark.sparkContext.hadoopConfiguration,
+    val active2 = FsListing.listDir(conf,
       s"$mirrorRoot/${trips.tableId}/active").map(_.filename)
     assert(active2.count(_.startsWith("200.")) == 3, s"got: ${active2.sorted}")
     assert(r2.checkpoint.firstIncompleteCommitFile == null ||
@@ -227,16 +227,16 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
     mkLake()
     val mirrorRoot = s"$root-mirror2"
     val cpDir = s"$root-cp2"
-    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base), Seq(".*/scratch"))
+    val tables = TableDiscovery.discover(conf, Seq(base), Seq(".*/scratch"))
     val users = tables.find(_.absoluteTableUri.endsWith("users")).get
-    val props = HoodiePropertiesReader.read(spark.sparkContext.hadoopConfiguration,
+    val props = HoodiePropertiesReader.read(conf,
       s"${users.absoluteTableUri}/.hoodie/hoodie.properties")
-    val r = TimelineMirror.mirrorTable(spark, users, props, mirrorRoot, cpDir)
-    val archived = FsListing.listDir(spark.sparkContext.hadoopConfiguration,
+    val r = TimelineMirror.mirrorTable(conf, users, props, mirrorRoot, cpDir)
+    val archived = FsListing.listDir(conf,
       s"$mirrorRoot/${users.tableId}/archived").map(_.filename).sorted
     assert(archived == Seq("1_2_3.parquet", "4_5_6.parquet", "_version_", "manifest_2").sorted)
     // V9 completed instant (400_401.commit) mirrored in the active phase
-    val active = FsListing.listDir(spark.sparkContext.hadoopConfiguration,
+    val active = FsListing.listDir(conf,
       s"$mirrorRoot/${users.tableId}/active").map(_.filename)
     assert(active.contains("400_401.commit"))
     assert(r.checkpoint.lastArchivedManifestVersion == 2)
@@ -247,22 +247,22 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
     val mirrorRoot = s"$root-mirror-f3"
     val cpDir = s"$root-cp-f3"
     rmTree(mirrorRoot); rmTree(cpDir)
-    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base), Seq(".*/scratch"))
+    val tables = TableDiscovery.discover(conf, Seq(base), Seq(".*/scratch"))
     val trips = tables.find(_.absoluteTableUri.endsWith("trips")).get
-    val props = HoodiePropertiesReader.read(spark.sparkContext.hadoopConfiguration,
+    val props = HoodiePropertiesReader.read(conf,
       s"${trips.absoluteTableUri}/.hoodie/hoodie.properties")
 
     // simulate a crash after archived batch 1 ([idx2, idx9] copied,
     // checkpointed) and before batch 2: only the Archived row exists
-    CheckpointStore.upsert(spark, cpDir, trips.tableId, TimelineType.Archived,
+    CheckpointStore.upsert(conf, cpDir, trips.tableId, TimelineType.Archived,
       Checkpoint(1, new java.sql.Timestamp(1000L), ".commits_.archive.9_1-0-1",
         null, archivedCommitsProcessed = false))
 
-    val r = TimelineMirror.mirrorTable(spark, trips, props, mirrorRoot, cpDir)
+    val r = TimelineMirror.mirrorTable(conf, trips, props, mirrorRoot, cpDir)
     // archived resume copies ONLY idx 10 (not 2 or 9); active copies
     // properties + 2 complete groups = 7 files
     assert(r.filesMirrored == 1 + 7, s"got ${r.filesMirrored}")
-    val archived = FsListing.listDir(spark.sparkContext.hadoopConfiguration,
+    val archived = FsListing.listDir(conf,
       s"$mirrorRoot/${trips.tableId}/archived").map(_.filename)
     assert(archived == Seq(".commits_.archive.10_1-0-1"))
   }
@@ -272,16 +272,16 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
     val mirrorRoot = s"$root-mirror2i"
     val cpDir = s"$root-cp2i"
     rmTree(mirrorRoot); rmTree(cpDir)
-    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base), Seq(".*/scratch"))
+    val tables = TableDiscovery.discover(conf, Seq(base), Seq(".*/scratch"))
     val users = tables.find(_.absoluteTableUri.endsWith("users")).get
-    val props = HoodiePropertiesReader.read(spark.sparkContext.hadoopConfiguration,
+    val props = HoodiePropertiesReader.read(conf,
       s"${users.absoluteTableUri}/.hoodie/hoodie.properties")
 
-    val r1 = TimelineMirror.mirrorTable(spark, users, props, mirrorRoot, cpDir)
+    val r1 = TimelineMirror.mirrorTable(conf, users, props, mirrorRoot, cpDir)
     assert(r1.checkpoint.lastArchivedManifestVersion == 2)
 
     // unchanged manifest => a sync is a complete no-op
-    val r2 = TimelineMirror.mirrorTable(spark, users, props, mirrorRoot, cpDir)
+    val r2 = TimelineMirror.mirrorTable(conf, users, props, mirrorRoot, cpDir)
     assert(r2.filesMirrored == 0)
 
     // compaction merges the two L0 parquets into one L1 file and a new L0
@@ -294,18 +294,18 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
       """{"files":[{"fileName":"compacted_1_6.parquet","fileLen":30},{"fileName":"7_8_9.parquet","fileLen":5}]}""")
     write(s"$hist/_version_", "3")
 
-    val r3 = TimelineMirror.mirrorTable(spark, users, props, mirrorRoot, cpDir)
+    val r3 = TimelineMirror.mirrorTable(conf, users, props, mirrorRoot, cpDir)
     // ONLY the 2 net-new parquets + manifest_3 + _version_; the bootstrap
     // parquets are NOT re-copied
     assert(r3.filesMirrored == 4, s"expected 4 files, got ${r3.filesMirrored}")
     assert(r3.checkpoint.lastArchivedManifestVersion == 3)
-    val archived = FsListing.listDir(spark.sparkContext.hadoopConfiguration,
+    val archived = FsListing.listDir(conf,
       s"$mirrorRoot/${users.tableId}/archived").map(_.filename)
     assert(Seq("compacted_1_6.parquet", "7_8_9.parquet", "manifest_3").forall(archived.contains))
   }
 
   test("manifest reader: missing _version_ means empty snapshot; anti-join diff") {
-    val snap = LsmManifestReader.latestSnapshot(spark, s"$root/nonexistent/history")
+    val snap = LsmManifestReader.latestSnapshot(conf, s"$root/nonexistent/history")
     assert(snap.version == 0 && snap.parquetFileNames.isEmpty)
     val diff = LsmManifestReader.newFiles(
       graft.model.ManifestSnapshot(3, Seq("a.parquet", "b.parquet", "c.parquet")),
@@ -323,7 +323,6 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
 
   test("listing: prefix + startAfter seek semantics (Azure-normalized)") {
     mkLake()
-    val conf = spark.sparkContext.hadoopConfiguration
     val all = FsListing.listDir(conf, s"${base.cleanUri}/trips/.hoodie")
     assert(all.exists(_.filename == "archived") && all.exists(_.isDirectory))
     val after = FsListing.listDir(conf, s"${base.cleanUri}/trips/.hoodie", startAfter = "100.commit.requested")

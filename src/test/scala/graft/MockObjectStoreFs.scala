@@ -28,7 +28,8 @@ import org.apache.hadoop.util.Progressable
   * instrumentation: per-bucket call counts by kind (every public call is
   * one round trip), the most calls ever in flight at once, the order in
   * which written objects became visible, an injectable per-call delay, and
-  * an injectable fault that fails the calls on selected uris.
+  * two injectable faults on selected calls: a terminal one (access denied)
+  * and a transient one (a plain `IOException`, which the program retries).
   */
 class MockObjectStoreFs extends FileSystem {
 
@@ -58,7 +59,7 @@ class MockObjectStoreFs extends FileSystem {
   private def qualify(k: String): Path = new Path(s"$fsUri$k")
 
   /** Every public call goes through here: count, then (while the call is
-    * in flight) the injected delay, the fault check and the call itself.
+    * in flight) the injected delay, the fault checks and the call itself.
     */
   private def call[T](kind: String, p: Path)(body: => T): T = {
     val uri = s"$fsUri${key(p)}"
@@ -69,6 +70,8 @@ class MockObjectStoreFs extends FileSystem {
       if (MockObjectStoreFs.callDelayMs > 0) Thread.sleep(MockObjectStoreFs.callDelayMs)
       if (MockObjectStoreFs.failWhen(uri))
         throw new org.apache.hadoop.security.AccessControlException(s"injected fault: $uri")
+      if (MockObjectStoreFs.transientFaultWhen(kind, uri))
+        throw new IOException(s"injected transient fault: $kind $uri")
       body
     } finally MockObjectStoreFs.exit(bucketName)
   }
@@ -266,6 +269,13 @@ object MockObjectStoreFs {
     * `AccessControlException`, which the program treats as terminal.
     */
   @volatile var failWhen: String => Boolean = _ => false
+
+  /** Calls whose (kind, `mocks3://bucket/key` uri) this selects throw a
+    * plain `IOException`, which the program treats as transient (T6
+    * retry). Each call asks again, so a stateful selector decides how many
+    * calls fail.
+    */
+  @volatile var transientFaultWhen: (String, String) => Boolean = (_, _) => false
 
   /** Every call sleeps this long while in flight, so calls a caller issues
     * together overlap measurably ([[peakInFlight]]).

@@ -24,12 +24,13 @@ class ObjectStoreE2ESpec extends AnyFunSuite {
       .set("fs.mocks3.impl", classOf[MockObjectStoreFs].getName)
     s
   }
+  private def conf = spark.sparkContext.hadoopConfiguration
 
   private val bucket = "mocks3://warehouse"
 
   private def put(uri: String, content: String = ""): Unit = {
     val p = new Path(uri)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(conf)
     val out = fs.create(p, true)
     out.write(content.getBytes("UTF-8"))
     out.close()
@@ -53,12 +54,12 @@ class ObjectStoreE2ESpec extends AnyFunSuite {
 
   test("discovery, properties, mirror, and resume run end-to-end on the object store") {
     mkLake()
-    val tables = TableDiscovery.discover(spark.sparkContext.hadoopConfiguration, Seq(base))
+    val tables = TableDiscovery.discover(conf, Seq(base))
     assert(tables.length == 1)
     val trips = tables.head
     assert(trips.absoluteTableUri == s"$bucket/lake/db1/trips")
 
-    val props = HoodiePropertiesReader.read(spark.sparkContext.hadoopConfiguration,
+    val props = HoodiePropertiesReader.read(conf,
       s"${trips.absoluteTableUri}/.hoodie/hoodie.properties")
     assert(props.tableName == "trips" && props.failureReason == null)
 
@@ -66,22 +67,22 @@ class ObjectStoreE2ESpec extends AnyFunSuite {
     // both ride create()/open() PUT-at-close semantics
     val mirrorRoot = s"$bucket/mirror"
     val cpDir = s"$bucket/checkpoints"
-    val r1 = TimelineMirror.mirrorTable(spark, trips, props, mirrorRoot, cpDir)
+    val r1 = TimelineMirror.mirrorTable(conf, trips, props, mirrorRoot, cpDir)
     // archived: 2 files; active: properties + 2 complete groups (7 files)
     assert(r1.filesMirrored == 2 + 7, s"got ${r1.filesMirrored}")
-    val active = FsListing.listDir(spark.sparkContext.hadoopConfiguration,
+    val active = FsListing.listDir(conf,
       s"$mirrorRoot/${trips.tableId}/active").map(_.filename)
     assert(active.contains("hoodie.properties") && !active.exists(_.startsWith("300.")))
-    val cp = CheckpointStore.load(spark, cpDir)((trips.tableId, TimelineType.Active))
+    val cp = CheckpointStore.load(conf, cpDir)((trips.tableId, TimelineType.Active))
     assert(cp.lastUploadedFile == "200.deltacommit")
 
     // resume against the store is a no-op; completing the group unblocks it
-    assert(TimelineMirror.mirrorTable(spark, trips, props, mirrorRoot, cpDir).filesMirrored == 0)
+    assert(TimelineMirror.mirrorTable(conf, trips, props, mirrorRoot, cpDir).filesMirrored == 0)
     put(s"$bucket/lake/db1/trips/.hoodie/300.commit")
-    assert(TimelineMirror.mirrorTable(spark, trips, props, mirrorRoot, cpDir).filesMirrored == 3)
+    assert(TimelineMirror.mirrorTable(conf, trips, props, mirrorRoot, cpDir).filesMirrored == 3)
 
     // mirrored bytes round-trip (S8/S9 through open/create, not local IO)
-    val fs = new Path(bucket).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(bucket).getFileSystem(conf)
     val in = fs.open(new Path(s"$mirrorRoot/${trips.tableId}/active/hoodie.properties"))
     val bytes = new Array[Byte](4096)
     val n = in.read(bytes)
@@ -105,12 +106,12 @@ class ObjectStoreE2ESpec extends AnyFunSuite {
 
   test("listing order is lexicographic (S3 contract), and the batcher handles it") {
     mkLake()
-    val names = FsListing.listDir(spark.sparkContext.hadoopConfiguration,
+    val names = FsListing.listDir(conf,
       s"$bucket/lake/db1/trips/.hoodie").map(_.filename)
     assert(names == names.sorted, s"store must list in key order, got $names")
     // lexicographic order puts archive idx 10 BEFORE idx 2 — the numeric
     // archived sort (O3) must not rely on listing order
-    val archived = FsListing.listDir(spark.sparkContext.hadoopConfiguration,
+    val archived = FsListing.listDir(conf,
       s"$bucket/lake/db1/trips/.hoodie/archived").map(_.filename)
     assert(archived == Seq(".commits_.archive.10_1-0-1", ".commits_.archive.2_1-0-1"))
   }
@@ -134,7 +135,7 @@ class ObjectStoreE2ESpec extends AnyFunSuite {
 
     val hoodieDir = s"$bucket/lake/db1/trips/.hoodie"
     def activeListing(): Seq[(String, Long)] =
-      FsListing.listDir(spark.sparkContext.hadoopConfiguration, hoodieDir)
+      FsListing.listDir(conf, hoodieDir)
         .filter(_.filename.matches("""\d+(_\d+)?(\.[a-z]{1,20}){1,2}"""))
         .map(f => f.filename -> f.lastModifiedAt.getTime)
 
@@ -185,7 +186,7 @@ class ObjectStoreE2ESpec extends AnyFunSuite {
 
   test("object-store semantics: immutable objects, PUT visibility at close") {
     MockObjectStoreFs.clear("warehouse")
-    val fs = new Path(bucket).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(bucket).getFileSystem(conf)
     intercept[UnsupportedOperationException](fs.append(new Path(s"$bucket/x")))
     val out = fs.create(new Path(s"$bucket/dir/obj"), true)
     out.write("abc".getBytes)
