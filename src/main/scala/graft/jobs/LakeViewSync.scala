@@ -1,7 +1,7 @@
 package graft.jobs
 
 import java.time.{Clock, Duration, Instant}
-import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
+import java.util.concurrent.{Callable, Executors, ScheduledExecutorService, TimeUnit}
 
 import scala.util.control.NonFatal
 
@@ -16,12 +16,11 @@ import org.apache.spark.sql.SparkSession
   * AND-fold of per-table success (G9,
   * `TableMetadataUploaderService.java:85-97`).
   *
-  * Tables are processed in fixed-size batches (G7: 20 per batch, cap 50 —
-  * `constants/MetadataExtractorConstants.java:42-46`), sequential across
-  * batches, PARALLEL within one (each table's mirror is independent;
-  * reference fans a batch out over its executor,
-  * `TableMetadataUploaderService.java:82-98`). One slow table no longer
-  * serializes its whole batch.
+  * Tables run in parallel, at most `tableBatchSize` in flight (G7: 20, cap
+  * 50 — `constants/MetadataExtractorConstants.java:42-46`; the reference
+  * fans tables out over its executor, `TableMetadataUploaderService.java:82-98`).
+  * It is a bound, not a barrier: a finished table's slot takes the next
+  * table at once, so a slow table never holds up the tables behind it.
   *
   * Inside a table, [[TimelineMirror.mirrorTable]] keeps the reference's
   * per-batch contract: a timeline batch's copies run concurrently on the
@@ -89,8 +88,9 @@ object LakeViewSync {
     syncTables(spark, config, tables)
   }
 
-  /** Mirror a known table set: fixed-size batches, bounded parallelism
-    * within a batch (G7/G8). Used by both ONCE and CONTINUOUS modes.
+  /** Mirror a known table set, at most `tableBatchSize` tables in flight
+    * (G7/G8), joined in table order; a fatal error stops the queued tables
+    * and fails the run. Used by both ONCE and CONTINUOUS modes.
     *
     * Duplicate tableIds (e.g. the same path reached via two base paths)
     * dedup last-wins with a warning (J3, reference
@@ -107,58 +107,57 @@ object LakeViewSync {
     if (byId.size < tables.size)
       System.err.println(s"[lakeview-sync] ${tables.size - byId.size} duplicate tableId(s) dropped (last wins)")
     val deduped = byId.values.toSeq.sortBy(_.absoluteTableUri)
-    val tableBatch = math.max(1, math.min(config.tableBatchSize, 50))
-    val pool = Executors.newFixedThreadPool(tableBatch)
+    val window = math.max(1, math.min(config.tableBatchSize, 50))
+    val pool = Executors.newFixedThreadPool(window)
     try {
+      // all tables queued at once: a freed thread takes the next one (G7)
+      val futures = deduped.map { table =>
+        pool.submit(new Callable[Either[(String, String), Long]] {
+          def call(): Either[(String, String), Long] =
+            try {
+              val props = propsCache.flatMap(_.get(table.tableId)).getOrElse {
+                val p = HoodiePropertiesReader.read(conf,
+                  s"${table.absoluteTableUri}/.hoodie/hoodie.properties")
+                if (p.failureReason == null) propsCache.foreach(_.put(table.tableId, p))
+                p
+              }
+              if (props.failureReason == null) {
+                val r = TimelineMirror.mirrorTable(conf, table, props,
+                  config.mirrorRoot, config.checkpointDir,
+                  config.maxBatchSize, config.strategy)
+                // chained catalog sync runs inside the table's isolation:
+                // a hook failure fails this table, not the run
+                config.metastore.foreach(_.register(spark, table, props,
+                  s"${config.mirrorRoot.stripSuffix("/")}/${table.tableId}"))
+                Right(r.filesMirrored.toLong)
+              } else Left(table.absoluteTableUri -> FailureReason.NoSuchKey)
+            } catch {
+              // failure isolates the table, not the run (T7,
+              // MetadataExtractorUtils.java:12-30)
+              case NonFatal(e) =>
+                System.err.println(s"[lakeview-sync] ${table.absoluteTableUri} failed: ${e.getMessage}")
+                Left(table.absoluteTableUri -> FailureReason.classify(e))
+              // a fatal error fails the run: no queued table starts after it
+              case fatal: Throwable => pool.shutdownNow(); throw fatal
+            }
+        })
+      }
       var files = 0L
       var ok = 0L
       var failures = Map.empty[String, String]
-      deduped.grouped(tableBatch).foreach { batch =>
-        // parallel within the batch; the futures barrier keeps batches
-        // sequential so checkpoint pressure stays bounded (G7)
-        val futures = batch.map { table =>
-          pool.submit(new java.util.concurrent.Callable[Either[(String, String), Long]] {
-            def call(): Either[(String, String), Long] =
-              try {
-                val props = propsCache.flatMap(_.get(table.tableId)).getOrElse {
-                  val p = HoodiePropertiesReader.read(conf,
-                    s"${table.absoluteTableUri}/.hoodie/hoodie.properties")
-                  if (p.failureReason == null) propsCache.foreach(_.put(table.tableId, p))
-                  p
-                }
-                if (props.failureReason == null) {
-                  val r = TimelineMirror.mirrorTable(conf, table, props,
-                    config.mirrorRoot, config.checkpointDir,
-                    config.maxBatchSize, config.strategy)
-                  // chained catalog sync runs inside the table's isolation:
-                  // a hook failure fails this table, not the run
-                  config.metastore.foreach(_.register(spark, table, props,
-                    s"${config.mirrorRoot.stripSuffix("/")}/${table.tableId}"))
-                  Right(r.filesMirrored.toLong)
-                } else Left(table.absoluteTableUri -> FailureReason.NoSuchKey)
-              } catch {
-                // failure isolates the table, not the run (T7,
-                // MetadataExtractorUtils.java:12-30)
-                case NonFatal(e) =>
-                  System.err.println(s"[lakeview-sync] ${table.absoluteTableUri} failed: ${e.getMessage}")
-                  Left(table.absoluteTableUri -> FailureReason.classify(e))
-              }
-          })
-        }
-        futures.foreach { f =>
-          f.get() match {
-            case Right(n) =>
-              files += n; ok += 1
-              metrics.inc(SyncMetrics.MetadataUploadSuccess)
-            case Left(kv) =>
-              failures += kv
-              metrics.inc(SyncMetrics.TableMetadataProcessingFailure, kv._2)
-          }
+      futures.foreach { f =>
+        f.get() match {
+          case Right(n) =>
+            files += n; ok += 1
+            metrics.inc(SyncMetrics.MetadataUploadSuccess)
+          case Left(kv) =>
+            failures += kv
+            metrics.inc(SyncMetrics.TableMetadataProcessingFailure, kv._2)
         }
       }
       metrics.tablesProcessedGauge.set(ok)
       SyncReport(deduped.size, ok, files, allSucceeded = ok == deduped.size, failures)
-    } finally pool.shutdown()
+    } finally pool.shutdownNow()
   }
 
   /** ONCE_WITH_RETRY (reference JobRunMode.ONCE_WITH_RETRY +

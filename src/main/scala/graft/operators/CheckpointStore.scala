@@ -15,7 +15,7 @@ import org.apache.hadoop.fs.Path
   * The per-key layout is what makes the store scale- and concurrency-safe:
   * an upsert touches exactly one file regardless of table count (the
   * previous whole-store parquet rewrite was O(tables) per batch and a Spark
-  * job each), and parallel tables in a batch (G7/G8) write disjoint paths,
+  * job each), and tables in flight together (G7/G8) write disjoint paths,
   * matching the reference's per-table checkpoint POSTs
   * (`TimelineCommitInstantsUploader.java:623-688`).
   *

@@ -35,9 +35,9 @@ import org.apache.hadoop.fs.Path
   * makes parents on create; object stores have implicit prefixes), and a
   * checkpoint is [[CheckpointStore.upsert]]'s `create` + `delete` +
   * `rename`. The driver loop per table is the right altitude at metadata
-  * scale (KB files): tables fan out across the driver's table batches
-  * exactly like the reference (G7, 20 per batch), and each table's batch
-  * fans its copies out on one shared, bounded I/O pool.
+  * scale (KB files): tables fan out over the driver's table threads like
+  * the reference's (G7, at most 20 tables in flight), and each table's
+  * batch fans its copies out on one shared, bounded I/O pool.
   */
 object TimelineMirror {
 
@@ -98,8 +98,8 @@ object TimelineMirror {
 
   /** Mirror one table's archived (V1) + active timelines, checkpointing
     * after every batch. Batches run one after another, each batch's copies
-    * concurrently. Returns per-table results; the caller runs the tables of
-    * its table batch in parallel. Storage is reached through `conf` alone,
+    * concurrently. Returns per-table results; the caller keeps several
+    * tables in flight at once. Storage is reached through `conf` alone,
     * and no Spark job runs.
     */
   def mirrorTable(

@@ -23,20 +23,20 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *   - filenames are returned relative to the listed directory
   *     (prefix-stripped, like the reference's File model).
   *
-  * Two fan-outs sit on top of [[listDir]]: on the driver, discovery runs a
-  * BFS level's listings together on the shared [[IoPool]]; across
-  * executors, [[listDirs]] lists many directories as a Dataset, each task
-  * draining its directories' pages through the store's own iterator.
+  * Every fan-out over [[listDir]] runs on the driver's shared [[IoPool]]:
+  * discovery lists a BFS level's directories together, and [[listDirs]] the
+  * directories a Spark query reads. The executor-side listing path is the
+  * `graft-listing` DataSource ([[ListingSource]]).
   *
   * [[readObject]] is the extractor's one whole-object read (properties,
   * `_version_`, manifests, checkpoints). All but [[listDirs]] take a Hadoop
-  * `Configuration` and run on the driver, like the whole extractor.
+  * `Configuration`; all of them run on the driver, like the whole extractor.
   */
 object FsListing {
 
-  /** Most storage calls one fan-out keeps in flight: the threads of the
-    * driver's [[IoPool]], shared by discovery's level listings and the
-    * mirror's concurrent copies, and the tasks of one [[listDirs]] job.
+  /** Most storage calls the driver keeps in flight: the threads of its
+    * [[IoPool]], shared by discovery's level listings, [[listDirs]] and the
+    * mirror's concurrent copies.
     */
   val MaxInFlight = 64
 
@@ -82,35 +82,14 @@ object FsListing {
       try in.readAllBytes() finally in.close()
     }
 
-  /** Distributed listing of many directories: one task per partition of the
-    * directory list; emits (dirUri, entry) pairs. Executors talk straight to
-    * the store — no listing bytes flow through the driver. The Dataset is
-    * lazy: its jobs run at the caller's action and carry the call site the
-    * caller sets there (`SparkContext.setCallSite`), not one set here.
+  /** List directories for a Spark query, eagerly, on the driver's [[IoPool]]
+    * (no Spark job): the (dirUri, entry) pairs come back as a local relation
+    * in directory order, and a failed listing is rethrown as itself. It
+    * waits on pool work, so it must never be called from a pool task.
     */
   def listDirs(spark: SparkSession, dirUris: Seq[String]): Dataset[(String, FileEntry)] = {
     import spark.implicits._
-    val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val parallelism = math.max(1, math.min(dirUris.size, MaxInFlight))
-    spark.createDataset(dirUris)
-      .repartition(parallelism)
-      .mapPartitions { dirs =>
-        val conf = hadoopConf.value
-        dirs.flatMap(d => listDir(conf, d).map(d -> _))
-      }
-  }
-}
-
-/** Minimal serializable Hadoop-conf wrapper (Spark's own is private). */
-final class SerializableConfiguration(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
+    val conf = spark.sparkContext.hadoopConfiguration
+    spark.createDataset(IoPool.all(dirUris)(d => listDir(conf, d).map(d -> _)).flatten)
   }
 }

@@ -5,15 +5,15 @@ import java.util.concurrent.{CompletableFuture, ExecutionException, LinkedBlocki
 import scala.util.{Failure, Success, Try}
 
 /** The driver's one storage I/O pool: at most [[FsListing.MaxInFlight]]
-  * daemon threads, and idle ones time out. A discovery level's listings and
-  * a mirror batch's copies both fan out here.
+  * daemon threads, and idle ones time out. Discovery's level listings,
+  * [[FsListing.listDirs]] and a mirror batch's copies all fan out here.
   *
-  * Deadlock rule: a pool task only does storage I/O. It never submits work
-  * to the pool and never waits on pool work; only caller threads (a
-  * discovery tick, a sync's table threads) join pool futures. So every
-  * queued task runs to completion without needing another one, and callers
-  * may share the pool freely, e.g. `ContinuousSync`'s discovery and process
-  * ticks when they overlap.
+  * Deadlock rule: never call [[all]], or anything that calls it (`listDirs`,
+  * `mirrorTable`), from a pool task. A pool task only does storage I/O;
+  * only caller threads (a discovery tick, a sync's table threads, a query's
+  * thread) join pool futures. So every queued task runs to completion
+  * without needing another one, and callers may share the pool freely,
+  * e.g. `ContinuousSync`'s discovery and process ticks when they overlap.
   */
 object IoPool {
 

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -152,5 +153,19 @@ case class ListingReaderFactory(
       override def get(): InternalRow = current
       override def close(): Unit = ()
     }
+  }
+}
+
+/** Minimal serializable Hadoop-conf wrapper (Spark's own is private). */
+final class SerializableConfiguration(@transient var value: Configuration)
+    extends Serializable {
+  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
+    out.defaultWriteObject()
+    value.write(out)
+  }
+  private def readObject(in: java.io.ObjectInputStream): Unit = {
+    in.defaultReadObject()
+    value = new Configuration(false)
+    value.readFields(in)
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.jobs.LakeViewSync
 import graft.operators.TableDiscovery
 import org.scalatest.funsuite.AnyFunSuite
@@ -46,7 +48,6 @@ class LakeViewSyncSpec extends AnyFunSuite {
   private def rmTree(dir: String): Unit = {
     val r = Paths.get(dir)
     if (Files.exists(r)) {
-      import scala.jdk.CollectionConverters._
       Files.walk(r).iterator().asScala.toSeq.reverse.foreach(Files.delete)
     }
   }
@@ -238,7 +239,6 @@ class LakeViewSyncSpec extends AnyFunSuite {
 
     // no duplicate mirror writes across the whole soak: every file landed
     // exactly once, so the cumulative count equals the distinct tree size
-    import scala.jdk.CollectionConverters._
     val treeFiles = Files.walk(Paths.get(s"$sroot-mirror")).iterator().asScala
       .count(p => Files.isRegularFile(p) && !p.getFileName.toString.endsWith(".crc"))
     assert(mirrored == treeFiles.toLong,
@@ -334,5 +334,86 @@ class LakeViewSyncSpec extends AnyFunSuite {
     assert(r.tablesSynced == 1 && !r.allSucceeded)
     assert(r.failures.size == 1 &&
       r.failures.values.head == LakeViewSync.FailureReason.NoSuchKey)
+  }
+
+  /** A `mocks3://` lake of one-commit tables `t1`…`tn` for the table-window
+    * specs; `onRegister` runs in the metastore hook, which each mirrored
+    * table calls last.
+    */
+  private def storeSync(bucket: String, n: Int, tableBatchSize: Int)(
+      onRegister: graft.model.HudiTable => Unit): (LakeViewSync.SyncConfig, Seq[graft.model.HudiTable]) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.mocks3.impl", classOf[MockObjectStoreFs].getName)
+    Seq(bucket, s"$bucket-mirror", s"$bucket-cp").foreach(MockObjectStoreFs.clear)
+    def put(uri: String, content: String = ""): Unit = {
+      val p = new org.apache.hadoop.fs.Path(uri)
+      val out = p.getFileSystem(conf).create(p, true)
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+    }
+    for (i <- 1 to n) {
+      put(s"mocks3://$bucket/db/t$i/.hoodie/hoodie.properties",
+        s"hoodie.table.name=t$i\nhoodie.table.type=COPY_ON_WRITE\n")
+      Seq("100.commit.requested", "100.commit.inflight", "100.commit")
+        .foreach(f => put(s"mocks3://$bucket/db/t$i/.hoodie/$f"))
+    }
+    val hook = new graft.jobs.MetastoreSync {
+      def register(s: org.apache.spark.sql.SparkSession, table: graft.model.HudiTable,
+          props: graft.model.HudiProperties, dir: String): Unit = onRegister(table)
+    }
+    val cfg = LakeViewSync.SyncConfig(
+      basePaths = Seq(TableDiscovery.BasePath("lake", "db", s"mocks3://$bucket/db")),
+      mirrorRoot = s"mocks3://$bucket-mirror", checkpointDir = s"mocks3://$bucket-cp",
+      tableBatchSize = tableBatchSize, metastore = Some(hook))
+    (cfg, TableDiscovery.discover(conf, cfg.basePaths, Nil))
+  }
+
+  private def tableOf(uri: String): Option[String] = "/db/(t\\d+)/".r.findFirstMatchIn(uri).map(_.group(1))
+
+  test("tableBatchSize bounds tables in flight: a freed slot takes the next table at once") {
+    val bucket = "window-lake"
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val (cfg, tables) = storeSync(bucket, 4, tableBatchSize = 2) { t =>
+      events.add(s"end ${t.absoluteTableUri.split('/').last}")
+    }
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    // a table starts at its first storage call; t1's two reads of its
+    // properties (the sync's, then the mirror's copy) are slow
+    MockObjectStoreFs.delayWhen = { uri =>
+      tableOf(uri).filter(started.add).foreach(t => events.add(s"start $t"))
+      if (uri == s"mocks3://$bucket/db/t1/.hoodie/hoodie.properties") 600L else 0L
+    }
+    val r = try LakeViewSync.syncTables(spark, cfg, tables)
+      finally MockObjectStoreFs.delayWhen = _ => 0L
+    val log = events.asScala.toSeq
+    val ends = log.filter(_.startsWith("end ")).map(_.stripPrefix("end "))
+    assert(ends.indexOf("t3") < ends.indexOf("t1") && ends.indexOf("t4") < ends.indexOf("t1"),
+      s"quick tables waited for the slow one: $log")
+    val inFlight = log.scanLeft(0)((n, e) => if (e.startsWith("start ")) n + 1 else n - 1)
+    assert(log.count(_.startsWith("start ")) == 4 && inFlight.max == 2, s"events: $log")
+    // the outcome does not depend on the order tables finish in
+    assert(r == LakeViewSync.SyncReport(4, 4, 16, allSucceeded = true))
+    val files = Seq("hoodie.properties", "100.commit.requested", "100.commit.inflight", "100.commit")
+    assert(MockObjectStoreFs.writes(s"$bucket-mirror").toSet ==
+      tables.flatMap(t => files.map(f => s"/${t.tableId}/active/$f")).toSet)
+  }
+
+  test("a fatal error in a table fails the run, and no queued table starts after it") {
+    val bucket = "fatal-lake"
+    final class InjectedVmError extends VirtualMachineError("injected fatal error")
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val (cfg, _) = storeSync(bucket, 3, tableBatchSize = 1) { t =>
+      if (t.absoluteTableUri.endsWith("/t1")) { events.add("fatal"); throw new InjectedVmError }
+    }
+    MockObjectStoreFs.delayWhen = { uri => events.add(uri); 0L }
+    val e = try intercept[Throwable](LakeViewSync.runOnce(spark, cfg))
+      finally {
+        Thread.sleep(200) // time for any table still running to call the store
+        MockObjectStoreFs.delayWhen = _ => 0L
+      }
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(_.isInstanceOf[InjectedVmError]))
+    val log = events.asScala.toSeq
+    assert(log.contains("fatal"))
+    val after = log.dropWhile(_ != "fatal").drop(1)
+    assert(!after.exists(u => tableOf(u).exists(Set("t2", "t3"))), s"calls after the fatal error: $after")
   }
 }

@@ -27,9 +27,10 @@ import org.apache.hadoop.util.Progressable
   * executors share it, which is what the specs run. So is the store's
   * instrumentation: per-bucket call counts by kind (every public call is
   * one round trip), the most calls ever in flight at once, the order in
-  * which written objects became visible, an injectable per-call delay, and
-  * two injectable faults on selected calls: a terminal one (access denied)
-  * and a transient one (a plain `IOException`, which the program retries).
+  * which written objects became visible, injectable per-call and per-path
+  * delays, and two injectable faults on selected calls: a terminal one
+  * (access denied) and a transient one (a plain `IOException`, which the
+  * program retries).
   */
 class MockObjectStoreFs extends FileSystem {
 
@@ -67,7 +68,8 @@ class MockObjectStoreFs extends FileSystem {
     MockObjectStoreFs.count(bucketName, kind)
     MockObjectStoreFs.enter(bucketName)
     try {
-      if (MockObjectStoreFs.callDelayMs > 0) Thread.sleep(MockObjectStoreFs.callDelayMs)
+      val delayMs = MockObjectStoreFs.callDelayMs + MockObjectStoreFs.delayWhen(uri)
+      if (delayMs > 0) Thread.sleep(delayMs)
       if (MockObjectStoreFs.failWhen(uri))
         throw new org.apache.hadoop.security.AccessControlException(s"injected fault: $uri")
       if (MockObjectStoreFs.transientFaultWhen(kind, uri))
@@ -281,6 +283,12 @@ object MockObjectStoreFs {
     * together overlap measurably ([[peakInFlight]]).
     */
   @volatile var callDelayMs: Long = 0L
+
+  /** A call on a `mocks3://bucket/key` uri sleeps this much longer while in
+    * flight, so one slow object can stand for a slow table. Every call asks,
+    * so the selector also sees each call's uri in the order calls start.
+    */
+  @volatile var delayWhen: String => Long = _ => 0L
 
   private class BytesSeekable(bytes: Array[Byte])
       extends java.io.ByteArrayInputStream(bytes) with Seekable with PositionedReadable {

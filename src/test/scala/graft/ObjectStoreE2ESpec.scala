@@ -4,15 +4,16 @@ import graft.model.TimelineType
 import graft.operators.{CheckpointStore, TableDiscovery, TimelineMirror}
 import graft.sources.{FsListing, HoodiePropertiesReader}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The full sync dataflow over a FOREIGN Hadoop scheme with object-store
   * semantics (`mocks3://`, [[MockObjectStoreFs]]): discovery, properties
-  * read, commit-atomic mirror, checkpoint resume, and DISTRIBUTED listing
-  * all resolve the store through `Path.getFileSystem` — the exact seam a
-  * real s3a/gs/abfss deployment uses — rather than short-circuiting onto
-  * local files. Catches scheme-portability bugs local-FS specs cannot:
-  * authority handling, conf serialization to executors, write-visibility
+  * read, commit-atomic mirror, checkpoint resume, and the driver-side
+  * `listDirs` all resolve the store through `Path.getFileSystem` — the
+  * exact seam a real s3a/gs/abfss deployment uses — rather than
+  * short-circuiting onto local files. Catches scheme-portability bugs
+  * local-FS specs cannot: authority handling, write-visibility
   * at stream close, and reliance on local listing order (this store lists
   * in strict lexicographic key order, like S3).
   */
@@ -90,18 +91,55 @@ class ObjectStoreE2ESpec extends AnyFunSuite {
     assert(new String(bytes, 0, n, "UTF-8").contains("hoodie.table.name=trips"))
   }
 
-  test("distributed listing reaches the store from executor tasks") {
+  test("listDirs lists every dir once, together, on the driver with no Spark job") {
     mkLake()
-    // listDirs serializes the Hadoop conf (incl. fs.mocks3.impl) into the
-    // tasks; each task resolves the scheme itself — the executor-side path
-    // a real object-store deployment exercises
-    val rows = FsListing.listDirs(spark,
-      Seq(s"$bucket/lake/db1/trips/.hoodie", s"$bucket/lake/db1/trips/.hoodie/archived"))
-      .collect()
-    val byDir = rows.groupBy(_._1).view.mapValues(_.map(_._2.filename).toSeq).toMap
-    assert(byDir(s"$bucket/lake/db1/trips/.hoodie").contains("100.commit"))
-    assert(byDir(s"$bucket/lake/db1/trips/.hoodie/archived").toSet ==
+    val hoodie = s"$bucket/lake/db1/trips/.hoodie"
+    val dirs = Seq(hoodie, s"$hoodie/archived", s"$bucket/lake/db1/noise")
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val before = MockObjectStoreFs.calls("warehouse")
+    sc.addSparkListener(listener)
+    val ds =
+      try {
+        MockObjectStoreFs.callDelayMs = 200L
+        sc.setJobGroup("list-dirs", "listDirs")
+        val listed =
+          try FsListing.listDirs(spark, dirs)
+          finally { sc.clearJobGroup(); MockObjectStoreFs.callDelayMs = 0L }
+        // the bus delivers in order: once the listener has seen a marker
+        // job, it has seen every job listDirs could have started
+        sc.setJobGroup("marker", "marker")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+        listed
+      } finally sc.removeSparkListener(listener)
+    assert(groups.contains("marker") && !groups.contains("list-dirs"))
+    // the listing is done when listDirs returns: one list per dir, together
+    assert(MockObjectStoreFs.callsSince("warehouse", before) == Map("list" -> 3L))
+    assert(MockObjectStoreFs.peakInFlight("warehouse") == dirs.size)
+    val byDir = ds.collect().groupBy(_._1).view.mapValues(_.map(_._2.filename).toSeq).toMap
+    assert(byDir(hoodie).contains("100.commit"))
+    assert(byDir(s"$hoodie/archived").toSet ==
       Set(".commits_.archive.2_1-0-1", ".commits_.archive.10_1-0-1"))
+    assert(byDir(s"$bucket/lake/db1/noise") == Seq("readme.txt"))
+    // reading the relation lists nothing again
+    assert(MockObjectStoreFs.callsSince("warehouse", before) == Map("list" -> 3L))
+  }
+
+  test("listDirs surfaces a failing dir's listing as its own exception") {
+    mkLake()
+    val archived = s"$bucket/lake/db1/trips/.hoodie/archived"
+    MockObjectStoreFs.failWhen = _ == archived
+    val e =
+      try intercept[org.apache.hadoop.security.AccessControlException](
+        FsListing.listDirs(spark, Seq(s"$bucket/lake/db1/trips/.hoodie", archived)))
+      finally MockObjectStoreFs.failWhen = _ => false
+    assert(e.getMessage.contains(archived))
   }
 
   test("listing order is lexicographic (S3 contract), and the batcher handles it") {
