@@ -595,51 +595,99 @@ object DedupQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
+  /** (doc_id, b, k): one row per band of each signature, `k` the band's
+    * lanes joined with `_`.
+    */
+  private def bandRows(sig: DataFrame): DataFrame =
+    sig.selectExpr("doc_id",
+      s"explode(transform(sequence(0, ${Bands - 1}), b -> named_struct(" +
+        s"'b', b, 'k', array_join(slice(sig, b * $RowsPerBand + 1, $RowsPerBand), '_')))) AS bk")
+      .select(col("doc_id"), col("bk.b").as("b"), col("bk.k").as("k"))
+
   /** [[minhashPairsFrom]] when the 16-lane minhash signature is already
     * materialized (doc_id, hs, sig) — the incremental-index path, where the
     * stored corpus side must NOT re-run minhash16 over its shingles.
     */
   private[graft] def minhashPairsFromSig(sig: DataFrame): DataFrame = {
-    val sh = sig
     // NOT persisted: the only consumers are the bucket-stats aggregation
     // and the marking join inside bandCandidates, which hash-partition
     // this same relation on (b, k) — exchange reuse runs the explode +
     // shuffle once, and the persisted artifact is the marked band table
-    val bands0 = sig.selectExpr("doc_id",
-      s"explode(transform(sequence(0, ${Bands - 1}), b -> named_struct(" +
-        s"'b', b, 'k', array_join(slice(sig, b * $RowsPerBand + 1, $RowsPerBand), '_')))) AS bk")
-      .select(col("doc_id"), col("bk.b").as("b"), col("bk.k").as("k"))
-    val pairs = bandCandidates(bands0, BandBucketCap)
-    pairs
-      .join(sh.select(col("doc_id").as("doc_a"), col("hs").as("ha")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("hs").as("hb")), "doc_b")
-      .withColumn("j", expr("size(array_intersect(ha, hb)) / size(array_union(ha, hb))"))
+    bandCandidates(bandRows(sig), BandBucketCap)
+      .join(sig.select(col("doc_id").as("doc_a"), col("hs").as("ha")), "doc_a")
+      .join(sig.select(col("doc_id").as("doc_b"), col("hs").as("hb")), "doc_b")
+      .withColumn("j", expr(JaccardS))
       .filter(col("j") >= 0.5)
   }
 
   /** [[minhashPairsFromSig]] restricted to pairs touching at least one doc
-    * in `newIds` — the incremental-index path, computed ASYMMETRICALLY so
-    * the restriction is pushed into candidate generation instead of applied
-    * after it. Semantics are identical to running the symmetric pipeline
-    * over `sig` and keeping new-touching pairs (what `MinHashIndexSpec`
-    * asserts), but the cost profile is the incremental one a 100 TB corpus
-    * needs: the under-cap self-join becomes newBands × bands (bucket-local,
-    * linear in the NEW batch's band memberships, not the corpus's), the
-    * exact-Jaccard verify only ever scores new-touching candidates, and the
-    * only full-corpus passes left are the columnar signature scan feeding
-    * the band explode and the map-side-combined bucket-size count — both
-    * O(corpus) with tiny constants, vs the O(Σ bucket²) pair mass the
-    * symmetric run pays. Bucket sizes, hot-bucket reps, and star semantics
-    * are still computed over the WHOLE union, exactly as from-scratch.
+    * in `newIds` — the incremental-index path, as (doc_a, doc_b, j).
+    * Semantics are identical to running the symmetric pipeline over `sig`
+    * and keeping new-touching pairs (what `MinHashIndexSpec` asserts):
+    * bucket sizes, hot-bucket reps and star semantics are computed over
+    * the WHOLE union, exactly as from-scratch.
+    *
+    * Two tiers, decided on `sig`'s row count first (a pruned count, no
+    * `hs` decode) and, only when the rows fit, on its total shingle count
+    * Σ|hs|: under [[MinhashLocalRows]] rows and [[MinhashLocalShingles]]
+    * shingles the whole step is ONE [[graft.operators.LocalTier]] task
+    * ([[touchingPairsLocal]]) — a streaming micro-batch against a small
+    * index otherwise pays 8–15 AQE jobs of fixed cost for a few hundred
+    * signatures. Larger inputs run [[minhashPairsTouchingDistributed]].
+    * Both tiers return the same multiset of rows (`MinHashTierSpec`).
     */
-  private[graft] def minhashPairsTouchingFromSig(sig: DataFrame, newIds: DataFrame): DataFrame = {
-    val bands0 = sig.selectExpr("doc_id",
-      s"explode(transform(sequence(0, ${Bands - 1}), b -> named_struct(" +
-        s"'b', b, 'k', array_join(slice(sig, b * $RowsPerBand + 1, $RowsPerBand), '_')))) AS bk")
-      .select(col("doc_id"), col("bk.b").as("b"), col("bk.k").as("k"))
+  private[graft] def minhashPairsTouchingFromSig(sig: DataFrame, newIds: DataFrame,
+      localRows: Long = MinhashLocalRows,
+      localShingles: Long = MinhashLocalShingles): DataFrame = {
+    import graft.operators.LocalTier
+    // each figure is one RDD fold over the pruned rows (count() would add
+    // an aggregate exchange, a second job); the row count reads no column
+    def total(c: org.apache.spark.sql.Column): Long =
+      sig.select(c.cast("long")).queryExecution.toRdd.map(_.getLong(0)).fold(0L)(_ + _)
+    val local = LocalTier.fits("minhash_touching_rows", total(lit(1)), localRows) &&
+      LocalTier.fits("minhash_touching_shingles",
+        total(when(col("hs").isNotNull, size(col("hs"))).otherwise(0)), localShingles)
+    if (!local) minhashPairsTouchingDistributed(sig, newIds)
+    else {
+      import sig.sparkSession.implicits._
+      // one input: the signature rows, then the new ids as marker rows (m).
+      // A Dataset operation, not an RDD: the result's plan keeps the
+      // signature scan the task reads. Not persisted — every caller has
+      // one consumer
+      sig.select(col("doc_id"), col("hs"), col("sig"), lit(false).as("m"))
+        .unionByName(newIds.select(col("doc_id"),
+          lit(null).cast(sig.schema("hs").dataType).as("hs"),
+          lit(null).cast(sig.schema("sig").dataType).as("sig"), lit(true).as("m")))
+        .as[(Long, Array[Long], Array[Long], Boolean)]
+        .coalesce(1)
+        .mapPartitions(touchingPairsLocal(_, BandBucketCap))
+        .toDF("doc_a", "doc_b", "j")
+    }
+  }
+
+  /** [[minhashPairsTouchingFromSig]]'s [[graft.operators.LocalTier]]
+    * bounds: signature rows, and shingles summed over them. At the bounds
+    * the task holds under 0.8 KB per row (id, 16-lane sig, bucket arrays,
+    * sort scratch) plus 8 B per shingle, and the boxed read copy of one
+    * row's `hs` — under 1 GiB (`GraphHeapSpec`).
+    */
+  val MinhashLocalRows: Long = 200000L
+  val MinhashLocalShingles: Long = 16000000L
+
+  /** The distributed tier of [[minhashPairsTouchingFromSig]], computed
+    * ASYMMETRICALLY so the new-touching restriction is pushed into
+    * candidate generation instead of applied after it: the under-cap
+    * self-join becomes newBands × bands (bucket-local, linear in the NEW
+    * batch's band memberships, not the corpus's), the exact-Jaccard verify
+    * only ever scores new-touching candidates, and the only full-corpus
+    * passes left are the columnar signature scan feeding the band explode
+    * and the map-side-combined bucket-size count — both O(corpus) with tiny
+    * constants, vs the O(Σ bucket²) pair mass the symmetric run pays.
+    */
+  private def minhashPairsTouchingDistributed(sig: DataFrame, newIds: DataFrame): DataFrame = {
     // one persisted marked band table (see markedBands) serves the
     // under-cap branches and the star, as in the symmetric pipeline
-    val marked = markedBands(bands0, BandBucketCap)
+    val marked = markedBands(bandRows(sig), BandBucketCap)
     val bands = marked.filter(col("rep").isNull)
       .select(col("doc_id"), col("b"), col("k"))
     // the new-batch id set: steady-state small next to the corpus, so it
@@ -669,9 +717,116 @@ object DedupQueries {
     underCap.unionByName(star).distinct()
       .join(sig.select(col("doc_id").as("doc_a"), col("hs").as("ha")), "doc_a")
       .join(sig.select(col("doc_id").as("doc_b"), col("hs").as("hb")), "doc_b")
-      .withColumn("j", expr("size(array_intersect(ha, hb)) / size(array_union(ha, hb))"))
+      .withColumn("j", expr(JaccardS))
       .filter(col("j") >= 0.5)
+      .select(col("doc_a"), col("doc_b"), col("j"))
   }
+
+  /** Exact Jaccard of two shingle sets; NULL (never kept) when both are
+    * empty, as the oracle's 0/0 — plain `/` throws under ANSI mode.
+    */
+  private val JaccardS = "try_divide(size(array_intersect(ha, hb)), size(array_union(ha, hb)))"
+
+  /** The single-task solve of [[minhashPairsTouchingFromSig]] over rows
+    * (doc_id, hs, sig, m): `m` rows carry only a new id, the rest are the
+    * signature rows. One pass of the distributed semantics: each band's
+    * buckets by sorting rows on the band's lanes; per bucket its size and
+    * rep = min(doc_id); then, per distinct doc id `a` in order, its
+    * partners `b > a` — under-cap bucket mates, and every member of a hot
+    * bucket `a` is the rep of — where `a` or `b` is new; then exact
+    * Jaccard over every row pair of the two ids, kept at `j >= 0.5`.
+    * No candidate set is materialized: a pair is emitted from its smaller
+    * id only, after that id's partners are deduplicated.
+    */
+  private def touchingPairsLocal(it: Iterator[(Long, Array[Long], Array[Long], Boolean)],
+      cap: Int): Iterator[(Long, Long, Double)] = {
+    val idB = Array.newBuilder[Long]
+    val newB = Array.newBuilder[Long]
+    val hsB = Array.newBuilder[Array[Long]]
+    val sigB = Array.newBuilder[Array[Long]]
+    it.foreach { case (id, h, sig, m) =>
+      if (m) newB += id
+      else {
+        idB += id
+        // a sorted set: array_intersect and array_union are set ops
+        hsB += (if (h == null) null else graft.operators.LocalTier.sortedIds(h))
+        sigB += sig
+      }
+    }
+    val ids = idB.result(); val hs = hsB.result(); val sigs = sigB.result()
+    val isNew = { val nw = graft.operators.LocalTier.sortedIds(newB.result())
+      (id: Long) => java.util.Arrays.binarySearch(nw, id) >= 0 }
+    val n = ids.length
+    // per band: each row's bucket (-1: no sig), bucket members (CSR), rep
+    val bucketOf = Array.fill(Bands)(Array.fill(n)(-1))
+    val members = new Array[Array[Int]](Bands)
+    val start = new Array[Array[Int]](Bands)
+    val rep = new Array[Array[Long]](Bands)
+    for (b <- 0 until Bands) {
+      val lo = b * RowsPerBand
+      val order = (0 until n).filter(sigs(_) != null).toArray
+        .sortWith((x, y) => laneCompare(sigs(x), sigs(y), lo) < 0)
+      val st = (order.indices.filter(i =>
+        i == 0 || laneCompare(sigs(order(i - 1)), sigs(order(i)), lo) != 0) :+ order.length).toArray
+      for (g <- 0 until st.length - 1; i <- st(g) until st(g + 1)) bucketOf(b)(order(i)) = g
+      members(b) = order
+      start(b) = st
+      rep(b) = Array.tabulate(st.length - 1)(g => (st(g) until st(g + 1)).map(i => ids(order(i))).min)
+    }
+    // rows in id order; run r (rows runs(r) until runs(r + 1)) is one id
+    val byId = (0 until n).sortBy(ids(_)).toArray
+    val sortedId = byId.map(ids)
+    val runs = ((0 until n).filter(k => k == 0 || sortedId(k) != sortedId(k - 1)) :+ n).toArray
+    val runId = runs.init.map(sortedId)
+    def rowsOf(r: Int) = (runs(r) until runs(r + 1)).iterator.map(byId)
+    runId.indices.iterator.flatMap { r =>
+      val a = runId(r)
+      val aNew = isNew(a)
+      val partners = Array.newBuilder[Long]
+      for (row <- rowsOf(r); b <- 0 until Bands; g = bucketOf(b)(row) if g >= 0) {
+        val hot = start(b)(g + 1) - start(b)(g) > cap
+        if (!hot || rep(b)(g) == a)
+          for (x <- start(b)(g) until start(b)(g + 1); id = ids(members(b)(x))
+               if id > a && (aNew || isNew(id)))
+            partners += id
+      }
+      graft.operators.LocalTier.sortedIds(partners.result()).iterator.flatMap { c =>
+        for (x <- rowsOf(r); y <- rowsOf(java.util.Arrays.binarySearch(runId, c));
+             j = jaccard(hs(x), hs(y)) if j >= 0.5)
+          yield (a, c, j)
+      }
+    }
+  }
+
+  /** Lexicographic order of two signatures' band lanes `[lo, lo + R)` —
+    * equal exactly when the distributed band keys are (a short signature's
+    * band is its lanes that exist, as `slice` cuts it).
+    */
+  private def laneCompare(x: Array[Long], y: Array[Long], lo: Int): Int = {
+    val nx = math.max(0, math.min(x.length, lo + RowsPerBand) - lo)
+    val ny = math.max(0, math.min(y.length, lo + RowsPerBand) - lo)
+    var i = 0
+    while (i < nx && i < ny) {
+      val c = java.lang.Long.compare(x(lo + i), y(lo + i))
+      if (c != 0) return c
+      i += 1
+    }
+    Integer.compare(nx, ny)
+  }
+
+  /** |x ∩ y| / |x ∪ y| of two sorted sets, as [[JaccardS]]: NaN (never
+    * kept) when either is NULL or both are empty.
+    */
+  private def jaccard(x: Array[Long], y: Array[Long]): Double =
+    if (x == null || y == null || x.length + y.length == 0) Double.NaN
+    else {
+      var i = 0; var k = 0; var inter = 0
+      while (i < x.length && k < y.length) {
+        val c = java.lang.Long.compare(x(i), y(k))
+        if (c == 0) { inter += 1; i += 1; k += 1 } else if (c < 0) i += 1 else k += 1
+      }
+      inter.toDouble / (x.length + y.length - inter)
+    }
 
   /** The two-table LSH projection (doc_id, qe, nrm, k2, b1, b2): ONE native
     * `hyperplane_key(qe, 2·Planes)` evaluation yields both tables' bucket

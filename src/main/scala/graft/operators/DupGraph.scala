@@ -125,7 +125,6 @@ object DupGraph {
     */
   def append(newDocs: DataFrame, indexPath: String): Unit = {
     MinHashIndex.newPairs(newDocs, s"$indexPath/sig")
-      .select(col("doc_a"), col("doc_b"), col("j"))
       .write.mode(SaveMode.Append).parquet(edgeDir(indexPath))
     MinHashIndex.append(newDocs, s"$indexPath/sig")
     graft.CacheTracker.releaseAll()
@@ -136,37 +135,25 @@ object DupGraph {
     * partition via dynamic partition overwrite, and the co-located
     * signature store folds through [[MinHashIndex.appendBatch]] (same
     * idempotence), so a REPLAYED batch rewrites exactly its own partitions
-    * instead of double-inserting edges. Replay determinism: the stored
-    * signature side anti-joins the batch's own doc_ids out before pairing,
-    * so a replay whose first attempt already folded the signatures sees
-    * exactly the pre-batch corpus — without the guard, the doubled
-    * signature rows would duplicate verify-join output and inflate bucket
-    * sizes past the cap. A graph driven through this method must use it
-    * for EVERY write including the first (as [[MinHashIndex.appendBatch]]:
-    * flat and partitioned layouts must not mix under one root).
+    * instead of double-inserting edges. Replay determinism is
+    * [[MinHashIndex.newPairsFromSig]]'s: its stored side anti-joins the
+    * batch's own doc_ids out, so a replay whose first attempt already
+    * folded the signatures sees exactly the pre-batch corpus. The batch is
+    * signed once, for its pairs and its index rows. A graph driven through
+    * this method must use it for EVERY write including the first (as
+    * [[MinHashIndex.appendBatch]]: flat and partitioned layouts must not
+    * mix under one root).
     */
   def appendBatch(newDocs: DataFrame, indexPath: String, batchId: Long): Unit = {
-    val spark = newDocs.sparkSession
     val sigPath = s"$indexPath/sig"
-    val newSig = graft.CacheTracker.track(
-      MinHashIndex.signatureRows(newDocs)
-        .select("doc_id", "hs", "sig")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val nid = newSig.select("doc_id").distinct()
-    val all =
-      if (StoreRoot.hasData(spark, sigPath))
-        MinHashIndex.signatures(spark, sigPath).select("doc_id", "hs", "sig")
-          .join(broadcast(nid), Seq("doc_id"), "left_anti")
-          .unionByName(newSig)
-      else newSig
-    graft.analytics.DedupQueries.minhashPairsTouchingFromSig(all, nid)
-      .select(col("doc_a"), col("doc_b"), col("j"))
+    val batchSig = MinHashIndex.batchSignatures(newDocs)
+    MinHashIndex.newPairsFromSig(batchSig, sigPath)
       .withColumn("batch_id", lit(batchId))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(edgeDir(indexPath))
-    MinHashIndex.appendBatch(newDocs, sigPath, batchId)
+    MinHashIndex.appendBatch(batchSig, sigPath, batchId)
     graft.CacheTracker.releaseAll()
   }
 

@@ -9,8 +9,8 @@ import scala.reflect.ClassTag
 /** The one single-task tier: an iterative operator whose whole input is
   * under its measured row bound solves it inside ONE executor task (never
   * on the driver) instead of paying a distributed round's fixed cost per
-  * iteration. The graph rows, components, BPE and distill keep their own
-  * solver, bound and distributed tier. Every caller's worst case at its
+  * iteration. The graph rows, components, BPE, distill and the incremental
+  * MinHash pair step keep their own solver, bound and distributed tier. Every caller's worst case at its
   * bound stays under 1 GiB of one task's heap (`GraphHeapSpec` pins it).
   */
 object LocalTier {

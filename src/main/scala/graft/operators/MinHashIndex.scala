@@ -19,13 +19,19 @@ import org.apache.spark.sql.functions._
   * that touch a new doc; [[append]] then folds the batch into the index for
   * the next arrival.
   *
-  * Scale shape: the stored side enters the band join straight from a
+  * Scale shape: the stored side enters the pair step straight from a
   * columnar scan of the signature parquet (band keys are a cheap slice of
   * the stored `sig` array — no re-tokenization, verified in the spec by
   * plan inspection); candidate generation stays per-bucket (never
   * all-pairs) with the same `BandBucketCap` star guard as the batch
   * pipeline, so a new doc landing in a 50+-way boilerplate bucket pairs
-  * with the bucket's representative instead of exploding.
+  * with the bucket's representative instead of exploding. The pair step
+  * has two tiers (`DedupQueries.minhashPairsTouchingFromSig`): while
+  * (stored ∪ new) holds at most `MinhashLocalRows` (200k) signature rows
+  * and `MinhashLocalShingles` (16M) shingles, it is ONE [[LocalTier]]
+  * task — a streaming micro-batch against a small index is bound by a
+  * distributed join's per-job fixed cost, not by data — and above either
+  * bound the distributed band join runs.
   *
   * Keying and build-once readiness are [[StoreRoot]]'s; a batch-driven
   * index ([[appendBatch]]) is ready once it holds data.
@@ -52,15 +58,19 @@ object MinHashIndex {
   def append(docs: DataFrame, indexPath: String): Unit = write(docs, indexPath, SaveMode.Append)
 
   /** [[append]] for at-least-once callers (streaming `foreachBatch`): the
-    * batch's signatures land under their own `batch_id=N` partition via
-    * dynamic partition overwrite, so a REPLAYED batch rewrites exactly its
-    * own partition instead of double-inserting signatures. An index driven
-    * through this method must use it for EVERY write including the first
-    * (mixing flat [[build]] output and partitioned batches under one root
-    * would give partition discovery conflicting directory depths).
+    * batch's signature rows — [[batchSignatures]]' rows, so a batch whose
+    * pairs came from [[newPairsFromSig]] is signed once — land under their
+    * own `batch_id=N` partition via dynamic partition overwrite, so a
+    * REPLAYED batch rewrites exactly its own partition instead of
+    * double-inserting signatures. An index driven through this method must
+    * use it for EVERY write including the first (mixing flat [[build]]
+    * output and partitioned batches under one root would give partition
+    * discovery conflicting directory depths).
     */
-  def appendBatch(docs: DataFrame, indexPath: String, batchId: Long): Unit = {
-    signatureRows(docs)
+  def appendBatch(batchSig: DataFrame, indexPath: String, batchId: Long): Unit = {
+    require(batchSig.columns.toSeq == Seq("doc_id", "hs", "sig", "n_tok"),
+      s"appendBatch takes signature rows, got ${batchSig.columns.mkString(", ")}")
+    batchSig
       .withColumn("batch_id", lit(batchId))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
@@ -94,6 +104,14 @@ object MinHashIndex {
   def delete(spark: SparkSession, indexPath: String, ids: DataFrame): Unit =
     StoreDelete(spark, sigDir(indexPath), "doc_id", ids, Seq("batch_id"))
 
+  /** A batch's signature rows (doc_id, hs, sig, n_tok), persisted: its
+    * tokenize → minhash lineage is the whole signature CPU of the batch,
+    * and it feeds both [[newPairsFromSig]] and [[appendBatch]].
+    */
+  private[graft] def batchSignatures(docs: DataFrame): DataFrame =
+    graft.CacheTracker.track(signatureRows(docs)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
   /** Verified near-dup pairs (doc_a < doc_b, exact Jaccard `j` >= 0.5)
     * between the new batch and the indexed corpus, and within the new batch
     * itself. Pairs of two already-indexed docs are excluded — they were
@@ -101,31 +119,34 @@ object MinHashIndex {
     * over (stored ∪ new), exactly as a from-scratch run over the combined
     * corpus would.
     */
-  def newPairs(newDocs: DataFrame, indexPath: String): DataFrame = {
-    val spark = newDocs.sparkSession
-    // persisted: the new batch's signature rows feed the union AND the
-    // new-doc flag joins below, and their lineage is the whole signature
-    // CPU for the batch
-    val newSig = graft.CacheTracker.track(
-      signatureRows(newDocs)
-        .select("doc_id", "hs", "sig")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val stored = signatures(spark, indexPath).select("doc_id", "hs", "sig")
-    // the union is deliberately NOT persisted: its stored side is a bare
-    // columnar scan, so each consumer's column pruning reaches the parquet
-    // reader — the band explode reads only (doc_id, sig), 16 small longs,
-    // and only the two Jaccard-verify sides ever decode the fat hs arrays.
-    // A persist here would materialize hs for every consumer (measured
-    // ~1.5x the whole query at 32x)
-    val all = stored.unionByName(newSig)
+  def newPairs(newDocs: DataFrame, indexPath: String): DataFrame =
+    newPairsFromSig(batchSignatures(newDocs), indexPath)
+
+  /** [[newPairs]] of a batch already signed ([[batchSignatures]]) — the one
+    * incremental pair entry every caller goes through. A missing or empty
+    * index is an empty stored side (the first batch bootstraps it), and the
+    * stored side anti-joins the batch's own ids out, so a replayed batch
+    * whose first attempt already folded its signatures sees exactly the
+    * pre-batch corpus: doubled signature rows would otherwise duplicate
+    * verify output and inflate bucket sizes past the cap.
+    */
+  private[graft] def newPairsFromSig(batchSig: DataFrame, indexPath: String,
+      localRows: Long = graft.analytics.DedupQueries.MinhashLocalRows): DataFrame = {
+    val spark = batchSig.sparkSession
+    val batch = batchSig.select("doc_id", "hs", "sig")
+    // deliberately NOT persisted: the stored side is a bare columnar scan,
+    // so each consumer's column pruning reaches the parquet reader — the
+    // row count reads no column, and on the distributed tier the band
+    // explode reads only (doc_id, sig)
+    val all =
+      if (StoreRoot.hasData(spark, indexPath))
+        signatures(spark, indexPath).select("doc_id", "hs", "sig")
+          .join(broadcast(batch.select("doc_id")), Seq("doc_id"), "left_anti")
+          .unionByName(batch)
+      else batch
     // asymmetric candidate generation: the new-touching restriction is
-    // pushed INTO the band join (new-side memberships × bucket) instead of
-    // filtering the symmetric pipeline's output, so stored×stored
-    // candidates are never generated, let alone Jaccard-verified — the
-    // difference between "incremental" meaning less CPU and meaning the
-    // same CPU plus a filter
-    graft.analytics.DedupQueries
-      .minhashPairsTouchingFromSig(all, newSig.select("doc_id"))
-      .select(col("doc_a"), col("doc_b"), col("j"))
+    // pushed INTO candidate generation, so stored×stored candidates are
+    // never generated, let alone Jaccard-verified
+    graft.analytics.DedupQueries.minhashPairsTouchingFromSig(all, batch.select("doc_id"), localRows)
   }
 }

@@ -338,10 +338,12 @@ object DocumentStream {
   def ingestBatch(batch: DataFrame, batchId: Long, indexPath: String,
       lakePath: String, minQuality: Double = 0.0): Unit = {
     val b = batch.select(col("docId").as("doc_id"), col("text"), col("eventTime"))
-    val survivors = indexSurvivors(b, indexPath)
+    val batchSig = graft.operators.MinHashIndex.batchSignatures(b)
+    // persisted: the lake landing and the index fold both read it
+    val survivors = graft.CacheTracker.track(indexSurvivors(b, batchSig, indexPath)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     landBatch(scoreCols(survivors), batchId, lakePath, minQuality)
-    graft.operators.MinHashIndex.appendBatch(
-      survivors.select(col("docId").as("doc_id"), col("text")), indexPath, batchId)
+    indexAppend(batchSig, survivors, indexPath, batchId)
     // a dedicated ingestion job owns its session: release the signature
     // projections this batch persisted (they are weak-ref tracked, so a
     // shared-session caller that skips this merely waits for GC)
@@ -350,44 +352,41 @@ object DocumentStream {
 
   /** Near-dup dedup of a (doc_id, text, eventTime) micro-batch against the
     * persistent index — the shared core of [[ingestBatch]] and
-    * [[curateBatch]]. Returns the surviving rows as (docId, text,
-    * eventTime). Drop policy as documented on [[ingestContinuous]]: stored
-    * doc wins a batch-stored pair, smaller id wins an in-batch pair.
+    * [[curateBatch]]. `batchSig` is the batch's one signature frame
+    * ([[graft.operators.MinHashIndex.batchSignatures]]); its pairs come
+    * from [[graft.operators.MinHashIndex.newPairsFromSig]], which
+    * bootstraps from a missing or empty index and solves a batch whose
+    * (stored ∪ new) signatures fit the local bound in one
+    * [[graft.operators.LocalTier]] task. Returns the surviving rows as
+    * (docId, text, eventTime). Drop policy as documented on
+    * [[ingestContinuous]]: stored doc wins a batch-stored pair, smaller id
+    * wins an in-batch pair.
     */
-  private def indexSurvivors(b: DataFrame, indexPath: String): DataFrame = {
-    import graft.operators.{MinHashIndex, StoreRoot}
-    val spark = b.sparkSession
-    // first batch bootstraps the index: no stored side yet, so near-dup
-    // pairs are the in-batch symmetric pipeline over the batch's own
-    // signatures (minhashPairsTouchingFromSig with every doc "new" is
-    // exactly that)
-    val pairs =
-      if (StoreRoot.hasData(spark, indexPath)) MinHashIndex.newPairs(b, indexPath)
-      else {
-        val sig = graft.CacheTracker.track(
-          MinHashIndex.signatureRows(b)
-            .select("doc_id", "hs", "sig")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        graft.analytics.DedupQueries
-          .minhashPairsTouchingFromSig(sig, sig.select("doc_id"))
-          .select(col("doc_a"), col("doc_b"), col("j"))
-      }
-    // every pair touches >= 1 batch doc; drop the batch side of a
-    // batch-stored pair (keep the corpus's first sighting), the larger id
-    // of an in-batch pair. Stored-stored pairs cannot occur.
-    val bids = b.select(col("doc_id")).distinct()
+  private def indexSurvivors(b: DataFrame, batchSig: DataFrame, indexPath: String): DataFrame = {
+    val pairs = graft.operators.MinHashIndex.newPairsFromSig(batchSig, indexPath)
+    // every pair touches >= 1 batch doc, so its doc_a is in the batch
+    // whenever its doc_b is not: drop doc_b if it is a batch doc (the
+    // larger id of an in-batch pair, or the batch side of a stored-batch
+    // one), else doc_a (the corpus keeps its first sighting). Both joins
+    // broadcast — a doc_id the batch holds twice only repeats a drop
     val drops = pairs
-      .join(broadcast(bids.select(col("doc_id").as("doc_a"), lit(true).as("a_new"))),
-        Seq("doc_a"), "left")
-      .join(broadcast(bids.select(col("doc_id").as("doc_b"), lit(true).as("b_new"))),
+      .join(broadcast(batchSig.select(col("doc_id").as("doc_b"), lit(true).as("b_new"))),
         Seq("doc_b"), "left")
-      .select(when(coalesce(col("a_new"), lit(false)) &&
-          !coalesce(col("b_new"), lit(false)), col("doc_a"))
-        .otherwise(col("doc_b")).as("doc_id"))
-      .distinct()
-    b.join(drops, Seq("doc_id"), "left_anti")
+      .select(when(col("b_new"), col("doc_b")).otherwise(col("doc_a")).as("doc_id"))
+    b.join(broadcast(drops), Seq("doc_id"), "left_anti")
       .select(col("doc_id").as("docId"), col("text"), col("eventTime"))
   }
+
+  /** Fold the survivors' rows of the batch's signature frame into the
+    * index, so each doc is signed once per batch; the broadcast semi-join
+    * keeps the frame's partitions and row order.
+    */
+  private def indexAppend(batchSig: DataFrame, survivors: DataFrame, indexPath: String,
+      batchId: Long): Unit =
+    graft.operators.MinHashIndex.appendBatch(
+      batchSig.join(broadcast(survivors.select(col("docId").as("doc_id"))),
+        Seq("doc_id"), "left_semi"),
+      indexPath, batchId)
 
   /** Per-batch curation report — the stream metric surface of
     * [[curateContinuous]]: first-drop counts per stage plus the landed
@@ -498,7 +497,13 @@ object DocumentStream {
   }
 
   /** The per-micro-batch body of [[curateContinuous]] — exposed so stage
-    * semantics and the replay path are directly testable.
+    * semantics and the replay path are directly testable. The near-dup
+    * stage signs the batch's stage survivors once
+    * ([[graft.operators.MinHashIndex.batchSignatures]]): that frame feeds
+    * the pair step — one [[graft.operators.LocalTier]] task while the
+    * (stored ∪ new) signatures stay within `DedupQueries.MinhashLocalRows`
+    * rows and `MinhashLocalShingles` shingles, the distributed band join
+    * above — and its survivors' rows fold into the index.
     */
   def curateBatch(
       batch: DataFrame,
@@ -550,16 +555,16 @@ object DocumentStream {
       .withDefaultValue(0L)
     val surv = pre.filter(col("reason").isNull)
       .select(col("doc_id"), col("text"), col("eventTime"))
+    val survSig = graft.operators.MinHashIndex.batchSignatures(surv)
     val survivors = graft.CacheTracker.track(
-      indexSurvivors(surv, indexPath)
+      indexSurvivors(surv, survSig, indexPath)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val landed = survivors.count()
     // score on the raw text (identical to the batch pipeline), scrub in
     // the final landing projection
     landBatch(scoreCols(survivors).withColumn("text", expr(scrubS("text"))),
       batchId, lakePath, minQuality = 0.0)
-    graft.operators.MinHashIndex.appendBatch(
-      survivors.select(col("docId").as("doc_id"), col("text")), indexPath, batchId)
+    indexAppend(survSig, survivors, indexPath, batchId)
     graft.CacheTracker.releaseAll()
     CurationBatchReport(batchId, counts.values.sum, counts("quality"),
       counts("repetition"), counts("contamination"),

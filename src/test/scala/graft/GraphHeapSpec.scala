@@ -45,6 +45,22 @@ class GraphHeapSpec extends AnyFunSuite {
     within("distill", analytics.TextQueries.DistillLocalRows * (7L * 8L + 16L + 8L))
   }
 
+  test("MinHash pair-step heap at its row and shingle bounds stays under the budget") {
+    // the bound covers Σ|hs|, not just rows: 8 B per stored shingle, plus
+    // the read copies of one row's hs (a 16 B boxed Long and a 4 B slot per
+    // element, the 8 B primitive copy, the 8 B sort copy), at worst every
+    // shingle in one row
+    val rows = analytics.DedupQueries.MinhashLocalRows
+    val shingles = analytics.DedupQueries.MinhashLocalShingles
+    val bytesPerRow =
+      24L + 40L + // id; new id (builder doubling + trimmed copy + sort copy)
+        (24L + 16L) + (24L + 16L + 16L * 8L) + // hs ref + header; sig ref + 16 lanes
+        4L * (4L + 4L + 12L + 56L) + // per band: bucket, member, start + rep, boxed sort scratch
+        (52L + 8L + 28L + 8L) + // id-order sort scratch, sorted ids, runs
+        4L * 8L * 3L // one id's partners: ≤ 4 buckets' members, builder + sorted copy
+    within("minhash pairs", rows * bytesPerRow + shingles * (8L + 16L + 4L + 8L + 8L))
+  }
+
   test("buildCsr round-trips adjacency with sorted-id indexing") {
     val es = Seq((5L, 2L), (2L, 5L), (9L, 2L), (2L, 9L), (5L, 9L), (9L, 5L))
     val (ids, off, nbr) = analytics.GraphQueries.buildCsr(

@@ -43,19 +43,65 @@ class MinHashIndexSpec extends AnyFunSuite {
   test("stored side reads the index parquet with sig/hs in the scan schema") {
     // the decisive proof that the stored side comes from the index, not a
     // re-tokenization, is behavioral (the append test: doc 2 is visible to
-    // batch 2 ONLY via the signature parquet). This pins the plan shape:
-    // the signature store is scanned, and the scan carries the stored hs
-    // and sig columns — i.e. the join consumes persisted signatures rather
-    // than recomputing them.
+    // batch 2 ONLY via the signature parquet). This pins the plan shape on
+    // both tiers: the signature store is scanned, and the scan carries the
+    // stored sig column — i.e. the pair step consumes persisted signatures
+    // rather than recomputing them. The local tier's one task reads the
+    // whole rows, hs included.
     val dir = java.nio.file.Files.createTempDirectory("mh_index_plan").toString
     MinHashIndex.build(docs.filter(col("doc_id") % 10 =!= 0), dir)
-    val plan = MinHashIndex.newPairs(docs.filter(col("doc_id") % 10 === 0), dir)
-      .queryExecution.executedPlan.toString
+    val batchSig = MinHashIndex.batchSignatures(docs.filter(col("doc_id") % 10 === 0))
+    def sigScan(localRows: Long) = {
+      val plan = MinHashIndex.newPairsFromSig(batchSig, dir, localRows)
+        .queryExecution.executedPlan.toString
+      val scan = plan.linesIterator.find(l =>
+        l.contains("FileScan parquet") && l.contains("signatures"))
+      assert(scan.isDefined, s"expected a signature-store scan in:\n$plan")
+      scan.get
+    }
+    val distributed = sigScan(localRows = -1L)
+    assert(distributed.contains("sig"), s"sig missing from scan: $distributed")
+    val local = sigScan(localRows = Long.MaxValue)
+    assert(local.contains("sig") && local.contains("hs"), s"sig/hs missing from scan: $local")
     graft.CacheTracker.releaseAll()
-    val sigScan = plan.linesIterator.find(l =>
-      l.contains("FileScan parquet") && l.contains("signatures"))
-    assert(sigScan.isDefined, s"expected a signature-store scan in:\n$plan")
-    assert(sigScan.get.contains("sig"), s"sig missing from scan: ${sigScan.get}")
+  }
+
+  test("a missing index bootstraps; a replayed batch sees only the pre-batch corpus") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mh_index_boot").toString + "/idx"
+    val text = "the quick brown fox jumps over the lazy dog and then naps all afternoon in the warm sun"
+    val batch = Seq((1L, text), (2L, text), (3L, "a wholly different sentence about column chunks and footers"))
+      .toDF("doc_id", "text")
+    // no index yet: the in-batch pairs alone
+    def pairs() = MinHashIndex.newPairs(batch, dir)
+      .select("doc_a", "doc_b", "j").collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(pairs() == Seq((1L, 2L, 1.0)))
+    // the batch folded in, then replayed: its own stored rows are not a
+    // second copy of it
+    MinHashIndex.appendBatch(MinHashIndex.batchSignatures(batch), dir, 0L)
+    assert(pairs() == Seq((1L, 2L, 1.0)))
+    graft.CacheTracker.releaseAll()
+  }
+
+  test("docs with empty shingle sets never pair, on either tier") {
+    import spark.implicits._
+    // under 3 tokens there is no trigram: every such doc has an empty hs
+    // and the same all-MaxValue signature, so they meet in every band and
+    // the verify's 0/0 must drop the pair rather than throw
+    val dir = java.nio.file.Files.createTempDirectory("mh_index_empty").toString
+    MinHashIndex.build(Seq((1L, "hello world")).toDF("doc_id", "text"), dir)
+    val fresh = Seq((2L, "foo bar"), (3L, "x y")).toDF("doc_id", "text")
+    assert(MinHashIndex.newPairs(fresh, dir).collect().isEmpty)
+    assert(MinHashIndex.newPairsFromSig(MinHashIndex.batchSignatures(fresh), dir, localRows = -1L)
+      .collect().isEmpty)
+    graft.CacheTracker.releaseAll()
+  }
+
+  test("the local and distributed pair tiers agree on the corpus's mod-10 split") {
+    val sig = MinHashIndex.signatureRows(docs).select("doc_id", "hs", "sig").cache()
+    val newIds = sig.filter(col("doc_id") % 10 === 0).select("doc_id").collect().map(_.getLong(0))
+    assert(MinHashTierSpec.bothTiers(sig, newIds.toSeq).nonEmpty)
+    sig.unpersist()
   }
 
   test("appended batches are dedup targets for later batches") {
