@@ -18,6 +18,8 @@ package graft
   * already materialized wherever a query's caches were populated at
   * explain time — read raw Exchange/Scan counts accordingly (structural
   * markers — store paths, join operators, PushedFilters — stay reliable).
+  * Per-session expression (`#12`) and exchange (`plan_id=3`) ids are
+  * stripped, so dumps of two commits compare with `diff -r`.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -31,7 +33,8 @@ object Explain {
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/$name.txt"), plan)
+          java.nio.file.Paths.get(s"$outDir/$name.txt"),
+          plan.replaceAll("#\\d+", "").replaceAll("plan_id=\\d+", "plan_id"))
         System.err.println(s"[explain] $name ok")
       } catch { case e: Throwable =>
         System.err.println(s"[explain] $name FAILED: ${e.getMessage}")

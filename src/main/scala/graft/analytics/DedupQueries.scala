@@ -2,6 +2,7 @@ package graft.analytics
 
 import graft.{QuerySpec, Tables}
 import graft.functions.TextFunctions._
+import graft.operators.CappedKeyPairs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -319,80 +320,16 @@ object DedupQueries {
     v
   }
 
-  /** Containment edges (doc_a, doc_b) of an arbitrary (doc_id, text) slice
-    * `u`: the dedup_containment_pairs rule — shingle containment >= 0.8
-    * with Jaccard < 0.6 (a proper excerpt, not a near-identical twin) —
-    * through the same DF-capped inverted-index join. Shared with
-    * [[GraphQueries]]' link-prediction query, whose wedges need this
-    * bipartite-ish excerpt→parent structure.
+  /** Containment edges (doc_a, doc_b) of per-doc shingle sets (doc_id, hs):
+    * the dedup_containment_pairs rule — containment >= 0.8 with Jaccard
+    * < 0.6, a proper excerpt — over [[CappedKeyPairs.sharedCounts]]. The
+    * excerpt→parent structure [[GraphQueries]]' link prediction wedges on.
     */
-  private[analytics] def containmentEdges(u: DataFrame): DataFrame =
-    containmentEdgesFromShingles(withShingles(u).select("doc_id", "hs"))
-
-  /** DF-capped posting buckets of per-doc shingle sets (doc_id, hs):
-    * (h, ds = SORTED doc_id array, |ds| <= [[ShingleDfCap]]). Round 12's
-    * replacement for the posting-list SELF-JOIN every inverted-index
-    * consumer ran (guide §2.3 "aggregate before you shuffle" / §2.4):
-    * the old `e ⋈ e ON h AND id< ` shape shuffle-SORTED the corpus-sized
-    * posting list on both sides of a SortMergeJoin; grouping instead pays
-    * ONE exchange of the same bytes into an ObjectHashAggregate, and pair
-    * generation becomes a bounded array expression downstream. The hot-set
-    * anti-join stays BEFORE the grouping (unchanged skew guard): a
-    * boilerplate shingle in millions of docs must never materialize a
-    * collect_list buffer — counts are map-side combined, the over-cap set
-    * is tiny and broadcasts. Deliberately NOT persisted: the two consumers
-    * (pair generation + per-doc universe counts) share the groupBy
-    * exchange via AQE's ReuseExchange, so the expensive map side (store
-    * scan → explode → anti-join → partial collect) runs ONCE with no
-    * cache to race on — A/B'd against lazy persist (cold-cache consumer
-    * races re-ran the full lineage) and eager persist (extra count job +
-    * cache materialization): unpersisted measured best at gate AND 64×
-    * (e.g. ngram_jaccard 64×: 8.05 s lazy / 11.7 s eager / 6.07 s none).
-    */
-  private def cappedShingleGroups(sh: DataFrame): DataFrame = {
-    val e0 = sh.select(col("doc_id"), explode(col("hs")).as("h"))
-    val hot = e0.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > ShingleDfCap).select(col("h"))
-    e0.join(hot, Seq("h"), "left_anti")
-      .groupBy(col("h")).agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-  }
-
-  /** All ordered pairs (doc_a < doc_b) within each bounded, sorted `ds`
-    * group — C(|ds|, 2) rows per bucket via a nested-transform expression
-    * (JVM array ops, no join, no sort; ascending `ds` makes array order ≡
-    * the old `x.doc_id < y.doc_id` join predicate). The partial aggregate
-    * of the downstream pair count combines map-side exactly as the join
-    * form did, so shuffle bytes are unchanged — what disappears is the
-    * second posting exchange and both SortMergeJoin sorts.
-    */
-  private[analytics] def pairsFromGroups(grouped: DataFrame): DataFrame =
-    grouped.filter(size(col("ds")) >= 2)
-      .select(explode(expr(
-        "flatten(transform(ds, (a, i) -> transform(slice(ds, i + 2, size(ds)), " +
-          "b -> named_struct('doc_a', a, 'doc_b', b))))")).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-
-  /** [[containmentEdges]] over caller-supplied per-doc shingle sets
-    * (doc_id, hs) — the store-reading entry: consumers whose real-doc
-    * shingles already sit in the persisted signature index pass
-    * `store.hs ∪ withShingles(derived docs)` and skip re-tokenizing the
-    * corpus side (shingling is per-row, so shingles-of-union ==
-    * union-of-shingles and the result is identical).
-    */
-  private[graft] def containmentEdgesFromShingles(sh: DataFrame): DataFrame = {
-    val grouped = cappedShingleGroups(sh)
-    val shared = pairsFromGroups(grouped)
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("shared"))
-    val n = grouped.select(explode(col("ds")).as("doc_id"))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    shared
-      .join(n.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(n.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+  private[graft] def containmentEdgesFromShingles(sh: DataFrame): DataFrame =
+    CappedKeyPairs.sharedCounts(sh, ShingleDfCap)
       .filter(expr("shared / least(na, nb)") >= 0.8 &&
         expr("shared / (na + nb - shared)") < 0.6)
       .select(col("doc_a"), col("doc_b"))
-  }
 
   /** doc_id + distinct 3-gram shingle hashes (the dedup unit). The explicit
     * repartition spreads the per-doc signature computation: a small parquet
@@ -547,7 +484,7 @@ object DedupQueries {
     *
     * Bucket-size cap as an anti-join against the (tiny) over-cap bucket
     * set instead of a count window — same rows kept, but no shuffle-sort
-    * of the full band table (see the DF-cap note in dedup_span). The
+    * of the full band table (the [[CappedKeyPairs.dropHot]] shape). The
     * over-cap buckets are NOT dropped wholesale: a >cap bucket is exactly
     * what a 50+-way-duplicated boilerplate clique produces, and silently
     * losing it loses the single most common real-world dup shape. Instead
@@ -1565,17 +1502,9 @@ object DedupQueries {
         // so the tokenize -> hash -> shingle pass leaves this plan; the
         // oracle recomputes from text, pinning store == recompute.
         // Round 12: posting buckets + bounded pair explode instead of the
-        // posting self-join — see [[cappedShingleGroups]]/[[pairsFromGroups]].
+        // posting self-join — see [[CappedKeyPairs.sharedCounts]].
         val sh = registrySignatures(s, d).select("doc_id", "hs")
-        val grouped = cappedShingleGroups(sh)
-        val shared = pairsFromGroups(grouped)
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("shared"))
-        val n = grouped.select(explode(col("ds")).as("doc_id"))
-          .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        shared
-          .join(n.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-          .join(n.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+        CappedKeyPairs.sharedCounts(sh, ShingleDfCap)
           .withColumn("j", expr("shared / (na + nb - shared)"))
           .filter(col("j") >= 0.6)
           .select(col("doc_a"), col("doc_b"), expr("floor(j * 1e6 + 0.5) / 1e6").as("jaccard"))
@@ -1628,15 +1557,9 @@ object DedupQueries {
         val sh = registrySignatures(s, d).select("doc_id", "hs")
           .unionByName(
             excerptSignatures(s, d, "exc_cont", excerpts).select("doc_id", "hs"))
-        val grouped = cappedShingleGroups(sh)
-        val shared = pairsFromGroups(grouped)
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("shared"))
-        val n = grouped.select(explode(col("ds")).as("doc_id"))
-          .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        shared
-          .join(n.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-          .join(n.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+        // the same capped shared counts as dedup_ngram_jaccard
+        // ([[CappedKeyPairs.sharedCounts]]), kept on the containment rule
+        CappedKeyPairs.sharedCounts(sh, ShingleDfCap)
           .withColumn("cont", expr("shared / least(na, nb)"))
           .withColumn("j", expr("shared / (na + nb - shared)"))
           .filter(col("cont") >= 0.8 && col("j") < 0.6)
@@ -1686,7 +1609,6 @@ object DedupQueries {
     // at 100 TB the diagonal grouping keys are tiny next to the corpus.
     "dedup_span" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         // positions are 1-based to match the oracle's generate_series.
         // Round 12: ONE eager tokenize — the old shape tokenized twice
         // (hot-set count + the cached posting list) and raced its cache;
@@ -1702,30 +1624,11 @@ object DedupQueries {
         val pc0 = base
           .select(col("doc_id"), posexplode(col("hs")).as(Seq("pos0", "h")))
           .withColumn("pos", col("pos0") + 1).drop("pos0")
-        // DF cap as an anti-join against the (tiny) over-cap hash set rather
-        // than a count window (no shuffle-sort of the posting list); then —
-        // round 12, the cappedShingleGroups move — matches come from each
-        // capped h-bucket's SORTED (doc_id, pos) array instead of the
-        // positional self-join, dropping the second posting exchange and
-        // both SortMergeJoin sorts. Ascending struct order ≡ the old
-        // x.doc_id < y.doc_id predicate (same-doc entries are filtered —
-        // a shingle repeating within one document never matched itself).
-        val hot = pc0.groupBy(col("h")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > ShingleDfCap).select(col("h"))
-        val grouped = pc0.join(hot, Seq("h"), "left_anti")
-          .groupBy(col("h"))
-          .agg(sort_array(collect_list(struct(col("doc_id"), col("pos")))).as("ds"))
-        val m = grouped.filter(size(col("ds")) >= 2)
-          .select(explode(expr(
-            "flatten(transform(ds, (x, i) -> " +
-              "transform(filter(slice(ds, i + 2, size(ds)), y -> y.doc_id != x.doc_id), " +
-              "y -> named_struct('doc_a', x.doc_id, 'doc_b', y.doc_id, " +
-              "'pa', x.pos, 'diag', x.pos - y.pos))))")).as("p"))
-          .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-            col("p.pa").as("pa"), col("p.diag").as("diag"))
-        val wr = Window.partitionBy(col("doc_a"), col("doc_b"), col("diag"))
-          .orderBy(col("pa"))
-        m.withColumn("grp", col("pa") - row_number().over(wr))
+        // round 12: matches come from each DF-capped h-bucket's SORTED
+        // (doc_id, pos) array instead of the positional self-join, dropping
+        // the second posting exchange and both SortMergeJoin sorts — see
+        // [[CappedKeyPairs.positionalPairs]]; runs by [[CappedKeyPairs.runIds]]
+        CappedKeyPairs.runIds(CappedKeyPairs.positionalPairs(pc0, ShingleDfCap), "pa")
           .groupBy(col("doc_a"), col("doc_b"), col("diag"), col("grp"))
           .agg((count(lit(1)) + 2).as("span_tokens"))
           .groupBy(col("doc_a"), col("doc_b"))
@@ -1777,7 +1680,6 @@ object DedupQueries {
     // a whole document family in memory.
     "dedup_exact_substr" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         // round 12: eager — base feeds the hot-set pass, the bucket
         // grouping AND the final per-source rollup (3 independent
@@ -1791,24 +1693,10 @@ object DedupQueries {
           .persist(MEMORY_AND_DISK))
         val pc0 = base.select(col("doc_id"), posexplode(col("hs")).as(Seq("pos0", "h")))
           .withColumn("pos", col("pos0") + 1).drop("pos0")
-        val hot = pc0.groupBy(col("h")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > ShingleDfCap).select(col("h"))
         // matches from each capped bucket's sorted (doc_id, pos) array —
-        // the dedup_span round-12 move; see that query's comment
-        val grouped = pc0.join(hot, Seq("h"), "left_anti")
-          .groupBy(col("h"))
-          .agg(sort_array(collect_list(struct(col("doc_id"), col("pos")))).as("ds"))
-        val m = grouped.filter(size(col("ds")) >= 2)
-          .select(explode(expr(
-            "flatten(transform(ds, (x, i) -> " +
-              "transform(filter(slice(ds, i + 2, size(ds)), y -> y.doc_id != x.doc_id), " +
-              "y -> named_struct('doc_a', x.doc_id, 'doc_b', y.doc_id, " +
-              "'pa', x.pos, 'diag', x.pos - y.pos))))")).as("p"))
-          .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-            col("p.pa").as("pa"), col("p.diag").as("diag"))
-        val wr = Window.partitionBy(col("doc_a"), col("doc_b"), col("diag"))
-          .orderBy(col("pa"))
-        val isl = m.withColumn("grp", col("pa") - row_number().over(wr))
+        // dedup_span's shape, see [[CappedKeyPairs.positionalPairs]]; the
+        // islands keep their first/last position for the removal explode
+        val isl = CappedKeyPairs.runIds(CappedKeyPairs.positionalPairs(pc0, ShingleDfCap), "pa")
           .groupBy(col("doc_a"), col("doc_b"), col("diag"), col("grp"))
           .agg(min(col("pa")).as("fa"), max(col("pa")).as("la"),
             (count(lit(1)) + 2).as("span_tokens"))
@@ -1907,16 +1795,15 @@ object DedupQueries {
             "transform(ps, p -> struct(p AS pos, element_at(sh, cast(p AS int)) AS h))"))
           .select(col("doc_id"), explode(col("pf")).as("f"))
           .select(col("doc_id"), col("f.pos").as("pos"), col("f.h").as("h"))
-        val hot = fp0.groupBy(col("h")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > ShingleDfCap).select(col("h"))
         // Round 12: the dedup_span grouped-pair-explode conversion was
         // A/B'd HERE and LOST (gate 1.42-1.49 s self-join vs 2.26-2.79 s
         // grouped; 64x 6.9-7.6 s vs 29.3 s) — winnowed postings are ~0.4x
         // of span's mass, the winnow-selection HOF dominates this row's
         // cost, and the grouped explode's per-bucket slice copies cost
         // more than the (cached, small) posting self-join they replace.
-        // Kept in the measured-faster self-join form.
-        val fp = graft.CacheTracker.track(fp0.join(hot, Seq("h"), "left_anti")
+        // Kept in the measured-faster self-join form; only the DF cap is
+        // shared ([[CappedKeyPairs.dropHot]]).
+        val fp = graft.CacheTracker.track(CappedKeyPairs.dropHot(fp0, "h", ShingleDfCap)
           .persist(MEMORY_AND_DISK))
         val m = fp.as("x")
           .join(fp.as("y"), col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))

@@ -622,7 +622,7 @@ object GraphQueries {
         // second exchange and both SortMergeJoin sorts; ascending order ≡
         // the old p.x < q.x predicate (guide §2.3/§2.4). Map-side partial
         // aggregation of the (doc_a, doc_b) counts is unchanged.
-        val cn = DedupQueries.pairsFromGroups(
+        val cn = graft.operators.CappedKeyPairs.pairsFromGroups(
           centers.groupBy(col("ctr"))
             .agg(sort_array(collect_list(col("x"))).as("ds")))
           .groupBy(col("doc_a"), col("doc_b"))

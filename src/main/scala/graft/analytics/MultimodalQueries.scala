@@ -2,7 +2,8 @@ package graft.analytics
 
 import graft.{QuerySpec, Tables}
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.SparkSession
+import graft.operators.CappedKeyPairs
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column queries over derived binary payloads (see
@@ -18,8 +19,14 @@ object MultimodalQueries {
 
   /** mm_video_pairs: a frame hash held by more than this many videos is
     * boilerplate (title cards, black frames) — candidate noise, never a
-    * clip signal. Same anti-join cap shape as dedup_span's ShingleDfCap. */
+    * clip signal ([[CappedKeyPairs.dropHot]], as dedup_span's ShingleDfCap). */
   private val VideoFrameDfCap = 20
+
+  /** The 56-bit `h` cut into 4 × 14-bit bands: rows (`keep`…, b, k). */
+  private def phashBands(h: DataFrame, keep: String*): DataFrame =
+    h.select(keep.map(col) :+ explode(expr("transform(sequence(0, 3), b -> " +
+        "named_struct('b', b, 'k', shiftright(h, 14 * b) & 16383))")).as("bk"): _*)
+      .select(keep.map(col) ++ Seq(col("bk.b").as("b"), col("bk.k").as("k")): _*)
 
   /** Near-dup pairs from a 56-bit perceptual-hash table `h(doc_id, h)`:
     * 4 × 14-bit banded LSH (complete for hamming ≤ 3 by pigeonhole) through
@@ -31,13 +38,8 @@ object MultimodalQueries {
     * grids into the SAME packing — `MultimodalPhashSpec` drives actually
     * perturbed PNGs through this exact pipeline).
     */
-  private[graft] def phashPairsFromHashes(h: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val bands0 = h.select(col("doc_id"),
-      explode(expr("transform(sequence(0, 3), b -> " +
-        "named_struct('b', b, 'k', shiftright(h, 14 * b) & 16383))")).as("bk"))
-      .select(col("doc_id"), col("bk.b").as("b"), col("bk.k").as("k"))
-    DedupQueries.bandCandidates(bands0, DedupQueries.BandBucketCap)
+  private[graft] def phashPairsFromHashes(h: DataFrame): DataFrame = {
+    DedupQueries.bandCandidates(phashBands(h, "doc_id"), DedupQueries.BandBucketCap)
       .join(h.select(col("doc_id").as("doc_a"), col("h").as("ha")), "doc_a")
       .join(h.select(col("doc_id").as("doc_b"), col("h").as("hb")), "doc_b")
       .withColumn("hamming", expr("bit_count(ha ^ hb)"))
@@ -57,13 +59,8 @@ object MultimodalQueries {
     * exact clip logic `mm_video_pairs` oracle-checks on the stand-in.
     */
   private[graft] def clipPairsFromFrameHashes(
-      fr: org.apache.spark.sql.DataFrame, hamMax: Int, minClip: Int)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bands = fr.select(col("vid"), col("fi"), col("h"),
-      explode(expr("transform(sequence(0, 3), b -> " +
-        "named_struct('b', b, 'k', shiftright(h, 14 * b) & 16383))")).as("bk"))
-      .select(col("vid"), col("fi"), col("h"), col("bk.b").as("b"), col("bk.k").as("k"))
+      fr: DataFrame, hamMax: Int, minClip: Int): DataFrame = {
+    val bands = phashBands(fr, "vid", "fi", "h")
     val m = bands.as("x")
       .join(bands.as("y"),
         col("x.b") === col("y.b") && col("x.k") === col("y.k") &&
@@ -72,9 +69,7 @@ object MultimodalQueries {
       .select(col("x.vid").as("vid_a"), col("y.vid").as("vid_b"),
         col("x.fi").as("fa"), (col("x.fi") - col("y.fi")).as("diag"))
       .distinct()
-    val wr = Window.partitionBy(col("vid_a"), col("vid_b"), col("diag"))
-      .orderBy(col("fa"))
-    m.withColumn("grp", col("fa") - row_number().over(wr))
+    CappedKeyPairs.runIds(m, "fa", "vid_a", "vid_b")
       .groupBy(col("vid_a"), col("vid_b"), col("diag"), col("grp"))
       .agg(count(lit(1)).as("clip_frames"))
       .groupBy(col("vid_a"), col("vid_b"))
@@ -316,24 +311,19 @@ object MultimodalQueries {
     // partitions by (pair, diag) — clip-sized state, never corpus-sized.
     "mm_video_pairs" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         // frame hashes come from the store, NOT a per-query decode; the
         // boilerplate df cap is computed over the store scan at read time
         // (stored uncapped — df must reflect the store's current corpus,
         // not the statistics at build/append time)
         val fr0 = graft.operators.MediaGraph.frames(s, store(s, d))
-        val hot = fr0.groupBy(col("h")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > VideoFrameDfCap).select(col("h"))
-        val fr = graft.CacheTracker.track(fr0.join(hot, Seq("h"), "left_anti")
-          .persist(MEMORY_AND_DISK))
+        val fr = graft.CacheTracker.track(
+          CappedKeyPairs.dropHot(fr0, "h", VideoFrameDfCap).persist(MEMORY_AND_DISK))
         val m = fr.as("x")
           .join(fr.as("y"), col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
           .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
             col("x.fi").as("fa"), (col("x.fi") - col("y.fi")).as("diag"))
-        val wr = Window.partitionBy(col("doc_a"), col("doc_b"), col("diag"))
-          .orderBy(col("fa"))
-        m.withColumn("grp", col("fa") - row_number().over(wr))
+        CappedKeyPairs.runIds(m, "fa")
           .groupBy(col("doc_a"), col("doc_b"), col("diag"), col("grp"))
           .agg(count(lit(1)).as("clip_frames"))
           .groupBy(col("doc_a"), col("doc_b"))

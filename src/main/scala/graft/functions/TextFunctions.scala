@@ -103,12 +103,6 @@ object TextFunctions {
   def dotD(a: String, b: String): String =
     s"CAST(list_sum(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i])) AS BIGINT)"
 
-  /** cosine from quantized vectors: exact integer dot/norms, one double div. */
-  def cosineS(dot: String, na: String, nb: String): String =
-    s"round($dot / (sqrt($na) * sqrt($nb)), 6)"
-  def cosineD(dot: String, na: String, nb: String): String =
-    s"round($dot / (sqrt($na) * sqrt($nb)), 6)"
-
   // ---- quality scoring -----------------------------------------------------
   // One definition for the batch query, the curation job, and the streaming
   // scorer: same stopword list, weights, length cap, and floor-form

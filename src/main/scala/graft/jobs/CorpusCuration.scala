@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.functions.TextFunctions._
 import graft.operators.ConnectedComponents
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus curation: the composed pipeline a training run actually
@@ -180,6 +180,18 @@ object CorpusCuration {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
+  /** Rows of a persisted frame per `reason` ("kept" where null, 0 where
+    * absent) in one job with no shuffle: each task counts its partition,
+    * the driver adds the maps. A `groupBy(reason).count()` runs as three
+    * AQE jobs, even over a micro-batch of a few hundred rows.
+    */
+  private[graft] def reasonCounts(flagged: DataFrame): Map[String, Long] =
+    flagged.select(col("reason")).mapPartitions(_.foldLeft(Map.empty[String, Long]) { (n, r) =>
+      val k = Option(r.getString(0)).getOrElse("kept")
+      n.updated(k, n.getOrElse(k, 0L) + 1)
+    }.iterator)(Encoders.tuple(Encoders.STRING, Encoders.scalaLong)).collect()
+      .groupMapReduce(_._1)(_._2)(_ + _).withDefaultValue(0L)
+
   /** @return (curated corpus with scrubbed text, per-stage drop report) */
   def curate(
       docs: DataFrame,
@@ -187,9 +199,7 @@ object CorpusCuration {
       cfg: CurationConfig = CurationConfig()): (DataFrame, CurationReport) = {
     val flagged = flag(docs, nearDupPairs, cfg)
 
-    val counts = flagged.groupBy(col("reason")).count().collect()
-      .map(r => Option(r.getString(0)).getOrElse("kept") -> r.getLong(1)).toMap
-      .withDefaultValue(0L)
+    val counts = reasonCounts(flagged)
     val report = CurationReport(
       input = counts.values.sum,
       kept = counts("kept"),

@@ -91,9 +91,14 @@ object MinHashIndex {
     graft.analytics.DedupQueries.signatureRows(docs)
   }
 
-  /** The stored signature rows (doc_id, hs, sig, n_tok). */
+  /** The stored signature rows (doc_id, hs, sig, n_tok), plus `batch_id`
+    * on an [[appendBatch]] index. The read takes the storage schema rather
+    * than inferring it, which runs a footer-reading Spark job; partition
+    * columns are still discovered from the directory names.
+    */
   def signatures(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(sigDir(indexPath))
+    spark.read.schema("doc_id BIGINT, hs ARRAY<BIGINT>, sig ARRAY<BIGINT>, n_tok INT")
+      .parquet(sigDir(indexPath))
 
   /** Remove a set of doc_ids from the index (retention / takedown): the
     * next [[newPairs]] batch can no longer collide with them — identical

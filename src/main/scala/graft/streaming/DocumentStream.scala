@@ -550,9 +550,7 @@ object DocumentStream {
           .when(col("contam_frac") > cfg.minContamFrac, "contamination"))
       .select(col("doc_id"), col("text"), col("eventTime"), col("reason"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val counts = pre.groupBy(col("reason")).count().collect()
-      .map(r => Option(r.getString(0)).getOrElse("kept") -> r.getLong(1)).toMap
-      .withDefaultValue(0L)
+    val counts = graft.jobs.CorpusCuration.reasonCounts(pre)
     val surv = pre.filter(col("reason").isNull)
       .select(col("doc_id"), col("text"), col("eventTime"))
     val survSig = graft.operators.MinHashIndex.batchSignatures(surv)

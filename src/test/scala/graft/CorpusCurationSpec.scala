@@ -135,4 +135,20 @@ class CorpusCurationSpec extends AnyFunSuite {
       .contains("PartitionFilters: [isnotnull(lang"))
     assert(en.count() == curated.filter(col("lang") === "en").count())
   }
+
+  test("reasonCounts counts a persisted frame per reason in one job") {
+    import spark.implicits._
+    val flagged = Seq[(Long, Option[String])]((1L, None), (2L, Some("quality")),
+      (3L, None), (4L, Some("repetition")), (5L, Some("quality")))
+      .toDF("doc_id", "reason").repartition(3)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    flagged.count()
+    val (counts, jobs) = JobCount.of(spark)(CorpusCuration.reasonCounts(flagged))
+    val want = flagged.groupBy("reason").count().collect()
+      .map(r => Option(r.getString(0)).getOrElse("kept") -> r.getLong(1)).toMap
+    assert(counts == want)
+    assert(counts("contamination") == 0L)
+    assert(jobs == 1, s"reasonCounts launched $jobs jobs")
+    flagged.unpersist()
+  }
 }

@@ -1,13 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import graft.jobs.LakeViewSync
 import graft.operators.TableDiscovery
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Discovery's storage round trips on the object store
@@ -78,29 +73,10 @@ class DiscoveryRoundTripSpec extends AnyFunSuite {
     mkLake()
     val cfg = LakeViewSync.SyncConfig(basePaths = basePaths, excludePatterns = excludes,
       mirrorRoot = s"mocks3://$Mirror", checkpointDir = s"mocks3://$Cp")
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      // jobs from this thread, and from the threads it starts, carry the group
-      sc.setJobGroup("sync-ticks", "sync ticks")
-      val (full, noop) =
-        try (LakeViewSync.runOnce(spark, cfg), LakeViewSync.runOnce(spark, cfg))
-        finally sc.clearJobGroup()
-      assert(full.allSucceeded && full.tablesSynced == 4 && full.filesMirrored == 16)
-      assert(noop.allSucceeded && noop.filesMirrored == 0)
-      // the bus delivers in order: once the listener has seen a marker job
-      // started after the ticks, it has seen every job the ticks started
-      sc.setJobGroup("marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains("marker"))
-      assert(groups.asScala.count(_ == "sync-ticks") == 0)
-    } finally sc.removeSparkListener(listener)
+    val ((full, noop), jobs) = JobCount.of(spark)(
+      (LakeViewSync.runOnce(spark, cfg), LakeViewSync.runOnce(spark, cfg)))
+    assert(full.allSucceeded && full.tablesSynced == 4 && full.filesMirrored == 16)
+    assert(noop.allSucceeded && noop.filesMirrored == 0)
+    assert(jobs == 0)
   }
 }

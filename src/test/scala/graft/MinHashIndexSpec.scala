@@ -130,6 +130,28 @@ class MinHashIndexSpec extends AnyFunSuite {
     assert(MinHashIndex.signatures(spark, dir).count() == 4)
   }
 
+  test("signatures reads both layouts with the storage schema and launches no job") {
+    import spark.implicits._
+    val rows = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "a wholly different sentence about column chunks and footers"))
+      .toDF("doc_id", "text")
+    val flat = java.nio.file.Files.createTempDirectory("mh_index_flat").toString
+    MinHashIndex.build(rows, flat)
+    val parted = java.nio.file.Files.createTempDirectory("mh_index_parted").toString
+    MinHashIndex.appendBatch(MinHashIndex.signatureRows(rows.filter($"doc_id" === 1L)), parted, 0L)
+    MinHashIndex.appendBatch(MinHashIndex.signatureRows(rows.filter($"doc_id" === 2L)), parted, 1L)
+    for (dir <- Seq(flat, parted)) {
+      val (got, jobs) = JobCount.of(spark)(MinHashIndex.signatures(spark, dir))
+      assert(jobs == 0, s"$dir: the read launched $jobs jobs")
+      val inferred = spark.read.parquet(s"$dir/signatures")
+      assert(got.schema == inferred.schema)
+      def sorted(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("doc_id").collect().map(_.toSeq).toSeq
+      assert(sorted(got) == sorted(inferred))
+    }
+    assert(MinHashIndex.signatures(spark, parted).columns.last == "batch_id")
+  }
+
   test("ensure is idempotent and the store key is corpus-stable") {
     val p1 = StoreRoot.key(spark, sf, MinHashIndex.Kind, "mod10")
     val p2 = StoreRoot.key(spark, sf, MinHashIndex.Kind, "mod10")

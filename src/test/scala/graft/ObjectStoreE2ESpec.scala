@@ -4,7 +4,6 @@ import graft.model.TimelineType
 import graft.operators.{CheckpointStore, TableDiscovery, TimelineMirror}
 import graft.sources.{FsListing, HoodiePropertiesReader}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The full sync dataflow over a FOREIGN Hadoop scheme with object-store
@@ -95,30 +94,12 @@ class ObjectStoreE2ESpec extends AnyFunSuite {
     mkLake()
     val hoodie = s"$bucket/lake/db1/trips/.hoodie"
     val dirs = Seq(hoodie, s"$hoodie/archived", s"$bucket/lake/db1/noise")
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
     val before = MockObjectStoreFs.calls("warehouse")
-    sc.addSparkListener(listener)
-    val ds =
-      try {
-        MockObjectStoreFs.callDelayMs = 200L
-        sc.setJobGroup("list-dirs", "listDirs")
-        val listed =
-          try FsListing.listDirs(spark, dirs)
-          finally { sc.clearJobGroup(); MockObjectStoreFs.callDelayMs = 0L }
-        // the bus delivers in order: once the listener has seen a marker
-        // job, it has seen every job listDirs could have started
-        sc.setJobGroup("marker", "marker")
-        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-        listed
-      } finally sc.removeSparkListener(listener)
-    assert(groups.contains("marker") && !groups.contains("list-dirs"))
+    MockObjectStoreFs.callDelayMs = 200L
+    val (ds, jobs) =
+      try JobCount.of(spark)(FsListing.listDirs(spark, dirs))
+      finally MockObjectStoreFs.callDelayMs = 0L
+    assert(jobs == 0)
     // the listing is done when listDirs returns: one list per dir, together
     assert(MockObjectStoreFs.callsSince("warehouse", before) == Map("list" -> 3L))
     assert(MockObjectStoreFs.peakInFlight("warehouse") == dirs.size)
