@@ -184,7 +184,7 @@ object GraphQueries {
       : Iterator[org.apache.spark.sql.Row] = {
     val (ids, off, nbr) = buildCsr(src, dst)
     val n = ids.length
-    var r = Array.fill(n)(Scale / n)
+    val r = Array.fill(n)(Scale / n)
     for (_ <- 1 to iters) {
       val m = new Array[Long](n)
       var v = 0

@@ -3,7 +3,7 @@ package graft.analytics
 import graft.{QuerySpec, Tables}
 import graft.fixtures.TimelineFixture
 import graft.functions.InstantFunctions._
-import graft.model.{Checkpoint, UploadStrategy}
+import graft.model.UploadStrategy
 import graft.operators.ActiveTimelineBatcher
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

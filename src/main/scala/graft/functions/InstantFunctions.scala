@@ -111,13 +111,6 @@ object InstantFunctions {
     */
   def groupKey(filename: Column): Column = instantTs(filename)
 
-  /** O1: sort key putting hoodie.properties first, then lexical filename —
-    * valid because instant names start with digits ('' < '0')
-    * (ActiveTimelineInstantBatcher.java:226-237).
-    */
-  def propertiesFirstSortKey(filename: Column): Column =
-    when(filename === HoodiePropertiesFile, lit("")).otherwise(filename)
-
   // --- P6/P7: URI & path helpers -------------------------------------------
   /** P6: extract bucket / path from s3|s3a|gs|abfss|wasb URIs.
     * Reference storage/StorageUtils.java:25-66, pattern StorageConstants.java:16-17.

@@ -194,16 +194,12 @@ object SketchAggregators {
     def add(name: String, f: => org.apache.spark.sql.expressions.UserDefinedFunction): Unit =
       if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
         spark.udf.register(name, f)
-    implicit lazy val inEnc: Encoder[Seq[Long]] = ExpressionEncoder()
     add("minhash_union", org.apache.spark.sql.functions.udaf(MinHashUnion))
-    implicit lazy val topkEnc: Encoder[(Double, Long, Int)] = ExpressionEncoder()
     add("top7_by_score", org.apache.spark.sql.functions.udaf(new TopKByScore(7)))
-    implicit lazy val topkLongEnc: Encoder[(Long, Long)] = ExpressionEncoder()
     add("top11_by_long", org.apache.spark.sql.functions.udaf(new TopKByLongScore(11)))
     // KMV sketch width (evt_kmv_overlap): top-64 by negated hash = the 64
     // smallest hash values, map-side-combined in bounded 64-entry buffers
     add("top64_by_long", org.apache.spark.sql.functions.udaf(new TopKByLongScore(64)))
-    implicit lazy val strEnc: Encoder[String] = ExpressionEncoder()
     add("mg63", org.apache.spark.sql.functions.udaf(new MisraGries(63)))
   }
 }

@@ -31,21 +31,6 @@ final case class HudiTable(
     timelineLayoutVersion: Int = 1
 )
 
-/** Parsed active-timeline instant (projection of a FileEntry filename).
-  * Reference: metadata_extractor/ActiveTimelineInstantBatcher.java:299-308.
-  * `ts`/`completionTs` stay STRING: Hudi instant ids are fixed-width numeric
-  * strings that can exceed Long (compare via DECIMAL(38,0) casts).
-  */
-final case class TimelineInstant(
-    ts: String,
-    completionTs: String, // null unless table version >= 8 completed instant
-    action: String,
-    state: String,
-    filename: String,
-    lastModifiedAt: Timestamp,
-    isDirectory: Boolean
-)
-
 /** Per-(table, timelineType) incremental progress.
   * Reference: metadata_extractor/models/Checkpoint.java:13-23. JSON codec in
   * [[graft.operators.CheckpointStore]] round-trips the reference's Jackson shape.
@@ -98,13 +83,6 @@ object UploadStrategy {
   case object BlockOnIncompleteCommit extends UploadStrategy
   case object ContinueOnIncompleteCommit extends UploadStrategy
 }
-
-/** A file assigned to an upload batch by the batcher (G4/G5). */
-final case class BatchedFile(
-    batchId: Int,
-    filename: String,
-    lastModifiedAt: Timestamp
-)
 
 /** Batcher output: batched files plus the resume watermark for
   * CONTINUE_ON_INCOMPLETE_COMMIT mode (reference

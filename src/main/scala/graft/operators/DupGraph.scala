@@ -89,10 +89,9 @@ object DupGraph {
         org.apache.spark.sql.types.StructField("j", org.apache.spark.sql.types.DoubleType),
         org.apache.spark.sql.types.StructField("batch_id", org.apache.spark.sql.types.LongType))))
 
-  /** [[build]] plus a co-located [[MinHashIndex]] signature store, enabling
-    * incremental maintenance: a graph that took a full-corpus LSH pipeline
-    * to build should FOLD each arriving batch in ([[append]]), not rebuild.
-    * Layout: `indexPath/sig/…` (signatures), `indexPath/edges/…`.
+  /** [[build]] plus a co-located [[MinHashIndex]] signature store, the
+    * from-scratch form of the store [[appendBatch]] grows one batch at a
+    * time. Layout: `indexPath/sig/…` (signatures), `indexPath/edges/…`.
     */
   def buildFrom(docs: DataFrame, indexPath: String): Unit = {
     val spark = docs.sparkSession
@@ -105,37 +104,28 @@ object DupGraph {
     graft.CacheTracker.releaseAll()
   }
 
-  /** Fold a new document batch into a [[buildFrom]] store: the asymmetric
-    * incremental pipeline ([[MinHashIndex.newPairs]] — new-side band
+  /** Fold a document batch into the store incrementally: the asymmetric
+    * pipeline ([[MinHashIndex.newPairsFromSig]] — new-side band
     * memberships against (stored ∪ new) buckets, stored-stored candidates
-    * never generated) yields the batch's verified new-touching pairs,
-    * which append to the edge log; the batch's signatures then fold into
-    * the index so the NEXT batch dedups against this one too.
+    * never generated) yields the batch's verified new-touching edges,
+    * which land under their own `batch_id=N` partition via dynamic
+    * partition overwrite; the co-located signature store then folds the
+    * batch in through [[MinHashIndex.appendBatch]] (same idempotence), so
+    * the NEXT batch dedups against this one too and a REPLAYED batch
+    * rewrites exactly its own partitions instead of double-inserting
+    * edges.
     *
     * Semantics: the store is an append-only edge LOG — the union of each
     * batch's sightings under the bucket statistics in force when it
     * arrived. While every bucket stays under the cap this equals a
-    * from-scratch rebuild exactly (`GraphQueriesSpec` pins it); once a
-    * bucket crosses the cap, a rebuild would retroactively re-shape that
-    * bucket's OLD pairs into a star, whereas the log keeps the richer
-    * already-verified pairs and adds the new star sightings — connected
-    * components and dedup decisions only ever gain edges, never lose
-    * verified ones, which is the property an incremental curation pipeline
-    * needs (earlier dedup decisions must not silently un-happen).
-    */
-  def append(newDocs: DataFrame, indexPath: String): Unit = {
-    MinHashIndex.newPairs(newDocs, s"$indexPath/sig")
-      .write.mode(SaveMode.Append).parquet(edgeDir(indexPath))
-    MinHashIndex.append(newDocs, s"$indexPath/sig")
-    graft.CacheTracker.releaseAll()
-  }
-
-  /** [[append]] for at-least-once callers (streaming `foreachBatch`): the
-    * batch's verified new-touching edges land under their own `batch_id=N`
-    * partition via dynamic partition overwrite, and the co-located
-    * signature store folds through [[MinHashIndex.appendBatch]] (same
-    * idempotence), so a REPLAYED batch rewrites exactly its own partitions
-    * instead of double-inserting edges. Replay determinism is
+    * from-scratch [[buildFrom]] exactly (`GraphQueriesSpec`,
+    * `DupGraphIngestSpec`); once a bucket crosses the cap, a rebuild
+    * would retroactively re-shape that bucket's OLD pairs into a star,
+    * whereas the log keeps the richer already-verified pairs and adds the
+    * new star sightings — connected components and dedup decisions only
+    * ever gain edges, never lose verified ones, which is the property an
+    * incremental curation pipeline needs (earlier dedup decisions must not
+    * silently un-happen). Replay determinism is
     * [[MinHashIndex.newPairsFromSig]]'s: its stored side anti-joins the
     * batch's own doc_ids out, so a replay whose first attempt already
     * folded the signatures sees exactly the pre-batch corpus. The batch is
@@ -165,8 +155,8 @@ object DupGraph {
     * docs never joined, minus any connectivity they alone provided (a
     * star's hub deletion correctly splits its clique — those pairs were
     * only ever sighted through the hub). Propagates to the co-located
-    * [[buildFrom]] signature store so future [[append]] batches can no
-    * longer collide with deleted docs either.
+    * signature store so future [[appendBatch]] batches can no longer
+    * collide with deleted docs either.
     *
     * Label-store propagation: a maintained label store must not keep
     * serving rows for deleted docs, nor keep SURVIVOR components merged
@@ -206,9 +196,6 @@ object DupGraph {
   // The maintenance machinery itself lives in [[LabelStore]] (extracted in
   // round 11 so the media fingerprint graph carries the same tier); this
   // store keeps thin delegates bound to its `indexPath/labels` root.
-
-  /** Label-store bucket count (see [[LabelStore.Buckets]]). */
-  val LabelBuckets: Int = LabelStore.Buckets
 
   private def labelDir(indexPath: String) = s"$indexPath/labels"
 

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * bytes, and the ONLY thing dedup needs from a document); [[newPairs]]
   * signatures just the new batch and runs the band equi-join / hot-bucket
   * star / exact-Jaccard-verify pipeline over (stored ∪ new), keeping pairs
-  * that touch a new doc; [[append]] then folds the batch into the index for
-  * the next arrival.
+  * that touch a new doc; [[appendBatch]] then folds the batch into the
+  * index for the next arrival.
   *
   * Scale shape: the stored side enters the pair step straight from a
   * columnar scan of the signature parquet (band keys are a cheap slice of
@@ -50,22 +50,20 @@ object MinHashIndex {
   private def sigDir(indexPath: String) = s"$indexPath/signatures"
 
   /** Overwrite the index with `docs`' signatures. */
-  def build(docs: DataFrame, indexPath: String): Unit = write(docs, indexPath, SaveMode.Overwrite)
+  def build(docs: DataFrame, indexPath: String): Unit =
+    signatureRows(docs).write.mode(SaveMode.Overwrite).parquet(sigDir(indexPath))
 
-  /** Fold a processed batch into the index (call after [[newPairs]] so the
-    * next batch dedups against this one too).
-    */
-  def append(docs: DataFrame, indexPath: String): Unit = write(docs, indexPath, SaveMode.Append)
-
-  /** [[append]] for at-least-once callers (streaming `foreachBatch`): the
-    * batch's signature rows — [[batchSignatures]]' rows, so a batch whose
-    * pairs came from [[newPairsFromSig]] is signed once — land under their
-    * own `batch_id=N` partition via dynamic partition overwrite, so a
-    * REPLAYED batch rewrites exactly its own partition instead of
-    * double-inserting signatures. An index driven through this method must
-    * use it for EVERY write including the first (mixing flat [[build]]
-    * output and partitioned batches under one root would give partition
-    * discovery conflicting directory depths).
+  /** Fold a processed batch into the index, after its pairs, so the next
+    * batch dedups against this one too. It takes the batch's signature
+    * rows — [[batchSignatures]]' rows, so a batch whose pairs came from
+    * [[newPairsFromSig]] is signed once — and lands them under their own
+    * `batch_id=N` partition via dynamic partition overwrite, so a
+    * REPLAYED batch (streaming `foreachBatch` is at-least-once) rewrites
+    * exactly its own partition instead of double-inserting signatures. An
+    * index driven through this method must use it for EVERY write
+    * including the first (mixing flat [[build]] output and partitioned
+    * batches under one root would give partition discovery conflicting
+    * directory depths).
     */
   def appendBatch(batchSig: DataFrame, indexPath: String, batchId: Long): Unit = {
     require(batchSig.columns.toSeq == Seq("doc_id", "hs", "sig", "n_tok"),
@@ -77,9 +75,6 @@ object MinHashIndex {
       .partitionBy("batch_id")
       .parquet(sigDir(indexPath))
   }
-
-  private def write(docs: DataFrame, indexPath: String, mode: SaveMode): Unit =
-    signatureRows(docs).write.mode(mode).parquet(sigDir(indexPath))
 
   /** `docs`' signature rows (doc_id, hs, sig, n_tok) in the index's storage
     * schema, with the native functions installed on their session — the

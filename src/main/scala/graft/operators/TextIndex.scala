@@ -22,9 +22,8 @@ import org.apache.spark.sql.functions._
   * count in every other document's normalization — identical to a
   * from-scratch build over the union (the spec pins this).
   *
-  * Contract: appended batches carry doc_ids disjoint from the stored set
-  * (same as [[MinHashIndex.append]]); re-appending a doc would double its
-  * postings. Keying and build-once readiness are [[StoreRoot]]'s.
+  * Contract: appended batches carry doc_ids disjoint from the stored set;
+  * re-appending a doc would double its postings. Keying and build-once readiness are [[StoreRoot]]'s.
   */
 object TextIndex {
 

@@ -25,8 +25,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   * Every fan-out over [[listDir]] runs on the driver's shared [[IoPool]]:
   * discovery lists a BFS level's directories together, and [[listDirs]] the
-  * directories a Spark query reads. The executor-side listing path is the
-  * `graft-listing` DataSource ([[ListingSource]]).
+  * directories a Spark query reads.
   *
   * [[readObject]] is the extractor's one whole-object read (properties,
   * `_version_`, manifests, checkpoints). All but [[listDirs]] take a Hadoop

@@ -5,7 +5,6 @@ import java.sql.Timestamp
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming form of the LLM-training-data document pipeline: the batch
   * text/dedup operators re-expressed over an unbounded document stream.
@@ -58,84 +57,6 @@ object DocumentStream {
       .withWatermark("eventTime", watermarkDelay)
       .dropDuplicatesWithinWatermark("content_hash")
 
-  /** A near-duplicate sighting on the stream: `docB` arrived after `docA`
-    * and matched it in some LSH band with estimated Jaccard `estJaccard`.
-    */
-  final case class NearDup(docA: Long, docB: Long, estJaccard: Double)
-
-  /** Per-bucket LSH state: member ids + stride-K flattened signatures.
-    * Primitive-only Seqs (they serialize tighter than nested Products) and
-    * public — the state-encoder's generated deserializer cannot call a
-    * private constructor.
-    */
-  final case class BucketState(ids: Seq[Long], sigsFlat: Seq[Long])
-
-  /** Streaming MinHash+LSH near-dup detection — the batch candidate
-    * pipeline (`dedup_minhash_lsh`) as a stateful stream. Each document's
-    * 16-hash MinHash signature is split into 4 bands; the stream is keyed
-    * by (band, band-key) so state and shuffle are per-bucket, exactly like
-    * the batch band equi-join. A bucket's state holds the most recent
-    * `bucketCap` (docId, signature) members (the same cap that guards the
-    * batch join against degenerate buckets — FIFO eviction bounds state at
-    * `buckets x cap` regardless of stream age); an arriving document is
-    * compared against its bucket's members by signature-agreement fraction
-    * (the MinHash Jaccard estimate) and emits a pair per match. The same
-    * pair can surface from several bands — downstream consumers dedupe on
-    * (docA, docB), which is itself a watermarked `dropDuplicates`.
-    */
-  def nearDupPairs(
-      docs: Dataset[DocEvent],
-      simThreshold: Double = 0.5,
-      bucketCap: Int = 50): Dataset[NearDup] = {
-    val spark = docs.sparkSession
-    graft.functions.VectorExpressions.register(spark)
-    import spark.implicits._
-    val sigs = docs.toDF()
-      .withColumn("t", expr(tokensS("text")))
-      .withColumn("th", expr(tokenHashesS("t")))
-      .withColumn("sig", expr("minhash16(array_distinct(shingle3_hash(th)))"))
-      .select(col("docId"), col("sig"))
-      .as[(Long, Seq[Long])]
-    val banded = sigs.flatMap { case (id, sig) =>
-      sig.grouped(4).zipWithIndex.map { case (band, b) =>
-        (s"$b:${band.mkString("_")}", id, sig)
-      }
-    }
-    val stride = K // 16-hash MinHash signature
-    banded.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, it: Iterator[(String, Long, Seq[Long])],
-         state: GroupState[BucketState]) => {
-          var ids = state.getOption.map(_.ids.toVector).getOrElse(Vector.empty[Long])
-          var flat = state.getOption.map(_.sigsFlat.toVector).getOrElse(Vector.empty[Long])
-          val out = Seq.newBuilder[NearDup]
-          it.foreach { case (_, id, sig) =>
-            if (!ids.contains(id)) {
-              var i = 0
-              while (i < ids.length) {
-                val off = i * stride
-                var eq = 0
-                var j = 0
-                while (j < stride) { if (flat(off + j) == sig(j)) eq += 1; j += 1 }
-                val est = eq.toDouble / stride
-                if (est >= simThreshold) {
-                  out += NearDup(math.min(ids(i), id), math.max(ids(i), id), est)
-                }
-                i += 1
-              }
-              ids = ids :+ id
-              flat = flat ++ sig
-              if (ids.length > bucketCap) { // FIFO eviction bounds state
-                ids = ids.drop(1)
-                flat = flat.drop(stride)
-              }
-            }
-          }
-          state.update(BucketState(ids, flat))
-          out.result().iterator
-        })
-  }
-
   /** Event-time windowed corpus health: volume, token throughput, and mean
     * quality per window — the streaming twin of `txt_corpus_rollup`.
     */
@@ -185,13 +106,11 @@ object DocumentStream {
     * index ([[graft.operators.MinHashIndex]]): each micro-batch is
     * near-dup-checked against the ENTIRE indexed corpus at exact-Jaccard
     * precision, duplicates are dropped, and the survivors land in the lake
-    * AND fold into the index for the next batch. This is the missing
-    * horizon tier between [[dedupExact]] (exact matches, watermark-bounded
-    * history) and [[nearDupPairs]] (near-dups, per-bucket FIFO-capped
-    * in-memory history): here the dedup state IS the signature store, so
-    * the horizon is the full corpus history and survives restarts with no
-    * state-store migration — a new query against the same index resumes
-    * exactly.
+    * AND fold into the index for the next batch. Where [[dedupExact]]
+    * remembers exact matches for a watermark horizon, here the dedup state
+    * IS the signature store, so the horizon is the full corpus history and
+    * survives restarts with no state-store migration — a new query against
+    * the same index resumes exactly.
     *
     * Drop policy (deterministic): a batch doc that near-dups a STORED doc
     * is dropped (the corpus keeps its first sighting); for in-batch pairs
@@ -250,8 +169,8 @@ object DocumentStream {
     * answer "how duplicated was the raw crawl". While every band bucket
     * stays under the cap the accumulated store equals a from-scratch
     * [[graft.analytics.DedupQueries.minhashPairs]] run over everything
-    * ingested (`DupGraphIngestSpec` pins it), the same log semantics as
-    * [[graft.operators.DupGraph.append]].
+    * ingested (`DupGraphIngestSpec` pins it), with the edge-log semantics
+    * of [[graft.operators.DupGraph.appendBatch]].
     */
   def graphContinuous(
       docs: Dataset[DocEvent],

@@ -59,29 +59,6 @@ class DocumentStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming LSH flags a near-dup arriving in a later micro-batch") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val ms = MemoryStream[DocEvent]
-    val q = DocumentStream.nearDupPairs(ms.toDS())
-      .writeStream.format("memory").queryName("nd").outputMode("append").start()
-    try {
-      val text = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
-      ms.addData(
-        doc(1, text, "2024-07-23 10:00:00"),
-        doc(5, "one two three four five six seven eight nine ten eleven twelve", "2024-07-23 10:00:05"))
-      q.processAllAvailable()
-      assert(spark.sql("SELECT * FROM nd").count() == 0)
-
-      // identical content arrives later: every band collides, est = 1.0
-      ms.addData(doc(9, text, "2024-07-23 10:01:00"))
-      q.processAllAvailable()
-      val pairs = spark.sql("SELECT DISTINCT docA, docB, estJaccard FROM nd")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      assert(pairs == Seq((1L, 9L, 1.0)))
-    } finally q.stop()
-  }
-
   test("windowed corpus stats aggregate by event time") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -131,47 +108,6 @@ class DocumentStreamSpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters: [isnotnull(day"))
     } finally q.stop()
-  }
-
-  test("streaming LSH near-dup pairs match batch dedup_minhash_lsh on the same corpus") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.functions.TextFunctions._
-    import spark.implicits._
-    val sf = "/root/testdata/sf0.001"
-    // stream the whole corpus in two micro-batches (cross-batch state is the
-    // point); threshold 0 emits EVERY banded candidate so the batch side's
-    // exact-Jaccard >= 0.5 rule can be applied identically afterwards
-    val corpus = Tables.t(spark, sf, "documents").select("doc_id", "text")
-      .collect().map(r => DocEvent(r.getLong(0), r.getString(1),
-        java.sql.Timestamp.valueOf("2024-07-23 10:00:00")))
-    val ms = MemoryStream[DocEvent]
-    val q = DocumentStream.nearDupPairs(ms.toDS(), simThreshold = 0.0, bucketCap = 10000)
-      .writeStream.format("memory").queryName("parity_pairs").outputMode("append").start()
-    try {
-      val (first, second) = corpus.splitAt(corpus.length / 2)
-      ms.addData(first.toSeq: _*); q.processAllAvailable()
-      ms.addData(second.toSeq: _*); q.processAllAvailable()
-    } finally q.stop()
-    val cand = spark.sql("SELECT DISTINCT docA AS doc_a, docB AS doc_b FROM parity_pairs")
-    // exact verification — the same hs + Jaccard >= 0.5 rule minhashPairs uses
-    val sh = Tables.t(spark, sf, "documents")
-      .withColumn("t", expr(tokensS("text")))
-      .withColumn("hs", expr(s"array_distinct(shingle3_hash(${tokenHashesS("t")}))"))
-      .select("doc_id", "hs")
-    val streamed = cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("hs").as("ha")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("hs").as("hb")), "doc_b")
-      .withColumn("j", expr("size(array_intersect(ha, hb)) / size(array_union(ha, hb))"))
-      .filter(col("j") >= 0.5)
-      .select("doc_a", "doc_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = graft.analytics.DedupQueries.minhashPairs(spark, sf)
-      .select("doc_a", "doc_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(streamed == batch,
-      s"stream-only: ${streamed -- batch}; batch-only: ${batch -- streamed}")
-    assert(batch.nonEmpty, "corpus should contain planted near-dups")
   }
 
   test("landBatch replay with the same batch id is idempotent") {

@@ -63,16 +63,16 @@ class GraphQueriesSpec extends AnyFunSuite {
       .select(col("doc_a"), col("doc_b"),
         expr("floor(j * 1e6 + 0.5) / 1e6").as("j"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // build on 90%, fold the 10% batch in
-    DupGraph.buildFrom(docs.filter(col("doc_id") % 10 =!= 0), incPath)
-    DupGraph.append(docs.filter(col("doc_id") % 10 === 0), incPath)
+    // grow an empty store batch by batch: 90% first, then the 10% batch
+    DupGraph.appendBatch(docs.filter(col("doc_id") % 10 =!= 0), incPath, 0)
+    DupGraph.appendBatch(docs.filter(col("doc_id") % 10 === 0), incPath, 1)
     // rebuild from scratch over the full corpus
     DupGraph.buildFrom(docs, fullPath)
     val inc = edgeSet(incPath)
     val full = edgeSet(fullPath)
     assert(full.nonEmpty)
     assert(inc === full)
-    // a second append round keeps folding (next batch sees the first)
+    // the second batch folded against the first: degrees agree too
     val incDeg = DupGraph.edges(spark, incPath)
       .select(explode(array(col("doc_a"), col("doc_b"))).as("n"))
       .groupBy("n").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

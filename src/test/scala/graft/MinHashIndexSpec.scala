@@ -114,19 +114,23 @@ class MinHashIndexSpec extends AnyFunSuite {
     val batch2 = Seq((3L, text), (4L, "another singleton document mentioning parquet footers and column chunks and row groups only"))
       .toDF("doc_id", "text")
 
-    MinHashIndex.build(batch0, dir)
+    // each batch is signed once, paired against the index, then folded in
+    val sig0 = MinHashIndex.batchSignatures(batch0)
+    MinHashIndex.appendBatch(sig0, dir, 0)
     assert(StoreRoot.hasData(spark, dir))
     // batch1 arrives: no dups yet
-    val p1 = MinHashIndex.newPairs(batch1, dir).collect()
+    val sig1 = MinHashIndex.batchSignatures(batch1)
+    val p1 = MinHashIndex.newPairsFromSig(sig1, dir).collect()
     assert(p1.isEmpty, s"got ${p1.toSeq}")
-    MinHashIndex.append(batch1, dir)
-    // batch2 duplicates doc 2, which arrived by APPEND, not build
-    val p2 = MinHashIndex.newPairs(batch2, dir)
+    MinHashIndex.appendBatch(sig1, dir, 1)
+    // batch2 duplicates doc 2, which arrived by a later batch, not the first
+    val sig2 = MinHashIndex.batchSignatures(batch2)
+    val p2 = MinHashIndex.newPairsFromSig(sig2, dir)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    graft.CacheTracker.releaseAll()
     assert(p2 == Set((2L, 3L)), s"got $p2")
     // folding batch2 in completes the cycle: all four docs' signatures stored
-    MinHashIndex.append(batch2, dir)
+    MinHashIndex.appendBatch(sig2, dir, 2)
+    graft.CacheTracker.releaseAll()
     assert(MinHashIndex.signatures(spark, dir).count() == 4)
   }
 
