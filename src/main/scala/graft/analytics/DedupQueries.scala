@@ -2,7 +2,7 @@ package graft.analytics
 
 import graft.{QuerySpec, Tables}
 import graft.functions.TextFunctions._
-import graft.operators.CappedKeyPairs
+import graft.operators.{CappedKeyPairs, QuantizedVectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -775,9 +775,7 @@ object DedupQueries {
     */
   private def twoTableProjection(s: SparkSession, d: String): DataFrame = {
     val p = SimilarityQueries.resolvePlanes(s, d)
-    graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-      .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-      .withColumn("nrm", expr("long_dot(qe, qe)"))
+    graft.CacheTracker.track(QuantizedVectors.normed(emb(s, d))
       .withColumn("k2", expr(s"hyperplane_key(qe, ${2 * p})"))
       .withColumn("b1", expr(s"k2 & ${(1L << p) - 1}"))
       .withColumn("b2", expr(s"shiftright(k2, $p)"))
@@ -1862,9 +1860,7 @@ object DedupQueries {
         // repartition: the streamed side of the pair join must be spread
         // across tasks — one small parquet split would serialize the O(n^2)
         // dot products onto a single core
-        val q = Tables.spread(strideF(emb(s, d), "vec_id"), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val q = QuantizedVectors.normed(strideF(emb(s, d), "vec_id"))
         val a = q.select(col("vec_id").as("vec_a"), col("qe").as("qa"), col("nrm").as("na"))
         val b = q.select(col("vec_id").as("vec_b"), col("qe").as("qb"), col("nrm").as("nb"))
         a.join(b, col("vec_a") < col("vec_b"))
@@ -1895,9 +1891,7 @@ object DedupQueries {
     "dedup_embedding_lsh" -> QuerySpec(
       (s, d) => {
         val p = SimilarityQueries.resolvePlanes(s, d)
-        val q = Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val q = QuantizedVectors.normed(emb(s, d))
           .withColumn("bucket", expr(s"hyperplane_key(qe, $p)"))
         val a = q.select(col("bucket"), col("vec_id").as("vec_a"),
           col("qe").as("qa"), col("nrm").as("na"))
@@ -2046,9 +2040,7 @@ object DedupQueries {
     "dedup_semantic" -> QuerySpec(
       (s, d) => {
         val sub = resolveSemSub(s, d)
-        val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), col("label"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = graft.CacheTracker.track(QuantizedVectors.normed(emb(s, d), "label")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         // per-label integer-mean centroids (coarse k-means, as sim_ivf_topk)
         val cent = graft.CacheTracker.track(n

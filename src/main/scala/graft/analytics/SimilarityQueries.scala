@@ -2,6 +2,8 @@ package graft.analytics
 
 import graft.{QuerySpec, Tables}
 import graft.functions.TextFunctions._
+import graft.operators.QuantizedVectors
+import graft.operators.QuantizedVectors.{Cosine, L2, Metric, normed, topK}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -380,8 +382,7 @@ object SimilarityQueries {
       : org.apache.spark.sql.DataFrame = {
     val idx = graft.operators.StoreRoot.ensure(
         s, d, graft.operators.PqIndex.Kind, "ivfpq-label") { stage =>
-      val n = Tables.spread(emb(s, d), "vec_id")
-        .select(col("vec_id"), col("label"), expr(quantizeS("embedding")).as("qe"))
+      val n = QuantizedVectors.of(emb(s, d), "label")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // per-label coarse centroids: posexplode + groupBy(label, dim) —
       // map-side combined, no row holds a whole cell. Persisted WITH the
@@ -408,8 +409,7 @@ object SimilarityQueries {
     val cent = s.read.parquet(s"$idx/coarse")
     // the probe path reads ONLY the nq query vectors (scan-pushed filter)
     // plus the stored coarse/codebook/code artifacts — no corpus pass
-    val q = Tables.spread(emb(s, d).filter(col("vec_id") < nq), "vec_id")
-      .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
+    val q = QuantizedVectors.of(emb(s, d).filter(col("vec_id") < nq))
     // probes: top-2 cells per query against the broadcast centroids
     val wp = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("c_id"))
     val probes = graft.CacheTracker.track(q
@@ -486,7 +486,7 @@ object SimilarityQueries {
       : org.apache.spark.sql.DataFrame = {
     val idx = graft.operators.StoreRoot.ensure(
         s, d, graft.operators.PqIndex.Kind, "ivfpq-residual") { stage =>
-      val q = graft.operators.IvfIndex.quantized(emb(s, d))
+      val q = normed(emb(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       graft.operators.IvfIndex.trainCentroids(q, stage, nCells = 16, iters = 2)
       val cent = s.read.parquet(s"$stage/centroids")
@@ -505,8 +505,8 @@ object SimilarityQueries {
     }
     val cent = s.read.parquet(s"$idx/centroids")
     // steady-state probe path: nq query vectors + stored artifacts only
-    val q = Tables.spread(emb(s, d).filter(col("vec_id") < nq), "vec_id")
-      .select(col("vec_id").as("q_id"), expr(quantizeS("embedding")).as("qe"))
+    val q = QuantizedVectors.of(emb(s, d).filter(col("vec_id") < nq))
+      .select(col("vec_id").as("q_id"), col("qe"))
     val wp = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cell"))
     val probes = q.crossJoin(broadcast(cent))
       .withColumn("dist", expr("long_l2(qe, ce)"))
@@ -616,7 +616,7 @@ object SimilarityQueries {
   private def ivfsqRanked(s: SparkSession, d: String, nq: Int): DataFrame = {
     val idx = graft.operators.StoreRoot.ensure(
         s, d, graft.operators.SqIndex.Kind, "ivfsq") { stage =>
-      val q = graft.operators.IvfIndex.quantized(emb(s, d))
+      val q = normed(emb(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       graft.operators.IvfIndex.trainCentroids(q, stage, nCells = 16, iters = 2)
       val cent = s.read.parquet(s"$stage/centroids")
@@ -632,8 +632,8 @@ object SimilarityQueries {
     }
     val cent = s.read.parquet(s"$idx/centroids")
     // steady-state probe path: nq query vectors + stored artifacts only
-    val q = Tables.spread(emb(s, d).filter(col("vec_id") < nq), "vec_id")
-      .select(col("vec_id").as("q_id"), expr(quantizeS("embedding")).as("qq"))
+    val q = QuantizedVectors.of(emb(s, d).filter(col("vec_id") < nq))
+      .select(col("vec_id").as("q_id"), col("qe").as("qq"))
     val wp = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cell"))
     val probes = graft.CacheTracker.track(q
       .crossJoin(broadcast(cent))
@@ -789,18 +789,8 @@ object SimilarityQueries {
     // ----- brute-force exact cosine top-k (baseline) ------------------------
     "sim_cosine_topk" -> QuerySpec(
       (s, d) => {
-        val n = Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
-        val queries = n.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("qe").as("qa"), col("nrm").as("na"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("c").desc, col("vec_id"))
-        broadcast(queries)
-          .join(n, col("vec_id") =!= col("q_id"))
-          .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 10)
+        val n = normed(emb(s, d))
+        topK(QuantizedVectors.allPairs(QuantizedVectors.probes(n, 5, Cosine.probe: _*), n), 10)
           .select(col("q_id"), col("vec_id"), expr("floor(c * 1e6 + 0.5) / 1e6").as("cosine"), col("rn"))
           .orderBy(col("q_id"), col("rn"))
       },
@@ -827,9 +817,7 @@ object SimilarityQueries {
     // one IEEE division, vec_id tie-breaks — cross-engine exact.
     "sim_hard_negatives" -> QuerySpec(
       (s, d) => {
-        val n = Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), col("label"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = normed(emb(s, d), "label")
         val anchors = n.filter(col("vec_id") < 6)
           .select(col("vec_id").as("a_id"), col("label").as("a_label"),
             col("qe").as("qa"), col("nrm").as("na"))
@@ -873,43 +861,16 @@ object SimilarityQueries {
     // corpus-stream shape; rerank + recall run on <= depth·|Q| rows.
     "sim_rp_recall" -> QuerySpec(
       (s, d) => {
-        val base = Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val base = normed(emb(s, d))
           .withColumn("pe", expr(
             "transform(sequence(0, 15), j -> aggregate(sequence(1, size(qe)), " +
               "cast(0 as bigint), (s2, i) -> s2 + (((i * 53 + j * 131) % 3) - 1) * element_at(qe, i)))"))
           .withColumn("pnrm", expr("long_dot(pe, pe)"))
         val n = graft.CacheTracker.track(
           base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val queries = n.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("qe").as("qa"), col("nrm").as("na"),
-            col("pe").as("pa"), col("pnrm").as("pna"))
-        val w = Window.partitionBy(col("q_id"))
-        val joined = broadcast(queries).join(n, col("vec_id") =!= col("q_id"))
-          .withColumn("cf", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("cp", expr("long_dot(pa, pe) / (sqrt(pna) * sqrt(pnrm))"))
-          .withColumn("fr", row_number().over(w.orderBy(col("cf").desc, col("vec_id"))))
-          .withColumn("pr", row_number().over(w.orderBy(col("cp").desc, col("vec_id"))))
-          .select(col("q_id"), col("vec_id"), col("cf"), col("fr"), col("pr"))
-          .filter(col("fr") <= 10 || col("pr") <= 200)
-        val depths = joined.sparkSession.range(0, 1).selectExpr(
-          "explode(array(10, 50, 100, 200)) as depth")
-        val rerank = joined.crossJoin(broadcast(depths))
-          .filter(col("pr") <= col("depth"))
-          .withColumn("rr", row_number().over(
-            Window.partitionBy(col("q_id"), col("depth"))
-              .orderBy(col("cf").desc, col("vec_id"))))
-          .filter(col("rr") <= 10)
-          .select(col("depth"), col("q_id"), col("vec_id"), lit(1L).as("hit"))
-        joined.filter(col("fr") <= 10)
-          .select(col("q_id"), col("vec_id"))
-          .crossJoin(broadcast(depths))
-          .join(rerank, Seq("depth", "q_id", "vec_id"), "left")
-          .groupBy(col("depth"))
-          .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_overlap"))
-          .withColumn("recall", expr("floor(n_overlap / 50 * 1e6 + 0.5) / 1e6"))
-          .orderBy(col("depth"))
+        QuantizedVectors.shortlistRecall(n, Metric("cp",
+          expr("long_dot(pa, pe) / (sqrt(pna) * sqrt(pnrm))"), col("cp").desc,
+          Seq(col("pe").as("pa"), col("pnrm").as("pna"))))
       },
       Some(s"""$OracleQ,
              |pn AS (SELECT vec_id, qe, nrm,
@@ -956,39 +917,11 @@ object SimilarityQueries {
     // the estimates hash-match DuckDB bit-for-bit.
     "sim_hamming_recall" -> QuerySpec(
       (s, d) => {
-        val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = graft.CacheTracker.track(normed(emb(s, d))
           .withColumn("code", expr("hyperplane_key(qe, 32)"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val queries = n.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("qe").as("qa"),
-            col("nrm").as("na"), col("code").as("ca"))
-        val w = Window.partitionBy(col("q_id"))
-        val joined = broadcast(queries).join(n, col("vec_id") =!= col("q_id"))
-          .withColumn("cf", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("hd", expr("bit_count(ca ^ code)"))
-          .withColumn("fr", row_number().over(w.orderBy(col("cf").desc, col("vec_id"))))
-          .withColumn("pr", row_number().over(w.orderBy(col("hd").asc, col("vec_id"))))
-          .select(col("q_id"), col("vec_id"), col("cf"), col("fr"), col("pr"))
-          .filter(col("fr") <= 10 || col("pr") <= 200)
-        val depths = joined.sparkSession.range(0, 1).selectExpr(
-          "explode(array(10, 50, 100, 200)) as depth")
-        val rerank = joined.crossJoin(broadcast(depths))
-          .filter(col("pr") <= col("depth"))
-          .withColumn("rr", row_number().over(
-            Window.partitionBy(col("q_id"), col("depth"))
-              .orderBy(col("cf").desc, col("vec_id"))))
-          .filter(col("rr") <= 10)
-          .select(col("depth"), col("q_id"), col("vec_id"), lit(1L).as("hit"))
-        joined.filter(col("fr") <= 10)
-          .select(col("q_id"), col("vec_id"))
-          .crossJoin(broadcast(depths))
-          .join(rerank, Seq("depth", "q_id", "vec_id"), "left")
-          .groupBy(col("depth"))
-          .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_overlap"))
-          .withColumn("recall", expr("floor(n_overlap / 50 * 1e6 + 0.5) / 1e6"))
-          .orderBy(col("depth"))
+        QuantizedVectors.shortlistRecall(n, Metric("hd",
+          expr("bit_count(ca ^ code)"), col("hd").asc, Seq(col("code").as("ca"))))
       },
       Some(s"""$OracleQ,
              |cd AS (SELECT vec_id, qe, nrm, ${lshKeyD("qe", 32)} AS code FROM n),
@@ -1037,12 +970,9 @@ object SimilarityQueries {
     // Integer dots/norms, one IEEE division per pair — cross-engine exact.
     "sim_matryoshka_recall" -> QuerySpec(
       (s, d) => {
-        val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = graft.CacheTracker.track(normed(emb(s, d))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val queries = n.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("qe").as("qa"), col("nrm").as("na"))
+        val queries = QuantizedVectors.probes(n, 5, Cosine.probe: _*)
         val w = Window.partitionBy(col("q_id"))
         val wm = Window.partitionBy(col("q_id"), col("m"))
         val jd = broadcast(queries).join(n, col("vec_id") =!= col("q_id"))
@@ -1175,20 +1105,11 @@ object SimilarityQueries {
     "sim_lsh_ann" -> QuerySpec(
       (s, d) => {
         val p = resolvePlanes(s, d)
-        val n = Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = normed(emb(s, d))
           .withColumn("bucket", expr(s"hyperplane_key(qe, $p)"))
-        val queries = n.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("qe").as("qa"),
-            col("nrm").as("na"), col("bucket").as("qb"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("c").desc, col("vec_id"))
-        broadcast(queries)
-          .join(n, col("qb") === col("bucket") && col("vec_id") =!= col("q_id"))
-          .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
+        val queries = QuantizedVectors.probes(n, 5, Cosine.probe :+ col("bucket").as("qb"): _*)
+        topK(broadcast(queries)
+            .join(n, col("qb") === col("bucket") && col("vec_id") =!= col("q_id")), 5)
           .select(col("q_id"), col("vec_id"), col("bucket"),
             expr("floor(c * 1e6 + 0.5) / 1e6").as("cosine"), col("rn"))
           .orderBy(col("q_id"), col("rn"))
@@ -1218,23 +1139,14 @@ object SimilarityQueries {
     "sim_lsh_multiprobe" -> QuerySpec(
       (s, d) => {
         val p = resolvePlanes(s, d)
-        val n = Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = normed(emb(s, d))
           .withColumn("bucket", expr(s"hyperplane_key(qe, $p)"))
-        val queries = n.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("qe").as("qa"),
-            col("nrm").as("na"), col("bucket").as("qb"))
+        val queries = QuantizedVectors.probes(n, 5, Cosine.probe :+ col("bucket").as("qb"): _*)
           .withColumn("probe", explode(expr(
             s"concat(array(qb), transform(sequence(0, ${p - 1}), " +
               "i -> qb ^ shiftleft(cast(1 as bigint), i)))")))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("c").desc, col("vec_id"))
-        broadcast(queries)
-          .join(n, col("probe") === col("bucket") && col("vec_id") =!= col("q_id"))
-          .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
+        topK(broadcast(queries)
+            .join(n, col("probe") === col("bucket") && col("vec_id") =!= col("q_id")), 5)
           .select(col("q_id"), col("vec_id"), col("bucket"),
             expr("floor(c * 1e6 + 0.5) / 1e6").as("cosine"), col("rn"))
           .orderBy(col("q_id"), col("rn"))
@@ -1265,22 +1177,11 @@ object SimilarityQueries {
     "sim_lsh_recall" -> QuerySpec(
       (s, d) => {
         val p = resolvePlanes(s, d)
-        val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = graft.CacheTracker.track(normed(emb(s, d))
           .withColumn("bucket", expr(s"hyperplane_key(qe, $p)"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val queries = n.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("qe").as("qa"),
-            col("nrm").as("na"), col("bucket").as("qb"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("c").desc, col("vec_id"))
-        def top5(joined: org.apache.spark.sql.DataFrame) = joined
-          .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("vec_id"))
-        val exact = top5(broadcast(queries).join(n, col("vec_id") =!= col("q_id")))
+        val queries = QuantizedVectors.probes(n, 5, Cosine.probe :+ col("bucket").as("qb"): _*)
+        def top5(joined: DataFrame) = topK(joined, 5).select(col("q_id"), col("vec_id"))
         val lsh = top5(broadcast(queries)
           .join(n, col("qb") === col("bucket") && col("vec_id") =!= col("q_id")))
         // the multiprobe candidate set: query bucket + its hamming-1 ring,
@@ -1291,15 +1192,8 @@ object SimilarityQueries {
             "i -> qb ^ shiftleft(cast(1 as bigint), i)))")))
         val multi = top5(broadcast(mq)
           .join(n, col("probe") === col("bucket") && col("vec_id") =!= col("q_id")))
-        exact.join(lsh.withColumn("hit", lit(1)), Seq("q_id", "vec_id"), "left")
-          .join(multi.withColumn("hit_m", lit(1)), Seq("q_id", "vec_id"), "left")
-          .groupBy(col("q_id"))
-          .agg(count(col("hit")).as("n_hits"), count(col("hit_m")).as("n_hits_multi"))
-          .withColumn("recall", expr("floor(n_hits / 5 * 1e6 + 0.5) / 1e6"))
-          .withColumn("recall_multi", expr("floor(n_hits_multi / 5 * 1e6 + 0.5) / 1e6"))
-          .select(col("q_id"), col("n_hits"), col("recall"),
-            col("n_hits_multi"), col("recall_multi"))
-          .orderBy(col("q_id"))
+        QuantizedVectors.recall(QuantizedVectors.exactTopK(queries, n, 5), 5,
+          "" -> lsh, "_multi" -> multi)
       },
       Some(s"""$OracleQ,
              |bk AS (SELECT vec_id, qe, nrm, ${lshKeyD("qe")} AS bucket FROM n),
@@ -1342,9 +1236,7 @@ object SimilarityQueries {
     "sim_knn_classify" -> QuerySpec(
       (s, d) => {
         val p = resolvePlanes(s, d)
-        val bk = Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), col("label"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val bk = normed(emb(s, d), "label")
           .withColumn("bucket", expr(s"hyperplane_key(qe, $p)"))
         // top-7 neighbors via the bounded mergeable aggregate, NOT a
         // row_number window: the candidate set is quadratic in bucket
@@ -1391,9 +1283,7 @@ object SimilarityQueries {
         // persist: three consumers (centroid build, cell assignment, query
         // probes) each re-run the parquet scan + 64-lane quantization
         // otherwise — the dominant cost of the whole query
-        val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), col("label"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = graft.CacheTracker.track(normed(emb(s, d), "label")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         // centroid per label: per-dimension mean via posexplode + groupBy —
         // partial aggregation does the heavy lifting map-side and no row ever
@@ -1428,20 +1318,14 @@ object SimilarityQueries {
           .select(col("vec_id"), col("qe"), col("nrm"), col("m.c_id").as("cell"))
         // queries probe their 2 nearest cells
         val wp = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("c_id"))
-        val probes = n.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("qe").as("qa"), col("nrm").as("na"))
+        val probes = QuantizedVectors.probes(n, 5, Cosine.probe: _*)
           .crossJoin(broadcast(cent))
           .withColumn("dist", expr(l2.format("qa", "ce")))
           .withColumn("prn", row_number().over(wp))
           .filter(col("prn") <= 2)
           .select(col("q_id"), col("qa"), col("na"), col("c_id").as("cell"))
-        val wr = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))
-        broadcast(probes)
-          .join(assigned, Seq("cell"))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("rn", row_number().over(wr))
-          .filter(col("rn") <= 5)
+        topK(broadcast(probes).join(assigned, Seq("cell"))
+            .filter(col("vec_id") =!= col("q_id")), 5)
           .select(col("q_id"), col("vec_id"), col("cell"),
             expr("floor(c * 1e6 + 0.5) / 1e6").as("cosine"), col("rn"))
           .orderBy(col("q_id"), col("rn"))
@@ -1487,9 +1371,7 @@ object SimilarityQueries {
     // probed cells while scan cost stays ~nProbe/nCells of the corpus.
     "sim_ivf_recall" -> QuerySpec(
       (s, d) => {
-        val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), col("label"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = graft.CacheTracker.track(normed(emb(s, d), "label")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         val cent = n
           .select(col("label"), posexplode(col("qe")).as(Seq("j", "v")))
@@ -1508,8 +1390,8 @@ object SimilarityQueries {
             min(struct(col("dist"), col("c_id"))).as("m"))
           .select(col("vec_id"), col("qe"), col("nrm"), col("m.c_id").as("cell"))
         val wp = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("c_id"))
-        val probes = n.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("qe").as("qa"), col("nrm").as("na"))
+        val queries = QuantizedVectors.probes(n, 5, Cosine.probe: _*)
+        val probes = queries
           .crossJoin(broadcast(cent))
           .withColumn("dist", expr(l2.format("qa", "ce")))
           .withColumn("prn", row_number().over(wp))
@@ -1519,31 +1401,16 @@ object SimilarityQueries {
         val cand = graft.CacheTracker.track(broadcast(probes)
           .join(assigned, Seq("cell"))
           .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
+          .withColumn("c", Cosine.score)
           .select(col("q_id"), col("vec_id"), col("prn"), col("c"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val wr = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))
         val tops = Seq(1, 2, 4).map { np =>
-          cand.filter(col("prn") <= np)
-            .withColumn("rn", row_number().over(wr))
-            .filter(col("rn") <= 5)
+          QuantizedVectors.firstK(cand.filter(col("prn") <= np), 5, Cosine.best)
             .select(col("q_id"), col("vec_id"), lit(np).as("n_probe"))
         }.reduce(_ unionByName _)
-        val we = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))
-        val exact = broadcast(n.filter(col("vec_id") < 5)
-            .select(col("vec_id").as("q_id"), col("qe").as("qa"), col("nrm").as("na")))
-          .join(n.select(col("vec_id"), col("qe"), col("nrm")),
-            col("vec_id") =!= col("q_id"))
-          .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("rn", row_number().over(we))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("vec_id"))
+        val exact = QuantizedVectors.exactTopK(queries, n, 5)
           .withColumn("n_probe", explode(expr("array(1, 2, 4)")))
-        exact.join(tops.withColumn("hit", lit(1)), Seq("q_id", "vec_id", "n_probe"), "left")
-          .groupBy(col("q_id"), col("n_probe"))
-          .agg(count(col("hit")).as("n_hits"))
-          .withColumn("recall", expr("floor(n_hits / 5 * 1e6 + 0.5) / 1e6"))
-          .orderBy(col("q_id"), col("n_probe"))
+        QuantizedVectors.recall(exact, 5, "" -> tops)
       },
       Some(s"""$OracleQ,
              |cent AS (SELECT label AS c_id,
@@ -1664,9 +1531,7 @@ object SimilarityQueries {
         // (shared pqTrainCodebooks/pqAssign), so the oracle is unchanged.
         val idx = graft.operators.StoreRoot.ensure(s, d, graft.operators.PqIndex.Kind, "flat")(
           graft.operators.PqIndex.build(emb(s, d), _))
-        val queries = Tables.spread(emb(s, d), "vec_id")
-          .filter(col("vec_id") < 5)
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
+        val queries = QuantizedVectors.of(emb(s, d)).filter(col("vec_id") < 5)
         val w = Window.partitionBy(col("q_id")).orderBy(col("adot").desc, col("vec_id"))
         graft.operators.PqIndex.adcScores(s, idx, queries)
           .withColumn("rn", row_number().over(w))
@@ -1695,51 +1560,16 @@ object SimilarityQueries {
       (s, d) => {
         val idx = graft.operators.StoreRoot.ensure(s, d, graft.operators.PqIndex.Kind, "flat")(
           graft.operators.PqIndex.build(emb(s, d), _))
-        val q20 = Tables.spread(emb(s, d), "vec_id")
-          .filter(col("vec_id") < 20)
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
+        val q20 = QuantizedVectors.of(emb(s, d)).filter(col("vec_id") < 20)
         // two consumers (direct top-5 + shortlist) over Q×N tiny rows
         val scores = graft.CacheTracker.track(
           graft.operators.PqIndex.adcScores(s, idx, q20)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         val w = Window.partitionBy(col("q_id")).orderBy(col("adot").desc, col("vec_id"))
         val ranked = scores.withColumn("rn", row_number().over(w))
-        val pq5 = ranked.filter(col("rn") <= 5).select(col("q_id"), col("vec_id"))
-        val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = graft.CacheTracker.track(normed(emb(s, d))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val queries = broadcast(n.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("q_id"), col("qe").as("qa"), col("nrm").as("na")))
-        // exact rerank of the 50-deep ADC shortlist: 50 full-vector reads
-        // per query, never a corpus pass
-        val wr = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))
-        val rr5 = ranked.filter(col("rn") <= 50)
-          .select(col("q_id"), col("vec_id"))
-          .join(n.select(col("vec_id"), col("qe"), col("nrm")), "vec_id")
-          .join(queries, "q_id")
-          .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("rn2", row_number().over(wr))
-          .filter(col("rn2") <= 5)
-          .select(col("q_id"), col("vec_id"))
-        val we = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))
-        val exact = queries
-          .join(n.select(col("vec_id"), col("qe"), col("nrm")),
-            col("vec_id") =!= col("q_id"))
-          .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("rn", row_number().over(we))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("vec_id"))
-        exact
-          .join(pq5.withColumn("hit", lit(1)), Seq("q_id", "vec_id"), "left")
-          .join(rr5.withColumn("hit_rr", lit(1)), Seq("q_id", "vec_id"), "left")
-          .groupBy(col("q_id"))
-          .agg(count(col("hit")).as("n_hits"), count(col("hit_rr")).as("n_hits_rr"))
-          .withColumn("recall", expr("floor(n_hits / 5 * 1e6 + 0.5) / 1e6"))
-          .withColumn("recall_rr", expr("floor(n_hits_rr / 5 * 1e6 + 0.5) / 1e6"))
-          .select(col("q_id"), col("n_hits"), col("recall"),
-            col("n_hits_rr"), col("recall_rr"))
-          .orderBy(col("q_id"))
+        QuantizedVectors.rerankRecall(ranked, n, nq = 20)
       },
       Some(s"""$OracleQ,
              |${pqCteD(20)},
@@ -1798,40 +1628,9 @@ object SimilarityQueries {
       (s, d) => {
         val ranked = graft.CacheTracker.track(ivfpqRanked(s, d, nq = 20)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val pq5 = ranked.filter(col("rn") <= 5).select(col("q_id"), col("vec_id"))
-        val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = graft.CacheTracker.track(normed(emb(s, d))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val queries = broadcast(n.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("q_id"), col("qe").as("qa"), col("nrm").as("na")))
-        val wr = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))
-        val rr5 = ranked.filter(col("rn") <= 50)
-          .select(col("q_id"), col("vec_id"))
-          .join(n.select(col("vec_id"), col("qe"), col("nrm")), "vec_id")
-          .join(queries, "q_id")
-          .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("rn2", row_number().over(wr))
-          .filter(col("rn2") <= 5)
-          .select(col("q_id"), col("vec_id"))
-        val we = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))
-        val exact = queries
-          .join(n.select(col("vec_id"), col("qe"), col("nrm")),
-            col("vec_id") =!= col("q_id"))
-          .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("rn", row_number().over(we))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("vec_id"))
-        exact
-          .join(pq5.withColumn("hit", lit(1)), Seq("q_id", "vec_id"), "left")
-          .join(rr5.withColumn("hit_rr", lit(1)), Seq("q_id", "vec_id"), "left")
-          .groupBy(col("q_id"))
-          .agg(count(col("hit")).as("n_hits"), count(col("hit_rr")).as("n_hits_rr"))
-          .withColumn("recall", expr("floor(n_hits / 5 * 1e6 + 0.5) / 1e6"))
-          .withColumn("recall_rr", expr("floor(n_hits_rr / 5 * 1e6 + 0.5) / 1e6"))
-          .select(col("q_id"), col("n_hits"), col("recall"),
-            col("n_hits_rr"), col("recall_rr"))
-          .orderBy(col("q_id"))
+        QuantizedVectors.rerankRecall(ranked, n, nq = 20)
       },
       Some(s"""$OracleQ,
              |${ivfpqCteD(20)},
@@ -1885,38 +1684,9 @@ object SimilarityQueries {
       (s, d) => {
         val ranked = graft.CacheTracker.track(ivfpqResidualRanked(s, d, nq = 20)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val pq5 = ranked.filter(col("rn") <= 5).select(col("q_id"), col("vec_id"))
-        val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
+        val n = graft.CacheTracker.track(QuantizedVectors.of(emb(s, d))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val queries = broadcast(n.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("q_id"), col("qe").as("qa")))
-        val wr = Window.partitionBy(col("q_id")).orderBy(col("dist").asc, col("vec_id"))
-        val rr5 = ranked.filter(col("rn") <= 50)
-          .select(col("q_id"), col("vec_id"))
-          .join(n, "vec_id")
-          .join(queries, "q_id")
-          .withColumn("dist", expr("long_l2(qa, qe)"))
-          .withColumn("rn2", row_number().over(wr))
-          .filter(col("rn2") <= 5)
-          .select(col("q_id"), col("vec_id"))
-        val we = Window.partitionBy(col("q_id")).orderBy(col("dist").asc, col("vec_id"))
-        val exact = queries
-          .join(n, col("vec_id") =!= col("q_id"))
-          .withColumn("dist", expr("long_l2(qa, qe)"))
-          .withColumn("rn", row_number().over(we))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("vec_id"))
-        exact
-          .join(pq5.withColumn("hit", lit(1)), Seq("q_id", "vec_id"), "left")
-          .join(rr5.withColumn("hit_rr", lit(1)), Seq("q_id", "vec_id"), "left")
-          .groupBy(col("q_id"))
-          .agg(count(col("hit")).as("n_hits"), count(col("hit_rr")).as("n_hits_rr"))
-          .withColumn("recall", expr("floor(n_hits / 5 * 1e6 + 0.5) / 1e6"))
-          .withColumn("recall_rr", expr("floor(n_hits_rr / 5 * 1e6 + 0.5) / 1e6"))
-          .select(col("q_id"), col("n_hits"), col("recall"),
-            col("n_hits_rr"), col("recall_rr"))
-          .orderBy(col("q_id"))
+        QuantizedVectors.rerankRecall(ranked, n, nq = 20, L2)
       },
       Some(s"""$OracleQ,
              |${ivfpqResidualCteD(20)},
@@ -1953,9 +1723,7 @@ object SimilarityQueries {
     // IEEE division — engine-order independent.
     "sim_cluster_stats" -> QuerySpec(
       (s, d) => {
-        val n = Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), col("label"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = normed(emb(s, d), "label")
         val cent = n
           .select(col("label"), posexplode(col("qe")).as(Seq("j", "v")))
           .groupBy(col("label"), col("j"))
@@ -2014,9 +1782,7 @@ object SimilarityQueries {
         val idx = TextQueries.registryTextIndex(s, d)
         val text = graft.operators.TextIndex.search(s, idx, qids, 50)
           .select(col("qid"), col("doc_id"), col("rank"))
-        val n = Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = normed(emb(s, d))
         val qv = n.filter(col("vec_id") < 4)
           .select(col("vec_id").as("qid"), col("qe").as("qa"), col("nrm").as("na"))
         val vec = broadcast(qv)
@@ -2081,8 +1847,7 @@ object SimilarityQueries {
       (s, d) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         import s.implicits._
-        val q = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
+        val q = graft.CacheTracker.track(QuantizedVectors.of(emb(s, d))
           .persist(MEMORY_AND_DISK))
         val queries = q.filter(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("qe").as("qq"))
@@ -2182,8 +1947,7 @@ object SimilarityQueries {
       (s, d) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         import s.implicits._
-        val q = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
+        val q = graft.CacheTracker.track(QuantizedVectors.of(emb(s, d))
           .persist(MEMORY_AND_DISK))
         kcenterTrajectory(s, q, KCenterK)
           .toDF("rank", "vec_id", "d2_to_selected")
@@ -2254,9 +2018,8 @@ object SimilarityQueries {
         // the oracle is unchanged.
         val idx = graft.operators.StoreRoot.ensure(s, d, graft.operators.SqIndex.Kind)(
           graft.operators.SqIndex.build(emb(s, d), _))
-        val queries = Tables.spread(emb(s, d), "vec_id")
-          .filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), expr(quantizeS("embedding")).as("qq"))
+        val queries = QuantizedVectors.of(emb(s, d)).filter(col("vec_id") < 5)
+          .select(col("vec_id").as("q_id"), col("qe").as("qq"))
         val w = Window.partitionBy(col("q_id")).orderBy(col("ip510").desc, col("vec_id"))
         graft.operators.SqIndex.scores(s, idx, queries)
           .withColumn("rn", row_number().over(w))
@@ -2295,8 +2058,7 @@ object SimilarityQueries {
     "sim_sq8_recall" -> QuerySpec(
       (s, d) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val q = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
+        val q = graft.CacheTracker.track(QuantizedVectors.of(emb(s, d))
           .persist(MEMORY_AND_DISK))
         val lanes = q.select(posexplode(col("qe")).as(Seq("j", "v")))
           .groupBy(col("j")).agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
@@ -2386,40 +2148,9 @@ object SimilarityQueries {
       (s, d) => {
         val ranked = graft.CacheTracker.track(ivfsqRanked(s, d, nq = 20)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val sq5 = ranked.filter(col("rn") <= 5).select(col("q_id"), col("vec_id"))
-        val n = graft.CacheTracker.track(Tables.spread(emb(s, d), "vec_id")
-          .select(col("vec_id"), expr(quantizeS("embedding")).as("qe"))
-          .withColumn("nrm", expr("long_dot(qe, qe)"))
+        val n = graft.CacheTracker.track(normed(emb(s, d))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val queries = broadcast(n.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("q_id"), col("qe").as("qa"), col("nrm").as("na")))
-        val wr = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))
-        val rr5 = ranked.filter(col("rn") <= 50)
-          .select(col("q_id"), col("vec_id"))
-          .join(n.select(col("vec_id"), col("qe"), col("nrm")), "vec_id")
-          .join(queries, "q_id")
-          .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("rn2", row_number().over(wr))
-          .filter(col("rn2") <= 5)
-          .select(col("q_id"), col("vec_id"))
-        val we = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))
-        val exact = queries
-          .join(n.select(col("vec_id"), col("qe"), col("nrm")),
-            col("vec_id") =!= col("q_id"))
-          .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-          .withColumn("rn", row_number().over(we))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("vec_id"))
-        exact
-          .join(sq5.withColumn("hit", lit(1)), Seq("q_id", "vec_id"), "left")
-          .join(rr5.withColumn("hit_rr", lit(1)), Seq("q_id", "vec_id"), "left")
-          .groupBy(col("q_id"))
-          .agg(count(col("hit")).as("n_hits"), count(col("hit_rr")).as("n_hits_rr"))
-          .withColumn("recall", expr("floor(n_hits / 5 * 1e6 + 0.5) / 1e6"))
-          .withColumn("recall_rr", expr("floor(n_hits_rr / 5 * 1e6 + 0.5) / 1e6"))
-          .select(col("q_id"), col("n_hits"), col("recall"),
-            col("n_hits_rr"), col("recall_rr"))
-          .orderBy(col("q_id"))
+        QuantizedVectors.rerankRecall(ranked, n, nq = 20)
       },
       Some(s"""$OracleQ,
              |${ivfsqCteD(20)},

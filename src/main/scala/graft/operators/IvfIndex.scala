@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,14 +42,6 @@ object IvfIndex {
   /** Registry store key ([[StoreRoot.key]]). */
   val Kind = StoreKind("ivf-index", "embeddings", FormatVersion)
 
-  private[graft] def quantized(emb: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
-    graft.Tables.spread(emb, "vec_id")
-      .select(col("vec_id"),
-        expr(graft.functions.TextFunctions.quantizeS("embedding")).as("qe"))
-      .withColumn("nrm", expr("long_dot(qe, qe)"))
-  }
-
   /** Assign every vector to its nearest centroid (exact integer L2²,
     * ties on cell id) — map-side-combined argmin, the sim_ivf_topk shape.
     */
@@ -76,7 +70,7 @@ object IvfIndex {
     * empty cells keep their previous centroid.
     */
   def build(emb: DataFrame, indexPath: String, nCells: Int = 16, iters: Int = 2): Unit = {
-    val vecs = quantized(emb)
+    val vecs = QuantizedVectors.normed(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     trainCentroids(vecs, indexPath, nCells, iters)
     val centLoaded = emb.sparkSession.read.parquet(s"$indexPath/centroids")
@@ -94,11 +88,11 @@ object IvfIndex {
   def trainCentroids(vecs: DataFrame, indexPath: String,
       nCells: Int = 16, iters: Int = 2): Unit = {
     // deterministic init: TakeOrderedAndProject keeps the nCells smallest
-    // vec_ids; the row_number window then runs over nCells rows only
+    // vec_ids; their vec_id-sorted list numbers them 0.. by position
     var cent = vecs.orderBy(col("vec_id")).limit(nCells)
-      .withColumn("cell",
-        (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int"))
-      .select(col("cell"), col("qe").as("ce"))
+      .agg(array_sort(collect_list(struct(col("vec_id"), col("qe")))).as("init"))
+      .select(posexplode(col("init")).as(Seq("cell", "v")))
+      .select(col("cell"), col("v.qe").as("ce"))
     for (_ <- 1 to iters) {
       val updated = means(assign(vecs, cent))
       // empty cells (no member) fall back to the previous centroid so the
@@ -126,7 +120,7 @@ object IvfIndex {
   def append(emb: DataFrame, indexPath: String): Unit = {
     val spark = emb.sparkSession
     val cent = spark.read.parquet(s"$indexPath/centroids")
-    assign(quantized(emb), cent)
+    assign(QuantizedVectors.normed(emb), cent)
       .write.mode(SaveMode.Append).partitionBy("cell").parquet(s"$indexPath/vectors")
   }
 
@@ -143,7 +137,7 @@ object IvfIndex {
   def appendBatch(emb: DataFrame, indexPath: String, batchId: Long): Unit = {
     val spark = emb.sparkSession
     val cent = spark.read.parquet(s"$indexPath/centroids")
-    assign(quantized(emb), cent)
+    assign(QuantizedVectors.normed(emb), cent)
       .withColumn("batch_id", lit(batchId))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
@@ -168,7 +162,7 @@ object IvfIndex {
     * exposed for inspection and for the spec's store≡assignment proof.
     */
   def assignTo(spark: SparkSession, indexPath: String, emb: DataFrame): DataFrame =
-    assign(quantized(emb), spark.read.parquet(s"$indexPath/centroids"))
+    assign(QuantizedVectors.normed(emb), spark.read.parquet(s"$indexPath/centroids"))
       .select(col("vec_id"), col("cell"))
 
   /** Per-cell occupancy of the vector store — (cell, n, share). Reads only
@@ -194,8 +188,8 @@ object IvfIndex {
   def probe(spark: SparkSession, indexPath: String, queries: DataFrame,
       k: Int = 5, nProbe: Int = 2): DataFrame = {
     val cent = spark.read.parquet(s"$indexPath/centroids")
-    val q = quantized(queries)
-      .select(col("vec_id").as("q_id"), col("qe").as("qa"), col("nrm").as("na"))
+    val q = QuantizedVectors.normed(queries)
+      .select(col("vec_id").as("q_id") +: QuantizedVectors.Cosine.probe: _*)
     val wp = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cell"))
     val probes = q.crossJoin(broadcast(cent))
       .withColumn("dist", expr("long_l2(qa, ce)"))
@@ -215,14 +209,9 @@ object IvfIndex {
     // release it deterministically; anyone else waits for GC
     graft.CacheTracker.track(probes)
     val idx = spark.read.parquet(s"$indexPath/vectors")
-      .filter(col("cell").isin(cells: _*))
-    val wr = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))
-    broadcast(probes)
-      .join(idx, Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("c", expr("long_dot(qa, qe) / (sqrt(na) * sqrt(nrm))"))
-      .withColumn("rn", row_number().over(wr))
-      .filter(col("rn") <= k)
+      .filter(col("cell").isin(ArraySeq.unsafeWrapArray(cells): _*))
+    QuantizedVectors.topK(
+        broadcast(probes).join(idx, Seq("cell")).filter(col("vec_id") =!= col("q_id")), k)
       .select(col("q_id"), col("vec_id"), col("cell"),
         expr("round(c, 6)").as("cosine"), col("rn"))
   }

@@ -48,13 +48,6 @@ object PqIndex {
   private def cbDir(p: String) = s"$p/codebooks"
   private def codeDir(p: String) = s"$p/codes"
 
-  private def quantized(emb: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
-    graft.Tables.spread(emb, "vec_id")
-      .select(col("vec_id"),
-        expr(graft.functions.TextFunctions.quantizeS("embedding")).as("qe"))
-  }
-
   /** Encode (vec_id, m, sqe) sub-vectors against `cb` → (vec_id, m, code). */
   private def encode(sub: DataFrame, cb: DataFrame): DataFrame =
     graft.analytics.SimilarityQueries.pqAssign(sub, cb)
@@ -66,7 +59,7 @@ object PqIndex {
     */
   def build(emb: DataFrame, indexPath: String,
       coarseCells: Option[DataFrame] = None): Unit =
-    buildFromQuantized(quantized(emb), indexPath, coarseCells)
+    buildFromQuantized(QuantizedVectors.of(emb), indexPath, coarseCells)
 
   /** [[build]] over an already-quantized vector table (vec_id, qe) — the
     * residual-encoding path, where the caller subtracts each vector's
@@ -93,7 +86,7 @@ object PqIndex {
     */
   def append(emb: DataFrame, indexPath: String,
       coarseCells: Option[DataFrame] = None): Unit =
-    appendFromQuantized(quantized(emb), indexPath, coarseCells)
+    appendFromQuantized(QuantizedVectors.of(emb), indexPath, coarseCells)
 
   /** [[append]] over an already-quantized (e.g. residual) vector table. */
   def appendFromQuantized(vecs: DataFrame, indexPath: String,

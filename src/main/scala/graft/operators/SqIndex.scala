@@ -36,11 +36,6 @@ object SqIndex {
   private def statsDir(p: String) = s"$p/stats"
   private def codeDir(p: String) = s"$p/codes"
 
-  private def quantized(emb: DataFrame): DataFrame =
-    graft.Tables.spread(emb, "vec_id")
-      .select(col("vec_id"),
-        expr(graft.functions.TextFunctions.quantizeS("embedding")).as("qe"))
-
   private def encode(vecs: DataFrame, stats: DataFrame): DataFrame =
     vecs.crossJoin(broadcast(stats))
       .select(col("vec_id"),
@@ -53,7 +48,7 @@ object SqIndex {
   /** Train per-lane stats on `emb` and encode it; overwrites the store. */
   def build(emb: DataFrame, indexPath: String): Unit = {
     trainStats(emb, indexPath)
-    encode(quantized(emb), stats(emb.sparkSession, indexPath))
+    encode(QuantizedVectors.of(emb), stats(emb.sparkSession, indexPath))
       .write.mode(SaveMode.Overwrite).parquet(codeDir(indexPath))
   }
 
@@ -77,7 +72,7 @@ object SqIndex {
 
   /** Encode a new batch with the FROZEN training stats and append. */
   def append(emb: DataFrame, indexPath: String): Unit =
-    encode(quantized(emb), stats(emb.sparkSession, indexPath))
+    encode(QuantizedVectors.of(emb), stats(emb.sparkSession, indexPath))
       .write.mode(SaveMode.Append).parquet(codeDir(indexPath))
 
   /** [[append]] for at-least-once callers (streaming `foreachBatch`): the
@@ -89,7 +84,7 @@ object SqIndex {
     * mixed flat/partitioned layouts under one root break discovery.
     */
   def appendBatch(emb: DataFrame, indexPath: String, batchId: Long): Unit =
-    encode(quantized(emb), stats(emb.sparkSession, indexPath))
+    encode(QuantizedVectors.of(emb), stats(emb.sparkSession, indexPath))
       .withColumn("batch_id", lit(batchId))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
@@ -101,7 +96,7 @@ object SqIndex {
     * encodes through [[appendBatch]]).
     */
   def trainStats(emb: DataFrame, indexPath: String): Unit =
-    trainStatsFromQuantized(quantized(emb), indexPath)
+    trainStatsFromQuantized(QuantizedVectors.of(emb), indexPath)
 
   /** [[trainStats]] over an already-quantized (vec_id, qe) frame. */
   def trainStatsFromQuantized(emb: DataFrame, indexPath: String): Unit = {

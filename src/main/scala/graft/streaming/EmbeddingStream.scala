@@ -156,40 +156,26 @@ object EmbeddingStream {
     */
   def ingestBatch(batch: DataFrame, batchId: Long, indexPath: String,
       nCells: Int = 16): IngestReport = {
-    import graft.operators.{IvfIndex, StoreRoot}
+    import graft.operators.{IvfIndex, QuantizedVectors, StoreRoot}
     val spark = batch.sparkSession
     val emb = batch.select(col("vecId").as("vec_id"), col("embedding"))
     if (!StoreRoot.hasData(spark, s"$indexPath/centroids"))
-      IvfIndex.trainCentroids(IvfIndex.quantized(emb), indexPath, nCells)
+      IvfIndex.trainCentroids(QuantizedVectors.normed(emb), indexPath, nCells)
     IvfIndex.appendBatch(emb, indexPath, batchId)
     val stats = IvfIndex.cellStats(spark, indexPath)
       .agg(count(lit(1)), sum(col("n")), max(col("share"))).first()
     IngestReport(batchId, stats.getLong(1), stats.getLong(0), stats.getDouble(2))
   }
 
-  /** Continuous SQ8 ingestion into a persistent [[graft.operators
-    * .SqIndex]] — the compressed-codes twin of [[ingestContinuous]]: the
-    * FIRST micro-batch trains the per-lane (min, max) stats (bootstrap;
-    * a deployment trains on a backfill sample) and every batch encodes
-    * through the frozen stats into its own `batch_id=N` partition
-    * (dynamic overwrite — at-least-once replays are exactly-once, and
-    * frozen stats make the replayed encoding deterministic). Appended
-    * codes are score-visible immediately and mutually comparable with
-    * everything stored.
-    */
-  def sqContinuous(
-      vecs: Dataset[VecEvent],
-      indexPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[VecEvent], batchId: Long) =>
-        sqIngestBatch(batch.toDF(), batchId, indexPath)
-      }
-      .start()
-
-  /** The per-micro-batch body of [[sqContinuous]] — exposed for direct
-    * replay/visibility testing.
+  /** One micro-batch of SQ8 ingestion into a persistent [[graft.operators
+    * .SqIndex]] — the compressed-codes twin of [[ingestBatch]], for a
+    * caller's `foreachBatch`: the FIRST non-empty batch trains the
+    * per-lane (min, max) stats (bootstrap; a deployment trains on a
+    * backfill sample) and every batch encodes through the frozen stats
+    * into its own `batch_id=N` partition (dynamic overwrite — a replayed
+    * batch rewrites only itself, and frozen stats make the replayed
+    * encoding deterministic). Appended codes are score-visible
+    * immediately and mutually comparable with everything stored.
     */
   def sqIngestBatch(batch: DataFrame, batchId: Long, indexPath: String): Unit = {
     import graft.operators.{SqIndex, StoreRoot}

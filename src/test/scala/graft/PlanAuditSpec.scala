@@ -46,11 +46,25 @@ class PlanAuditSpec extends AnyFunSuite {
       s"span self-join degenerated to all-pairs in:\n$p")
   }
 
-  test("LSH recall: probe queries broadcast against the corpus projection") {
-    val p = plan("sim_lsh_recall")
-    assert(p.contains("BroadcastHashJoin"), s"expected broadcast probe joins in:\n$p")
-    assert(!p.contains("CartesianProduct"), s"unexpected cartesian in:\n$p")
-  }
+  // the recall rows share one ground-truth leg: the probe queries (left)
+  // broadcast against the whole corpus projection under `vec_id <> q_id`
+  private val groundTruthJoin =
+    """BroadcastNestedLoopJoin BuildLeft, Inner, NOT \(vec_id#\d+L = q_id#\d+L\)""".r
+
+  for ((family, row) <- Seq(
+      "LSH" -> "sim_lsh_recall",
+      "IVF" -> "sim_ivf_recall",
+      "PQ" -> "sim_pq_recall",
+      "IVF-PQ" -> "sim_ivfpq_recall",
+      "IVF-SQ8" -> "sim_ivfsq_recall",
+      "residual IVF-PQ" -> "sim_ivfpq_residual_recall"))
+    test(s"$family recall: probe queries broadcast against the corpus projection") {
+      val p = plan(row)
+      assert(p.contains("BroadcastHashJoin"), s"expected broadcast probe joins in:\n$p")
+      assert(groundTruthJoin.findFirstIn(p).nonEmpty,
+        s"expected the ground truth to broadcast the probe queries in:\n$p")
+      assert(!p.contains("CartesianProduct"), s"unexpected cartesian in:\n$p")
+    }
 
   test("kNN classify: candidates come from the bucket equi-join") {
     val p = plan("sim_knn_classify")
