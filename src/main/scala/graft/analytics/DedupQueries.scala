@@ -2,7 +2,7 @@ package graft.analytics
 
 import graft.{QuerySpec, Tables}
 import graft.functions.TextFunctions._
-import graft.operators.{CappedKeyPairs, QuantizedVectors}
+import graft.operators.{CappedKeyPairs, IvfIndex, QuantizedVectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -271,18 +271,33 @@ object DedupQueries {
   private val semSubByDir = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   private[analytics] def resolveSemSub(s: SparkSession, d: String): Int = {
-    val v = semSubByDir.computeIfAbsent(d, _ => {
+    val v = memoSubPlanes(semSubByDir, "semdedup", d) {
       val e = emb(s, d)
-      val occ = e.count() / math.max(e.select("label").distinct().count(), 1L)
-      var p = 0
-      while (p < 16 && (occ >> p) > SemOccupancyTarget) p += 1
-      if (sys.env.contains("SPARK_GRAFT_VERBOSE"))
-        System.err.println(s"[semdedup] subPlanes=$p occupancy=$occ dir=$d")
-      Integer.valueOf(p)
-    }).intValue()
+      e.count() / math.max(e.select("label").distinct().count(), 1L)
+    }
     semSub = v
     v
   }
+
+  /** The smallest hyperplane sub-split (at most 16 planes) that brings a
+    * per-cell occupancy `occ` to at most [[SemOccupancyTarget]].
+    */
+  private def subPlanesFor(occ: Long): Int = {
+    var p = 0
+    while (p < 16 && (occ >> p) > SemOccupancyTarget) p += 1
+    p
+  }
+
+  /** [[subPlanesFor]] of the occupancy `occ` measures, memoized per dir. */
+  private def memoSubPlanes(memo: java.util.concurrent.ConcurrentHashMap[String, Integer],
+      tag: String, d: String)(occ: => Long): Int =
+    memo.computeIfAbsent(d, _ => {
+      val o = occ
+      val p = subPlanesFor(o)
+      if (sys.env.contains("SPARK_GRAFT_VERBOSE"))
+        System.err.println(s"[$tag] subPlanes=$p occupancy=$o dir=$d")
+      Integer.valueOf(p)
+    }).intValue()
 
   /** Trained-cell count for dedup_semantic_kmeans — the Lloyd k. 16 keeps
     * the oracle's unrolled two-round replay tractable; a real deployment
@@ -308,17 +323,19 @@ object DedupQueries {
   private val semKSubByDir = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   private[analytics] def resolveSemKSub(s: SparkSession, d: String): Int = {
-    val v = semKSubByDir.computeIfAbsent(d, _ => {
-      val occ = emb(s, d).count() / SemKCells
-      var p = 0
-      while (p < 16 && (occ >> p) > SemOccupancyTarget) p += 1
-      if (sys.env.contains("SPARK_GRAFT_VERBOSE"))
-        System.err.println(s"[semkdedup] subPlanes=$p occupancy=$occ dir=$d")
-      Integer.valueOf(p)
-    }).intValue()
+    val v = memoSubPlanes(semKSubByDir, "semkdedup", d)(emb(s, d).count() / SemKCells)
     semKSubV = v
     v
   }
+
+  /** Join each assigned vector (cell, qe, nrm, …) to its own broadcast cell
+    * centroid (cell, ce) and add `c2c`, their floor-rounded cosine — the
+    * SemDeDup/D4 drop criterion the semantic rows rank by.
+    */
+  private def withC2c(assigned: DataFrame, cent: DataFrame): DataFrame =
+    assigned.join(broadcast(cent.withColumn("cnrm", expr("long_dot(ce, ce)"))), Seq("cell"))
+      .withColumn("c2c",
+        expr("floor(long_dot(qe, ce) / (sqrt(nrm) * sqrt(cnrm)) * 1e6 + 0.5) / 1e6"))
 
   /** Containment edges (doc_a, doc_b) of per-doc shingle sets (doc_id, hs):
     * the dedup_containment_pairs rule — containment >= 0.8 with Jaccard
@@ -2043,27 +2060,10 @@ object DedupQueries {
         val n = graft.CacheTracker.track(QuantizedVectors.normed(emb(s, d), "label")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         // per-label integer-mean centroids (coarse k-means, as sim_ivf_topk)
-        val cent = graft.CacheTracker.track(n
-          .select(col("label"), posexplode(col("qe")).as(Seq("j", "v")))
-          .groupBy(col("label").as("c_id"), col("j"))
-          .agg(expr("cast(round(sum(v) / count(1)) as bigint)").as("cj"))
-          .groupBy(col("c_id"))
-          .agg(transform(array_sort(collect_list(struct(col("j"), col("cj")))),
-            x => x.getField("cj")).as("ce"))
-          .withColumn("cnrm", expr("long_dot(ce, ce)"))
+        val cent = graft.CacheTracker.track(SimilarityQueries.labelCells(n)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         // nearest-cell assignment + cosine-to-centroid (the drop criterion)
-        val assigned = graft.CacheTracker.track(n
-          .crossJoin(broadcast(cent))
-          .withColumn("dist", expr("long_l2(qe, ce)"))
-          .groupBy(col("vec_id"))
-          .agg(first(col("qe")).as("qe"), first(col("nrm")).as("nrm"),
-            min(struct(col("dist"), col("c_id"))).as("m"))
-          .select(col("vec_id"), col("qe"), col("nrm"), col("m.c_id").as("cell"))
-          .join(broadcast(cent.select(col("c_id").as("cell"), col("ce"), col("cnrm"))),
-            Seq("cell"))
-          .withColumn("c2c",
-            expr("floor(long_dot(qe, ce) / (sqrt(nrm) * sqrt(cnrm)) * 1e6 + 0.5) / 1e6"))
+        val assigned = graft.CacheTracker.track(withC2c(IvfIndex.nearest(n, cent), cent)
           .withColumn("subkey",
             if (sub > 0) expr(s"hyperplane_key(qe, $sub)") else lit(0L))
           .select(col("cell"), col("subkey"), col("vec_id"), col("qe"),
@@ -2139,12 +2139,8 @@ object DedupQueries {
       (s, d) => {
         val sub = resolveSemKSub(s, d)
         val idx = semkIndex(s, d)
-        val cent = broadcast(s.read.parquet(s"$idx/centroids")
-          .withColumn("cnrm", expr("long_dot(ce, ce)")))
-        val assigned = s.read.parquet(s"$idx/vectors")
-          .join(cent, Seq("cell"))
-          .withColumn("c2c",
-            expr("floor(long_dot(qe, ce) / (sqrt(nrm) * sqrt(cnrm)) * 1e6 + 0.5) / 1e6"))
+        val assigned = withC2c(s.read.parquet(s"$idx/vectors"),
+            s.read.parquet(s"$idx/centroids"))
           .withColumn("subkey",
             if (sub > 0) expr(s"hyperplane_key(qe, $sub)") else lit(0L))
           .select(col("cell"), col("subkey"), col("vec_id"), col("qe"),
@@ -2222,12 +2218,7 @@ object DedupQueries {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val idx = semkIndex(s, d)
-        val cent = broadcast(s.read.parquet(s"$idx/centroids")
-          .withColumn("cnrm", expr("long_dot(ce, ce)")))
-        val asg = s.read.parquet(s"$idx/vectors")
-          .join(cent, Seq("cell"))
-          .withColumn("c2c",
-            expr("floor(long_dot(qe, ce) / (sqrt(nrm) * sqrt(cnrm)) * 1e6 + 0.5) / 1e6"))
+        val asg = withC2c(s.read.parquet(s"$idx/vectors"), s.read.parquet(s"$idx/centroids"))
           .select(col("cell"), col("vec_id"), col("c2c"))
         asg
           .withColumn("rnk", row_number().over(

@@ -300,12 +300,11 @@ object EventQueries {
           .join(dc, Seq("day", "event_type"), "left").na.fill(0L, Seq("c"))
         val today = lattice.select(col("day"), col("event_type"),
           col("c").as("ct"), col("n").as("nt"))
-        val yest = lattice.select(col("day").as("yday"), col("event_type"),
+        val yest = lattice.select(col("day").as("yday"), col("event_type").as("yevent_type"),
           col("c").as("cy"), col("n").as("ny"))
         today.join(yest,
-            today("event_type") === yest("event_type") &&
-              today("day") === expr("yday + INTERVAL 1 DAY"))
-          .drop(yest("event_type"))
+            col("event_type") === col("yevent_type") &&
+              col("day") === expr("yday + INTERVAL 1 DAY"))
           .select(col("day"),
             expr(s"cast(floor((ct - cast(nt as double) * (cy + 1) / (ny + $k)) * " +
               s"(ct - cast(nt as double) * (cy + 1) / (ny + $k)) / " +

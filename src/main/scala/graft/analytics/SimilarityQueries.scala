@@ -2,7 +2,7 @@ package graft.analytics
 
 import graft.{QuerySpec, Tables}
 import graft.functions.TextFunctions._
-import graft.operators.QuantizedVectors
+import graft.operators.{IvfIndex, QuantizedVectors}
 import graft.operators.QuantizedVectors.{Cosine, L2, Metric, normed, topK}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -310,27 +310,13 @@ object SimilarityQueries {
        |    CAST(list_sum(list_transform($SubLaneSeries, j -> s.sqe[j] * c.ce[j])) AS BIGINT) AS pd
        |  FROM sub s JOIN c2 c ON s.m = c.m WHERE s.vec_id < $nq)""".stripMargin
 
-  /** Assign every (vec_id, m) sub-vector to its nearest codebook centroid —
-    * the [[IvfIndex]] argmin shape with the subspace id joined through:
-    * map-side-combined min(struct), ties on cell, one pass for all
-    * subspaces.
+  /** Assign every (vec_id, m, sqe) sub-vector to its nearest codebook
+    * centroid of (m, cell, ce): [[IvfIndex.nearest]] grouped by the
+    * subspace, one pass for all subspaces. Returns (vec_id, m, sqe, cell).
     */
-  private[graft] def pqAssign(v: org.apache.spark.sql.DataFrame,
-      cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    v.join(broadcast(cent), Seq("m"))
-      .withColumn("dist", expr("long_l2(sqe, ce)"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(first(col("sqe")).as("sqe"), min(struct(col("dist"), col("cell"))).as("mn"))
-      .select(col("vec_id"), col("m"), col("sqe"), col("mn.cell").as("cell"))
+  private[graft] def pqAssign(v: DataFrame, cent: DataFrame): DataFrame =
+    IvfIndex.nearest(v, cent, Seq("sqe"), by = Seq("m"), vec = "sqe")
 
-  /** Slice the corpus into per-subspace rows and train the codebooks.
-    * Returns (sub, cent), both persisted: `sub` (vec_id, m, sqe) feeds
-    * training, corpus encoding, and the query LUTs; `cent` (m, cell, ce) is
-    * PqM×PqK rows whose lineage is two full Lloyd rounds. Training runs on
-    * the deterministic `vec_id % 4 = 0` quarter — the scale pattern: a
-    * codebook needs a sample, never the corpus (at 100 TB you train on a
-    * few million vectors and ENCODE everything).
-    */
   /** Per-subspace slices (vec_id, m, sqe) of a quantized vector table
     * (vec_id, qe) — the row shape the whole PQ family works in.
     */
@@ -340,33 +326,34 @@ object SimilarityQueries {
         expr(s"slice(qe, m * (size(qe) div $PqM) + 1, size(qe) div $PqM)").as("sqe"))
 
   /** Train the [[PqM]] codebooks ((m, cell, ce) — [[PqK]] centroids per
-    * subspace, two joint Lloyd rounds) over `sub`'s deterministic
-    * `vec_id % 4 = 0` quarter. Shared by the in-query pipeline and
-    * [[graft.operators.PqIndex.build]], so stored and recomputed codebooks
-    * are bit-identical by construction.
+    * subspace, two joint [[IvfIndex.lloyd]] rounds grouped by `m`) over
+    * `sub`'s deterministic `vec_id % 4 = 0` quarter. Shared by the
+    * in-query pipeline and [[graft.operators.PqIndex.build]], so stored
+    * and recomputed codebooks are bit-identical by construction.
     */
-  private[graft] def pqTrainCodebooks(sub: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private[graft] def pqTrainCodebooks(sub: DataFrame): DataFrame = {
     val train = sub.filter(col("vec_id") % 4 === 0)
     val ids0 = train.filter(col("m") === 0)
       .select("vec_id").orderBy(col("vec_id")).limit(PqK)
-    var cent = train.join(ids0, "vec_id")
+    val init = train.join(ids0, "vec_id")
       .withColumn("cell", (row_number().over(
         Window.partitionBy(col("m")).orderBy(col("vec_id"))) - 1).cast("int"))
       .select(col("m"), col("cell"), col("sqe").as("ce"))
-    for (_ <- 1 to 2) {
-      val upd = pqAssign(train, cent)
-        .select(col("m"), col("cell"), posexplode(col("sqe")).as(Seq("j", "v")))
-        .groupBy(col("m"), col("cell"), col("j"))
-        .agg(expr("cast(round(sum(v) / count(1)) as bigint)").as("cj"))
-        .groupBy(col("m"), col("cell"))
-        .agg(transform(array_sort(collect_list(struct(col("j"), col("cj")))),
-          x => x.getField("cj")).as("ce"))
-      cent = cent.select(col("m"), col("cell"), col("ce").as("prev"))
-        .join(upd, Seq("m", "cell"), "left")
-        .select(col("m"), col("cell"), coalesce(col("ce"), col("prev")).as("ce"))
-    }
-    cent
+    IvfIndex.lloyd(train, init, 2, by = Seq("m"), vec = "sqe")
   }
+
+  /** Per-label coarse cells (cell, ce) of a quantized (label, qe) table —
+    * the label-cardinality stand-in for trained centroids that sim_ivf_topk,
+    * sim_ivf_recall and dedup_semantic partition by.
+    */
+  private[analytics] def labelCells(n: DataFrame): DataFrame =
+    IvfIndex.means(n, Seq("label")).withColumnRenamed("label", "cell")
+
+  /** The IVF-PQ store's per-label coarse layer as (cell, ce): stored under
+    * its build-time column name `c_id`.
+    */
+  private def coarseCells(s: SparkSession, idx: String): DataFrame =
+    s.read.parquet(s"$idx/coarse").withColumnRenamed("c_id", "cell")
 
   /** IVF-PQ probe, shared by sim_ivfpq_topk/recall: coarse cells are the
     * per-label centroids (the sim_ivf_topk geometry), the PQ code store is
@@ -384,41 +371,23 @@ object SimilarityQueries {
         s, d, graft.operators.PqIndex.Kind, "ivfpq-label") { stage =>
       val n = QuantizedVectors.of(emb(s, d), "label")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // per-label coarse centroids: posexplode + groupBy(label, dim) —
-      // map-side combined, no row holds a whole cell. Persisted WITH the
-      // index: probes read the stored coarse layer, so the steady-state
-      // query path never runs a full-corpus pass.
-      n.select(col("label"), posexplode(col("qe")).as(Seq("j", "v")))
-        .groupBy(col("label").as("c_id"), col("j"))
-        .agg(expr("cast(round(sum(v) / count(1)) as bigint)").as("cj"))
-        .groupBy(col("c_id"))
-        .agg(transform(array_sort(collect_list(struct(col("j"), col("cj")))),
-          x => x.getField("cj")).as("ce"))
+      // per-label coarse centroids, persisted WITH the index (stored as
+      // (c_id, ce)): probes read the stored coarse layer, so the
+      // steady-state query path never runs a full-corpus pass
+      IvfIndex.means(n, Seq("label")).withColumnRenamed("label", "c_id")
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/coarse")
-      // coarse assignment at build time: nearest label-centroid argmin
-      // (ties on c_id), the sim_ivf_topk shape
-      val centStored = s.read.parquet(s"$stage/coarse")
-      val assigned = n.crossJoin(broadcast(centStored))
-        .withColumn("dist", expr("long_l2(qe, ce)"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("dist"), col("c_id"))).as("m"))
-        .select(col("vec_id"), col("m.c_id").as("cell"))
+      // coarse assignment at build time: nearest stored label centroid
+      val assigned = IvfIndex.nearest(n, coarseCells(s, stage), carry = Nil)
       graft.operators.PqIndex.build(emb(s, d), stage, Some(assigned))
       n.unpersist(blocking = false)
     }
-    val cent = s.read.parquet(s"$idx/coarse")
     // the probe path reads ONLY the nq query vectors (scan-pushed filter)
     // plus the stored coarse/codebook/code artifacts — no corpus pass
     val q = QuantizedVectors.of(emb(s, d).filter(col("vec_id") < nq))
     // probes: top-2 cells per query against the broadcast centroids
-    val wp = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("c_id"))
-    val probes = graft.CacheTracker.track(q
-      .select(col("vec_id").as("q_id"), col("qe"))
-      .crossJoin(broadcast(cent))
-      .withColumn("dist", expr("long_l2(qe, ce)"))
-      .withColumn("prn", row_number().over(wp))
-      .filter(col("prn") <= 2)
-      .select(col("q_id"), col("c_id").as("cell"))
+    val probes = graft.CacheTracker.track(IvfIndex.nearestCells(
+        q.select(col("vec_id").as("q_id"), col("qe")), coarseCells(s, idx), "qe", 2)
+      .select(col("q_id"), col("cell"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // partition pruning: the probed cell union as scan literals
     val cells = probes.select(col("cell")).distinct()
@@ -488,13 +457,9 @@ object SimilarityQueries {
         s, d, graft.operators.PqIndex.Kind, "ivfpq-residual") { stage =>
       val q = normed(emb(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.operators.IvfIndex.trainCentroids(q, stage, nCells = 16, iters = 2)
+      IvfIndex.trainCentroids(q, stage, nCells = 16, iters = 2)
       val cent = s.read.parquet(s"$stage/centroids")
-      val assigned = q.crossJoin(broadcast(cent))
-        .withColumn("dist", expr("long_l2(qe, ce)"))
-        .groupBy(col("vec_id"))
-        .agg(first(col("qe")).as("qe"), min(struct(col("dist"), col("cell"))).as("m"))
-        .select(col("vec_id"), col("qe"), col("m.cell").as("cell"))
+      val assigned = IvfIndex.nearest(q, cent, carry = Seq("qe"))
       val residuals = assigned.join(broadcast(cent), "cell")
         .select(col("vec_id"), col("cell"),
           expr("zip_with(qe, ce, (a, b) -> a - b)").as("qe"))
@@ -507,11 +472,7 @@ object SimilarityQueries {
     // steady-state probe path: nq query vectors + stored artifacts only
     val q = QuantizedVectors.of(emb(s, d).filter(col("vec_id") < nq))
       .select(col("vec_id").as("q_id"), col("qe"))
-    val wp = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cell"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("dist", expr("long_l2(qe, ce)"))
-      .withColumn("prn", row_number().over(wp))
-      .filter(col("prn") <= 2)
+    val probes = IvfIndex.nearestCells(q, cent, "qe", 2)
       // per probed cell the query re-centers: its residual vs THAT cell
       .select(col("q_id"), col("cell"),
         expr("zip_with(qe, ce, (a, b) -> a - b)").as("re"))
@@ -618,13 +579,9 @@ object SimilarityQueries {
         s, d, graft.operators.SqIndex.Kind, "ivfsq") { stage =>
       val q = normed(emb(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.operators.IvfIndex.trainCentroids(q, stage, nCells = 16, iters = 2)
+      IvfIndex.trainCentroids(q, stage, nCells = 16, iters = 2)
       val cent = s.read.parquet(s"$stage/centroids")
-      val assigned = q.crossJoin(broadcast(cent))
-        .withColumn("dist", expr("long_l2(qe, ce)"))
-        .groupBy(col("vec_id"))
-        .agg(first(col("qe")).as("qe"), min(struct(col("dist"), col("cell"))).as("m"))
-        .select(col("vec_id"), col("qe"), col("m.cell").as("cell"))
+      val assigned = IvfIndex.nearest(q, cent, carry = Seq("qe"))
       graft.operators.SqIndex.buildFromQuantized(
         assigned.select(col("vec_id"), col("qe")), stage,
         assigned.select(col("vec_id"), col("cell")))
@@ -634,12 +591,7 @@ object SimilarityQueries {
     // steady-state probe path: nq query vectors + stored artifacts only
     val q = QuantizedVectors.of(emb(s, d).filter(col("vec_id") < nq))
       .select(col("vec_id").as("q_id"), col("qe").as("qq"))
-    val wp = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cell"))
-    val probes = graft.CacheTracker.track(q
-      .crossJoin(broadcast(cent))
-      .withColumn("dist", expr("long_l2(qq, ce)"))
-      .withColumn("prn", row_number().over(wp))
-      .filter(col("prn") <= 2)
+    val probes = graft.CacheTracker.track(IvfIndex.nearestCells(q, cent, "qq", 2)
       .select(col("q_id"), col("cell"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // partition pruning: the probed cell union as scan literals
@@ -1285,45 +1237,16 @@ object SimilarityQueries {
         // otherwise — the dominant cost of the whole query
         val n = graft.CacheTracker.track(normed(emb(s, d), "label")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        // centroid per label: per-dimension mean via posexplode + groupBy —
-        // partial aggregation does the heavy lifting map-side and no row ever
-        // holds more than one (label, dim) sum, so a hot label can't OOM an
-        // executor the way a collect_list of every vector would. Same
-        // round(sum/cnt) arithmetic as the oracle, so hashes are unchanged.
         // persist: the plan references cent twice (probe + assignment
         // cross-joins) and its lineage is a full pass over the vectors —
         // the cached table itself is only #labels rows
-        val cent = n
-          .select(col("label"), posexplode(col("qe")).as(Seq("j", "v")))
-          .groupBy(col("label").as("c_id"), col("j"))
-          .agg(expr("cast(round(sum(v) / count(1)) as bigint)").as("cj"))
-          .groupBy(col("c_id"))
-          .agg(transform(array_sort(collect_list(struct(col("j"), col("cj")))),
-            x => x.getField("cj")).as("ce"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        graft.CacheTracker.track(cent)
-        // assign every vector to its nearest centroid (exact integer L2^2).
-        // argmin as min(struct(dist, c_id)) under groupBy rather than a
-        // per-vector window: partial aggregation combines map-side, so the
-        // vectors x centroids table is reduced before its shuffle instead
-        // of being shuffle-sorted whole; ties break on c_id exactly like
-        // the oracle's ORDER BY dist, c_id. qe/nrm are constant per vec_id,
-        // so first() is deterministic.
-        val l2 = "long_l2(%s, %s)"
-        val assigned = n.crossJoin(broadcast(cent))
-          .withColumn("dist", expr(l2.format("qe", "ce")))
-          .groupBy(col("vec_id"))
-          .agg(first(col("qe")).as("qe"), first(col("nrm")).as("nrm"),
-            min(struct(col("dist"), col("c_id"))).as("m"))
-          .select(col("vec_id"), col("qe"), col("nrm"), col("m.c_id").as("cell"))
+        val cent = graft.CacheTracker.track(labelCells(n)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val assigned = IvfIndex.nearest(n, cent)
         // queries probe their 2 nearest cells
-        val wp = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("c_id"))
-        val probes = QuantizedVectors.probes(n, 5, Cosine.probe: _*)
-          .crossJoin(broadcast(cent))
-          .withColumn("dist", expr(l2.format("qa", "ce")))
-          .withColumn("prn", row_number().over(wp))
-          .filter(col("prn") <= 2)
-          .select(col("q_id"), col("qa"), col("na"), col("c_id").as("cell"))
+        val probes = IvfIndex.nearestCells(
+            QuantizedVectors.probes(n, 5, Cosine.probe: _*), cent, "qa", 2)
+          .select(col("q_id"), col("qa"), col("na"), col("cell"))
         topK(broadcast(probes).join(assigned, Seq("cell"))
             .filter(col("vec_id") =!= col("q_id")), 5)
           .select(col("q_id"), col("vec_id"), col("cell"),
@@ -1373,30 +1296,12 @@ object SimilarityQueries {
       (s, d) => {
         val n = graft.CacheTracker.track(normed(emb(s, d), "label")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val cent = n
-          .select(col("label"), posexplode(col("qe")).as(Seq("j", "v")))
-          .groupBy(col("label").as("c_id"), col("j"))
-          .agg(expr("cast(round(sum(v) / count(1)) as bigint)").as("cj"))
-          .groupBy(col("c_id"))
-          .agg(transform(array_sort(collect_list(struct(col("j"), col("cj")))),
-            x => x.getField("cj")).as("ce"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        graft.CacheTracker.track(cent)
-        val l2 = "long_l2(%s, %s)"
-        val assigned = n.crossJoin(broadcast(cent))
-          .withColumn("dist", expr(l2.format("qe", "ce")))
-          .groupBy(col("vec_id"))
-          .agg(first(col("qe")).as("qe"), first(col("nrm")).as("nrm"),
-            min(struct(col("dist"), col("c_id"))).as("m"))
-          .select(col("vec_id"), col("qe"), col("nrm"), col("m.c_id").as("cell"))
-        val wp = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("c_id"))
+        val cent = graft.CacheTracker.track(labelCells(n)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val assigned = IvfIndex.nearest(n, cent)
         val queries = QuantizedVectors.probes(n, 5, Cosine.probe: _*)
-        val probes = queries
-          .crossJoin(broadcast(cent))
-          .withColumn("dist", expr(l2.format("qa", "ce")))
-          .withColumn("prn", row_number().over(wp))
-          .filter(col("prn") <= 4)
-          .select(col("q_id"), col("qa"), col("na"), col("prn"), col("c_id").as("cell"))
+        val probes = IvfIndex.nearestCells(queries, cent, "qa", 4)
+          .select(col("q_id"), col("qa"), col("na"), col("prn"), col("cell"))
         // one candidate pass, reused by all three nProbe tiers
         val cand = graft.CacheTracker.track(broadcast(probes)
           .join(assigned, Seq("cell"))
@@ -1724,13 +1629,7 @@ object SimilarityQueries {
     "sim_cluster_stats" -> QuerySpec(
       (s, d) => {
         val n = normed(emb(s, d), "label")
-        val cent = n
-          .select(col("label"), posexplode(col("qe")).as(Seq("j", "v")))
-          .groupBy(col("label"), col("j"))
-          .agg(expr("cast(round(sum(v) / count(1)) as bigint)").as("cj"))
-          .groupBy(col("label"))
-          .agg(transform(array_sort(collect_list(struct(col("j"), col("cj")))),
-            x => x.getField("cj")).as("ce"))
+        val cent = IvfIndex.means(n, Seq("label"))
           .withColumn("cn", expr("long_dot(ce, ce)"))
         n.join(broadcast(cent), Seq("label"))
           .withColumn("ci",

@@ -29,6 +29,15 @@ import org.apache.spark.sql.functions._
   * parallelism, as for any distributed write.
   *
   * Keying and build-once readiness are [[StoreRoot]]'s.
+  *
+  * It is also the repo's one coarse quantizer: [[nearest]] (argmin
+  * assignment), [[means]] (per-lane integer centroids), [[lloyd]]
+  * (training rounds) and [[nearestCells]] (the per-query probe window).
+  * Callers: this store; the IVF-PQ, residual IVF-PQ and IVF-SQ8 stores and
+  * probes, the PQ codebooks (`pqTrainCodebooks`/`pqAssign`, grouped by
+  * subspace), `sim_ivf_topk`, `sim_ivf_recall` and `sim_cluster_stats` in
+  * [[graft.analytics.SimilarityQueries]], and `dedup_semantic` in
+  * [[graft.analytics.DedupQueries]].
   */
 object IvfIndex {
 
@@ -42,39 +51,82 @@ object IvfIndex {
   /** Registry store key ([[StoreRoot.key]]). */
   val Kind = StoreKind("ivf-index", "embeddings", FormatVersion)
 
-  /** Assign every vector to its nearest centroid (exact integer L2²,
-    * ties on cell id) — map-side-combined argmin, the sim_ivf_topk shape.
+  /** Assign every row of `vecs` (vec_id, by…, `vec`, …) to its nearest
+    * centroid of `cent` (by…, cell, ce): exact integer L2², ties on cell id.
+    * The argmin is min(struct(dist, cell)) under groupBy, so partial
+    * aggregation combines map-side and the vectors × centroids product is
+    * reduced before its shuffle (a per-vector window would shuffle it
+    * whole). The centroid table broadcasts; `by` keys (PQ's subspace `m`)
+    * join it per group, and with none it cross-joins. Returns
+    * (vec_id, by…, carry…, cell); carried columns are constant per
+    * vector, so first() is deterministic.
     */
-  private def assign(vecs: DataFrame, cent: DataFrame): DataFrame =
-    vecs.crossJoin(broadcast(cent))
-      .withColumn("dist", expr("long_l2(qe, ce)"))
-      .groupBy(col("vec_id"))
-      .agg(first(col("qe")).as("qe"), first(col("nrm")).as("nrm"),
-        min(struct(col("dist"), col("cell"))).as("m"))
-      .select(col("vec_id"), col("qe"), col("nrm"), col("m.cell").as("cell"))
+  private[graft] def nearest(vecs: DataFrame, cent: DataFrame,
+      carry: Seq[String] = Seq("qe", "nrm"), by: Seq[String] = Nil,
+      vec: String = "qe"): DataFrame = {
+    val keys = "vec_id" +: by
+    val aggs = carry.map(c => first(col(c)).as(c)) :+
+      min(struct(col("dist"), col("cell"))).as("mn")
+    (if (by.isEmpty) vecs.crossJoin(broadcast(cent)) else vecs.join(broadcast(cent), by))
+      .withColumn("dist", expr(s"long_l2($vec, ce)"))
+      .groupBy(keys.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .select((keys ++ carry).map(col) :+ col("mn.cell").as("cell"): _*)
+  }
 
-  /** Per-dimension integer mean of each cell's members — posexplode +
-    * groupBy(cell, dim), so no row ever holds a whole cell.
+  /** Per-lane integer mean (round(sum / count), the oracles' arithmetic)
+    * of `vec` over each `by` group — posexplode + groupBy(by…, lane), so
+    * no row ever holds a whole group. Returns (by…, ce).
     */
-  private def means(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("cell"), posexplode(col("qe")).as(Seq("j", "v")))
-      .groupBy(col("cell"), col("j"))
+  private[graft] def means(vecs: DataFrame, by: Seq[String], vec: String = "qe"): DataFrame =
+    vecs
+      .select(by.map(col) :+ posexplode(col(vec)).as(Seq("j", "v")): _*)
+      .groupBy((by :+ "j").map(col): _*)
       .agg(expr("cast(round(sum(v) / count(1)) as bigint)").as("cj"))
-      .groupBy(col("cell"))
+      .groupBy(by.map(col): _*)
       .agg(transform(array_sort(collect_list(struct(col("j"), col("cj")))),
         x => x.getField("cj")).as("ce"))
 
+  /** `iters` Lloyd rounds from `init` (by…, cell, ce): [[nearest]], then
+    * [[means]]. An empty cell (no member) keeps its previous centroid, so
+    * the cell count never shrinks between rounds. `by` trains one
+    * independent codebook per group in the same passes (PQ's subspaces);
+    * with none it is the IVF coarse layer.
+    */
+  private[graft] def lloyd(vecs: DataFrame, init: DataFrame, iters: Int,
+      by: Seq[String] = Nil, vec: String = "qe"): DataFrame = {
+    val keys = by :+ "cell"
+    (1 to iters).foldLeft(init) { (cent, _) =>
+      val updated = means(nearest(vecs, cent, Seq(vec), by, vec), keys, vec)
+      cent.select(keys.map(col) :+ col("ce").as("prev"): _*)
+        .join(updated, keys, "left")
+        .select(keys.map(col) :+ coalesce(col("ce"), col("prev")).as("ce"): _*)
+    }
+  }
+
+  /** Each query's `nProbe` nearest cells: `q` (q_id, `vec`, …) × the
+    * broadcast centroid table (cell, ce), ranked per query on (L2², cell)
+    * — a window over |Q| × nCells rows, never over the corpus. Returns
+    * q's columns plus cell, ce, dist and the probe rank `prn`.
+    */
+  private[graft] def nearestCells(q: DataFrame, cent: DataFrame, vec: String,
+      nProbe: Int): DataFrame = {
+    val wp = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cell"))
+    q.crossJoin(broadcast(cent))
+      .withColumn("dist", expr(s"long_l2($vec, ce)"))
+      .withColumn("prn", row_number().over(wp))
+      .filter(col("prn") <= nProbe)
+  }
+
   /** Train `nCells` coarse centroids with `iters` Lloyd rounds and write
-    * the index. Init = the `nCells` smallest vec_ids (deterministic);
-    * empty cells keep their previous centroid.
+    * the index. Init = the `nCells` smallest vec_ids (deterministic).
     */
   def build(emb: DataFrame, indexPath: String, nCells: Int = 16, iters: Int = 2): Unit = {
     val vecs = QuantizedVectors.normed(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     trainCentroids(vecs, indexPath, nCells, iters)
     val centLoaded = emb.sparkSession.read.parquet(s"$indexPath/centroids")
-    assign(vecs, centLoaded)
+    nearest(vecs, centLoaded)
       .write.mode("overwrite").partitionBy("cell").parquet(s"$indexPath/vectors")
     vecs.unpersist(blocking = false)
   }
@@ -89,19 +141,12 @@ object IvfIndex {
       nCells: Int = 16, iters: Int = 2): Unit = {
     // deterministic init: TakeOrderedAndProject keeps the nCells smallest
     // vec_ids; their vec_id-sorted list numbers them 0.. by position
-    var cent = vecs.orderBy(col("vec_id")).limit(nCells)
+    val init = vecs.orderBy(col("vec_id")).limit(nCells)
       .agg(array_sort(collect_list(struct(col("vec_id"), col("qe")))).as("init"))
       .select(posexplode(col("init")).as(Seq("cell", "v")))
       .select(col("cell"), col("v.qe").as("ce"))
-    for (_ <- 1 to iters) {
-      val updated = means(assign(vecs, cent))
-      // empty cells (no member) fall back to the previous centroid so the
-      // cell count never shrinks between rounds
-      cent = cent.select(col("cell"), col("ce").as("prev"))
-        .join(updated, Seq("cell"), "left")
-        .select(col("cell"), coalesce(col("ce"), col("prev")).as("ce"))
-    }
-    cent.coalesce(1).write.mode("overwrite").parquet(s"$indexPath/centroids")
+    lloyd(vecs, init, iters)
+      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/centroids")
   }
 
   /** Fold a new vector batch into an existing index WITHOUT retraining:
@@ -120,7 +165,7 @@ object IvfIndex {
   def append(emb: DataFrame, indexPath: String): Unit = {
     val spark = emb.sparkSession
     val cent = spark.read.parquet(s"$indexPath/centroids")
-    assign(QuantizedVectors.normed(emb), cent)
+    nearest(QuantizedVectors.normed(emb), cent)
       .write.mode(SaveMode.Append).partitionBy("cell").parquet(s"$indexPath/vectors")
   }
 
@@ -137,7 +182,7 @@ object IvfIndex {
   def appendBatch(emb: DataFrame, indexPath: String, batchId: Long): Unit = {
     val spark = emb.sparkSession
     val cent = spark.read.parquet(s"$indexPath/centroids")
-    assign(QuantizedVectors.normed(emb), cent)
+    nearest(QuantizedVectors.normed(emb), cent)
       .withColumn("batch_id", lit(batchId))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
@@ -162,7 +207,7 @@ object IvfIndex {
     * exposed for inspection and for the spec's store≡assignment proof.
     */
   def assignTo(spark: SparkSession, indexPath: String, emb: DataFrame): DataFrame =
-    assign(QuantizedVectors.normed(emb), spark.read.parquet(s"$indexPath/centroids"))
+    nearest(QuantizedVectors.normed(emb), spark.read.parquet(s"$indexPath/centroids"))
       .select(col("vec_id"), col("cell"))
 
   /** Per-cell occupancy of the vector store — (cell, n, share). Reads only
@@ -190,11 +235,7 @@ object IvfIndex {
     val cent = spark.read.parquet(s"$indexPath/centroids")
     val q = QuantizedVectors.normed(queries)
       .select(col("vec_id").as("q_id") +: QuantizedVectors.Cosine.probe: _*)
-    val wp = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cell"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("dist", expr("long_l2(qa, ce)"))
-      .withColumn("prn", row_number().over(wp))
-      .filter(col("prn") <= nProbe)
+    val probes = nearestCells(q, cent, "qa", nProbe)
       .select(col("q_id"), col("qa"), col("na"), col("cell"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the probed cell set is queries x nProbe ids — metadata-scale by

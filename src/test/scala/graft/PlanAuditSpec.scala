@@ -66,6 +66,45 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(!p.contains("CartesianProduct"), s"unexpected cartesian in:\n$p")
     }
 
+  // the one coarse-quantizer argmin (IvfIndex.nearest): a partial-then-final
+  // min(struct(dist, …)) aggregate fed by a broadcast centroid join, and no
+  // window ranking the vectors x centroids product (the only windows over
+  // dist are the per-query probe windows)
+  for ((name, p) <- Seq[(String, () => String)](
+      "sim_ivf_topk" -> (() => plan("sim_ivf_topk")),
+      "sim_ivf_recall" -> (() => plan("sim_ivf_recall")),
+      "dedup_semantic" -> (() => plan("dedup_semantic")),
+      "IvfIndex.nearest" -> { () =>
+        val v = operators.QuantizedVectors.normed(Tables.t(spark, dir, "embeddings"))
+        operators.IvfIndex.nearest(v,
+          v.filter(org.apache.spark.sql.functions.col("vec_id") < 4)
+            .selectExpr("cast(vec_id as int) AS cell", "qe AS ce"))
+          .queryExecution.executedPlan.toString
+      },
+      "IvfIndex.nearest by m" -> { () =>
+        val sub = analytics.SimilarityQueries.pqSubspaces(
+          operators.QuantizedVectors.of(Tables.t(spark, dir, "embeddings")))
+        operators.IvfIndex.nearest(sub,
+          sub.filter(org.apache.spark.sql.functions.col("vec_id") < 4)
+            .selectExpr("m", "cast(vec_id as int) AS cell", "sqe AS ce"),
+          Seq("sqe"), by = Seq("m"), vec = "sqe")
+          .queryExecution.executedPlan.toString
+      }))
+    test(s"nearest-centroid argmin: $name merges a map-side min(struct) over a broadcast join") {
+      val pl = p()
+      val lines = pl.linesIterator.toVector
+      val partial = lines.indexWhere(_.contains("partial_min(struct(dist"))
+      assert(partial >= 0, s"expected a partial argmin aggregate in:\n$pl")
+      assert(lines.exists(l => """[^_]min\(struct\(dist""".r.findFirstIn(l).nonEmpty),
+        s"expected the final argmin merge in:\n$pl")
+      val join = lines.drop(partial + 1).find(_.contains("Join"))
+      assert(join.exists(j => j.contains("Broadcast") && j.contains("BuildRight")),
+        s"expected the centroid side broadcast under the argmin, got $join in:\n$pl")
+      assert(!lines.exists(l => l.contains("Window") && l.contains("[dist#") &&
+          !l.contains("[q_id#")),
+        s"a window ranks the vectors x centroids product in:\n$pl")
+    }
+
   test("kNN classify: candidates come from the bucket equi-join") {
     val p = plan("sim_knn_classify")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{PqIndex, StoreRoot}
+import graft.analytics.SimilarityQueries
+import graft.operators.{IvfIndex, PqIndex, StoreRoot}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,6 +43,33 @@ class PqIndexSpec extends AnyFunSuite {
       .select(col("vec_id"), col("m"), col("cell").as("code")))
     assert(stored.size == want.size)
     assert(stored == want)
+  }
+
+  test("one Lloyd serves both: grouped by m equals the ungrouped form per m slice") {
+    val sub = SimilarityQueries.pqSubspaces(
+      Tables.spread(emb, "vec_id").select(col("vec_id"),
+        expr(graft.functions.TextFunctions.quantizeS("embedding")).as("qe")))
+      .filter(col("vec_id") % 4 === 0)
+    // the same init ids in every subspace: the PqK smallest training ids
+    val ids = sub.filter(col("m") === 0).select("vec_id").orderBy("vec_id")
+      .limit(SimilarityQueries.PqK).collect().map(_.getLong(0)).sorted
+    val init = sub.filter(col("vec_id").isin(ids.toSeq: _*))
+      .select(col("m"), col("vec_id"), col("sqe").as("ce"))
+      .withColumn("cell", expr(s"cast(array_position(array(${ids.mkString(", ")}), vec_id) - 1 as int)"))
+      .select("m", "cell", "ce")
+    def book(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Long](2)).toMap
+    val grouped = book(IvfIndex.lloyd(sub, init, 2, by = Seq("m"), vec = "sqe")
+      .select("m", "cell", "ce"))
+    val sliced = (0 until SimilarityQueries.PqM).flatMap { m =>
+      book(IvfIndex.lloyd(sub.filter(col("m") === m).select("vec_id", "sqe"),
+          init.filter(col("m") === m).select("cell", "ce"), 2, vec = "sqe")
+        .select(lit(m).as("m"), col("cell"), col("ce")))
+    }.toMap
+    assert(grouped.size == SimilarityQueries.PqM * SimilarityQueries.PqK)
+    assert(grouped == sliced)
+    // the PQ codebook trainer is that grouped form
+    assert(book(SimilarityQueries.pqTrainCodebooks(sub)) == grouped)
   }
 
   test("adcScores matches an in-memory ADC reference") {
