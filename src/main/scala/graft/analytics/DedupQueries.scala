@@ -348,17 +348,12 @@ object DedupQueries {
         expr("shared / (na + nb - shared)") < 0.6)
       .select(col("doc_a"), col("doc_b"))
 
-  /** doc_id + distinct 3-gram shingle hashes (the dedup unit). The explicit
-    * repartition spreads the per-doc signature computation: a small parquet
-    * file arrives as ONE split (a 100 TB corpus has thousands), and the HOF
-    * projections are the dominant cost at bench scale.
+  /** [[graft.jobs.CorpusCuration.shingles]] (`hs`, `n_tokens`) after a
+    * repartition that spreads the per-doc HOF projections: a small parquet
+    * file arrives as ONE split (a 100 TB corpus has thousands).
     */
-  private[analytics] def withShingles(df: DataFrame): DataFrame = {
-    Tables.spread(df, "doc_id")
-      .withColumn("t", expr(tokensS("text")))
-      .withColumn("th", expr(tokenHashesS("t")))
-      .withColumn("hs", expr("array_distinct(shingle3_hash(th))"))
-  }
+  private[analytics] def withShingles(df: DataFrame): DataFrame =
+    graft.jobs.CorpusCuration.shingles(Tables.spread(df, "doc_id"))
 
   /** Shared oracle CTE body: toks -> th -> sh(hs). */
   private val ShinglesCte =
@@ -403,7 +398,7 @@ object DedupQueries {
     */
   private def shingleProjection(s: SparkSession, d: String): DataFrame =
     graft.CacheTracker.track(withShingles(docs(s, d).select("doc_id", "text"))
-      .select(col("doc_id"), col("hs"), size(col("t")).as("n_tok"))
+      .select(col("doc_id"), col("hs"), col("n_tokens").as("n_tok"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   // ---- Bloom-filter decontamination (dedup_contamination_bloom) ----------
@@ -491,9 +486,13 @@ object DedupQueries {
     * incremental dedup incremental.
     */
   private[graft] def signatureRows(docsDf: DataFrame): DataFrame =
-    withShingles(docsDf.select("doc_id", "text"))
-      .select(col("doc_id"), col("hs"), expr("minhash16(hs)").as("sig"),
-        size(col("t")).as("n_tok"))
+    signed(withShingles(docsDf.select("doc_id", "text")))
+
+  /** The signing step: index rows (doc_id, hs, sig, n_tok) of a frame with
+    * `hs` and `n_tokens` — fresh ones here, a stream batch's carried ones. */
+  private[graft] def signed(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), col("hs"), expr("minhash16(hs)").as("sig"),
+      col("n_tokens").as("n_tok"))
 
   /** LSH candidate pairs from a banded table (doc_id, b, k) with the
     * hot-bucket skew guard — shared by the minhash family and the
@@ -1200,12 +1199,7 @@ object DedupQueries {
         // pipeline, so this row now costs labels + a clustered-docs-only
         // quality pass; the oracle still replays full closure
         val comp = registryLabels(s, d)
-        docs(s, d).join(comp, Seq("doc_id"))
-          .withColumn("t", expr(tokensS("text")))
-          .withColumn("stop_ratio", expr(stopRatioS("t")))
-          .withColumn("distinct_ratio", expr(distinctRatioS("t")))
-          .withColumn("len_score", expr(lenScoreS("text")))
-          .withColumn("quality", expr(QualityS))
+        graft.jobs.CorpusCuration.quality(docs(s, d).join(comp, Seq("doc_id")))
           .groupBy(col("lbl").as("cluster_rep"))
           .agg(count(lit(1)).as("n_docs"),
             max(struct(col("quality"), (-col("doc_id")).as("nid"))).as("m"))

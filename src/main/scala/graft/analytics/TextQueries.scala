@@ -252,15 +252,10 @@ object TextQueries {
     // ----- quality scoring: stopword/distinct ratios + length prior ---------
     "txt_quality_score" -> QuerySpec(
       (s, d) => {
-        docs(s, d)
-          .withColumn("t", expr(tokensS("text")))
-          // floor(x*1e6 + 0.5)/1e6 instead of round(x, 6): Spark rounds the
-          // DECIMAL string, DuckDB the binary double, so 5-at-the-7th-digit
-          // ties diverge by 1e-6; the floor form is identical IEEE in both
-          .withColumn("stop_ratio", expr(stopRatioS("t")))
-          .withColumn("distinct_ratio", expr(distinctRatioS("t")))
-          .withColumn("len_score", expr(lenScoreS("text")))
-          .withColumn("quality", expr(QualityS))
+        // floor(x*1e6 + 0.5)/1e6 instead of round(x, 6): Spark rounds the
+        // DECIMAL string, DuckDB the binary double, so 5-at-the-7th-digit
+        // ties diverge by 1e-6; the floor form is identical IEEE in both
+        graft.jobs.CorpusCuration.quality(docs(s, d))
           .select(col("doc_id"), col("stop_ratio"), col("distinct_ratio"),
             col("len_score"), col("quality"))
           .orderBy(col("doc_id"))
@@ -291,13 +286,8 @@ object TextQueries {
     "txt_domain_cap" -> QuerySpec(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val q = docs(s, d)
-          .withColumn("t", expr(tokensS("text")))
-          .withColumn("stop_ratio", expr(stopRatioS("t")))
-          .withColumn("distinct_ratio", expr(distinctRatioS("t")))
-          .withColumn("len_score", expr(lenScoreS("text")))
-          .withColumn("quality", expr(QualityS))
-          .select(col("doc_id"), col("source"), size(col("t")).as("n_tok"),
+        val q = graft.jobs.CorpusCuration.quality(docs(s, d))
+          .select(col("doc_id"), col("source"), col("n_tokens").as("n_tok"),
             col("quality"))
         val w = Window.partitionBy(col("source"))
           .orderBy(col("quality").desc, col("doc_id"))
@@ -356,11 +346,9 @@ object TextQueries {
     "txt_quality_distill" -> QuerySpec(
       (s, d) => {
         val NF = 6
-        val qmExpr = s"floor((0.3 * ${stopRatioS("t")} + 0.4 * ${distinctRatioS("t")} " +
-          s"+ 0.3 * ${lenScoreS("text")}) * 1e6 + 0.5)"
         val feat = graft.CacheTracker.track(docs(s, d)
           .withColumn("t", expr(tokensS("text")))
-          .withColumn("qm", expr(qmExpr))
+          .withColumn("qm", expr(qualityMicroS("t", "text")))
           .withColumn("y", expr("if(qm > 430000, cast(1 as bigint), cast(0 as bigint))"))
           .withColumn("x0", lit(1000000L))
           .withColumn("x1", expr(s"cast(size(filter(t, w -> array_contains($StopwordsSql, w))) as bigint) * 1000000 div size(t)"))
@@ -699,11 +687,9 @@ object TextQueries {
     "txt_budget_mix" -> QuerySpec(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val qmExpr = s"floor((0.3 * ${stopRatioS("t")} + 0.4 * ${distinctRatioS("t")} " +
-          s"+ 0.3 * ${lenScoreS("text")}) * 1e6 + 0.5)"
         val src = docs(s, d)
           .withColumn("t", expr(tokensS("text")))
-          .withColumn("qm", expr(qmExpr).cast("long"))
+          .withColumn("qm", expr(qualityMicroS("t", "text")).cast("long"))
           .withColumn("w", expr("cast(size(t) as bigint)"))
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"), sum(col("w")).as("tokens"),
@@ -1846,13 +1832,8 @@ object TextQueries {
     // broadcast cross, one map-side-combined aggregate.
     "txt_quality_curve" -> QuerySpec(
       (s, d) => {
-        val scored = docs(s, d)
-          .withColumn("t", expr(tokensS("text")))
-          .withColumn("stop_ratio", expr(stopRatioS("t")))
-          .withColumn("distinct_ratio", expr(distinctRatioS("t")))
-          .withColumn("len_score", expr(lenScoreS("text")))
-          .withColumn("quality", expr(QualityS))
-          .select(col("quality"), expr("size(t)").cast("bigint").as("n_tok"))
+        val scored = graft.jobs.CorpusCuration.quality(docs(s, d))
+          .select(col("quality"), col("n_tokens").cast("bigint").as("n_tok"))
         val thr = scored.sparkSession.range(0, 1)
           .selectExpr("explode(array(0.30d, 0.35d, 0.40d, 0.45d)) as thr")
         scored.crossJoin(broadcast(thr))

@@ -117,6 +117,9 @@ object TextFunctions {
   /** Combines the three already-rounded component columns. */
   val QualityS: String =
     "floor((0.3 * stop_ratio + 0.4 * distinct_ratio + 0.3 * len_score) * 1e6 + 0.5) / 1e6"
+  /** Integer micro-score floor(quality·1e6 + 0.5), from tokens and text. */
+  def qualityMicroS(t: String, text: String): String =
+    s"floor((0.3 * ${stopRatioS(t)} + 0.4 * ${distinctRatioS(t)} + 0.3 * ${lenScoreS(text)}) * 1e6 + 0.5)"
 
   // ---- PII scrubbing -------------------------------------------------------
   // Standard pre-training redaction: URLs first (they can embed emails),

@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.functions.TextFunctions._
 import graft.operators.ConnectedComponents
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus curation: the composed pipeline a training run actually
@@ -23,6 +23,20 @@ import org.apache.spark.sql.functions._
   * Arithmetic is oracle-exact (floor(x*1e6 + 0.5)/1e6 quantization on every
   * ratio, integer token-hash counts): the whole first-drop attribution is
   * replayed by `txt_curation_funnel`'s DuckDB oracle and hash-compared.
+  *
+  * This object owns the one definition of the per-document signals, so a
+  * document scores and shingles the same on every path:
+  *   - [[quality]] (tokens, token count, quality parts and score) —
+  *     `txt_quality_score`, `txt_domain_cap`, `txt_quality_curve`,
+  *     `dedup_cluster_canonical` and `DocumentStream.scored`;
+  *   - [[shingles]] (quality plus the distinct-trigram set `hs`) —
+  *     `DedupQueries.withShingles`/`signatureRows` (and through them the
+  *     MinHash index, dup graph and registry dedup rows) and
+  *     `DocumentStream.ingestBatch`;
+  *   - [[signals]], [[withContamination]] and [[stageReason]] (repetition
+  *     signals, the eval-set overlap join, the first-drop chain) — this
+  *     batch funnel and `DocumentStream.curateBatch`, which runs the same
+  *     chain without the benchmark stage.
   */
 object CorpusCuration {
 
@@ -46,33 +60,72 @@ object CorpusCuration {
       droppedContamination: Long,
       droppedDuplicate: Long)
 
-  /** The one-corpus-scan signal projection every stage reads: `tri`
-    * (distinct trigram hashes) doubles as the contamination unit AND the
-    * near-dup shingle set, so a caller that also derives the MinHash pairs
-    * from this frame ([[flagWithMinhash]]) tokenizes the corpus exactly
-    * once. top-token count is the native max_elem_count (one pass over the
-    * row's hash array) — not an explode + two-level aggregate shuffling
-    * every token of every document to learn one scalar per doc. Persisted
-    * and tracked for release via [[graft.CacheTracker]].
+  /** `df` plus tokens `t`, token count `n_tokens` (INT), the quality parts
+    * and their floor-form `quality`; a frame that lands drops `t`.
     */
-  private def signalBase(docs: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
-    graft.CacheTracker.eager(graft.Tables.spread(docs, "doc_id")
-      .withColumn("t", expr(tokensS("text")))
-      .withColumn("th", expr(tokenHashesS("t")))
-      .withColumn("tri", expr("array_distinct(shingle3_hash(th))"))
-      .withColumn("n_tokens", expr("cast(size(t) as bigint)"))
+  private[graft] def quality(df: DataFrame): DataFrame =
+    df.withColumn("t", expr(tokensS("text")))
+      .withColumn("n_tokens", expr("size(t)"))
       .withColumn("stop_ratio", expr(stopRatioS("t")))
       .withColumn("distinct_ratio", expr(distinctRatioS("t")))
       .withColumn("len_score", expr(lenScoreS("text")))
       .withColumn("quality", expr(QualityS))
+
+  /** [[quality]] plus token hashes `th` and the distinct 3-gram shingle
+    * set `hs` (what MinHash signs and the contamination stage probes);
+    * installs the native functions on `df`'s session. Unread columns prune.
+    */
+  private[graft] def shingles(df: DataFrame): DataFrame = {
+    graft.functions.VectorExpressions.register(df.sparkSession)
+    quality(df)
+      .withColumn("th", expr(tokenHashesS("t")))
+      .withColumn("hs", expr("array_distinct(shingle3_hash(th))"))
+  }
+
+  /** [[shingles]] plus the repetition signals: `dup_trigram_frac` and
+    * `top_token_frac` (native max_elem_count, one pass over the hash array).
+    */
+  private[graft] def signals(df: DataFrame): DataFrame =
+    shingles(df)
       .withColumn("dup_trigram_frac", expr(
         "if(size(th) < 3, cast(0.0 as double), " +
-          "floor((1 - size(tri) / size(shingle3_hash(th))) * 1e6 + 0.5) / 1e6)"))
+          "floor((1 - size(hs) / size(shingle3_hash(th))) * 1e6 + 0.5) / 1e6)"))
       .withColumn("top_token_frac",
         expr("floor(max_elem_count(th) / n_tokens * 1e6 + 0.5) / 1e6"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  /** `docs` plus `contam_frac`, the share of each `probes` doc's `hs` found
+    * in the broadcast `bench` (distinct `h`), 0 for the rest; both sides
+    * are distinct, so the plain hit count IS the distinct overlap.
+    */
+  private[graft] def withContamination(docs: DataFrame, bench: DataFrame,
+      probes: DataFrame): DataFrame = {
+    val hits = probes.select(col("doc_id"), explode(col("hs")).as("h"))
+      .join(broadcast(bench.select(col("h"))), "h")
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
+    docs.join(hits, Seq("doc_id"), "left")
+      .withColumn("contam_frac", expr(
+        "floor(coalesce(n_hits, 0) / greatest(size(hs), 1) * 1e6 + 0.5) / 1e6"))
   }
+
+  /** First stage dropping a doc of [[signals]] + `contam_frac` (null = kept);
+    * `benchmark` puts the fixed-corpus holdout stage in front.
+    */
+  private[graft] def stageReason(cfg: CurationConfig, benchmark: Boolean): Column = {
+    val holdout = if (benchmark) Seq((col("doc_id") % cfg.benchMod === 0) -> "benchmark") else Nil
+    val stages = holdout ++ Seq(
+      (col("quality") < cfg.minQuality) -> "quality",
+      (col("top_token_frac") > cfg.maxTopTokenFrac ||
+        col("dup_trigram_frac") > cfg.maxDupTrigramFrac) -> "repetition",
+      (col("contam_frac") > cfg.minContamFrac) -> "contamination")
+    stages.tail.foldLeft(when(stages.head._1, stages.head._2)) { case (w, (c, r)) => w.when(c, r) }
+  }
+
+  /** The persisted one-corpus-scan [[signals]] every stage reads; `hs` is
+    * also the near-dup shingle set, so [[flagWithMinhash]] tokenizes once.
+    */
+  private def signalBase(docs: DataFrame): DataFrame =
+    graft.CacheTracker.eager(signals(graft.Tables.spread(docs, "doc_id"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Per-document first-drop attribution: every input row comes back with
     * its signal columns and a `reason` in (benchmark | quality | repetition
@@ -109,7 +162,7 @@ object CorpusCuration {
       labels.select(col("doc_id").as("id"), col("lbl")), cfg)
 
   /** [[flag]] with the near-dup pairs derived from the SAME persisted
-    * signal projection the curation signals read (`tri` is exactly the
+    * signal projection the curation signals read (`hs` is exactly the
     * distinct-shingle set the MinHash pipeline signs), so the corpus text
     * is tokenized ONCE for the whole composed pipeline instead of once for
     * the signals and again for the pair pipeline — at 100 TB that is the
@@ -120,7 +173,7 @@ object CorpusCuration {
       cfg: CurationConfig = CurationConfig()): DataFrame = {
     val base = signalBase(docs)
     val pairs = graft.analytics.DedupQueries
-      .minhashPairsFrom(base.select(col("doc_id"), col("tri").as("hs")))
+      .minhashPairsFrom(base.select(col("doc_id"), col("hs")))
       .select(col("doc_a"), col("doc_b"))
     flagFromBase(base, docs.columns,
       ConnectedComponents.components(pairs, "doc_a", "doc_b"), cfg)
@@ -137,31 +190,18 @@ object CorpusCuration {
       comp: DataFrame,
       cfg: CurationConfig): DataFrame = {
 
-    // benchmark n-gram set is tiny next to the corpus -> broadcast; `tri`
-    // is distinct per doc and `bench` is distinct, so each (doc, h) joins
-    // at most once and the plain count IS the distinct-overlap count
+    // the benchmark slice's distinct trigrams, probed by every other doc
     val bench = base.filter(col("doc_id") % cfg.benchMod === 0)
-      .select(explode(col("tri")).as("h")).distinct()
-    val hits = base.filter(col("doc_id") % cfg.benchMod =!= 0)
-      .select(col("doc_id"), explode(col("tri")).as("h"))
-      .join(broadcast(bench), "h")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
+      .select(explode(col("hs")).as("h")).distinct()
 
     // every pre-dedup verdict first: the duplicate stage must pick each
     // cluster's representative among docs that SURVIVE the earlier stages,
     // or a cluster whose min-id member fails (say) quality loses every copy
     // of its content
-    val pre = graft.CacheTracker.eager(base
-      .join(hits, Seq("doc_id"), "left")
-      .withColumn("contam_frac", expr(
-        "floor(coalesce(n_hits, 0) / greatest(size(tri), 1) * 1e6 + 0.5) / 1e6"))
-      .withColumn("pre_reason",
-        when(col("doc_id") % cfg.benchMod === 0, "benchmark")
-          .when(col("quality") < cfg.minQuality, "quality")
-          .when(col("top_token_frac") > cfg.maxTopTokenFrac ||
-            col("dup_trigram_frac") > cfg.maxDupTrigramFrac, "repetition")
-          .when(col("contam_frac") > cfg.minContamFrac, "contamination"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val pre = graft.CacheTracker.eager(
+      withContamination(base, bench, base.filter(col("doc_id") % cfg.benchMod =!= 0))
+        .withColumn("pre_reason", stageReason(cfg, benchmark = true))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
     // duplicate clusters: among surviving members keep the min doc_id
     val survivingMembers = pre.filter(col("pre_reason").isNull)
@@ -176,7 +216,8 @@ object CorpusCuration {
     graft.CacheTracker.track(pre
       .join(broadcast(dupDrop.withColumn("dupe", lit(true))), Seq("doc_id"), "left")
       .withColumn("reason", coalesce(col("pre_reason"), when(col("dupe"), "duplicate")))
-      .select(srcCols ++ Seq(col("n_tokens"), col("quality"), col("reason")): _*)
+      .select(srcCols ++ Seq(col("n_tokens").cast("bigint").as("n_tokens"), col("quality"),
+        col("reason")): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 

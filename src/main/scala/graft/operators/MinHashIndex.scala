@@ -55,8 +55,8 @@ object MinHashIndex {
 
   /** Fold a processed batch into the index, after its pairs, so the next
     * batch dedups against this one too. It takes the batch's signature
-    * rows — [[batchSignatures]]' rows, so a batch whose pairs came from
-    * [[newPairsFromSig]] is signed once — and lands them under their own
+    * rows (doc_id, hs, sig, n_tok) — the rows its pairs came from, so a
+    * batch is signed once — and lands them under their own
     * `batch_id=N` partition via dynamic partition overwrite, so a
     * REPLAYED batch (streaming `foreachBatch` is at-least-once) rewrites
     * exactly its own partition instead of double-inserting signatures. An
@@ -76,15 +76,9 @@ object MinHashIndex {
       .parquet(sigDir(indexPath))
   }
 
-  /** `docs`' signature rows (doc_id, hs, sig, n_tok) in the index's storage
-    * schema, with the native functions installed on their session — the
-    * one path by which the stores and streams outside the query registry
-    * compute signatures.
-    */
-  private[graft] def signatureRows(docs: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
+  /** `docs`' signature rows (doc_id, hs, sig, n_tok), the index schema. */
+  private[graft] def signatureRows(docs: DataFrame): DataFrame =
     graft.analytics.DedupQueries.signatureRows(docs)
-  }
 
   /** The stored signature rows (doc_id, hs, sig, n_tok), plus `batch_id`
     * on an [[appendBatch]] index. The read takes the storage schema rather

@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.functions.TextFunctions._
+import graft.jobs.CorpusCuration
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -24,25 +25,11 @@ object DocumentStream {
   /** One ingested document (the streaming row). */
   final case class DocEvent(docId: Long, text: String, eventTime: Timestamp)
 
-  /** Stateless per-document enrichment: token count plus the same floor-form
-    * quality score as batch `txt_quality_score` (identical constants and
-    * rounding, so a document scores the same whether it arrives in a
-    * backfill batch or on the stream).
+  /** Stateless per-document enrichment: token count and quality score, by
+    * the one definition ([[CorpusCuration.quality]]) batch rows use too.
     */
-  def scored(docs: Dataset[DocEvent]): DataFrame = scoreCols(docs.toDF())
-
-  /** The scoring projection itself — shared by [[scored]] and [[toLake]]
-    * (which scores AFTER the dedup so dropped duplicates are never
-    * tokenized).
-    */
-  private def scoreCols(df: DataFrame): DataFrame =
-    df.withColumn("t", expr(tokensS("text")))
-      .withColumn("n_tokens", expr("size(t)"))
-      .withColumn("stop_ratio", expr(stopRatioS("t")))
-      .withColumn("distinct_ratio", expr(distinctRatioS("t")))
-      .withColumn("len_score", expr(lenScoreS("text")))
-      .withColumn("quality", expr(QualityS))
-      .drop("t")
+  def scored(docs: Dataset[DocEvent]): DataFrame =
+    CorpusCuration.quality(docs.toDF()).drop("t")
 
   /** Cross-micro-batch exact dedup on the content hash. State is one entry
     * per distinct hash seen inside the watermark horizon and is dropped as
@@ -93,7 +80,8 @@ object DocumentStream {
       checkpointDir: String,
       minQuality: Double = 0.0,
       watermarkDelay: String = "10 minutes"): org.apache.spark.sql.streaming.StreamingQuery = {
-    val deduped = scoreCols(dedupExact(docs, watermarkDelay))
+    // scored AFTER the dedup, so dropped duplicates are never tokenized
+    val deduped = CorpusCuration.quality(dedupExact(docs, watermarkDelay)).drop("t")
     deduped.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -252,58 +240,65 @@ object DocumentStream {
 
   /** The per-micro-batch body of [[ingestContinuous]] — exposed so dedup
     * semantics and the replay path are directly testable without a running
-    * query.
+    * query. Each doc is tokenized once: one persisted projection
+    * ([[CorpusCuration.shingles]]) carries both the shingle set the index
+    * signs and the score columns the lake lands.
     */
   def ingestBatch(batch: DataFrame, batchId: Long, indexPath: String,
       lakePath: String, minQuality: Double = 0.0): Unit = {
-    val b = batch.select(col("docId").as("doc_id"), col("text"), col("eventTime"))
-    val batchSig = graft.operators.MinHashIndex.batchSignatures(b)
-    // persisted: the lake landing and the index fold both read it
-    val survivors = graft.CacheTracker.track(indexSurvivors(b, batchSig, indexPath)
+    val cand = graft.CacheTracker.track(CorpusCuration.shingles(
+        batch.select(col("docId").as("doc_id"), col("text"), col("eventTime")))
+      .select(Carried.map(col): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    landBatch(scoreCols(survivors), batchId, lakePath, minQuality)
-    indexAppend(batchSig, survivors, indexPath, batchId)
-    // a dedicated ingestion job owns its session: release the signature
-    // projections this batch persisted (they are weak-ref tracked, so a
-    // shared-session caller that skips this merely waits for GC)
+    val (sig, survivors) = indexSurvivors(cand, indexPath)
+    landBatch(survivors, batchId, lakePath, minQuality)
+    indexAppend(sig, survivors, indexPath, batchId)
+    // a dedicated ingestion job owns its session: release the projections
+    // this batch persisted (they are weak-ref tracked, so a shared-session
+    // caller that skips this merely waits for GC)
     graft.CacheTracker.releaseAll()
   }
 
-  /** Near-dup dedup of a (doc_id, text, eventTime) micro-batch against the
-    * persistent index — the shared core of [[ingestBatch]] and
-    * [[curateBatch]]. `batchSig` is the batch's one signature frame
-    * ([[graft.operators.MinHashIndex.batchSignatures]]); its pairs come
-    * from [[graft.operators.MinHashIndex.newPairsFromSig]], which
-    * bootstraps from a missing or empty index and solves a batch whose
-    * (stored ∪ new) signatures fit the local bound in one
-    * [[graft.operators.LocalTier]] task. Returns the surviving rows as
-    * (docId, text, eventTime). Drop policy as documented on
-    * [[ingestContinuous]]: stored doc wins a batch-stored pair, smaller id
-    * wins an in-batch pair.
+  /** What a batch carries from its one tokenization: the source row, the
+    * `hs` the index signs and the lake's score columns, in lake order. */
+  private val Carried = Seq("doc_id", "text", "eventTime", "hs",
+    "n_tokens", "stop_ratio", "distinct_ratio", "len_score", "quality")
+
+  /** Near-dup dedup against the persistent index, shared by [[ingestBatch]]
+    * and [[curateBatch]]: `cand` (the [[Carried]] columns of a persisted
+    * frame) is signed from its `hs` and `n_tokens`
+    * ([[graft.analytics.DedupQueries.signed]]), not re-tokenized, and
+    * paired by [[graft.operators.MinHashIndex.newPairsFromSig]]. Returns
+    * the persisted signature rows and survivors (`docId`, carried columns
+    * but `hs`); drop policy as on [[ingestContinuous]].
     */
-  private def indexSurvivors(b: DataFrame, batchSig: DataFrame, indexPath: String): DataFrame = {
-    val pairs = graft.operators.MinHashIndex.newPairsFromSig(batchSig, indexPath)
+  private def indexSurvivors(cand: DataFrame, indexPath: String): (DataFrame, DataFrame) = {
+    val sig = graft.CacheTracker.track(graft.analytics.DedupQueries.signed(cand)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val pairs = graft.operators.MinHashIndex.newPairsFromSig(sig, indexPath)
     // every pair touches >= 1 batch doc, so its doc_a is in the batch
     // whenever its doc_b is not: drop doc_b if it is a batch doc (the
     // larger id of an in-batch pair, or the batch side of a stored-batch
     // one), else doc_a (the corpus keeps its first sighting). Both joins
     // broadcast — a doc_id the batch holds twice only repeats a drop
     val drops = pairs
-      .join(broadcast(batchSig.select(col("doc_id").as("doc_b"), lit(true).as("b_new"))),
+      .join(broadcast(sig.select(col("doc_id").as("doc_b"), lit(true).as("b_new"))),
         Seq("doc_b"), "left")
       .select(when(col("b_new"), col("doc_b")).otherwise(col("doc_a")).as("doc_id"))
-    b.join(broadcast(drops), Seq("doc_id"), "left_anti")
-      .select(col("doc_id").as("docId"), col("text"), col("eventTime"))
+    // persisted: the lake landing and the index fold both read it
+    val survivors = graft.CacheTracker.track(cand.drop("hs")
+      .join(broadcast(drops), Seq("doc_id"), "left_anti")
+      .withColumnRenamed("doc_id", "docId")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    (sig, survivors)
   }
 
-  /** Fold the survivors' rows of the batch's signature frame into the
-    * index, so each doc is signed once per batch; the broadcast semi-join
-    * keeps the frame's partitions and row order.
-    */
-  private def indexAppend(batchSig: DataFrame, survivors: DataFrame, indexPath: String,
+  /** Fold the survivors' signature rows into the index; the broadcast
+    * semi-join keeps the frame's partitions and row order. */
+  private def indexAppend(sig: DataFrame, survivors: DataFrame, indexPath: String,
       batchId: Long): Unit =
     graft.operators.MinHashIndex.appendBatch(
-      batchSig.join(broadcast(survivors.select(col("docId").as("doc_id"))),
+      sig.join(broadcast(survivors.select(col("docId").as("doc_id"))),
         Seq("doc_id"), "left_semi"),
       indexPath, batchId)
 
@@ -353,8 +348,7 @@ object DocumentStream {
       indexPath: String,
       lakePath: String,
       checkpointDir: String,
-      cfg: graft.jobs.CorpusCuration.CurationConfig =
-        graft.jobs.CorpusCuration.CurationConfig(),
+      cfg: CorpusCuration.CurationConfig = CorpusCuration.CurationConfig(),
       benchShingles: Option[DataFrame] = None,
       onBatch: CurationBatchReport => Unit = _ => ()): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
@@ -416,72 +410,40 @@ object DocumentStream {
   }
 
   /** The per-micro-batch body of [[curateContinuous]] — exposed so stage
-    * semantics and the replay path are directly testable. The near-dup
-    * stage signs the batch's stage survivors once
-    * ([[graft.operators.MinHashIndex.batchSignatures]]): that frame feeds
-    * the pair step — one [[graft.operators.LocalTier]] task while the
-    * (stored ∪ new) signatures stay within `DedupQueries.MinhashLocalRows`
-    * rows and `MinhashLocalShingles` shingles, the distributed band join
-    * above — and its survivors' rows fold into the index.
+    * semantics and the replay path are directly testable. Each doc is
+    * tokenized once: the verdicts are the batch funnel's
+    * ([[CorpusCuration.signals]] and its stage chain), and their one
+    * persisted frame carries what the index signs and the lake lands.
     */
   def curateBatch(
       batch: DataFrame,
       batchId: Long,
       indexPath: String,
       lakePath: String,
-      cfg: graft.jobs.CorpusCuration.CurationConfig =
-        graft.jobs.CorpusCuration.CurationConfig(),
+      cfg: CorpusCuration.CurationConfig = CorpusCuration.CurationConfig(),
       benchShingles: Option[DataFrame] = None): CurationBatchReport = {
-    graft.functions.VectorExpressions.register(batch.sparkSession)
-    val b = batch.select(col("docId").as("doc_id"), col("text"), col("eventTime"))
     // stateless signals first: the cheapest verdicts run before any
     // signature or index cost is paid for a doc that was never going to
     // survive them (one codegen'd projection, no shuffle)
-    val sig = b
-      .withColumn("t", expr(tokensS("text")))
-      .withColumn("th", expr(tokenHashesS("t")))
-      .withColumn("tri", expr("array_distinct(shingle3_hash(th))"))
-      .withColumn("n_tokens", expr("cast(size(t) as bigint)"))
-      .withColumn("stop_ratio", expr(stopRatioS("t")))
-      .withColumn("distinct_ratio", expr(distinctRatioS("t")))
-      .withColumn("len_score", expr(lenScoreS("text")))
-      .withColumn("quality", expr(QualityS))
-      .withColumn("dup_trigram_frac", expr(
-        "if(size(th) < 3, cast(0.0 as double), " +
-          "floor((1 - size(tri) / size(shingle3_hash(th))) * 1e6 + 0.5) / 1e6)"))
-      .withColumn("top_token_frac",
-        expr("floor(max_elem_count(th) / n_tokens * 1e6 + 0.5) / 1e6"))
+    val signals = CorpusCuration.signals(
+      batch.select(col("docId").as("doc_id"), col("text"), col("eventTime")))
     val withContam = benchShingles match {
-      case Some(bs) =>
-        val hits = sig.select(col("doc_id"), explode(col("tri")).as("h"))
-          .join(broadcast(bs.select(col("h"))), "h")
-          .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
-        sig.join(hits, Seq("doc_id"), "left")
-          .withColumn("contam_frac", expr(
-            "floor(coalesce(n_hits, 0) / greatest(size(tri), 1) * 1e6 + 0.5) / 1e6"))
-      case None => sig.withColumn("contam_frac", lit(0.0))
+      case Some(bs) => CorpusCuration.withContamination(signals, bs, signals)
+      case None => signals.withColumn("contam_frac", lit(0.0))
     }
     val pre = graft.CacheTracker.track(withContam
-      .withColumn("reason",
-        when(col("quality") < cfg.minQuality, "quality")
-          .when(col("top_token_frac") > cfg.maxTopTokenFrac ||
-            col("dup_trigram_frac") > cfg.maxDupTrigramFrac, "repetition")
-          .when(col("contam_frac") > cfg.minContamFrac, "contamination"))
-      .select(col("doc_id"), col("text"), col("eventTime"), col("reason"))
+      .withColumn("reason", CorpusCuration.stageReason(cfg, benchmark = false))
+      .select((Carried :+ "reason").map(col): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val counts = graft.jobs.CorpusCuration.reasonCounts(pre)
-    val surv = pre.filter(col("reason").isNull)
-      .select(col("doc_id"), col("text"), col("eventTime"))
-    val survSig = graft.operators.MinHashIndex.batchSignatures(surv)
-    val survivors = graft.CacheTracker.track(
-      indexSurvivors(surv, survSig, indexPath)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val counts = CorpusCuration.reasonCounts(pre)
+    val (sig, survivors) =
+      indexSurvivors(pre.filter(col("reason").isNull).drop("reason"), indexPath)
     val landed = survivors.count()
-    // score on the raw text (identical to the batch pipeline), scrub in
-    // the final landing projection
-    landBatch(scoreCols(survivors).withColumn("text", expr(scrubS("text"))),
+    // scored on the raw text (identical to the batch pipeline), scrubbed
+    // in the final landing projection
+    landBatch(survivors.withColumn("text", expr(scrubS("text"))),
       batchId, lakePath, minQuality = 0.0)
-    indexAppend(survSig, survivors, indexPath, batchId)
+    indexAppend(sig, survivors, indexPath, batchId)
     graft.CacheTracker.releaseAll()
     CurationBatchReport(batchId, counts.values.sum, counts("quality"),
       counts("repetition"), counts("contamination"),

@@ -68,6 +68,47 @@ class DocumentIngestSpec extends AnyFunSuite {
     assert(spark.read.parquet(lake).count() == 3)
   }
 
+  test("landed scores, lake schema and index rows equal the definitions they carry") {
+    val idx = java.nio.file.Files.createTempDirectory("ingest_pin_idx").toString
+    val lake = java.nio.file.Files.createTempDirectory("ingest_pin_lake").toString
+    val b0 = batchDf(
+      doc(1, textA, "2024-07-23 10:00:00"),
+      doc(2, textA + " iota", "2024-07-23 10:00:10"), // near-dup of 1
+      doc(3, "the " + textB + " and the end", "2024-07-24 09:00:00"))
+    DocumentStream.ingestBatch(b0, batchId = 0, indexPath = idx, lakePath = lake)
+    val b1 = batchDf(
+      doc(10, textA, "2024-07-23 11:00:00"), // re-crawl of stored 1
+      doc(11, textC, "2024-07-23 11:00:10"))
+    DocumentStream.ingestBatch(b1, batchId = 1, indexPath = idx, lakePath = lake)
+    val (landed, expected) = StreamPins.landedVsScored(spark, lake, b0.union(b1))
+    assert(landed.keySet == Set(1L, 3L, 11L))
+    assert(landed == expected)
+    assert(StreamPins.lakeSchema(spark, lake) == StreamPins.LakeSchema)
+    for ((batchId, ids) <- Seq(0L -> Set(1L, 3L), 1L -> Set(11L))) {
+      val (indexed, signed) = StreamPins.indexedVsSigned(spark, idx, batchId, b0.union(b1))
+      assert(indexed.map(_._1) == ids)
+      assert(indexed == signed)
+    }
+  }
+
+  test("an ingestion batch tokenizes each document once") {
+    val idx = java.nio.file.Files.createTempDirectory("ingest_tok_idx").toString
+    val lake = java.nio.file.Files.createTempDirectory("ingest_tok_lake").toString
+    DocumentStream.ingestBatch(batchDf(doc(1, textA, "2024-07-23 10:00:00")),
+      batchId = 0, indexPath = idx, lakePath = lake)
+    // a batch against a stored index, each output at most one
+    // tokenization deep (the repartition keeps the optimizer from folding
+    // the projection over the local rows)
+    val depth = StreamPins.tokenizationsPerLineage(spark) {
+      DocumentStream.ingestBatch(
+        batchDf(
+          doc(10, textA, "2024-07-23 11:00:00"),
+          doc(11, textC, "2024-07-23 11:00:10")).repartition(2),
+        batchId = 1, indexPath = idx, lakePath = lake)
+    }
+    assert(depth == 1)
+  }
+
   test("ingestContinuous drives the same semantics from a streaming query") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

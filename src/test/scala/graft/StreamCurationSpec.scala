@@ -122,6 +122,47 @@ class StreamCurationSpec extends AnyFunSuite {
     assert(r.droppedQuality == 1 && r.droppedRepetition == 1 && r.landed == 1)
   }
 
+  test("landed scores, lake schema and index rows equal the definitions they carry") {
+    val idx = java.nio.file.Files.createTempDirectory("cur_pin_idx").toString
+    val lake = java.nio.file.Files.createTempDirectory("cur_pin_lake").toString
+    val raw = batchDf(
+      doc(1, "x x x x x x x x", "2024-07-23 10:00:00"), // quality
+      doc(30, textA, "2024-07-23 10:00:05"),
+      doc(31, textA + " extra", "2024-07-23 10:00:10"), // near-dup of 30
+      doc(42, textC, "2024-07-24 09:00:00"),
+      doc(7, textPii, "2024-07-24 09:00:05")) // lands scrubbed
+    DocumentStream.curateBatch(raw, batchId = 0, indexPath = idx, lakePath = lake)
+    // scores are of the RAW text, although the lake holds the scrubbed one
+    val (landed, expected) = StreamPins.landedVsScored(spark, lake, raw)
+    assert(landed.keySet == Set(30L, 42L, 7L))
+    assert(landed == expected)
+    assert(StreamPins.lakeSchema(spark, lake) == StreamPins.LakeSchema)
+    val (indexed, signed) = StreamPins.indexedVsSigned(spark, idx, 0L, raw)
+    assert(indexed.map(_._1) == Set(30L, 42L, 7L))
+    assert(indexed == signed)
+  }
+
+  test("a curation batch tokenizes each document once") {
+    val idx = java.nio.file.Files.createTempDirectory("cur_tok_idx").toString
+    val lake = java.nio.file.Files.createTempDirectory("cur_tok_lake").toString
+    val bench = benchShingles("alpha bravo charlie delta echo foxtrot golf hotel")
+    DocumentStream.curateBatch(batchDf(doc(30, textA, "2024-07-23 10:00:00")),
+      batchId = 0, indexPath = idx, lakePath = lake, benchShingles = Some(bench))
+    // a batch against a stored index: verdicts, signing, pairs, landing
+    // and index fold, each output at most one tokenization deep (the
+    // repartition keeps the optimizer from folding the projection over the
+    // local rows)
+    val depth = StreamPins.tokenizationsPerLineage(spark) {
+      DocumentStream.curateBatch(
+        batchDf(
+          doc(40, textA, "2024-07-23 11:00:00"),
+          doc(42, textC, "2024-07-23 11:00:05"),
+          doc(7, textPii, "2024-07-23 11:00:10")).repartition(2),
+        batchId = 1, indexPath = idx, lakePath = lake, benchShingles = Some(bench))
+    }
+    assert(depth == 1)
+  }
+
   test("curateContinuous drives the same semantics from a streaming query") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
